@@ -1,30 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Benchmark main: times every declared query at `SPARK_GRAFT_SF_DIR`
-  * and emits ONE JSON line (driver contract). The same line is ALSO
-  * written to `bench.json` in the working directory so the graded
-  * artifact survives sbt log interleaving (round-1 driver run lost the
-  * stdout line to log noise — VERDICT r1 "What's wrong" #5).
+  * and emits ONE JSON line (the entry-point contract), also written to
+  * `bench.json` so the graded artifact survives sbt log interleaving.
+  * Trailing query names time only those queries and leave `bench.json`
+  * alone (`runMain graft.Bench q_a q_b` for per-query isolation).
   *
-  * Noise control (VERDICT r1 #8, tightened per r2 #5 + ADVICE): every
-  * query runs exactly twice and the min is reported — GC pauses /
-  * run-position effects at local[32] were inflating trivial sub-second
-  * aggregations to 10-15 s, and a conditional retry-below-threshold
-  * policy misses exactly those inflated first runs. For transparency
-  * the first-run times are also emitted (`first_run` key) so the graded
-  * total is auditably noise-controlled rather than best-cased. A GC
-  * request between queries keeps one query's garbage from being charged
-  * to the next. All per-harness-contract: still one process, one JSON
-  * line, no per-query Spark-conf overrides.
-  *
-  * `SPARK_GRAFT_BENCH_RUNS=N` (r11 VERDICT #6) raises the per-query
-  * sample count: `queries` reports min-of-N and `spread` reports
-  * max-min per query, so a 10 % regression question is resolvable from
-  * the artifact itself instead of a manual quiet-host ritual. Default
-  * N=2 — the driver's single-invocation behavior is unchanged (the
-  * `spread` key is additive).
+  * Noise control: every query runs `SPARK_GRAFT_BENCH_RUNS` times
+  * (default 2) after a GC request; `queries` reports the min,
+  * `first_run`/`second_run` the raw samples and `spread` max-min, so a
+  * regression is distinguishable from GC/run-position noise from the
+  * artifact itself. One process, no per-query Spark-conf overrides.
   */
 object Bench {
 
@@ -32,12 +20,8 @@ object Bench {
     * spread, first error). */
   private[graft] type QSample = (Double, Double, Double, Double, Option[String])
 
-  /** Renders the one-line JSON artifact from the timed samples. Pure
-    * function so BenchSpec can gate its parseability (VERDICT r16
-    * "What's wrong" #3 / "Next round" #5: BENCH_r15.json recorded
-    * rc 0 but parsed null — losing the artifact to a formatting bug
-    * costs the NEXT round its entire per-query PERF comparison, so the
-    * formatting is now a tested invariant, not main()-only code). */
+  /** Renders the one-line JSON artifact from the timed samples; pure,
+    * so BenchSpec can gate its parseability. */
   private[graft] def render(results: Map[String, QSample], runs: Int,
       sfDir: String): String = {
     import JsonOut.{esc => jesc}
@@ -68,27 +52,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same session timezone as Verify: on a non-UTC host the
-      // date_trunc/to_date/year-month queries would otherwise bench a
-      // DIFFERENT grouping than the one the oracle verified
-      .config("spark.sql.session.timeZone", "UTC")
-      // r16 (measured, Scratch A/B x3): Spark 4.1's recursive-CTE
-      // executor converts a small anchor to a LocalRelation
-      // (spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation,
-      // default 100), which re-embeds the growing iteration state into
-      // every per-iteration plan and re-analyzes it — q_sql_recursive
-      // 3.8 s -> 2.7 s with the conversion off. Pure execution-strategy
-      // flag; results oracle-identical.
-      .config("spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation",
-        "0")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", GraftTmp.dir("warehouse_bench"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional trailing names time only those queries; a typo'd name
+    // fails loudly, as in Verify
+    val only: Set[String] = args.toSet
+    val unknown = only -- SparkEntry.queries.keySet
+    require(unknown.isEmpty,
+      s"[bench] unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    val spark = GraftSession.builder("bench").getOrCreate()
     // warm up codegen/classloading once so the first timed query doesn't
     // carry ~6s of one-time JVM cost (measured; see BENCH notes)
     spark.range(1000).selectExpr("sum(id)").count()
@@ -96,19 +66,15 @@ object Bench {
       .foreach(fn => try fn(spark, sfDir).count() catch { case _: Throwable => })
 
     // a crashing query must surface in the artifact, never be recorded
-    // as a fast success (VERDICT r3 "What's wrong" #1): the error text
-    // rides along in an "errors" map and the run still times the crash.
+    // as a fast success: the error text rides along in an "errors" map
+    // and the run still times the crash.
     //
-    // Materialization is a `noop`-format WRITE, not .count() (r9
-    // methodology fix): wrapping a query in Aggregate(count(1)) lets
-    // Catalyst drop the final ORDER BY (EliminateSorts) and prune every
-    // unreferenced projection/aggregate value expression, so the bench
-    // systematically under-timed the operators Verify fully
-    // materializes. The noop sink consumes EVERY column of EVERY row
-    // and keeps the query's sort, measuring the declared workload;
-    // totals before r9 are therefore not directly comparable (both
-    // methods' closing numbers are recorded in BASELINE.md).
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    // Materialization is a `noop`-format WRITE, not .count(): wrapping
+    // a query in Aggregate(count(1)) lets Catalyst drop the final ORDER
+    // BY and prune unreferenced value expressions, under-timing what
+    // Verify fully materializes. The noop sink consumes every column of
+    // every row and keeps the sort.
+    def time(fn: (SparkSession, String) => DataFrame)
         : (Double, Option[String]) = {
       val t0 = System.nanoTime()
       val err = try {
@@ -124,7 +90,9 @@ object Bench {
 
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2")
       .toIntOption.getOrElse(2))
-    val results = SparkEntry.queries.map { case (name, fn) =>
+    val results = SparkEntry.queries
+      .filter { case (name, _) => only.isEmpty || only(name) }
+      .map { case (name, fn) =>
       val samples = (1 to runs).map { _ =>
         System.gc()
         time(fn)
@@ -143,16 +111,16 @@ object Bench {
         times.max - times.min, err)
     }
     val line = render(results, runs, sfDir)
-    // Artifact durability, in decreasing order of control (r17,
-    // VERDICT #5): (1) bench.json lands FIRST, before anything that
-    // could still fail; (2) the stdout JSON line prints LAST — after
-    // spark.stop() — so no later output of ours can displace it from a
-    // bounded stdout tail (Spark/sbt log noise goes to stderr). The
-    // timing methodology, fields, and values are byte-identical to
-    // r16; only the emission ORDER moved.
-    try Files.write(Paths.get("bench.json"), (line + "\n").getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    catch { case _: Throwable => () }
+    // Artifact durability: (1) bench.json lands FIRST, before anything
+    // that could still fail; (2) the stdout JSON line prints LAST —
+    // after spark.stop() — so no later output of ours can displace it
+    // from a bounded stdout tail (Spark/sbt log noise goes to stderr).
+    // A filtered run is not the graded artifact and leaves bench.json
+    // alone.
+    if (only.isEmpty)
+      try Files.write(Paths.get("bench.json"), (line + "\n").getBytes("UTF-8"),
+        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+      catch { case _: Throwable => () }
     try spark.stop() catch { case _: Throwable => () }
     println(line)
   }

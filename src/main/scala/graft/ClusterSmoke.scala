@@ -64,13 +64,9 @@ object ClusterSmoke {
     "q_agg_udaf_geomean")      // custom Aggregator serialization
 
   private def session(master: String): SparkSession = {
-    val b = SparkSession.builder()
+    val b = GraftSession.builder("smoke", 8)
       .master(master)
       .appName(s"graft-cluster-smoke-$master")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", GraftTmp.dir("warehouse_smoke"))
     if (master.startsWith("local-cluster")) {
       // executor JVMs are launched fresh from SPARK_HOME and know
       // nothing about sbt's classpath: hand them ours (graft classes)
@@ -98,7 +94,6 @@ object ClusterSmoke {
       : Map[String, Seq[String]] = {
     val spark = session(master)
     try {
-      spark.sparkContext.setLogLevel("WARN")
       val qs = slice.map { name =>
         name -> SparkEntry.queries(name)(spark, sfDir)
           .collect().map(_.toString).sorted.toSeq
@@ -186,7 +181,6 @@ object ClusterSmoke {
     val spark = session("local-cluster[2,2,1024]")
     var bad = 0
     try {
-      spark.sparkContext.setLogLevel("WARN")
       import spark.implicits._
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select($"l_orderkey", $"l_partkey", $"l_quantity")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev utility: manufacture a ~sf1 fixture from the sf0.1 testdata by
@@ -36,7 +36,9 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.ScaleUp [srcDir] [outDir] [replicas]
   * (defaults: /root/testdata/sf0.1 -> /tmp/graft_sf1 x10). Output
   * layout matches TESTDATA.md (`<out>/<table>.parquet`), so every
-  * SparkEntry query runs against it unmodified via PROF_SF_DIR.
+  * SparkEntry query runs against it unmodified (Verify's sfDir
+  * argument, Bench's SPARK_GRAFT_SF_DIR). Local threads follow
+  * SPARK_GRAFT_CPUS.
   */
 object ScaleUp {
   // per-key-family replica strides: > the family's max key at sf0.1
@@ -54,14 +56,7 @@ object ScaleUp {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.drop(1).headOption.getOrElse("/tmp/graft_sf1")
     val rep = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder("scaleup").getOrCreate()
 
     def tbl(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")

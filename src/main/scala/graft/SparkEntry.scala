@@ -28,9 +28,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Aggs.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2; each call
+    * first installs GraftExtensions on the session it is given. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> q.fn).toMap
+    all.map { q =>
+      q.name -> { (s: SparkSession, d: String) =>
+        GraftExtensions.install(s)
+        q.fn(s, d)
+      }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

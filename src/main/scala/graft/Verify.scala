@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,24 +14,7 @@ object Verify {
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty,
       s"[verify] unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r16 (measured, Scratch A/B x3): Spark 4.1's recursive-CTE
-      // executor converts a small anchor to a LocalRelation
-      // (spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation,
-      // default 100), which re-embeds the growing iteration state into
-      // every per-iteration plan and re-analyzes it — q_sql_recursive
-      // 3.8 s -> 2.7 s with the conversion off. Pure execution-strategy
-      // flag; results oracle-identical.
-      .config("spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation",
-        "0")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", GraftTmp.dir("warehouse_verify"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder("verify").getOrCreate()
     new java.io.File(outDir).mkdirs()
     // failed queries whose STALE output from an earlier run could not
     // be removed: the driver's compare would grade old-but-matching

@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
@@ -79,8 +79,7 @@ object MicMacEtl {
   def importAutocalXml(xml: DataFrame,
       validityStart: Option[String] = None,
       validityEnd: Option[String] = None): Map[String, DataFrame] =
-    autocalCore(xml.sparkSession, fromManifest(xml),
-      validityStart, validityEnd)
+    autocalCore(fromManifest(xml), validityStart, validityEnd)
 
   /** [[importBlinis]] over manifest-fetched XML (path, length, xml). */
   def importBlinisXml(xml: DataFrame,
@@ -97,12 +96,11 @@ object MicMacEtl {
   def importAutocal(spark: SparkSession, glob: String,
       validityStart: Option[String] = None,
       validityEnd: Option[String] = None): Map[String, DataFrame] =
-    autocalCore(spark, wholeText(spark, glob), validityStart, validityEnd)
+    autocalCore(wholeText(spark, glob), validityStart, validityEnd)
 
-  private def autocalCore(spark: SparkSession, text: DataFrame,
+  private def autocalCore(text: DataFrame,
       validityStart: Option[String],
       validityEnd: Option[String]): Map[String, DataFrame] = {
-    AutocalTransfos.register(spark)
     val parsed = text
       .withColumn("x", from_xml(col("value"), autocalSchema))
       .select(col("file"), col("x.CalibrationInternConique").as("c"))
@@ -636,10 +634,4 @@ case class AutocalTransfos(children: Seq[Expression])
   override def nullable: Boolean = false
   override protected def withNewChildrenInternal(
       c: IndexedSeq[Expression]): AutocalTransfos = copy(children = c)
-}
-
-object AutocalTransfos {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "autocal_transfos", exprs => AutocalTransfos(exprs), "scala_udf")
 }

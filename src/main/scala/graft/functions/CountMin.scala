@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.functions.udaf
@@ -85,10 +85,4 @@ object CountMin {
 
   def cmsEstimate(sketch: Column, key: Column): Column =
     estimateUdf(sketch, key)
-
-  def register(s: SparkSession): Unit = {
-    s.udf.register("cms", udaf(aggregator))
-    s.udf.register("cms_estimate",
-      (sketch: Seq[Long], key: String) => estimate(sketch, key))
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -79,11 +78,4 @@ case class FloatDot(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): FloatDot = copy(left = l, right = r)
-}
-
-object FloatDot {
-  /** register `fdot(array<float>, array<float>) -> double` for expr()/SQL */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fdot", exprs => FloatDot(exprs(0), exprs(1)), "scala_udf")
 }

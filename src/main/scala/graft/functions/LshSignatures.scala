@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -132,13 +131,4 @@ case class LshSignatures(child: Expression, planes: Array[Array[Double]],
 
   override protected def withNewChildInternal(c: Expression): LshSignatures =
     copy(child = c)
-}
-
-object LshSignatures {
-  /** register `lsh_sigs(array<float>) -> array<int>` with the plane set
-    * baked in, for expr()/SQL use */
-  def register(spark: SparkSession, name: String,
-      planes: Array[Array[Double]], bits: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => LshSignatures(exprs(0), planes, bits), "scala_udf")
 }

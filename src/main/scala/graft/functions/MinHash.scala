@@ -2,11 +2,10 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** 128-permutation MinHash sketch as a native Catalyst aggregate
@@ -121,9 +120,4 @@ object MinHash {
 
   val A: Array[Long] = splitmix(42L).map(_ | 1L).take(NumHashes).toArray
   val B: Array[Long] = splitmix(4242L).take(NumHashes).toArray
-
-  /** register `minhash128(bigint)` for use via expr()/SQL */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash128", exprs => MinHashAgg(exprs.head), "scala_udf")
 }

@@ -57,7 +57,7 @@ object AnnIndex {
     * (zero / NaN / Inf norm) are EXCLUDED like the whole similarity
     * family does — on normalized vectors L2 is monotone in cosine
     * (|a-b|^2 = 2 - 2cos), so every distance below is squared L2.
-    * Requires fdot to be registered on the active session. */
+    * fdot comes from [[graft.GraftExtensions]] on the frame's session. */
   private def normalize(raw: DataFrame): DataFrame = raw
     .withColumn("nrm", expr(l2))
     .filter(col("nrm") > 0d && col("nrm") < Double.PositiveInfinity)
@@ -67,7 +67,6 @@ object AnnIndex {
 
   /** the corpus table, normalized */
   private def corpus(s: SparkSession, d: String): DataFrame = {
-    graft.functions.FloatDot.register(s)
     normalize(graft.Tables.embeddings(s, d))
   }
 
@@ -256,9 +255,8 @@ object AnnIndex {
     * EXCLUDED like everywhere in the similarity family — by the
     * same normalize() the build runs, so append(delta) after
     * build(base) lands the exact rows build(base ∪ delta) would. */
-  def appendFrames(s: SparkSession, f: Frames, newVecs: DataFrame)
+  def appendFrames(f: Frames, newVecs: DataFrame)
       : DataFrame = {
-    graft.functions.FloatDot.register(s)
     checkCodebooks(f)
     val badLen = newVecs
       .filter(size(col("embedding")) =!= lit(Dims))
@@ -318,7 +316,7 @@ object AnnIndex {
   def append(s: SparkSession, indexDir: String, newVecs: DataFrame)
       : Unit = {
     val f = loadFrames(s, indexDir)
-    val newPost = appendFrames(s, f, newVecs)
+    val newPost = appendFrames(f, newVecs)
     import s.implicits._
     val metaLocal = f.meta.collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -416,7 +414,6 @@ object AnnIndex {
     * refineFactor*k rows of two longs, nothing more. */
   def serveCollectFrom(s: SparkSession, d: String, f: Frames, k: Int = 5,
       nprobe: Int = 12, refineFactor: Int = 8): DataFrame = {
-    graft.functions.FloatDot.register(s)
     val q = queryFrame(s, d)
     val shortRows = adcShortlist(s, d, f, k, nprobe, refineFactor)
       .collect() // bounded: queries x refineFactor*k rows of two longs
@@ -446,7 +443,6 @@ object AnnIndex {
     * is itself a pathology. */
   def serveBatchFrom(s: SparkSession, d: String, f: Frames, k: Int = 5,
       nprobe: Int = 12, refineFactor: Int = 8): DataFrame = {
-    graft.functions.FloatDot.register(s)
     val q = queryFrame(s, d)
     val short = adcShortlist(s, d, f, k, nprobe, refineFactor)
     val vecs = graft.Tables.embeddings(s, d)
@@ -477,7 +473,6 @@ object AnnIndex {
   /** the normalized query probe set (vec_id < 10), with the raw float
     * vectors and norms the refine stage needs */
   private def queryFrame(s: SparkSession, d: String): DataFrame = {
-    graft.functions.FloatDot.register(s)
     graft.Tables.embeddings(s, d)
       .filter(col("vec_id") < 10)
       .withColumn("nrm", expr(l2))
@@ -495,7 +490,6 @@ object AnnIndex {
     * serveFrom returns holds only the refine stage. */
   def adcShortlist(s: SparkSession, d: String, f: Frames, k: Int = 5,
       nprobe: Int = 12, refineFactor: Int = 8): DataFrame = {
-    graft.functions.FloatDot.register(s)
     val ncells = checkCodebooks(f)
     val q = queryFrame(s, d)
     // coarse centroids: long format -> (cell, c_emb) — ncells rows

@@ -122,11 +122,11 @@ object ConnectedComponents {
     * the previous round's. Rows are distinct canonical pairs, so set
     * equality and signature equality coincide up to a 128-bit-order
     * hash collision; when the signature first reports a fixpoint the
-    * loop confirms it EXACTLY (count + one-sided except — two jobs
-    * once per run, not per round), so convergence is never decided by
-    * a hash alone. The earlier count+except set compare cost two
-    * extra jobs per round (one a full shuffle); the signature costs
-    * one narrow agg.
+    * loop confirms it EXACTLY, so convergence is never decided by a
+    * hash alone: signature equality proves the counts equal (its
+    * first component is a real count), and ONE `left_anti` emptiness
+    * probe (next \ cur = ∅) then confirms set equality — one job once
+    * per run, not per round.
     * Edges stay in canonical (lo, hi) orientation so the set
     * fixpoint — every component a star — is well-defined.
     */
@@ -215,11 +215,8 @@ object ConnectedComponents {
       // already proves the counts equal EXACTLY (component 1 of sig is
       // a real count, not a hash), and for finite distinct sets
       // |next| = |cur| ∧ next \ cur = ∅ ⇒ next = cur — so the one
-      // remaining exact job is the anti-join emptiness probe (r17: the
-      // previous count() + count() + except() confirm spent three jobs
-      // re-deriving what the sig counts and one anti join settle; a
-      // left_anti also skips except's distinct re-aggregation, and
-      // isEmpty stops at the first surviving row). This keeps the
+      // remaining exact job is the anti-join emptiness probe, which
+      // stops at the first surviving row. This keeps the
       // ~2^-128 hash-collision risk out of a correctness-critical
       // fixpoint at the cost of ONE job once per RUN. If the exact
       // check ever disagrees (a signature collision), we keep

@@ -67,8 +67,7 @@ object DedupIndex {
     * exact shingle/sketch convention. Documents with fewer than 3
     * words have no shingles and are EXCLUDED, like the whole dedup
     * family: they cannot near-duplicate anything by 3-gram overlap. */
-  def sketchFrame(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.MinHash.register(s)
+  def sketchFrame(docs: DataFrame): DataFrame = {
     docs
       .select(col("doc_id"), col("lang"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)
@@ -115,7 +114,7 @@ object DedupIndex {
       .toDF("key", "value")
     meta.coalesce(1).write.format("graftlines").mode("overwrite")
       .save(s"$indexDir/meta")
-    val sk = sketchFrame(s, docs)
+    val sk = sketchFrame(docs)
     writeData(sk, indexDir, overwrite = true)
   }
 
@@ -143,7 +142,7 @@ object DedupIndex {
     require(n == nDistinct,
       s"append batch repeats ${n - nDistinct} doc_id(s) — a doubled " +
         "id would pollute every bucket it lands in")
-    val sk = sketchFrame(s, docs)
+    val sk = sketchFrame(docs)
     require(!sk.isEmpty,
       "append batch has no usable documents (empty, or all under 3 " +
         "words) — refusing a zero-row append, which would not commit " +
@@ -263,7 +262,7 @@ object DedupIndex {
     * batch the all-distributed join shape — identical rows either way
     * (DedupIndexSpec pins it). */
   def pairsAgainst(s: SparkSession, f: Frames, docs: DataFrame): DataFrame = {
-    val sk = sketchFrame(s, docs)
+    val sk = sketchFrame(docs)
     if (sk.count() > SmallBatchThreshold) pairsAgainstJoin(s, f, docs)
     else pairsAgainstCollect(s, f, docs)
   }
@@ -276,7 +275,7 @@ object DedupIndex {
   def pairsAgainstCollect(s: SparkSession, f: Frames,
       docs: DataFrame): DataFrame = {
     checkGeometry(f)
-    val sk = sketchFrame(s, docs)
+    val sk = sketchFrame(docs)
     val bNew = bandFrame(sk)
     val sigs = bNew.select(col("sig")).distinct()
       .collect().map(_.getLong(0)).sorted
@@ -298,7 +297,7 @@ object DedupIndex {
   def pairsAgainstJoin(s: SparkSession, f: Frames,
       docs: DataFrame): DataFrame = {
     checkGeometry(f)
-    val sk = sketchFrame(s, docs)
+    val sk = sketchFrame(docs)
     val cand = candPairs(f.bands, bandFrame(sk), broadcastNew = false)
     val mhA = sketchArr(f.sketches)
       .select(col("doc_id").as("a"), col("mh").as("mha"))
@@ -389,7 +388,7 @@ object DedupIndex {
     // within-batch near-dups among the remaining docs: the selfPairs
     // machinery over in-flight sketches (same bucket key, same
     // streamed expansion), thresholded, clustered, min-id kept
-    val sk = sketchFrame(s, surv0)
+    val sk = sketchFrame(surv0)
     val cand = bandFrame(sk)
       .groupBy(col("lang"), col("band"), col("sig"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
@@ -411,7 +410,7 @@ object DedupIndex {
       .select(col("node").as("doc_id"))
     val kept = surv0.join(withinDroppedIds, Seq("doc_id"), "left_anti")
       .localCheckpoint() // stable across the append below
-    if (!sketchFrame(s, kept).isEmpty) append(s, indexDir, kept)
+    if (!sketchFrame(kept).isEmpty) append(s, indexDir, kept)
     IngestReport(kept, histDropped, batchPairs)
   }
 }

@@ -292,7 +292,7 @@ object DistributedRank {
 
   private def ranked(df: DataFrame, sortCols: Seq[Column], numBuckets: Int,
       parts: Int,
-      boundsFrom: Option[(DataFrame, Seq[Column])] = None): DataFrame = {
+      boundsFrom: Option[(DataFrame, Seq[Column])]): DataFrame = {
     require(numBuckets > 0, s"numBuckets must be positive: $numBuckets")
     val ranged = withBucket(df, sortCols, parts, boundsFrom)
     // Pass 1: per-bucket counts -> start offsets. <= `parts` rows, so

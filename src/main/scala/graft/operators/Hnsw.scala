@@ -226,7 +226,6 @@ object Hnsw {
   def annTopK(s: SparkSession, d: String, k: Int = 5, shards: Int = 4,
       ef: Int = 64): DataFrame = {
     import s.implicits._
-    graft.functions.FloatDot.register(s)
     val emb = graft.Tables.embeddings(s, d)
       .withColumn("nrm", expr("sqrt(fdot(embedding, embedding))"))
       // isnotnull+isfinite, not just > 0: a vector with an Infinity

@@ -17,7 +17,9 @@ object AsOf {
     * Wrapping the right side in `functions.broadcast(...)` selects the
     * broadcast build: the small side ships to every executor as a sorted
     * per-key index and the big probe side keeps its partitioning — no
-    * shuffle or sort of the left input at all. */
+    * shuffle or sort of the left input at all.
+    *
+    * Plans only on a session holding [[graft.GraftExtensions]]. */
   def join(left: DataFrame, right: DataFrame,
       leftUserCol: String, leftTimeCol: String,
       rightUserCol: String, rightTimeCol: String,
@@ -25,16 +27,6 @@ object AsOf {
     require(Set("backward", "forward", "nearest")(direction),
       s"unknown as-of direction: $direction")
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
-    Seq(PushFilterThroughAsOf, PruneColumnsThroughAsOf).foreach { rule =>
-      if (!spark.experimental.extraOptimizations.contains(rule)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ rule
-      }
-    }
     val lPlan = left.queryExecution.analyzed
     // a broadcast() hint on the right input selects the broadcast build;
     // strip the hint node (it is not a Catalyst Join, so the stock

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   */
 object Aggs extends QueryGroup {
 
-  private def dec(c: Column, p: Int = 14, s: Int = 2): Column =
+  private def dec(c: Column, p: Int, s: Int): Column =
     c.cast(DecimalType(p, s))
 
   /** Exact decimal sum surfaced as double, IDENTICAL BITS on both

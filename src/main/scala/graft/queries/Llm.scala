@@ -39,8 +39,7 @@ object AnnLsh {
   }
 
   /** (vec_id, tbl, sig) — one row per vector per table */
-  def signatures(s: SparkSession, emb: DataFrame): DataFrame = {
-    graft.functions.LshSignatures.register(s, "lsh_sigs", hyperplanes, bits)
+  def signatures(emb: DataFrame): DataFrame = {
     emb.select(col("vec_id"), posexplode(expr("lsh_sigs(embedding)")))
       .toDF("vec_id", "tbl", "sig")
   }
@@ -49,7 +48,7 @@ object AnnLsh {
     * least one table (also probed directly by AnnLshSpec's pruning
     * assertion) */
   def candidates(s: SparkSession, d: String): DataFrame = {
-    val sigs = signatures(s, Tables.embeddings(s, d))
+    val sigs = signatures(Tables.embeddings(s, d))
     val qsig = sigs.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("tbl").as("q_tbl"),
         col("sig").as("q_sig"))
@@ -275,7 +274,6 @@ object Llm extends QueryGroup {
     QueryDef(
       "q_dedup_minhash_lsh",
       (s, d) => {
-        graft.functions.MinHash.register(s)
         val sh = Tables.documents(s, d)
           .select(col("doc_id"), col("lang"),
             split(col("text"), " ").as("w"))
@@ -351,7 +349,6 @@ object Llm extends QueryGroup {
       // driver hash mismatch — the oracle doubles as the recall gate.
       "q_dedup_pipeline",
       (s, d) => {
-        graft.functions.MinHash.register(s)
         val sh = Tables.documents(s, d)
           .select(col("doc_id"), col("lang"),
             split(col("text"), " ").as("w"))
@@ -515,7 +512,6 @@ object Llm extends QueryGroup {
     QueryDef(
       "q_sim_cosine_topk",
       (s, d) => {
-        graft.functions.FloatDot.register(s)
         val emb = Tables.embeddings(s, d)
           .withColumn("nrm", expr(l2Expr))
         val q = emb.select(col("vec_id").as("qid"),
@@ -629,7 +625,6 @@ object Llm extends QueryGroup {
       // recall vs the exact top-k and that candidates < corpus.
       "q_sim_ann_lsh",
       (s, d) => {
-        graft.functions.FloatDot.register(s)
         // zero-norm guard (same class as IVF/PQ): a zero vector hashes
         // to a valid bucket (every plane dot is 0, sign bit set) and
         // its NaN cosine would then rank #1 under desc in any bucket
@@ -664,7 +659,6 @@ object Llm extends QueryGroup {
       // AnnLshSpec asserts recall + pruning.
       "q_sim_ann_ivf",
       (s, d) => {
-        graft.functions.FloatDot.register(s)
         // zero-norm guard, same input class PQ excludes: a zero-norm
         // corpus vector NaNs the final exact cosine re-rank, and NaN
         // sorts FIRST under desc — it would rank #1 for every query
@@ -743,7 +737,6 @@ object Llm extends QueryGroup {
       // corpus-side scan carries 8 bytes per vector, never the floats.
       "q_sim_ann_pq",
       (s, d) => {
-        graft.functions.FloatDot.register(s)
         val emb = Tables.embeddings(s, d)
           // norm once per ROW: transform's lambda re-evaluates its body
           // per element, so an inlined norm would cost 64 fdot calls
@@ -823,7 +816,6 @@ object Llm extends QueryGroup {
     QueryDef(
       "q_knn_majority_label",
       (s, d) => {
-        graft.functions.FloatDot.register(s)
         val emb = Tables.embeddings(s, d)
           .withColumn("nrm", expr(l2Expr))
         val q = emb.select(col("vec_id").as("qid"),
@@ -869,7 +861,6 @@ object Llm extends QueryGroup {
     QueryDef(
       "q_multimodal_join",
       (s, d) => {
-        graft.functions.FloatDot.register(s)
         val emb = Tables.embeddings(s, d).withColumn("l2", expr(l2Expr))
         Tables.documents(s, d)
           .join(emb, col("doc_id") === col("vec_id"))
@@ -948,7 +939,6 @@ object Llm extends QueryGroup {
       // top-20 TakeOrdered state; stage-2 work is candidates × 1.
       "q_sim_refine",
       (s, d) => {
-        graft.functions.FloatDot.register(s)
         val emb = Tables.embeddings(s, d)
           .filter(expr(
             "cast(array_max(transform(embedding, x -> abs(x))) as double) > 0D"))

@@ -493,7 +493,6 @@ object LlmText extends QueryGroup {
       // validate, and q_sim_ann_lsh / q_sim_ann_ivf as the scale path.
       "q_dedup_embcos",
       (s, d) => {
-        graft.functions.FloatDot.register(s)
         val l2 = "sqrt(fdot(emb, emb))"
         val e = Tables.embeddings(s, d)
           .select(col("vec_id"), col("label"), col("embedding").as("emb"))
@@ -535,7 +534,6 @@ object LlmText extends QueryGroup {
       // cell: n, n_dropped, kept-id sum (the kept-set fingerprint).
       "q_dedup_semantic",
       (s, d) => {
-        graft.functions.FloatDot.register(s)
         val e = Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding").as("emb"))
           .withColumn("nrm", expr("sqrt(fdot(emb, emb))"))

@@ -974,9 +974,17 @@ object GraftLines {
     val fs = path.getFileSystem(conf)
     val files = listDataFiles(dir, conf)
     require(files.nonEmpty, s"graftlines: no $Ext files under $dir")
-    val in = fs.open(new Path(files.head))
-    val br = new BufferedReader(new InputStreamReader(in, UTF_8))
-    try parseHeader(br.readLine(), files.head) finally br.close()
+    // a retention sweep racing this read may delete a listed file
+    // before it is opened: the first header still on disk is the schema
+    val headers = files.iterator.flatMap { f =>
+      try {
+        val br = new BufferedReader(
+          new InputStreamReader(fs.open(new Path(f)), UTF_8))
+        try Some(parseHeader(br.readLine(), f)) finally br.close()
+      } catch { case _: java.io.FileNotFoundException => None }
+    }
+    require(headers.hasNext, s"graftlines: no $Ext files left under $dir")
+    headers.next()
   }
 
   private[sources] def listDataFiles(

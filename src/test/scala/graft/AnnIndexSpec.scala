@@ -191,7 +191,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // not re-read or re-encoded) — only the codebooks + the batch
     val f = AnnIndex.loadFrames(spark, idx)
     val delta = full.filter(col("vec_id") >= cut)
-    val ep = AnnIndex.appendFrames(spark, f, delta)
+    val ep = AnnIndex.appendFrames(f, delta)
       .queryExecution.executedPlan.toString
     assert(!ep.contains("postings"),
       s"append encode plan re-reads the postings table:\n$ep")
@@ -220,7 +220,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val f = AnnIndex.loadFrames(spark, idx)
     // an id already in the index
     val clash = intercept[IllegalArgumentException] {
-      AnnIndex.appendFrames(spark, f, full.filter(col("vec_id") < 5))
+      AnnIndex.appendFrames(f, full.filter(col("vec_id") < 5))
     }
     assert(clash.getMessage.contains("collides"), s"$clash")
     // an id repeated within the batch (shift past the corpus range to
@@ -228,7 +228,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val fresh = full.filter(col("vec_id") < 4)
       .withColumn("vec_id", col("vec_id") % 2 + 10000L)
     val dup = intercept[IllegalArgumentException] {
-      AnnIndex.appendFrames(spark, f, fresh)
+      AnnIndex.appendFrames(f, fresh)
     }
     assert(dup.getMessage.contains("repeats"), s"$dup")
     // a vector of the wrong length
@@ -236,12 +236,12 @@ class AnnIndexSpec extends AnyFunSuite {
       .withColumn("vec_id", lit(20000L))
       .withColumn("embedding", expr("slice(embedding, 1, 7)"))
     val badLen = intercept[IllegalArgumentException] {
-      AnnIndex.appendFrames(spark, f, short)
+      AnnIndex.appendFrames(f, short)
     }
     assert(badLen.getMessage.contains("dims"), s"$badLen")
     // an empty batch
     val empty = intercept[IllegalArgumentException] {
-      AnnIndex.appendFrames(spark, f, full.filter(col("vec_id") < 0))
+      AnnIndex.appendFrames(f, full.filter(col("vec_id") < 0))
     }
     assert(empty.getMessage.contains("no usable"), s"$empty")
   }

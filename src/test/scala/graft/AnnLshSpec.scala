@@ -8,6 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 class AnnLshSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  /** a session-local `name(array<float>)` over a custom plane set */
+  private def registerSigs(name: String, planes: Array[Array[Double]],
+      bits: Int): Unit =
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      name, e => graft.functions.LshSignatures(e(0), planes, bits), "scala_udf")
+
   test("LSH ANN recall@5 vs exact top-k on sf0.01") {
     val exact = SparkEntry.queries("q_sim_cosine_topk")(spark, TestSpark.sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -37,8 +43,7 @@ class AnnLshSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     // 2 planes of dim 3, 1 bit each -> 2 tables
     val planes = Array(Array(1.0, 0.0, 0.0), Array(0.0, -1.0, 0.0))
-    graft.functions.LshSignatures.register(spark, "lsh_test_sigs",
-      planes, bits = 1)
+    registerSigs("lsh_test_sigs", planes, bits = 1)
     val rows = Seq(
       Seq[java.lang.Float](1f, 2f, 3f),        // valid
       Seq[java.lang.Float](1f, null, 3f),      // NULL element
@@ -74,8 +79,7 @@ class AnnLshSpec extends AnyFunSuite {
     val dims = 6
     val planes = Array.fill(8)(Array.fill(dims)(rnd.nextGaussian()))
     val bits = 4 // 8 planes / 4 bits = 2 tables
-    graft.functions.LshSignatures.register(spark, "lsh_diff_sigs",
-      planes, bits)
+    registerSigs("lsh_diff_sigs", planes, bits)
     def reference(v: Seq[Float]): Seq[Int] =
       planes.grouped(bits).map { table =>
         table.zipWithIndex.foldLeft(0) { case (sig, (hp, j)) =>
@@ -132,7 +136,6 @@ class AnnLshSpec extends AnyFunSuite {
       .select(col("qid"), col("vec_id"))
     // q_sim_cosine_topk only emits top-5, so rank every PQ pick in the
     // full exact cosine order and bound the worst pick's rank
-    graft.functions.FloatDot.register(spark)
     val emb = Tables.embeddings(spark, TestSpark.sf001)
       .select(col("vec_id"), col("embedding"),
         expr("sqrt(fdot(embedding, embedding))").as("nrm"))
@@ -192,7 +195,6 @@ class AnnLshSpec extends AnyFunSuite {
     // data-derived codebooks as the contract queries.
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.FloatDot.register(spark)
     val d = TestSpark.sf001
     val emb = Tables.embeddings(spark, d)
       .withColumn("nrm", expr("sqrt(fdot(embedding, embedding))"))

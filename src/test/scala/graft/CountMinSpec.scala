@@ -11,6 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
 class CountMinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  private def registerCms(): Unit = {
+    spark.udf.register("cms", udaf(graft.functions.CountMin.aggregator))
+    spark.udf.register("cms_estimate", (sketch: Seq[Long], key: String) =>
+      graft.functions.CountMin.estimate(sketch, key))
+  }
+
   test("cms estimates bound the exact counts on sf0.01 tokens") {
     val rows = SparkEntry.queries("q_agg_topk_cms")(spark, TestSpark.sf001)
       .collect()
@@ -31,7 +37,7 @@ class CountMinSpec extends AnyFunSuite {
 
   test("SQL-registered cms/cms_estimate agree with the Column forms") {
     import spark.implicits._
-    graft.functions.CountMin.register(spark)
+    registerCms()
     val df = Seq("a", "b", "a", "c", "a", "b").toDF("t")
     df.createOrReplaceTempView("cms_probe")
     val viaSql = spark.sql(
@@ -48,7 +54,7 @@ class CountMinSpec extends AnyFunSuite {
     // shape hardening (the ab8899a rule): an array<bigint> column that
     // is not a cms() sketch — wrong length — must degrade to NULL on
     // the SQL surface, not IndexOutOfBoundsException in every task
-    graft.functions.CountMin.register(spark)
+    registerCms()
     val viaSql = spark.sql(
       "SELECT cms_estimate(array(1L, 2L, 3L), 'tok') AS e").head()
     assert(viaSql.isNullAt(0), s"short array must yield NULL: $viaSql")

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.DataChecks
 import graft.operators.DataChecks._
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class DataChecksSpec extends AnyFunSuite {

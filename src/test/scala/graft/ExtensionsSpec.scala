@@ -1,24 +1,34 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.plans.{AsOfJoinStrategy, PruneColumnsThroughAsOf, PushFilterThroughAsOf}
 
 /** GraftExtensions installs the custom functions session-wide. */
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("fdot/minhash128 resolve via SparkSessionExtensions in plain SQL") {
-    // force a NEW session (extensions bind at session build; getOrCreate
-    // would return the suite-shared one) — reuses the same SparkContext
+  /** Runs `body` on a NEW session over the suite-shared SparkContext
+    * (extensions bind at session build; getOrCreate would return the
+    * shared one), then restores the shared session. */
+  private def withSession[T](b: SparkSession.Builder)(body: SparkSession => T): T = {
     val prev = TestSpark.spark
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
+    try body(b.getOrCreate())
+    finally {
+      // don't stop the JVM-wide SparkContext
+      SparkSession.setDefaultSession(prev)
+      SparkSession.setActiveSession(prev)
+    }
+  }
+
+  private def rows(s: SparkSession, q: String): Seq[String] =
+    SparkEntry.queries(q)(s, TestSpark.sf0001).collect().map(_.toString).toSeq
+
+  test("fdot/minhash128 resolve via SparkSessionExtensions in plain SQL") {
+    withSession(GraftSession.builder("ext", 2)) { s =>
       val dot = s.sql(
         """SELECT fdot(array(cast(1.0 as float), cast(2.0 as float)),
           |            array(cast(3.0 as float), cast(4.0 as float))) AS d"""
@@ -34,10 +44,41 @@ class ExtensionsSpec extends AnyFunSuite {
         .head.getSeq[Int](0)
       assert(sigs.length == graft.queries.AnnLsh.tables)
       assert(sigs.forall(v => v >= 0 && v < (1 << graft.queries.AnnLsh.bits)))
-    } finally {
-      // restore the shared session; don't stop the JVM-wide SparkContext
-      SparkSession.setDefaultSession(prev)
-      SparkSession.setActiveSession(prev)
+    }
+  }
+
+  private val installProbes =
+    Seq("q_join_asof", "q_sim_cosine_topk", "q_dedup_minhash_lsh")
+
+  test("SparkEntry.queries install what a session built without GraftExtensions lacks") {
+    val want = installProbes.map(q => q -> rows(TestSpark.spark, q)).toMap
+    withSession(SparkSession.builder()
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.sql.session.timeZone", "UTC")) { s =>
+      assert(!s.sessionState.functionRegistry.functionExists(
+        FunctionIdentifier("fdot")), "the probe session must start plain")
+      installProbes.foreach { q =>
+        val got = rows(s, q)
+        assert(got.nonEmpty && got == want(q), s"$q differs on a plain session")
+      }
+    }
+  }
+
+  test("install adds nothing to a session built with GraftExtensions") {
+    withSession(SparkSession.builder().withExtensions(new GraftExtensions)) { s =>
+      val state = s.sessionState
+      // per batch name, how often it holds each AsOf rule; Spark runs
+      // injected rules in both operator-optimization batches
+      def holders() = Seq(PushFilterThroughAsOf, PruneColumnsThroughAsOf)
+        .map(r => r -> state.optimizer.batches
+          .map(b => b.name -> b.rules.count(_ == r)).filter(_._2 > 0))
+      val built = holders()
+      rows(s, "q_join_asof")
+      rows(s, "q_join_asof")
+      assert(state.planner.strategies.count(_ == AsOfJoinStrategy) == 1)
+      assert(built.forall { case (_, held) =>
+        held.nonEmpty && held.forall(_._2 == 1) }, built)
+      assert(holders() == built, "install added a second copy of an AsOf rule")
     }
   }
 
@@ -52,7 +93,6 @@ class ExtensionsSpec extends AnyFunSuite {
     import org.scalacheck.rng.Seed
     val spark = TestSpark.spark
     import spark.implicits._
-    graft.functions.FloatDot.register(spark)
     val vecGen = Gen.listOfN(5, Gen.chooseNum(-8, 8)).map(_.map(_.toFloat / 2))
     val pairs = (0 until 20).flatMap(i => Gen.zip(vecGen, vecGen)
       .apply(Gen.Parameters.default, Seed(3100L + i)))
@@ -78,7 +118,6 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("fdot yields NULL for length mismatch and NULL elements") {
     val spark = TestSpark.spark
-    graft.functions.FloatDot.register(spark)
     def one(sql: String) = spark.sql(s"SELECT $sql AS d").head()
     // mismatched lengths: the zip_with/aggregate form fdot documents
     // itself equivalent to pads with NULL and the sum is poisoned —
@@ -101,7 +140,6 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("minhash128 implicitly casts INT input instead of crashing tasks") {
     val spark = TestSpark.spark
-    graft.functions.MinHash.register(spark)
     // an INT column reaches the aggregate through an analysis-time
     // CAST to BIGINT (ImplicitCastInputTypes) — before the fix this
     // was a per-task ClassCastException at runtime

@@ -1331,15 +1331,6 @@ class GraftLinesSpec extends AnyFunSuite {
       .writeTo("graft_rlo.ns.t").append()
     (1000L until 1020L).map(k => (k, k, s"hi$k")).toDF("k", "v", "s")
       .coalesce(1).writeTo("graft_rlo.ns.t").append()
-    val tdir = new org.apache.hadoop.fs.Path(s"$dir/rlo_warehouse/ns/t")
-    val hfs = tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hiFileBytes(): Seq[Seq[Byte]] = hfs.listStatus(tdir)
-      .map(_.getPath).filter(_.getName.endsWith(".gl")).toSeq
-      .sortBy(_.getName).map { p =>
-        val in = hfs.open(p)
-        try Iterator.continually(in.read()).takeWhile(_ >= 0)
-          .map(_.toByte).toSeq finally in.close()
-      }
     // UPDATE with carry-over: rows of the affected file that do NOT
     // match the condition must survive the rewrite untouched
     spark.sql("UPDATE graft_rlo.ns.t SET v = v * 10 WHERE k < 10")

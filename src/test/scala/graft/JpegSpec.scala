@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.multimodal.{Bmp, Jpeg, Multimodal, Png}
+import graft.multimodal.{Jpeg, Multimodal, Png}
 
 /** Baseline JPEG codec contract. Golden vectors are HAND-BUILT marker
   * streams with all-ones quantization tables and minimal one-or-two-

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** MinHash+LSH contract (SURVEY §2B q_dedup_minhash_lsh, declared
@@ -24,7 +23,6 @@ class MinHashSpec extends AnyFunSuite {
 
   test("sketch similarity estimate tracks exact Jaccard") {
     import spark.implicits._
-    graft.functions.MinHash.register(spark)
     // two sets with known overlap: |A|=|B|=100, |A∩B|=80 → J = 80/120
     val a = (0 until 100).map(i => ("a", s"tok_$i"))
     val b = (20 until 120).map(i => ("b", s"tok_$i"))
@@ -40,7 +38,6 @@ class MinHashSpec extends AnyFunSuite {
 
   test("minhash aggregate is merge-consistent (partition-order invariant)") {
     import spark.implicits._
-    graft.functions.MinHash.register(spark)
     def sketch(parts: Int): Seq[Long] =
       (0 until 1000).map(i => s"tok_$i").toDF("tok")
         .repartition(parts)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.multimodal.{Bmp, Flac, Gif, ImaAdpcm, Jpeg, Mp4, Multimodal, Png, Wav}
+import graft.multimodal.{Bmp, Flac, Gif, Jpeg, Mp4, Multimodal, Png, Wav}
 
 /** The 100 TB shape of the multimodal pipeline, now that all eight real
   * format walks (BMP, PNG, JPEG, GIF, PCM WAV, ADPCM WAV, FLAC, and the

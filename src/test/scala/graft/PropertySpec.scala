@@ -136,7 +136,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("minhash signature of a superset is elementwise <= (unsigned)") {
     import spark.implicits._
-    graft.functions.MinHash.register(spark)
     val toksGen = Gen.listOfN(30, Gen.identifier)
     cases(toksGen, 4).foreach { toks =>
       def sig(ts: Seq[String]): Seq[Long] =

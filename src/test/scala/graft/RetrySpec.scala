@@ -3,7 +3,6 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,17 +41,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RetrySpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4, 2]") // 4 threads, TWO attempts per task
-      .appName("graft-retry")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private lazy val spark: SparkSession = GraftSession.builder("retry", 4)
+    .master("local[4, 2]") // 4 threads, TWO attempts per task
+    .appName("graft-retry")
+    .getOrCreate()
 
   // per-user scratch (honors java.io.tmpdir): a hardcoded shared /tmp
   // path is the exact multi-user collision GraftTmp exists to avoid

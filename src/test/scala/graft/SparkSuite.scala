@@ -4,19 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** One SparkSession for the whole forked test JVM. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // keep saveAsTable warehouses out of the repo root (run droppings)
-      .config("spark.sql.warehouse.dir", GraftTmp.dir("warehouse_test"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    GraftSession.builder("test", 4).appName("graft-test").getOrCreate()
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
   val sf01 = "/root/testdata/sf0.1"
