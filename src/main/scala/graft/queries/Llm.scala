@@ -378,23 +378,15 @@ object Llm extends QueryGroup {
         //    the 1 KiB sketch + set size — the exchange payload stops
         //    growing with document size — and the exact intersection
         //    counts come from re-expanding the shingles of CANDIDATE
-        //    docs only (broadcast semi-join gate on the tiny candidate
-        //    doc set) and counting per-pair matches on the
+        //    docs only (the planner sizes the candidate-doc join) and
+        //    counting per-pair matches on the
         //    (doc, shingle) inverted index. One extra corpus-side map
         //    pass buys an exchange whose payload is sketch-sized; at
         //    100 TB the carry-sets exchange IS the corpus, which is
         //    the scale killer this branch removes.
         val invertedVerify = {
-          val p = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-          val bytes = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .getContentSummary(p).getLength
-          val thresh = s.conf
-            .getOption("spark.graft.dedup.invertedVerifyMinBytes")
-            .map(v => v.toLongOption.getOrElse(
-              throw new IllegalArgumentException(
-                "spark.graft.dedup.invertedVerifyMinBytes must be a " +
-                  s"byte count, got '$v'")))
-            .getOrElse(1L << 30)
+          val (bytes, thresh) = Confs.sizeGate(s, s"$d/documents.parquet",
+            "spark.graft.dedup.invertedVerifyMinBytes", 1L << 30)
           bytes >= thresh
         }
         val docAgg =
@@ -431,7 +423,7 @@ object Llm extends QueryGroup {
           val candCk = cand.localCheckpoint(eager = false)
           val candDocs = candCk.select(col("a").as("doc_id"))
             .union(candCk.select(col("b").as("doc_id"))).distinct()
-          val shCand = sh.join(broadcast(candDocs), Seq("doc_id"))
+          val shCand = sh.join(candDocs, Seq("doc_id"))
             .localCheckpoint(eager = false)
           // per-doc shingle rows are DISTINCT (array_distinct upstream),
           // so the (a,s)⋈(b,s) match emits exactly one row per common

@@ -44,6 +44,20 @@ object Confs {
       }
     }
   }
+
+  /** The inputs of a plan-time size gate: the bytes under `path` (0
+    * when it does not exist, so building a plan never fails on a
+    * missing input) and the byte-count conf `key`, `default` when
+    * unset. An unparseable value fails loudly instead of defaulting. */
+  def sizeGate(s: SparkSession, path: String, key: String,
+      default: Long): (Long, Long) = {
+    val threshold = s.conf.getOption(key).map(v => v.toLongOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"$key must be a byte count, got '$v'"))).getOrElse(default)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    (if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L, threshold)
+  }
 }
 
 /** The RNG-free md5 uniform-hash gate the sampling/text family shares

@@ -45,14 +45,9 @@ object Stream extends QueryGroup {
     // misconfiguration fails LOUDLY on both axes (ADVICE r16): an
     // unparseable value must not silently revert to the default any
     // more than a non-positive one may pass
-    val target = s.conf.getOption("spark.graft.stream.bytesPerPartition")
-      .map(v => v.toLongOption.getOrElse(throw new IllegalArgumentException(
-        "spark.graft.stream.bytesPerPartition must be a byte count, " +
-          s"got '$v'"))).getOrElse(64L << 20)
+    val (bytes, target) = Confs.sizeGate(s, s"$d/events.parquet",
+      "spark.graft.stream.bytesPerPartition", 64L << 20)
     require(target > 0, "spark.graft.stream.bytesPerPartition must be > 0")
-    val p = new org.apache.hadoop.fs.Path(s"$d/events.parquet")
-    val bytes = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getContentSummary(p).getLength
     val cap = s.conf.get("spark.sql.shuffle.partitions").toInt
     math.max(1, math.min(cap.toLong, (bytes + target - 1) / target).toInt)
   }

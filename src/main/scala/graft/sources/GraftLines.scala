@@ -51,12 +51,11 @@ import org.apache.spark.util.SerializableConfiguration
   *    file straight against the Hadoop FileSystem API (conf travels
   *    via the standard [[SerializableConfiguration]]).
   *  - **Distributed write** ([[BatchWrite]]): per-task writers stream
-  *    to task-unique STAGING names and the job commit renames them to
-  *    their final `.gl` names in one driver-side loop (the staged-
-  *    rename protocol — see [[GlWrite]]), so readers never observe a
-  *    half-written job; `mode("overwrite")` plans
+  *    to task-unique STAGING names and the job commit makes them live
+  *    in one driver-side step ([[GraftLines.publish]]), so readers
+  *    never observe a half-written job; `mode("overwrite")` plans
   *    OverwriteByExpression(true) which this builder satisfies via
-  *    [[SupportsTruncate]], with the old generation deleted at commit
+  *    [[SupportsTruncate]], with the old files replaced at commit
   *    time. Job abort deletes only staging files.
   *
   *  - **Columnar read** ([[PartitionReaderFactory.supportColumnarReads]]):
@@ -68,9 +67,9 @@ import org.apache.spark.util.SerializableConfiguration
   *    the `_graft_stats` manifest; `planInputPartitions` prunes files
   *    whose min/max prove no row can match the pushed filters.
   *
-  * Remaining honest limit (documented at [[GlWrite]]): the commit's
-  * rename loop is atomic per file, not across files, and two jobs
-  * racing one directory still need a catalog on top.
+  * Remaining honest limit (documented at [[GraftLines.publish]]): the
+  * commit's rename loop is atomic per file, not across files, and two
+  * jobs racing one plain directory still need a catalog on top.
   */
 class GraftLines extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graftlines"
@@ -153,10 +152,13 @@ object GraftLines {
     * ([[rewriteWithoutMatches]], nameOverride = the old base name),
     * which is removal-only — surviving lines are byte-identical, so a
     * changed row count ALWAYS changes the length (every dropped row
-    * was >= 1 byte + newline); and (b) streaming epoch replacement on
-    * a plain directory (`part-<pid>-e<E>-<task>` names), where a
-    * retried epoch deterministically rewrites the SAME rows, so an
-    * unchanged length accompanies an unchanged count. A future rewrite
+    * was >= 1 byte + newline); and (b) a plain-directory [[publish]]
+    * onto an existing target. Batch, COW and compact final names carry
+    * a driver-generated job tag ([[newJobTag]]), so in practice only
+    * the streaming sink's `part-<pid>-q<query>-e<E>-<task>` names meet
+    * an existing file, and a retried epoch deterministically rewrites
+    * the SAME rows, so an unchanged length accompanies an unchanged
+    * count. A future rewrite
     * path that both changes the row set AND rewrites surviving values
     * under one name would break the proof (counts could change at a
     * coincidentally-preserved length) — such a path must mint fresh
@@ -170,11 +172,14 @@ object GraftLines {
     * marker exists (written by the catalog for
     * `TBLPROPERTIES ('versioned'='true')`) or any generation manifest
     * `_graft_gen.<N>` does. On a versioned table every commit —
-    * append, overwrite, or row-level COW rewrite — publishes a NEW
-    * generation manifest listing the data files of that version and
-    * deletes nothing; data files carry a `-g<N>` suffix so a name can
-    * never be reused across generations (reuse would rewrite history
-    * in place). Readers resolve the requested generation (default:
+    * append, overwrite, row-level COW rewrite, streaming epoch or
+    * compact ([[publish]]) — writes a NEW generation manifest listing
+    * the data files of that version and deletes nothing; data files
+    * carry a `-g<N>` suffix so a name can never be reused across
+    * generations (reuse would rewrite history in place). The first
+    * generation of a directory that already held files adopts them,
+    * except `-g<N>` names (a crashed versioned commit's orphans).
+    * Readers resolve the requested generation (default:
     * latest) and plan ONLY its files, so `VERSION AS OF n` is one
     * extra metadata-file read at plan time — the data path, pruning,
     * block splitting, and runtime filtering are identical. Non-
@@ -318,6 +323,16 @@ object GraftLines {
       conf: org.apache.hadoop.conf.Configuration): Int =
     genVersions(dir, conf).lastOption.getOrElse(0)
 
+  /** Committed generations plus the versioned decision, from one
+    * listing (the marker is probed only when no generation exists):
+    * the table state a [[publish]] works from. */
+  private[sources] def gensOf(dir: String,
+      conf: org.apache.hadoop.conf.Configuration): GlGens = {
+    val marker = new Path(dir, VersionMarker)
+    val gens = genVersions(dir, conf)
+    GlGens(gens, gens.nonEmpty || marker.getFileSystem(conf).exists(marker))
+  }
+
   /** Committed generation numbers, ascending. */
   private[sources] def genVersions(dir: String,
       conf: org.apache.hadoop.conf.Configuration): Seq[Int] = {
@@ -398,6 +413,135 @@ object GraftLines {
         e.toLongOption.map((_, q))
       }
     finally br.close()
+  }
+
+  /** Task commit messages, one [[GlCommitted]] per file (a partitioned
+    * or bucketed task reports a [[GlMultiCommitted]]; failed tasks
+    * leave null slots). */
+  private[sources] def committedFiles(
+      messages: Array[WriterCommitMessage]): Seq[GlCommitted] =
+    messages.toSeq.flatMap {
+      case m: GlMultiCommitted => m.msgs
+      case c: GlCommitted => Seq(c)
+      case _ => Nil
+    }
+
+  /** Drops the staged bytes of a commit that will not publish (job or
+    * epoch abort, a replayed epoch): nothing was renamed, so the
+    * reader-visible directory was never touched. */
+  private[sources] def discardStaged(dir: String,
+      messages: Array[WriterCommitMessage]): Unit = {
+    val fs = new Path(dir)
+      .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+    committedFiles(messages).foreach {
+      case GlCommitted(Some(s), _, _) => fs.delete(new Path(s), false)
+      case _ => ()
+    }
+  }
+
+  /** Whether `name` is a versioned commit's `<base>-g<N>.gl` name. */
+  private def hasGenSuffix(name: String): Boolean =
+    name.stripSuffix(Ext).matches(".*-g\\d+")
+
+  /** The one commit protocol every graftlines write ends in: batch
+    * append and overwrite ([[GlWrite]]), row-level COW replace
+    * ([[GlReplaceWrite]]), streaming epochs ([[GlStreamingWrite]]) and
+    * [[compact]]. Task writers stage under dot-prefixed `.staging`
+    * names no listing sees; this driver-side step makes them live.
+    * Until it runs readers see the directory exactly as the previous
+    * commit left it. `replaces` names the live files the commit
+    * supersedes; `epoch` tags a streaming commit; `pinnedGen` fixes
+    * the generation number (compact publishes at the generation its
+    * rewrite read plus one, so a commit that landed meanwhile fails
+    * the CAS instead of being dropped from the compacted version);
+    * `known` is the caller's [[gensOf]], so a caller that already
+    * listed the generations (the streaming ledger) does not list twice.
+    *
+    *  - **Versioned table**: staged files land under `-g<N>` suffixed
+    *    names, unique forever, so no commit rewrites a committed
+    *    version's bytes. Generation N lists the carried files (the
+    *    last generation, or the directory listing when the marker was
+    *    added to a directory with files, less `-g<N>` names: those are
+    *    a crashed versioned commit's orphans, never pre-versioning
+    *    files) minus `replaces`, plus the
+    *    new files, and is published through [[writeGen]], the commit's
+    *    compare-and-swap. Nothing is deleted: older generations stay
+    *    readable, with their stats lines, until [[expireVersions]]. A
+    *    target that already exists means two committers computed the
+    *    same N and fails the commit, except under an epoch, where it
+    *    is a crashed attempt's unreferenced orphan and is replaced. A
+    *    commit that fails after its renames leaves files no generation
+    *    lists; `expireVersions(gcOrphans = true)` reclaims them.
+    *  - **Plain directory**: staged files are renamed to their final
+    *    names (an existing target is replaced), then the replaced files
+    *    are deleted, and on overwrite every other `.staging` file (debris
+    *    of jobs that died without abort). Renames go FIRST so that a
+    *    crash or a failed delete can leave superseded rows visible next
+    *    to their replacements, but can never lose rows. A delete that
+    *    reports false while the file is still there fails the commit,
+    *    before the stats merge: duplicated rows are never silent.
+    *
+    * Last, the tasks' stats lines are re-keyed to the final names and
+    * merged into `_graft_stats` ([[mergeStats]], best-effort). The
+    * rename loop is atomic per file, not across files: two jobs
+    * racing one plain directory still need the catalog on top.
+    * Returns the published generation on a versioned table. */
+  private[sources] def publish(dir: String,
+      conf: org.apache.hadoop.conf.Configuration, msgs: Seq[GlCommitted],
+      replaces: GlReplace, epoch: Option[(Long, String)] = None,
+      pinnedGen: Option[Int] = None,
+      known: Option[GlGens] = None): Option[Int] = {
+    val fs = new Path(dir).getFileSystem(conf)
+    val GlGens(gens, versioned) = known.getOrElse(gensOf(dir, conf))
+    val next = pinnedGen.getOrElse(gens.lastOption.getOrElse(0) + 1)
+    val wipe = replaces == GlReplace.All
+    // listed before any rename, so this commit's own files are not in it
+    lazy val listed = listDataFiles(dir, conf).map(new Path(_).getName)
+    val (carried, doomed) = replaces match {
+      case _ if versioned && wipe => (Nil, Nil)
+      case GlReplace.Files(names) if versioned =>
+        (gens.lastOption.map(readGen(dir, _, conf))
+          .getOrElse(listed.filterNot(hasGenSuffix)).filterNot(names), Nil)
+      case GlReplace.Files(names) => (Nil, names.toSeq)
+      case _ => (Nil, listed)
+    }
+    val published = msgs.collect {
+      case GlCommitted(Some(s), Some(f), lines) =>
+        val fp = new Path(f)
+        val dst = if (!versioned) fp else new Path(fp.getParent,
+          fp.getName.stripSuffix(Ext) + s"-g$next$Ext")
+        if (fs.exists(dst)) {
+          require(!versioned || epoch.nonEmpty,
+            s"graftlines: commit target $dst already exists — concurrent " +
+              "committers race on the generation number; serialize " +
+              "writers through the catalog")
+          fs.delete(dst, false)
+        }
+        require(fs.rename(new Path(s), dst),
+          s"graftlines: commit failed renaming $s -> $dst")
+        (dst.getName, lines)
+    }
+    val newNames = published.map(_._1)
+    if (versioned)
+      writeGen(dir, next, (carried ++ newNames).distinct, conf, epoch)
+    val failed = doomed.filterNot(newNames.toSet).filter { n =>
+      val p = new Path(dir, n)
+      !fs.delete(p, false) && fs.exists(p)
+    }
+    require(failed.isEmpty,
+      s"graftlines: commit could not delete ${failed.size} replaced " +
+        s"file(s) (${failed.take(3).mkString(", ")}…) — their rows " +
+        "are still visible next to the new files")
+    val plainWipe = wipe && !versioned
+    if (plainWipe)
+      fs.listStatus(new Path(dir))
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".staging"))
+        .foreach(st => fs.delete(st.getPath, false))
+    val newLines = published.flatMap { case (n, ls) => ls.map(l => s"$n\t$l") }
+    if (newLines.nonEmpty || doomed.nonEmpty || plainWipe)
+      mergeStats(dir, conf, newNames.toSet ++ doomed, newLines,
+        replaceAll = plainWipe)
+    if (versioned) Some(next) else None
   }
 
   /** Publish generation `n` via temp + rename (readers see a complete
@@ -747,24 +891,12 @@ object GraftLines {
     * CURRENT file set into at most `maxFiles` files via a distributed
     * Spark job (read → coalesce → write to a scratch dir — data moves
     * executor-to-executor, never through the driver), then swaps the
-    * result in:
-    *
-    *  - **Versioned table**: the swap is a NEW generation manifest
-    *    listing only the compacted files — one atomic rename, history
-    *    intact (every older generation still resolves its own files;
-    *    `expireVersions` reclaims the fragmented ones later). Restart
-    *    safety is the manifest discipline: a crash before the publish
-    *    leaves the table exactly as it was.
-    *  - **Plain directory**: old files delete + compacted files move
-    *    in (`compact-<k>-…` names cannot collide with task names);
-    *    the cross-file window is the same documented non-atomicity as
-    *    every logless swap here — the catalog/versioning layer is the
-    *    transactional answer.
-    *
-    * Per-file stats ride along: the scratch write's manifest lines are
-    * re-keyed to the final names, so pruning keeps working on the
-    * compacted layout. Returns (files before, files after); no-op when
-    * already within budget. */
+    * result in with one [[publish]] that replaces the pre-compact
+    * files. On a versioned table that is a new generation listing the
+    * compacted files, with history intact (`expireVersions` reclaims
+    * the fragmented files later). The scratch write's stats lines ride
+    * along, so pruning keeps working on the compacted layout. Returns
+    * (files before, files after); no-op when already within budget. */
   def compact(dir: String, maxFiles: Int,
       spark: SparkSession): (Int, Int) = {
     require(maxFiles >= 1, "compact must keep at least one file")
@@ -773,8 +905,8 @@ object GraftLines {
     val fs = dirPath.getFileSystem(conf)
     // the generation the rewrite is OF — captured before the Spark
     // job so a commit landing mid-compact collides LOUDLY at publish
-    // time (see below) instead of being silently omitted from the
-    // compacted generation and later reclaimed as expired
+    // time (the pinned generation) instead of being silently omitted
+    // from the compacted generation and later reclaimed as expired
     val snapshotGen = genVersions(dir, conf).lastOption.getOrElse(0)
     val before = resolveDataFileStatuses(dir, conf, None).map(_._1)
     if (before.size <= maxFiles) return (before.size, before.size)
@@ -798,71 +930,29 @@ object GraftLines {
       .format("graftlines").load(dir)
       .coalesce(maxFiles)
       .write.format("graftlines").mode("overwrite").save(scratch)
-    val moved = listDataFiles(scratch, conf).zipWithIndex.map {
-      case (f, i) =>
-        val src = new Path(f)
-        (src.getName, s"compact-$i-${src.getName}")
-    }
-    // scratch stats lines re-keyed to the final names (raw text remap
-    // — the payload after the first tab field is name-independent)
-    val statLines: Seq[String] = {
+    // the scratch write's stats lines ride the publish as the tasks'
+    // lines would (the payload after the first tab is name-independent)
+    val statLines: Map[String, Seq[String]] = {
       val sp = statsPath(scratch)
-      if (!fs.exists(sp)) Nil
+      if (!fs.exists(sp)) Map.empty
       else {
-        val nameMap = moved.toMap
         val br = new BufferedReader(new InputStreamReader(fs.open(sp), UTF_8))
         try Iterator.continually(br.readLine()).takeWhile(_ != null)
-          .flatMap { l =>
-            val cut = l.indexOf('\t')
-            if (cut < 0) None
-            else nameMap.get(l.substring(0, cut))
-              .map(nb => nb + l.substring(cut))
-          }.toList
+          .filter(_.contains('\t')).toSeq
+          .groupMap(l => l.substring(0, l.indexOf('\t')))(l =>
+            l.substring(l.indexOf('\t') + 1))
         finally br.close()
       }
     }
-    moved.foreach { case (base, nb) =>
-      val dst = new Path(dirPath, nb)
-      // scratch names carry a fresh job tag so this cannot trip in
-      // practice; the guard keeps a collision from ever silently
-      // REPLACING bytes a historical generation still references
-      // (local-FS rename overwrites; HDFS rename would just fail)
-      require(!fs.exists(dst),
-        s"graftlines: compact target $nb already exists — refusing " +
-          "to overwrite a published file")
-      require(fs.rename(new Path(scratch, base), dst),
-        s"graftlines: compact failed moving $base -> $nb")
+    val moved = listDataFiles(scratch, conf).zipWithIndex.map {
+      case (f, i) =>
+        val base = new Path(f).getName
+        GlCommitted(Some(f), Some(new Path(dirPath, s"compact-$i-$base")
+          .toString), statLines.getOrElse(base, Nil))
     }
-    if (isVersioned(dir, conf)) {
-      // publish at snapshotGen + 1, NOT a freshly-listed last + 1: if
-      // a commit landed while the rewrite job ran, that commit took
-      // this number and the writeGen CAS fails loudly — aborting the
-      // compact (correct: its input snapshot is stale) instead of
-      // publishing a generation that silently omits the new commit's
-      // files. The moved-in compacted files then remain as
-      // unmanifested orphans, the same debris class as a lost
-      // append's, reclaimable via expireVersions(gcOrphans = true).
-      writeGen(dir, snapshotGen + 1, moved.map(_._2), conf)
-      if (statLines.nonEmpty)
-        mergeStats(dir, conf, dropNames = Set.empty, newLines = statLines)
-    } else {
-      // a delete reporting false (permissions, locks) with the file
-      // still on disk would leave the old rows alive NEXT TO their
-      // compacted copies — silent permanent duplication, with the
-      // file's stats line already dropped so nothing ever flags it
-      val failed = before.filter { f =>
-        val p = new Path(f)
-        !fs.delete(p, false) && fs.exists(p)
-      }
-      require(failed.isEmpty,
-        s"graftlines: compact could not delete ${failed.size} " +
-          s"pre-compact file(s) (${failed.take(3).mkString(", ")}…) — " +
-          "aborting before the stats merge; rows would otherwise be " +
-          "duplicated next to their compacted copies")
-      mergeStats(dir, conf,
-        dropNames = before.map(new Path(_).getName).toSet,
-        newLines = statLines, replaceAll = true)
-    }
+    publish(dir, conf, moved,
+      GlReplace.Files(before.map(new Path(_).getName).toSet),
+      pinnedGen = Some(snapshotGen + 1))
     fs.delete(new Path(scratch), true)
     (before.size, moved.size)
   }
@@ -1868,11 +1958,10 @@ private[sources] class GlGroupScanBuilder(op: GlRowLevelOperation,
 }
 
 /** Write side of a group-based rewrite: staged task writers exactly as
-  * [[GlWrite]], but commit REPLACES the scanned groups — deletes the
-  * files the paired scan planned, publishes the staged files, and
-  * swaps the affected manifest lines. The delete-then-publish window
-  * is the same documented non-atomicity as overwrite's truncation;
-  * the catalog layer is the transactional answer. */
+  * [[GlWrite]], and a [[GraftLines.publish]] that replaces the files
+  * the paired scan planned. On a versioned table the statement becomes
+  * time-travelable for free: `VERSION AS OF n` replays the
+  * pre-statement table from the same bytes. */
 private[sources] class GlReplaceWrite(path: String, schema: StructType,
     op: GlRowLevelOperation) extends Write with BatchWrite {
   GraftLines.header(schema) // reject unstorable types before tasks launch
@@ -1889,77 +1978,14 @@ private[sources] class GlReplaceWrite(path: String, schema: StructType,
       schema)
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
-    val staged = messages.collect {
-      case GlCommitted(Some(s), Some(f), _) => (new Path(s), new Path(f))
-    }
-    val victims = op.scannedFiles
-    if (GraftLines.isVersioned(path, conf)) {
-      // Versioned COW: victims stay on disk (older generations still
-      // reference them); the new generation = previous minus the
-      // rewritten groups plus the replacements. An UPDATE/DELETE/MERGE
-      // thereby becomes time-travelable for free — `VERSION AS OF n`
-      // replays the pre-statement table from the SAME bytes. Victim
-      // stats lines survive for the same reason.
-      val gens = GraftLines.genVersions(path, conf)
-      val next = gens.lastOption.getOrElse(0) + 1
-      def vname(f: Path): Path = new Path(f.getParent,
-        f.getName.stripSuffix(GraftLines.Ext) + s"-g$next${GraftLines.Ext}")
-      val fmap: Map[String, String] =
-        staged.map { case (_, f) => f.getName -> vname(f).getName }.toMap
-      staged.foreach { case (s, f) =>
-        val tgt = vname(f)
-        require(!fs.exists(tgt),
-          s"graftlines: versioned replace target $tgt already exists — " +
-            "concurrent committers race on the generation number")
-        require(fs.rename(s, tgt),
-          s"graftlines: versioned replace-commit failed renaming $s -> $tgt")
-      }
-      val victimBases = victims.map(f => new Path(f).getName).toSet
-      val carried = gens.lastOption.map(GraftLines.readGen(path, _, conf))
-        .getOrElse(GraftLines.listDataFiles(path, conf)
-          .map(new Path(_).getName))
-        .filterNot(victimBases)
-      val newBases = staged.map { case (_, f) => fmap(f.getName) }
-      GraftLines.writeGen(path, next, carried ++ newBases, conf)
-      val newLines = messages.flatMap {
-        case GlCommitted(_, Some(f), lines) =>
-          val base = fmap(new Path(f).getName)
-          lines.map(l => s"$base\t$l")
-        case _ => Nil
-      }
-      if (newLines.nonEmpty)
-        GraftLines.mergeStats(path, conf, dropNames = Set.empty,
-          newLines = newLines)
-      return
-    }
-    victims.foreach(f => fs.delete(new Path(f), false))
-    staged.foreach { case (s, f) =>
-      if (fs.exists(f)) fs.delete(f, false)
-      require(fs.rename(s, f),
-        s"graftlines: replace-commit failed renaming $s -> $f")
-    }
-    val newLines = messages.flatMap {
-      case GlCommitted(_, Some(f), lines) =>
-        val base = new Path(f).getName
-        lines.map(l => s"$base\t$l")
-      case _ => Nil
-    }
-    GraftLines.mergeStats(path, conf,
-      dropNames = victims.map(new Path(_).getName).toSet
-        ++ newLines.map(_.takeWhile(_ != '\t')),
-      newLines = newLines.toSeq)
-  }
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    GraftLines.publish(path,
+      SparkSession.active.sparkContext.hadoopConfiguration,
+      GraftLines.committedFiles(messages),
+      GlReplace.Files(op.scannedFiles.map(new Path(_).getName).toSet))
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
-    messages.collect { case GlCommitted(Some(s), _, _) =>
-      fs.delete(new Path(s), false)
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftLines.discardStaged(path, messages)
 }
 
 /** One pushed aggregate function: kind ∈ countstar|count|min|max,
@@ -3082,20 +3108,9 @@ private[sources] class GlWriteBuilder(path: String, schema: StructType,
     clusterBy, clusterParts, partitionCol, bucketSpec, queryId)
 }
 
-/** Staged-rename commit protocol: tasks never land bytes under a
-  * reader-visible name. Each task writer streams to a staging name
-  * (`.part-….gl.staging` — the `.gl` listing never sees it) and the
-  * JOB commit renames every staged file to its final `.gl` name in one
-  * driver-side metadata loop, then writes the stats manifest. Until
-  * commit, readers see the directory exactly as the previous job left
-  * it — including under `mode("overwrite")`, whose deletion of the old
-  * files now happens at commit time, not before the tasks launch. A
-  * failed/aborted job leaves only staging debris that no reader lists
-  * and the next overwrite clears. The residual window is the rename
-  * loop itself (O(files) driver-side renames, same exposure as
-  * Hadoop's FileOutputCommitter) — honest limit: per-file rename is
-  * atomic, the loop across files is not, and a multi-writer race on
-  * one directory still needs a catalog on top. */
+/** Batch append and overwrite: task writers stage, and the job commit
+  * is one [[GraftLines.publish]] (overwrite replaces every live file
+  * at commit time, not before the tasks launch). */
 private[sources] class GlWrite(path: String, schema: StructType,
     truncate: Boolean, clusterBy: Option[String] = None,
     clusterParts: Option[Int] = None,
@@ -3187,164 +3202,38 @@ private[sources] class GlWrite(path: String, schema: StructType,
     }
   }
 
-  /** Publishes the job: under truncate, deletes the files the old
-    * generation left (data + stats — deferred from factory creation so
-    * concurrent readers keep a complete view until here), then renames
-    * every staged task file to its final name. A rename failure fails
-    * the job loudly — a missing data file is loss, unlike stats.
-    * Afterwards the `_graft_stats` manifest is assembled from the
-    * per-task stats riding the commit messages — the driver writes one
-    * small index file; no task output is re-read. Appends merge with
-    * the existing manifest (its lines for files this write replaced
-    * are harmless: skipping only consults lines whose file is listed).
-    * Manifest write failures are swallowed — stats are an optimization
-    * and must never fail a committed write. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val dirFs = new Path(path).getFileSystem(conf)
-    // partitioned tasks report one GlCommitted per per-value file
-    val msgs: Array[GlCommitted] = messages.flatMap {
-      case m: GlMultiCommitted => m.msgs
-      case c: GlCommitted => Seq(c)
-      case _ => Nil
-    }
     // publishing a partitioned write makes the table partitioned for
     // every later writer/reader (idempotent; conflicting column fails)
     partitionCol.foreach(GraftLines.writePartitionCol(path, _, conf))
-    val staged = msgs.collect {
-      case GlCommitted(Some(s), Some(f), _) => (new Path(s), new Path(f))
-    }
-    if (GraftLines.isVersioned(path, conf)) {
-      commitVersioned(conf, dirFs, staged, msgs)
-      return
-    }
-    if (truncate) {
-      GraftLines.listDataFiles(path, conf)
-        .foreach(f => dirFs.delete(new Path(f), false))
-      dirFs.delete(GraftLines.statsPath(path), false) // stale stats must die
-      // staging debris from jobs that died without abort() is garbage;
-      // this job's own staged files (about to be renamed) are exempt —
-      // matched by base name, which is task-unique within the directory
-      // (full-path compare would trip on fs-scheme qualification)
-      val ours = staged.map(_._1.getName).toSet
-      dirFs.listStatus(new Path(path)).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".staging")
-          && !ours.contains(st.getPath.getName))
-        .foreach(st => dirFs.delete(st.getPath, false))
-    }
-    staged.foreach { case (s, f) =>
-      // append mode may legally re-use a final name an older job left
-      // (same partition/task ids): replace, matching the previous
-      // create-overwrite semantics
-      if (dirFs.exists(f)) dirFs.delete(f, false)
-      require(dirFs.rename(s, f),
-        s"graftlines: commit failed renaming $s -> $f")
-    }
-    val newLines = msgs.flatMap {
-      case GlCommitted(_, Some(f), lines) =>
-        val base = new Path(f).getName
-        lines.map(l => s"$base\t$l")
-      case _ => Nil
-    }
-    if (newLines.isEmpty) return
-    // a re-used task file name replaces its old bytes, so its old
-    // manifest lines must not survive beside the new ones
-    GraftLines.mergeStats(path, conf,
-      dropNames = newLines.map(_.takeWhile(_ != '\t')).toSet,
-      newLines = newLines, replaceAll = truncate)
+    GraftLines.publish(path, conf, GraftLines.committedFiles(messages),
+      if (truncate) GlReplace.All else GlReplace.Append)
   }
 
-  /** Versioned publish: deletes NOTHING. Staged files land under
-    * generation-suffixed names (`…-g<N>.gl` — unique forever, so a
-    * later commit can never rewrite a committed version's bytes in
-    * place), the new generation manifest lists carried-over files
-    * (append: the previous generation; overwrite: none) plus this
-    * job's, and old generations stay byte-for-byte readable until
-    * [[GraftLines.expireVersions]]. Stats lines for superseded files
-    * also survive — older versions still prune with them, and pruning
-    * only ever consults lines for files the resolved generation
-    * plans. */
-  private def commitVersioned(conf: org.apache.hadoop.conf.Configuration,
-      dirFs: org.apache.hadoop.fs.FileSystem,
-      staged: Seq[(Path, Path)],
-      messages: Array[GlCommitted]): Unit = {
-    val gens = GraftLines.genVersions(path, conf)
-    val next = gens.lastOption.getOrElse(0) + 1
-    // pre-versioning data files (a marker added to an existing
-    // path-based dir): adopted into the first generation on append
-    val preExisting: Seq[String] =
-      if (gens.nonEmpty || truncate) Nil
-      else GraftLines.listDataFiles(path, conf).map(new Path(_).getName)
-    def vname(f: Path): Path = new Path(f.getParent,
-      f.getName.stripSuffix(GraftLines.Ext) + s"-g$next${GraftLines.Ext}")
-    val fmap: Map[String, String] =
-      staged.map { case (_, f) => f.getName -> vname(f).getName }.toMap
-    staged.foreach { case (s, f) =>
-      val tgt = vname(f)
-      require(!dirFs.exists(tgt),
-        s"graftlines: versioned commit target $tgt already exists — " +
-          "concurrent committers race on the generation number; " +
-          "serialize writers through the catalog")
-      require(dirFs.rename(s, tgt),
-        s"graftlines: versioned commit failed renaming $s -> $tgt")
-    }
-    val newBases = staged.map { case (_, f) => fmap(f.getName) }
-    val carried: Seq[String] =
-      if (truncate) Nil
-      else gens.lastOption.map(GraftLines.readGen(path, _, conf))
-        .getOrElse(preExisting)
-    GraftLines.writeGen(path, next, carried ++ newBases, conf)
-    val newLines = messages.flatMap {
-      case GlCommitted(_, Some(f), lines) =>
-        val base = fmap(new Path(f).getName)
-        lines.map(l => s"$base\t$l")
-      case _ => Nil
-    }
-    if (newLines.nonEmpty)
-      GraftLines.mergeStats(path, conf, dropNames = Set.empty,
-        newLines = newLines)
-  }
-
-  /** Nothing was renamed (commit never ran), so aborting = deleting
-    * staging files; the reader-visible directory was never touched. */
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
-    messages.flatMap {
-      case m: GlMultiCommitted => m.msgs
-      case c: GlCommitted => Seq(c)
-      case _ => Nil
-    }.collect { case GlCommitted(Some(st), _, _) =>
-      fs.delete(new Path(st), false)
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftLines.discardStaged(path, messages)
 }
 
 /** Exactly-once streaming sink (`writeStream.format("graftlines")`,
-  * Append mode): per-epoch task writers stage exactly like batch, and
-  * the epoch commit publishes with epoch-keyed idempotence — the
-  * property Structured Streaming demands, because after a failure the
-  * engine replays the last micro-batch and calls commit for an epoch
-  * that may already be durable.
+  * Append mode): every epoch ends in one [[GraftLines.publish]], made
+  * idempotent per epoch — the property Structured Streaming demands,
+  * because after a failure the engine replays the last micro-batch and
+  * calls commit for an epoch that may already be durable.
   *
-  *  - **Versioned table**: each epoch commit is a new GENERATION whose
-  *    manifest carries a `#epoch:<E>` tag; the single atomic manifest
-  *    rename is both the data publish and the idempotence ledger (no
-  *    separate log whose lag could double-commit). A replayed epoch is
-  *    detected via [[GraftLines.committedEpochs]] and its bytes are
-  *    dropped. Streaming INTO a versioned table composes with the
-  *    micro-batch SOURCE over the same table: each sunk epoch streams
-  *    back out as exactly one generation-diff batch.
-  *  - **Plain directory**: final names carry the epoch (`-e<E>-`), and
-  *    a commit first clears any files of ITS OWN epoch (a crashed or
-  *    replayed attempt — other epochs can never match the tag), then
-  *    renames. Replace-per-epoch is the overwrite-by-batchId
-  *    idempotence foreachBatch users hand-roll, native in the sink.
+  *  - **Versioned table**: the generation manifest carries an
+  *    `#epoch:<E>:<query>` tag, so the one atomic manifest publish is
+  *    both the data publish and the idempotence ledger. A replayed
+  *    epoch is found via [[GraftLines.committedEpochs]] and its bytes
+  *    are dropped. Each sunk epoch streams back out of the micro-batch
+  *    SOURCE over the same table as exactly one generation-diff batch.
+  *  - **Plain directory**: final names carry the query and epoch, and
+  *    the commit replaces the files of ITS OWN epoch (a crashed or
+  *    replayed attempt) — the overwrite-by-batchId idempotence
+  *    foreachBatch users hand-roll, native in the sink.
   *
-  * Honest limits: a crashed versioned attempt can orphan
-  * generation-suffixed bytes that no manifest references (the vacuum /
-  * expireVersions sweeps already reclaim exactly that), and Complete /
-  * Update output modes are rejected up front ([[GlWrite.toStreaming]]). */
+  * Complete / Update output modes are rejected up front
+  * ([[GlWrite.toStreaming]]). */
 private[sources] class GlStreamingWrite(path: String, schema: StructType,
     rawQueryId: String = "")
     extends StreamingWrite {
@@ -3368,18 +3257,14 @@ private[sources] class GlStreamingWrite(path: String, schema: StructType,
   private val knownEpochs =
     scala.collection.mutable.Set.empty[(Long, String)]
 
-  /** Returns (committed epochs, current generation list) — the gens
-    * list rides along so the commit path pays ONE directory listing
-    * per epoch, not one here and another for the next-gen number. */
-  private def committedEpochsIncremental(
+  private def committedEpochsIncremental(gens: Seq[Int],
       conf: org.apache.hadoop.conf.Configuration)
-      : (collection.Set[(Long, String)], Seq[Int]) = {
-    val gens = GraftLines.genVersions(path, conf)
+      : collection.Set[(Long, String)] = {
     gens.iterator.filter(_ > scannedThroughGen).foreach { n =>
       GraftLines.epochOfGen(path, n, conf).foreach(knownEpochs += _)
     }
     scannedThroughGen = gens.foldLeft(scannedThroughGen)(math.max)
-    (knownEpochs, gens)
+    knownEpochs
   }
 
   override def createStreamingWriterFactory(
@@ -3394,101 +3279,42 @@ private[sources] class GlStreamingWrite(path: String, schema: StructType,
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
-    val staged = messages.collect {
-      case GlCommitted(Some(s), Some(f), _) => (new Path(s), new Path(f))
-    }.toSeq
-    if (GraftLines.isVersioned(path, conf))
-      commitVersionedEpoch(epochId, messages, staged, conf, fs)
-    else commitPlainEpoch(epochId, messages, staged, conf, fs)
+    val epoch = (epochId, queryId)
+    val files = GraftLines.committedFiles(messages)
+    // one generation listing per epoch serves the ledger and publish
+    val table = GraftLines.gensOf(path, conf)
+    if (table.versioned) {
+      val committed = committedEpochsIncremental(table.list, conf)
+      if (committed.contains(epoch) || committed.contains((epochId, ""))) {
+        // replayed epoch after recovery: already durable — drop the
+        // replay's bytes, keep the committed manifest untouched
+        GraftLines.discardStaged(path, messages)
+        return
+      }
+      val gen = GraftLines.publish(path, conf, files, GlReplace.Append,
+        Some(epoch), known = Some(table))
+      // record our own publish in the ledger cache so the next commit's
+      // incremental scan doesn't re-open the manifest just written
+      knownEpochs += epoch
+      gen.foreach(g => scannedThroughGen = math.max(scannedThroughGen, g))
+    } else {
+      // replace-per-epoch: a crashed or replayed attempt of THIS epoch
+      // left files carrying its tag. The tag keys on (query, epoch): a
+      // replacement query's epoch 0 must never delete the previous
+      // query's epoch-0 files. Legacy names (pre-query-tag builds) no
+      // longer match and linger as orphan debris rather than risk
+      // cross-query deletion.
+      val tag = s"-q$queryId-e$epochId-"
+      val stale = GraftLines.listDataFiles(path, conf)
+        .map(new Path(_).getName).filter(_.contains(tag))
+      GraftLines.publish(path, conf, files, GlReplace.Files(stale.toSet),
+        Some(epoch), known = Some(table))
+    }
   }
 
-  private def commitVersionedEpoch(epochId: Long,
-      messages: Array[WriterCommitMessage], staged: Seq[(Path, Path)],
-      conf: org.apache.hadoop.conf.Configuration,
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val (committed, gens) = committedEpochsIncremental(conf)
-    if (committed.contains((epochId, queryId))
-        || committed.contains((epochId, ""))) {
-      // replayed epoch after recovery: already durable — drop the
-      // replay's bytes, keep the committed manifest untouched
-      staged.foreach { case (s, _) => fs.delete(s, false) }
-      return
-    }
-    val next = gens.lastOption.getOrElse(0) + 1
-    def vname(f: Path): Path = new Path(f.getParent,
-      f.getName.stripSuffix(GraftLines.Ext) + s"-g$next${GraftLines.Ext}")
-    val fmap: Map[String, String] =
-      staged.map { case (_, f) => f.getName -> vname(f).getName }.toMap
-    staged.foreach { case (s, f) =>
-      val tgt = vname(f)
-      // a target left by a CRASHED attempt of this same epoch is
-      // unreferenced (its manifest never published) — replace it;
-      // epoch-tagged names cannot collide across committed epochs
-      if (fs.exists(tgt)) fs.delete(tgt, false)
-      require(fs.rename(s, tgt),
-        s"graftlines: streaming commit failed renaming $s -> $tgt")
-    }
-    val carried =
-      gens.lastOption.map(GraftLines.readGen(path, _, conf)).getOrElse(Nil)
-    GraftLines.writeGen(path, next,
-      carried ++ staged.map { case (_, f) => fmap(f.getName) }, conf,
-      epoch = Some((epochId, queryId)))
-    // record our own publish in the ledger cache so the next commit's
-    // incremental scan doesn't re-open the manifest just written
-    knownEpochs += ((epochId, queryId))
-    scannedThroughGen = math.max(scannedThroughGen, next)
-    val newLines = messages.flatMap {
-      case GlCommitted(_, Some(f), lines) =>
-        val base = fmap(new Path(f).getName)
-        lines.map(l => s"$base\t$l")
-      case _ => Nil
-    }
-    if (newLines.nonEmpty)
-      GraftLines.mergeStats(path, conf,
-        dropNames = newLines.map(_.takeWhile(_ != '\t')).toSet,
-        newLines = newLines.toSeq)
-  }
-
-  private def commitPlainEpoch(epochId: Long,
-      messages: Array[WriterCommitMessage], staged: Seq[(Path, Path)],
-      conf: org.apache.hadoop.conf.Configuration,
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    // the sweep keys on (query, epoch): a replacement query's epoch 0
-    // must never delete the previous query's epoch-0 files. Legacy
-    // names (pre-query-tag builds) no longer match and linger as
-    // orphan debris rather than risk cross-query deletion.
-    val tag = s"-q$queryId-e$epochId-"
-    val stale = GraftLines.listDataFiles(path, conf)
-      .filter(f => new Path(f).getName.contains(tag))
-    stale.foreach(f => fs.delete(new Path(f), false))
-    staged.foreach { case (s, f) =>
-      if (fs.exists(f)) fs.delete(f, false)
-      require(fs.rename(s, f),
-        s"graftlines: streaming commit failed renaming $s -> $f")
-    }
-    val newLines = messages.flatMap {
-      case GlCommitted(_, Some(f), lines) =>
-        val base = new Path(f).getName
-        lines.map(l => s"$base\t$l")
-      case _ => Nil
-    }
-    val drop = stale.map(new Path(_).getName).toSet ++
-      newLines.map(_.takeWhile(_ != '\t'))
-    if (drop.nonEmpty || newLines.nonEmpty)
-      GraftLines.mergeStats(path, conf, dropNames = drop,
-        newLines = newLines.toSeq)
-  }
-
-  /** Nothing was renamed; only staging bytes exist — delete them. */
   override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
-    messages.collect { case GlCommitted(Some(s), _, _) =>
-      fs.delete(new Path(s), false)
-    }
-  }
+      messages: Array[WriterCommitMessage]): Unit =
+    GraftLines.discardStaged(path, messages)
 }
 
 /** Epoch rides the final name (`part-<pid>-e<E>-<task>.gl`): on a plain
@@ -3518,6 +3344,19 @@ private[sources] case class GlCommitted(staged: Option[String],
   * it wrote. The job commit flattens these into the ordinary path. */
 private[sources] case class GlMultiCommitted(msgs: Seq[GlCommitted])
     extends WriterCommitMessage
+
+/** The live files a [[GraftLines.publish]] supersedes, by base name. */
+private[sources] sealed trait GlReplace
+private[sources] object GlReplace {
+  /** Overwrite: every live file. */
+  case object All extends GlReplace
+  final case class Files(baseNames: Set[String]) extends GlReplace
+  val Append: GlReplace = Files(Set.empty)
+}
+
+/** A directory's committed generations, ascending, and whether it is
+  * versioned ([[GraftLines.gensOf]]). */
+private[sources] final case class GlGens(list: Seq[Int], versioned: Boolean)
 
 private[sources] case class GlPartitionedWriterFactory(path: String,
     schema: StructType, partIdx: Int, conf: SerializableConfiguration,

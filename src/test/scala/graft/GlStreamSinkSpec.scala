@@ -91,6 +91,26 @@ class GlStreamSinkSpec extends AnyFunSuite {
       "query B's epoch 0 must not replace query A's epoch-0 files")
   }
 
+  test("the first streamed epoch into a newly versioned dir keeps its existing rows") {
+    // a marker added to a directory that already holds files: the first
+    // generation must adopt them, exactly as a batch append does —
+    // starting it empty would drop the old rows from the latest version
+    val p = freshDir("v_adopt")
+    Seq((1L, "a"), (2L, "b")).toDF("k", "s").coalesce(1)
+      .write.format("graftlines").mode("append").save(p)
+    markVersioned(p)
+    val mem = MemoryStream[(Long, String)](spark)
+    val q = mem.toDF().toDF("k", "s")
+      .writeStream.format("graftlines")
+      .option("path", p).option("checkpointLocation", freshDir("v_adopt_cp"))
+      .outputMode("append").start()
+    try { mem.addData((3L, "c")); q.processAllAvailable() }
+    finally q.stop()
+    assert(graft.sources.GlStreamingTestHarness.genVersions(p, hconf) == Seq(1))
+    assert(readBack(p) == Seq((1L, "a"), (2L, "b"), (3L, "c")),
+      "the pre-versioning rows must survive the first streamed epoch")
+  }
+
   test("multi-epoch append into a versioned table: one generation per epoch") {
     val p = freshDir("v_epochs")
     val cp = freshDir("v_epochs_cp")

@@ -580,6 +580,35 @@ class GlObjectStoreSpec extends AnyFunSuite {
       .select("v").collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 
+  test("a silently-failing DELETE fails a plain overwrite instead of duplicating rows") {
+    // the same quiet delete() == false on a PLAIN directory: the
+    // overwrite's replaced file stays on disk, so the commit must fail
+    // loudly rather than report success with old rows beside new ones
+    hconf.set("fs.glcopy.impl", classOf[CopyRenameFileSystem].getName)
+    val p = s"glcopy:$root/faildel_plain"
+    val hp = new Path(p)
+    hp.getFileSystem(hconf).delete(hp, true)
+    Seq(1L).toDF("v").coalesce(1)
+      .write.format("graftlines").mode("append").save(p)
+    CopyRenameFileSystem.failDataFileDeletes.set(true)
+    val e = try intercept[Exception] {
+      Seq(2L).toDF("v").coalesce(1)
+        .write.format("graftlines").mode("overwrite").save(p)
+    } finally CopyRenameFileSystem.failDataFileDeletes.set(false)
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).flatMap(t => Option(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("could not delete")), msgs)
+    // renames run before deletes: the failure leaves the superseded row
+    // visible next to its replacement, and loses nothing
+    def rows = spark.read.format("graftlines").load(p)
+      .select("v").collect().map(_.getLong(0)).toSeq.sorted
+    assert(rows == Seq(1L, 2L))
+    // with deletes healthy again the same overwrite succeeds
+    Seq(2L).toDF("v").coalesce(1)
+      .write.format("graftlines").mode("overwrite").save(p)
+    assert(rows == Seq(2L))
+  }
+
   test("fs-mode committer on an arbitrated table fails loudly, commits nothing") {
     withCoordinator {
       val dir = s"glcopy:$root/pin_fs"
@@ -687,7 +716,7 @@ class GlObjectStoreSpec extends AnyFunSuite {
 
   test("DSv2 writes respect the table pin end-to-end") {
     // the pin specs above drive writeGen directly; this one goes
-    // through the REAL writer (df.write -> GlWrite.commitVersioned ->
+    // through the REAL writer (df.write -> GraftLines.publish ->
     // writeGen), the path a misconfigured production job takes
     val p = s"glcopy:$root/pin_dsv2"
     markVersioned(p)

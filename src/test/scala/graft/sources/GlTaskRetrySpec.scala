@@ -140,13 +140,17 @@ class GlTaskRetrySpec extends AnyFunSuite {
     val sf = GlStreamingWriterFactory(p, schema,
       new SerializableConfiguration(hconf))
     // a CRASHED attempt of this same epoch got far enough to rename
-    // its target before the driver died: plant that target — the
-    // recommit must replace it, not fail or double-count
-    val crashedTgt = new Path(p, "part-00000-qadhoc-e7-1-g1.gl")
-    val cw = fs.create(crashedTgt, true)
-    try cw.write((GraftLines.header(schema) + "\n3\tcrashed\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally cw.close()
+    // its targets before the driver died: plant them — one under the
+    // recommit's own name, which must be replaced, and one from another
+    // task attempt, which no generation may adopt
+    def plantOrphan(name: String, body: String): Unit = {
+      val cw = fs.create(new Path(p, name), true)
+      try cw.write((GraftLines.header(schema) + "\n" + body + "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally cw.close()
+    }
+    plantOrphan("part-00000-qadhoc-e7-1-g1.gl", "3\tcrashed")
+    plantOrphan("part-00000-qadhoc-e7-5-g1.gl", "1\ta")
     // epoch 7, two live attempts of partition 0
     val w1 = sf.createWriter(0, 1L, 7L)
     val w2 = sf.createWriter(0, 2L, 7L)
@@ -156,6 +160,16 @@ class GlTaskRetrySpec extends AnyFunSuite {
       .commit(7L, Array(m1))
     assert(readVS(p) == Seq((1L, "a")),
       "exactly one copy after the twin + crashed-target epoch commit")
+    assert(GraftLines.readGen(p, 1, hconf).size == 1,
+      s"generation 1 lists one file: ${GraftLines.readGen(p, 1, hconf)}")
+    val sq = spark.readStream.format("graftlines").load(p)
+      .writeStream.format("memory").queryName("gl_retry_orphans")
+      .outputMode("append").start()
+    try {
+      sq.processAllAvailable()
+      assert(spark.table("gl_retry_orphans").as[(Long, String)].collect()
+        .toSeq == Seq((1L, "a")), "a streaming read emits one copy too")
+    } finally sq.stop()
     // recovery replays epoch 7 with a THIRD attempt: the epoch ledger
     // (fresh instance — cold cache, reads the manifests) swallows it
     val w3 = sf.createWriter(0, 3L, 7L)
