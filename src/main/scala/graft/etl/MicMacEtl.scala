@@ -16,13 +16,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * reference mount, grep anchors per SURVEY §1.2]).
   *
   * Spark-first shape: `spark.read.option("wholetext", true).text(glob)`
-  * scans the files (A1), `from_xml` parses them with an explicit schema
-  * (A2), column expressions derive matrices (A3), a custom Catalyst
-  * `Generator` explodes one calibration into its N transfos (A4 — the
-  * UDTF surface), dense_rank assigns deterministic surrogate keys (A6),
-  * and get-or-create upsert is a left-anti union on the natural key
-  * (A5). Sinks: parquet via Verify, JDBC via q_etl_jdbc_sink (A7).
-  * Missing mandatory tags fail the non-null checks (A8).
+  * or an [[graft.sources.XmlManifest]] fetch supplies the documents
+  * (A1), `parseOnce` runs `from_xml` with an explicit schema exactly
+  * once per document (A2), column expressions derive matrices (A3), a
+  * custom Catalyst `Generator` explodes one calibration into its N
+  * transfos (A4 — the UDTF surface), dense_rank assigns deterministic
+  * surrogate keys (A6), and get-or-create upsert is a left-anti union
+  * on the natural key (A5). Sinks: parquet via Verify, JDBC via
+  * q_etl_jdbc_sink (A7). Missing mandatory tags fail the non-null
+  * checks (A8), which read the one parsed struct; orimatis emits each
+  * file's pose and intrinsics transfos from one pass over it.
   */
 object MicMacEtl {
 
@@ -58,7 +61,6 @@ object MicMacEtl {
           StructField("b1", DoubleType),
           StructField("b2", DoubleType))))))))))))
 
-  /** one calibration file -> (sensor, referentials, transfos, transfotrees) */
   /** Glob -> (value, file) whole-document frame: the default text
     * source all three importers share. */
   private def wholeText(spark: SparkSession, glob: String): DataFrame =
@@ -74,6 +76,18 @@ object MicMacEtl {
     * source and the SAME parse/validate/emit pipeline runs behind it. */
   private def fromManifest(xml: DataFrame): DataFrame =
     xml.select(col("xml").as("value"), col("path").as("file"))
+
+  /** (value, file) -> (file, x): `x` is the document parsed against
+    * `schema`, evaluated once per document. The parse sits behind a
+    * one-row Generate because Catalyst's PushDownPredicates moves a
+    * Filter below a Project by inlining the projected expressions: over
+    * a plain `withColumn("x", from_xml(...))` every A8 filter got its
+    * own copy of the parse (33 in an autocal plan, 157 in an orimatis
+    * one). A predicate that reads a generator's output cannot move below
+    * the Generate, so the A8 checks stay as written and share one parse. */
+  private def parseOnce(text: DataFrame, schema: StructType): DataFrame =
+    text.select(col("file"),
+      inline(array(struct(from_xml(col("value"), schema).as("x")))))
 
   /** [[importAutocal]] over manifest-fetched XML (path, length, xml). */
   def importAutocalXml(xml: DataFrame,
@@ -101,8 +115,7 @@ object MicMacEtl {
   private def autocalCore(text: DataFrame,
       validityStart: Option[String],
       validityEnd: Option[String]): Map[String, DataFrame] = {
-    val parsed = text
-      .withColumn("x", from_xml(col("value"), autocalSchema))
+    val parsed = parseOnce(text, autocalSchema)
       .select(col("file"), col("x.CalibrationInternConique").as("c"))
       .select(col("file"),
         col("c.F").as("focal"), vec(col("c.PP")).as("pp"),
@@ -180,8 +193,7 @@ object MicMacEtl {
       validityEnd: Option[String]): Map[String, DataFrame] = {
     def complete3(c: Column): Column =
       c.isNotNull && size(c) === 3 && forall(c, x => x.isNotNull)
-    val parsed = text
-      .withColumn("x", from_xml(col("value"), blinisSchema))
+    val parsed = parseOnce(text, blinisSchema)
       // A8 for the rig file shape, BEFORE the explode: a malformed XML
       // (PERMISSIVE parse -> null struct) or one missing <LiaisonsSHC>/
       // <ParamOrientSHC> yields a null array, and explode would emit
@@ -300,8 +312,7 @@ object MicMacEtl {
   private def orimatisCore(text: DataFrame,
       validityStart: Option[String],
       validityEnd: Option[String]): Map[String, DataFrame] = {
-    val parsed = text
-      .withColumn("x", from_xml(col("value"), orimatisSchema))
+    val parsed = parseOnce(text, orimatisSchema)
       .select(col("file"),
         col("x.geometry.intrinseque.sensor").as("con"),
         col("x.geometry.intrinseque.spherique").as("sph"),
@@ -369,12 +380,7 @@ object MicMacEtl {
       // intrinsics completeness, per flavor: array(...) embeds a null
       // silently (the autocal path guards this with forall(isNotNull);
       // the pose path must too) — a [null, c, l] pinhole parameter row
-      // fabricates a 0.0 focal length in any toDoubleArray consumer.
-      // Guarded on STRUCT PRESENCE, never on the flavor string: the
-      // per-flavor branch filters downstream (`flavor === 'spherique'`)
-      // constant-propagate into any `when(flavor === ...)` here and
-      // collapse it to the other arm, whose checks are NULL on this
-      // row — and assert_true raises on NULL (found the hard way)
+      // fabricates a 0.0 focal length in any toDoubleArray consumer
       .filter(assert_true(
         (col("con").isNull ||
           (col("con.ppa.focale").isNotNull && col("ppa_c").isNotNull &&
@@ -420,28 +426,26 @@ object MicMacEtl {
       val kT = (k % 3) * 3 + k / 3 // R[i][j] <- R[j][i]
       when(col("i2g") === lit(false), rStored(kT)).otherwise(rStored(k))
     }
-    val pose = checked.withColumn("mat4x3", array(
+    def transfo(t: String, params: Column): Column =
+      struct(lit(t).as("transfo_type"), params.as("mat4x3"))
+    val pose = transfo("affine_mat4x3", array(
       r(0), r(1), r(2), col("px"),
       r(3), r(4), r(5), col("py"),
       r(6), r(7), r(8), col("pz")))
     // intrinsics transfo: pinhole for conique; angular (ppa + lambda/phi
-    // frame) for spherique — same 5-column transfo shape either way
+    // frame) for spherique — same 5-column transfo shape either way, and
+    // conique wins when both blocks are present, as in `flavor`
+    val intrinsics = when(col("con").isNotNull, transfo("projective_pinhole",
+        array(col("con.ppa.focale"), col("ppa_c"), col("ppa_l"))))
+      .when(col("sph").isNotNull, transfo("spherical",
+        array(col("ppa_c"), col("ppa_l"),
+          col("sph.frame.lambda_min"), col("sph.frame.lambda_max"),
+          col("sph.frame.phi_min"), col("sph.frame.phi_max"))))
+    // each file's two transfo rows come from one pass over it
     val transfos = withValidity(
-      pose.select(col("file"), col("sensor_name"),
-        lit("affine_mat4x3").as("transfo_type"), col("srid_name"),
-        col("mat4x3"))
-        .unionByName(pose.filter(col("flavor") === "conique")
-          .select(col("file"), col("sensor_name"),
-            lit("projective_pinhole").as("transfo_type"), col("srid_name"),
-            array(col("con.ppa.focale"), col("ppa_c"), col("ppa_l"))
-              .as("mat4x3")))
-        .unionByName(pose.filter(col("flavor") === "spherique")
-          .select(col("file"), col("sensor_name"),
-            lit("spherical").as("transfo_type"), col("srid_name"),
-            array(col("ppa_c"), col("ppa_l"),
-              col("sph.frame.lambda_min"), col("sph.frame.lambda_max"),
-              col("sph.frame.phi_min"), col("sph.frame.phi_max"))
-              .as("mat4x3"))),
+      checked.select(col("file"), col("sensor_name"), col("srid_name"),
+        inline(array_compact(array(pose, intrinsics))))
+        .select("file", "sensor_name", "transfo_type", "srid_name", "mat4x3"),
       validityStart, validityEnd)
     val sensors = checked.select(col("file"), col("sensor_name"),
       lit("camera").as("sensor_type"), col("flavor"),

@@ -524,10 +524,8 @@ object GraftLines {
     val newNames = published.map(_._1)
     if (versioned)
       writeGen(dir, next, (carried ++ newNames).distinct, conf, epoch)
-    val failed = doomed.filterNot(newNames.toSet).filter { n =>
-      val p = new Path(dir, n)
-      !fs.delete(p, false) && fs.exists(p)
-    }
+    val failed = doomed.filterNot(newNames.toSet)
+      .filterNot(n => removed(fs, new Path(dir, n)))
     require(failed.isEmpty,
       s"graftlines: commit could not delete ${failed.size} replaced " +
         s"file(s) (${failed.take(3).mkString(", ")}…) — their rows " +
@@ -660,6 +658,12 @@ object GraftLines {
     * rename path, not break every commit. */
   private def isLocalScheme(fs: org.apache.hadoop.fs.FileSystem): Boolean =
     try "file" == fs.getUri.getScheme catch { case _: Exception => false }
+
+  /** Checked delete: true once `p` is gone. A store may report false
+    * with the file still in place; every path that deletes rows treats
+    * that as a failure, never as done. */
+  private def removed(fs: org.apache.hadoop.fs.FileSystem, p: Path): Boolean =
+    fs.delete(p, false) || !fs.exists(p)
 
   /** Atomic local-FS same-name replace: publish `staged` over `dst`
     * with POSIX rename, which replaces the destination in place — no
@@ -841,10 +845,7 @@ object GraftLines {
     // keeps every manifest intact, so a rerun recomputes the same
     // dead set and retries; files that DID delete are simply no
     // longer listed.
-    val failedDead = dead.filter { f =>
-      val p = new Path(f)
-      !fs.delete(p, false) && fs.exists(p)
-    }
+    val failedDead = dead.filterNot(f => removed(fs, new Path(f)))
     require(failedDead.isEmpty,
       s"graftlines: expireVersions could not delete ${failedDead.size} " +
         s"file(s) (${failedDead.take(3).mkString(", ")}…) — manifests " +
@@ -1288,7 +1289,7 @@ object GraftLines {
     * a logless COW delete (the catalog/manifest layer is the
     * transactional answer, as for writes). Returns the file's fresh
     * stats lines, or Nil when every row matched and the file was
-    * simply deleted. */
+    * deleted; a delete that leaves the file in place fails the task. */
   private[sources] def rewriteWithoutMatches(file: String,
       schema: StructType, filters: Array[Filter],
       conf: org.apache.hadoop.conf.Configuration,
@@ -1325,14 +1326,15 @@ object GraftLines {
       case GlCommitted(Some(staged), Some(fin), lines) =>
         if (!(isLocalScheme(fs)
             && replaceByMove(fs, new Path(staged), new Path(fin)))) {
-          require(fs.delete(p, false),
+          require(removed(fs, p),
             s"graftlines delete: could not remove $file before publish")
           require(fs.rename(new Path(staged), new Path(fin)),
             s"graftlines delete: could not publish rewritten $fin")
         }
         lines.map(l => s"$base\t$l")
       case _ => // no survivors: the whole file is deleted
-        fs.delete(p, false)
+        require(removed(fs, p), s"graftlines delete: could not remove " +
+          s"$file, whose every row matched — its rows are still visible")
         Nil
     }
   }

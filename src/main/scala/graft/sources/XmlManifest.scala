@@ -27,7 +27,7 @@ final case class XmlFile(path: String, length: Long, xml: String)
   *   manifest (Dataset[String], N paths)
   *     -> repartition(parts)             // balance fetch work
   *     -> mapPartitions(open + read)     // executor-side IO
-  *     -> DataFrame[path, length, xml]   // feed MicMacEtl.parse*
+  *     -> DataFrame[path, length, xml]   // feed MicMacEtl.import*Xml
   *
   * Properties a 1000-executor cluster needs, and local[n] verifies:
   *  - listing cost is O(manifest rows / parallelism) per task, O(1) on

@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.XmlToStructs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.etl.MicMacEtl
+import graft.sources.XmlManifest
 
 /** Reference-parity ETL checks (SURVEY §2A, §5.1-analog golden fixtures):
   * hand-written MicMac-shaped XML -> entity DataFrames with hand-computed
@@ -343,5 +348,84 @@ class MicMacEtlSpec extends AnyFunSuite {
     assert(graft.etl.MicMacEtl
       .importBlinisXml(graft.sources.XmlManifest.readXml(spark, bm))(
         "transfos").count() == 2)
+  }
+
+  /** The glob importer a fixture belongs to, by its name prefix. */
+  private def importGlob(fixture: String): Map[String, DataFrame] = {
+    val path = s"$res/$fixture"
+    if (fixture.startsWith("autocal")) MicMacEtl.importAutocal(spark, path)
+    else if (fixture.startsWith("blinis")) MicMacEtl.importBlinis(spark, path)
+    else MicMacEtl.importOrimatis(spark, path)
+  }
+
+  test("each importer parses a document once; orimatis scans it once") {
+    import spark.implicits._
+    // a Filter pushed through a Project inlines the projected parse, so
+    // an A8 check that reads a plain from_xml column re-parses the file
+    def parses(df: DataFrame) = df.queryExecution.optimizedPlan
+      .flatMap(_.expressions).map(_.collect { case x: XmlToStructs => x }.size)
+      .sum
+    def manifest(f: String) = XmlManifest.readXml(spark,
+      Seq(new java.io.File(s"$res/$f").getAbsolutePath).toDS())
+    val runs = Seq(
+      "autocal glob" -> importGlob("autocal_sample.xml"),
+      "autocal readXml" ->
+        MicMacEtl.importAutocalXml(manifest("autocal_sample.xml")),
+      "blinis glob" -> importGlob("blinis_sample.xml"),
+      "blinis readXml" ->
+        MicMacEtl.importBlinisXml(manifest("blinis_sample.xml")),
+      "orimatis glob" -> importGlob("orimatis_sample.xml"),
+      "orimatis readXml" ->
+        MicMacEtl.importOrimatisXml(manifest("orimatis_sample.xml")))
+    for ((name, out) <- runs) {
+      val transfos = out("transfos")
+      assert(parses(transfos) == 1,
+        s"$name: ${transfos.queryExecution.optimizedPlan}")
+      if (name.startsWith("orimatis"))
+        assert(transfos.queryExecution.optimizedPlan.collectLeaves().size == 1,
+          s"$name scans its input more than once")
+    }
+  }
+
+  test("importers give the same rows and A8 errors with codegen or AQE off") {
+    val fixtures = new java.io.File(res).listFiles().map(_.getName)
+      .filter(_.endsWith(".xml")).sorted.toSeq
+    val outputs = Seq("sensors", "referentials", "transfos", "transfotrees")
+    // the A8 message of a failed import, wherever Spark wrapped it
+    def a8(t: Throwable, fixture: String): Option[String] = {
+      def all(t: Throwable): Seq[Throwable] = if (t == null) Nil
+        else t +: (Option(t.getCause).toSeq ++ t.getSuppressed).flatMap(all)
+      all(t).flatMap(x => Option(x.getMessage)).flatMap(_.linesIterator)
+        .find(_.contains(fixture))
+        .map(_.replaceFirst("^\\[[A-Z_]+\\] ", "")
+          .replaceFirst(" SQLSTATE.*$", ""))
+    }
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // per fixture: the four outputs' rows, or the A8 message
+    def run(fixture: String): Either[String, Seq[Seq[String]]] =
+      try Right(outputs.map(k => rows(importGlob(fixture)(k))))
+      catch { case e: Exception =>
+        Left(a8(e, fixture).getOrElse(throw e)) }
+    def under(confs: Map[String, String]): Map[String, Either[String,
+        Seq[Seq[String]]]] = {
+      val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try fixtures.map(f => f -> run(f)).toMap
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val defaults = under(Map.empty)
+    val failing = defaults.collect { case (f, Left(_)) => f }
+    assert(failing.nonEmpty && failing.size < defaults.size, defaults)
+    for ((mode, confs) <- Seq(
+        "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
+        "AQE off" -> Map("spark.sql.adaptive.enabled" -> "false"))) {
+      val got = under(confs)
+      for (f <- fixtures)
+        assert(got(f) == defaults(f), s"$f diverges with $mode")
+    }
   }
 }

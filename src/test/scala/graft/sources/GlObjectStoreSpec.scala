@@ -609,6 +609,31 @@ class GlObjectStoreSpec extends AnyFunSuite {
     assert(rows == Seq(2L))
   }
 
+  test("a silently-failing DELETE fails a SQL delete that empties a file") {
+    // a DELETE FROM matching every row of a file removes the file
+    // outright: a quiet delete() == false must fail the statement, not
+    // report success while the rows stay readable
+    hconf.set("fs.glcopy.impl", classOf[CopyRenameFileSystem].getName)
+    spark.conf.set("spark.sql.catalog.glcopy_del", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.glcopy_del.warehouse",
+      s"glcopy:$root/faildel_sql")
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS glcopy_del.ns")
+    spark.sql("DROP TABLE IF EXISTS glcopy_del.ns.t")
+    spark.sql("CREATE TABLE glcopy_del.ns.t (k BIGINT) USING graftlines")
+    Seq(1L, 2L).toDF("k").coalesce(1).writeTo("glcopy_del.ns.t").append()
+    CopyRenameFileSystem.failDataFileDeletes.set(true)
+    val e = try intercept[Exception] {
+      spark.sql("DELETE FROM glcopy_del.ns.t WHERE k < 10")
+    } finally CopyRenameFileSystem.failDataFileDeletes.set(false)
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).flatMap(t => Option(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("could not remove")), msgs)
+    assert(spark.table("glcopy_del.ns.t").count() == 2)
+    // with deletes healthy again the same statement empties the table
+    spark.sql("DELETE FROM glcopy_del.ns.t WHERE k < 10")
+    assert(spark.table("glcopy_del.ns.t").count() == 0)
+  }
+
   test("fs-mode committer on an arbitrated table fails loudly, commits nothing") {
     withCoordinator {
       val dir = s"glcopy:$root/pin_fs"
