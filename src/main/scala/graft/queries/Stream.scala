@@ -30,9 +30,8 @@ object Stream extends QueryGroup {
         + "state.RocksDBStateStoreProvider")
 
   /** Scale-adaptive state/shuffle partition count for the streaming
-    * runs (r16, guide §2.2 and the optimization-round rule: derive
-    * partitioning from input size, never a constant tuned for one
-    * host). Stateful operators pay a fixed per-state-partition cost
+    * runs, derived from input size, never a constant tuned for one
+    * host. Stateful operators pay a fixed per-state-partition cost
     * EVERY micro-batch — store open, commit, delta file write; a
     * stream-stream join multiplies it by four stores per side — so
     * the partition count should track the data: one partition per
@@ -40,9 +39,9 @@ object Stream extends QueryGroup {
     * 64 MB, conf-overridable), clamped to [1, session shuffle
     * partitions]. At the bench's sf0.1 (2 MB of events) that is 1;
     * at 100 TB the same formula saturates the cluster's configured
-    * partition count. Replaces the previous hard-coded 4. */
+    * partition count. */
   private def statePartitions(s: SparkSession, d: String): Int = {
-    // misconfiguration fails LOUDLY on both axes (ADVICE r16): an
+    // misconfiguration fails LOUDLY on both axes: an
     // unparseable value must not silently revert to the default any
     // more than a non-positive one may pass
     val (bytes, target) = Confs.sizeGate(s, s"$d/events.parquet",
@@ -57,9 +56,9 @@ object Stream extends QueryGroup {
     * run each query twice — must not accumulate result tables in the
     * shared session), pin the streaming confs for the duration of the
     * run, start the stream into a memory sink, drain synchronously,
-    * stop, and hand back the drained table. Centralised because this
-    * prologue drifted into real bugs twice when hand-copied (the r12
-    * withConfs blocks, the r13 epoch keying).
+    * stop, and hand back the drained table. Centralised because
+    * hand-copied prologues drifted apart in conf scoping and epoch
+    * keying.
     *
     * Conf axes, all scoped by [[Confs.withConfs]] and restored after:
     *  - shuffle/state partitions from [[statePartitions]] — the
@@ -157,7 +156,7 @@ object Stream extends QueryGroup {
         |GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin)),
 
     QueryDef(
-      // Native session_window (added r5) — the ENGINE's session operator
+      // Native session_window — the ENGINE's session operator
       // in batch mode, beside q_stream_session's hand-rolled
       // gaps-and-islands twin. Spark merges per-event intervals
       // [ts, ts+gap) while they OVERLAP (strict <), so a gap of exactly
@@ -254,7 +253,7 @@ object Stream extends QueryGroup {
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
     QueryDef(
-      // transformWithState (added r5) — the Spark 4 arbitrary-state API
+      // transformWithState — the Spark 4 arbitrary-state API
       // beside q_stream_stateful's flatMapGroupsWithState: state as
       // NAMED primitives (ValueState here) the engine can back with
       // RocksDB, TTL and schema-evolve on a live checkpoint. The
@@ -299,7 +298,7 @@ object Stream extends QueryGroup {
         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
     QueryDef(
-      // transformWithState over MAP state (added r8 — completes the
+      // transformWithState over MAP state (completes the
       // arbitrary-state primitive family: ValueState =
       // q_stream_transform_state, timers = q_stream_transform_timers,
       // MapState = here). Per user, a MapState keyed by event_type
@@ -342,7 +341,7 @@ object Stream extends QueryGroup {
         |ORDER BY user_id, event_type""".stripMargin)),
 
     QueryDef(
-      // TRUE stream-stream join (added r4) — the remaining Structured
+      // TRUE stream-stream join — the remaining Structured
       // Streaming join surface: two file-source streams over the same
       // event log (clicks / purchases), each with its own watermark,
       // joined on user_id within a 5-minute event-time band. The band
@@ -380,7 +379,7 @@ object Stream extends QueryGroup {
         |GROUP BY c.user_id ORDER BY c.user_id""".stripMargin)),
 
     QueryDef(
-      // Stream-stream LEFT OUTER join (added r5, VERDICT r4 missing #1)
+      // Stream-stream LEFT OUTER join
       // — the other half of the join surface next to q_stream_stream_
       // join's inner form: "clicks without a purchase within 5 minutes"
       // NEEDS the outer variant, where the unmatched click is emitted
@@ -403,14 +402,13 @@ object Stream extends QueryGroup {
       //      a broadcast scalar frame, not collected to the driver.
       "q_stream_stream_join_outer",
       (s, d) => {
-        // seal anchor = MIN of the PER-SIDE maxes (the r6 lesson the
-        // full join below documents, back-ported r12): Spark's global
-        // watermark is min(click wm, purchase wm) and each side's wm
-        // rides ITS OWN max event time — anchoring at the overall max
-        // leaves clicks in (min(side maxes), overall max] - 40min
-        // inside the contract but never sealed whenever one side's
-        // last event trails the other's by > the 5-min margin (e.g.
-        // purchases stopping early). Invisible on the interleaved
+        // seal anchor = MIN of the PER-SIDE maxes, as in the full join
+        // below: Spark's global watermark is min(click wm, purchase wm)
+        // and each side's wm rides ITS OWN max event time — anchoring
+        // at the overall max leaves clicks in (min(side maxes), overall
+        // max] - 40min inside the contract but never sealed whenever
+        // one side's last event trails the other's by > the 5-min
+        // margin (e.g. purchases stopping early). Invisible on the interleaved
         // fixture; wrong at other distributions.
         //
         // Built before the drain only for clarity (the cutoff is
@@ -459,7 +457,7 @@ object Stream extends QueryGroup {
         |GROUP BY c.user_id ORDER BY c.user_id""".stripMargin)),
 
     QueryDef(
-      // Stream-stream FULL outer join (added r6, VERDICT r5 missing #1)
+      // Stream-stream FULL outer join
       // — the last cell of the join-surface matrix: BOTH sides
       // null-extend once the watermark seals them, answering "clicks
       // without a purchase AND purchases without a click" in one pass.
@@ -480,10 +478,9 @@ object Stream extends QueryGroup {
       // click in [p_ts - 5 min, p_ts) can still arrive (30-min bound,
       // 10-min margin). The cut is batch-side on the drained sink, as
       // a broadcast scalar frame — filtering either STREAM would drag
-      // its watermark down and unseal in-contract rows (the r5 lesson,
-      // measured then). The oracle is the batch FULL JOIN with the
-      // identical COALESCE bound, so the contract covers exactly what
-      // the watermark has provably sealed.
+      // its watermark down and unseal in-contract rows. The oracle is
+      // the batch FULL JOIN with the identical COALESCE bound, so the
+      // contract covers exactly what the watermark has provably sealed.
       "q_stream_stream_join_full",
       (s, d) => {
         // cutoff before the drain only for clarity; noDataBatches stays
@@ -537,10 +534,10 @@ object Stream extends QueryGroup {
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     QueryDef(
-      // Stateful timeout sessionization (added r5, VERDICT r4 missing
-      // #2): flatMapGroupsWithState + EventTimeTimeout — state that
-      // CLOSES ITSELF. Each user's open session lives in the state
-      // store with a timeout at last_event + 30 min; when the watermark
+      // Stateful timeout sessionization: flatMapGroupsWithState +
+      // EventTimeTimeout — state that CLOSES ITSELF. Each user's open
+      // session lives in the state store with a timeout at
+      // last_event + 30 min; when the watermark
       // passes that point the state times out and the session is
       // emitted WITHOUT any new input for that user — the shape
       // production sessionization needs (q_stream_stateful only
@@ -597,7 +594,7 @@ object Stream extends QueryGroup {
         |ORDER BY user_id, session_start""".stripMargin)),
 
     QueryDef(
-      // Timer-driven sessionization on transformWithState (added r5):
+      // Timer-driven sessionization on transformWithState:
       // the new-API twin of q_stream_stateful_timeout — SAME gap fold
       // (streaming.SessionTimeout.fold, shared verbatim), same oracle,
       // but the self-closing state is an explicit registerTimer /
@@ -646,7 +643,7 @@ object Stream extends QueryGroup {
         |ORDER BY user_id, session_start""".stripMargin)),
 
     QueryDef(
-      // Programmable sink via foreachBatch (added r4): the escape hatch
+      // Programmable sink via foreachBatch: the escape hatch
       // for sinks Structured Streaming has no native writer for (JDBC
       // upserts, multi-table fan-out). Each micro-batch's DataFrame is
       // written as parquet by ordinary batch code keyed on batchId —
@@ -710,7 +707,7 @@ object Stream extends QueryGroup {
         |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin)),
 
     QueryDef(
-      // TRUE streaming dedup (added r5): dropDuplicatesWithinWatermark —
+      // TRUE streaming dedup: dropDuplicatesWithinWatermark —
       // the bounded-state dedup the 100 TB stream needs. Plain streaming
       // dropDuplicates keeps EVERY key forever (state grows with
       // distinct keys seen since the epoch); the WithinWatermark form
@@ -738,7 +735,7 @@ object Stream extends QueryGroup {
         |FROM events ORDER BY user_id, event_type""".stripMargin)),
 
     QueryDef(
-      // Stream–static enrichment join (added r7): the most common
+      // Stream–static enrichment join: the most common
       // streaming topology in production — a fact stream joined to a
       // slowly-changing dimension table, here events enriched with the
       // customer's market segment, then windowed counts per
@@ -776,7 +773,7 @@ object Stream extends QueryGroup {
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     QueryDef(
-      // TABLE AS A STREAM (added r8): readStream over a VERSIONED
+      // TABLE AS A STREAM: readStream over a VERSIONED
       // graftlines table — the Delta/Iceberg CDC-ingest posture, built
       // on the same generation manifests that give VERSION AS OF
       // (sources/GraftLines.scala GlMicroBatchStream: offset N IS
@@ -842,7 +839,7 @@ object Stream extends QueryGroup {
         |GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
     QueryDef(
-      // Table as a streaming SINK (added r8 — the write half of
+      // Table as a streaming SINK (the write half of
       // q_stream_table_source's read half; together the connector is a
       // full streaming table à la Delta/Iceberg): the event stream
       // lands in a VERSIONED graftlines table through the native
