@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -8,6 +9,7 @@ import graft.etl.AutocalTransfos
 import graft.functions.{FloatDot, LshSignatures, MinHashAgg}
 import graft.plans.{AsOfJoinStrategy, PruneColumnsThroughAsOf, PushFilterThroughAsOf}
 import graft.queries.AnnLsh
+import graft.sources.GraftCatalog
 
 /** The one table of graft's custom Catalyst surfaces (SURVEY §4.2):
   *
@@ -16,6 +18,8 @@ import graft.queries.AnnLsh
   *  - autocal_transfos(...): calibration -> transfo-rows Generator
   *  - lsh_sigs(array<float>): fused 16-table hyperplane LSH signatures
   *  - the AsOfJoin planner strategy and its two optimizer rules
+  *  - the `graft_cat` catalog (install only: a catalog is session conf,
+  *    not an extension point)
   *
   * Invariant: each entry reaches a session once, and only through this
   * table. Either the session is built with it
@@ -52,11 +56,19 @@ object GraftExtensions {
 
   private val rules = Seq(PushFilterThroughAsOf, PruneColumnsThroughAsOf)
 
+  private val catalog = "spark.sql.catalog.graft_cat"
+
   /** Adds each entry the session's function registry, planner or
-    * optimizer does not already hold; a no-op on a session built with
-    * the extensions, or on a second call. */
+    * optimizer does not already hold, and binds `graft_cat` over
+    * `<spark.sql.warehouse.dir>/graft_cat` unless the session binds it
+    * already; a no-op on a second call. */
   def install(spark: SparkSession): Unit = {
     val state = spark.sessionState
+    if (spark.conf.getOption(catalog).isEmpty) {
+      spark.conf.set(catalog, classOf[GraftCatalog].getName)
+      spark.conf.set(s"$catalog.warehouse",
+        new Path(state.conf.warehousePath, "graft_cat").toString)
+    }
     functions.foreach { case (id, info, build) =>
       if (!state.functionRegistry.functionExists(id))
         state.functionRegistry.registerFunction(id, info, build)

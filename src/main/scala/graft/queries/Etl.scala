@@ -1,6 +1,9 @@
 package graft.queries
 
 import graft.Tables
+import graft.sources.GraftCatalog
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType, StructField, StructType, TimestampType}
@@ -18,6 +21,13 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType
   * driver-side sequence.
   */
 object Etl extends QueryGroup {
+
+  /** Directory of `graft_cat.contract.<table>`, asked of the session's
+    * bound catalog, so a path read sees what the SQL statements wrote. */
+  private def contractDir(s: SparkSession, table: String): String =
+    s.sessionState.catalogManager.catalog("graft_cat")
+      .asInstanceOf[GraftCatalog]
+      .location(Identifier.of(Array("contract"), table))
 
   /** DuckDB mirror of FrameGraph.compose: same cell order, same
     * left-to-right three-product sum with the translation added last,
@@ -770,14 +780,14 @@ object Etl extends QueryGroup {
         |ORDER BY l_returnflag""".stripMargin)),
 
     QueryDef(
-      // Catalog-managed tables (added r6, VERDICT r5 missing #3): the
-      // way teams actually manage 100 TB warehouses is CREATE TABLE /
-      // CTAS / spark.table through a TableCatalog, not paths. The
-      // graft_cat catalog (sources/GraftCatalog.scala) maps namespaces
-      // to warehouse subdirectories and persists each table's
-      // authoritative schema in a one-line header file, so every
-      // catalog call is an O(1) driver-side metadata op — nothing
-      // scales with data. This query exercises the full SQL-text
+      // Catalog-managed tables: the way teams actually manage 100 TB
+      // warehouses is CREATE TABLE / CTAS / spark.table through a
+      // TableCatalog, not paths. The graft_cat catalog
+      // (sources/GraftCatalog.scala, bound by GraftExtensions.install)
+      // maps namespaces to warehouse subdirectories and persists each
+      // table's authoritative schema in a one-line header file, so
+      // every catalog call is an O(1) driver-side metadata op —
+      // nothing scales with data. This query exercises the full SQL-text
       // surface end to end: CREATE NAMESPACE, DROP TABLE IF EXISTS,
       // CTAS into the connector (exact cents, the money rule), then a
       // grouped read back THROUGH the catalog identifier — where the
@@ -785,10 +795,6 @@ object Etl extends QueryGroup {
       // as the path-based route (the catalog returns the same GlTable).
       "q_etl_catalog_table",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse",
-          graft.GraftTmp.dir("warehouse"))
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.contract")
         s.sql("DROP TABLE IF EXISTS graft_cat.contract.part_cat")
         Tables.part(s, d)
@@ -811,8 +817,8 @@ object Etl extends QueryGroup {
         |GROUP BY p_brand ORDER BY p_brand""".stripMargin)),
 
     QueryDef(
-      // SQL ALTER TABLE ADD COLUMNS through the catalog (added r8 —
-      // the schema-evolution STATEMENT; q_etl_schema_evolution covers
+      // SQL ALTER TABLE ADD COLUMNS through the catalog (the
+      // schema-evolution STATEMENT; q_etl_schema_evolution covers
       // reader-side parquet footer merging, this evolves a CATALOG
       // table's authoritative schema in place). The catalog appends
       // the nullable column to the one-line schema header (an O(1)
@@ -827,10 +833,6 @@ object Etl extends QueryGroup {
       // inserted value.
       "q_etl_add_column",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse",
-          graft.GraftTmp.dir("warehouse"))
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.contract")
         s.sql("DROP TABLE IF EXISTS graft_cat.contract.part_evo")
         Tables.part(s, d)
@@ -861,7 +863,7 @@ object Etl extends QueryGroup {
         |FROM part GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     QueryDef(
-      // SQL DELETE FROM through the catalog (added r8): the row-level
+      // SQL DELETE FROM through the catalog: the row-level
       // lifecycle statement warehouse users actually type for a GDPR
       // erasure — q_etl_delete_cascade computes WHAT to delete as
       // dataframe algebra; this executes a delete as a STATEMENT
@@ -878,10 +880,6 @@ object Etl extends QueryGroup {
       // decimal-exact sums.
       "q_etl_sql_delete",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse",
-          graft.GraftTmp.dir("warehouse"))
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.contract")
         s.sql("DROP TABLE IF EXISTS graft_cat.contract.orders_del")
         Tables.orders(s, d)
@@ -907,7 +905,7 @@ object Etl extends QueryGroup {
         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
 
     QueryDef(
-      // SQL UPDATE through the catalog (added r8 — completes the
+      // SQL UPDATE through the catalog (completes the
       // row-level statement trio with q_etl_sql_delete/merge): a
       // column-rewrite statement against a connector table, executed
       // as a group-based COW rewrite (SupportsRowLevelOperations).
@@ -917,10 +915,6 @@ object Etl extends QueryGroup {
       // status — counts and decimal-exact sums.
       "q_etl_sql_update",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse",
-          graft.GraftTmp.dir("warehouse"))
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.contract")
         s.sql("DROP TABLE IF EXISTS graft_cat.contract.orders_upd")
         Tables.orders(s, d)
@@ -952,7 +946,7 @@ object Etl extends QueryGroup {
         |ORDER BY o_orderstatus""".stripMargin)),
 
     QueryDef(
-      // SQL MERGE INTO through the catalog (added r8, beside
+      // SQL MERGE INTO through the catalog (beside
       // q_etl_sql_delete): the upsert STATEMENT — q_etl_merge_cdc
       // computes a merge as dataframe algebra; this executes one
       // against a connector table via DSv2 SupportsRowLevelOperations.
@@ -966,10 +960,6 @@ object Etl extends QueryGroup {
       // state per status — counts and decimal-exact sums.
       "q_etl_sql_merge",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse",
-          graft.GraftTmp.dir("warehouse"))
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.contract")
         s.sql("DROP TABLE IF EXISTS graft_cat.contract.orders_merge")
         val orders = Tables.orders(s, d)
@@ -1622,7 +1612,7 @@ object Etl extends QueryGroup {
         |FROM lineitem""".stripMargin)),
 
     QueryDef(
-      // Catalog time travel (added r8): `VERSION AS OF` on a VERSIONED
+      // Catalog time travel: `VERSION AS OF` on a VERSIONED
       // graftlines table — the Delta/Iceberg reproducibility op
       // ("train on the exact table yesterday's job saw"). Versioning
       // is a TABLE property (TBLPROPERTIES ('versioned'='true')): every
@@ -1639,10 +1629,6 @@ object Etl extends QueryGroup {
       // block-splitting paths are byte-identical to a live read.
       "q_etl_time_travel",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse",
-          graft.GraftTmp.dir("warehouse"))
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.contract")
         s.sql("DROP TABLE IF EXISTS graft_cat.contract.orders_tt")
         Tables.orders(s, d)
@@ -1665,8 +1651,7 @@ object Etl extends QueryGroup {
           | SET cents = cents + cents DIV 20
           | WHERE o_orderstatus = 'P' AND o_custkey < 500""".stripMargin)
         // physical contract: later commits deleted nothing of v1
-        val tdir = new org.apache.hadoop.fs.Path(
-          graft.GraftTmp.dir("warehouse") + "/contract/orders_tt")
+        val tdir = new org.apache.hadoop.fs.Path(contractDir(s, "orders_tt"))
         val fs = tdir.getFileSystem(s.sparkContext.hadoopConfiguration)
         val names = fs.listStatus(tdir).map(_.getPath.getName)
         require(names.exists(n => n.endsWith(".gl") && n.contains("-g1")),
@@ -1699,7 +1684,7 @@ object Etl extends QueryGroup {
         |ORDER BY version, o_orderstatus""".stripMargin)),
 
     QueryDef(
-      // Change data feed between versions (added r8 — the Delta CDF /
+      // Change data feed between versions (the Delta CDF /
       // Iceberg changelog question built directly on time travel:
       // "what changed between v1 and v3?", the incremental-consumer
       // primitive). Without per-row tracking metadata a version diff
@@ -1708,7 +1693,7 @@ object Etl extends QueryGroup {
       // delete(pre-image) + insert(post-image) pair, which is
       // precisely what Delta reports for update rows.
       //
-      // r9: the diff reads ride the connector's FILE-LEVEL delta
+      // The diff reads ride the connector's FILE-LEVEL delta
       // (`excludeFilesOfVersion`): versioned file names are never
       // reused, so files common to both manifests are byte-identical
       // and their rows cancel in the diff — each EXCEPT side scans
@@ -1727,12 +1712,6 @@ object Etl extends QueryGroup {
       // tables), COW UPDATE.
       "q_etl_change_feed",
       (s, d) => {
-        // one warehouse constant feeds BOTH the catalog conf and the
-        // path-based delta reads below — they must never drift apart
-        val warehouse = graft.GraftTmp.dir("warehouse")
-        s.conf.set("spark.sql.catalog.graft_cat",
-          "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse", warehouse)
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.contract")
         s.sql("DROP TABLE IF EXISTS graft_cat.contract.orders_cf")
         s.sql("""CREATE TABLE graft_cat.contract.orders_cf
@@ -1751,20 +1730,17 @@ object Etl extends QueryGroup {
         s.sql("""UPDATE graft_cat.contract.orders_cf
           | SET cents = cents + cents DIV 100
           | WHERE o_orderstatus = 'F' AND o_custkey < 100""".stripMargin)
-        val tdir = s"$warehouse/contract/orders_cf"
+        val tdir = contractDir(s, "orders_cf")
         def delta(v: Int, minus: Int) = s.read.format("graftlines")
           .option("versionAsOf", v).option("excludeFilesOfVersion", minus)
           .load(tdir)
         val v1 = delta(1, 3) // v1's rewritten-away files only
         val v3 = delta(3, 1) // v3's replacement files only
-        // One-pass symmetric difference (r17, guide §2.4 — remove
-        // shuffles outright): the previous v3.except(v1) ∪ v1.except(v3)
-        // planned as TWO except subtrees, each scanning BOTH delta
-        // reads — four delta scans and two separate anti-join
-        // aggregations (plans/r17/q_etl_change_feed_before.txt; the
-        // readback was the query's most expensive phase, 1.6 s of its
-        // warm 3.7 s). A side-tagged union + ONE full-row aggregate
-        // yields both row sets in a single shuffle: a row is an insert
+        // One-pass symmetric difference: v3.except(v1) ∪ v1.except(v3)
+        // plans TWO except subtrees, each scanning BOTH delta reads —
+        // four delta scans and two separate anti-join aggregations. A
+        // side-tagged union + ONE full-row aggregate yields both row
+        // sets in a single shuffle: a row is an insert
         // iff it occurs only under the v3 tag, a delete iff only under
         // v1 (the groupBy IS except's set-distinct; groupBy keys use
         // the same null-safe equality as EXCEPT, and a row present on

@@ -577,7 +577,7 @@ object Joins extends QueryGroup {
         |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin)),
 
     QueryDef(
-      // BUCKETED storage-partitioned join (added r8, beside
+      // BUCKETED storage-partitioned join (beside
       // q_join_storage_part's identity form — identity needs a
       // low-cardinality partition key; hash BUCKETS cover ARBITRARY
       // keys, here orders⋈customer on custkey, the fact-dimension pair
@@ -594,10 +594,6 @@ object Joins extends QueryGroup {
       // custkey join in the workload runs shuffle-free.
       "q_join_spj_bucket",
       (s, d) => {
-        s.conf.set("spark.sql.catalog.graft_cat",
-          "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft_cat.warehouse",
-          graft.GraftTmp.dir("warehouse"))
         s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.contract")
         s.sql("DROP TABLE IF EXISTS graft_cat.contract.orders_bkt")
         s.sql("DROP TABLE IF EXISTS graft_cat.contract.customer_bkt")

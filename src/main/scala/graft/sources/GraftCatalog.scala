@@ -18,7 +18,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** `TableCatalog` plugin for the `graftlines` format — the way teams
   * actually manage tables, as opposed to the path-based
   * `spark.read.format(...).load(dir)` surface the bare
-  * [[GraftLines]] `TableProvider` offers. Register with:
+  * [[GraftLines]] `TableProvider` offers. Every graft session gets it
+  * as `graft_cat` from [[graft.GraftExtensions.install]], over
+  * `<spark.sql.warehouse.dir>/graft_cat`, unless the session binds
+  * `graft_cat` first. Any other name registers with:
   *
   * {{{
   *   spark.sql.catalog.<name>           = graft.sources.GraftCatalog
@@ -28,6 +31,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * and `CREATE TABLE <name>.ns.t (...) USING graftlines`, CTAS,
   * `INSERT INTO` / `INSERT OVERWRITE`, `spark.table("<name>.ns.t")`,
   * `DROP TABLE`, and `df.writeTo(...)` all work catalog-managed.
+  *
+  * Spark caches a catalog plugin by name at first use, so options set
+  * after that are ignored: a second warehouse needs a second name.
   *
   * Layout is filesystem-native and driver-light — the same design
   * stance as the `_graft_stats` manifest: a namespace is a warehouse
@@ -112,6 +118,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   private def tablePath(ident: Identifier): Path =
     new Path(nsPath(ident.namespace()), checkComponent(ident.name()))
+
+  /** The directory of `ident`: a path-based read of a catalog table
+    * takes it from here, so it sees what the catalog wrote. */
+  def location(ident: Identifier): String = tablePath(ident).toString
 
   private def schemaFile(dir: Path): Path =
     new Path(dir, GraftCatalog.SchemaName)

@@ -1096,6 +1096,16 @@ object GraftLines {
       .map(st => (st.getPath.toString, st.getLen)).sortBy(_._1)
   }
 
+  /** The byte ranges `[start, end)` every reader plans for one file of
+    * `len` bytes: the whole file, `(0, Long.MaxValue)`, when it fits in
+    * `spark.sql.files.maxPartitionBytes`, else blocks of that size. */
+  private[sources] def splits(len: Long): Seq[(Long, Long)] = {
+    val size = math.max(1L,
+      SparkSession.active.sessionState.conf.filesMaxPartitionBytes)
+    if (len <= size) Seq((0L, Long.MaxValue))
+    else (0L until len by size).map(s => (s, math.min(s + size, len)))
+  }
+
   private[sources] def typeToken(dt: DataType): String = dt match {
     case IntegerType => "int"
     case LongType => "long"
@@ -2187,15 +2197,6 @@ case class GlScan(path: String, required: StructType,
 
   override def toBatch: Batch = this
 
-  /** Post-pruning statistics for the planner ([[SupportsReportStatistics]]):
-    * sizeInBytes = the bytes of exactly the files this scan will plan
-    * (pushed + group filters applied against `_graft_stats`), and
-    * numRows = their exact manifest row counts when every surviving
-    * file carries a stats line (absent otherwise — never guess). This
-    * is what lets AQE/join planning see a filtered graftlines scan as
-    * broadcast-small even though the directory is huge: the estimate
-    * shrinks WITH the pruning, as every real table format's does. All
-    * driver-side metadata — one manifest read, no file opens. */
   /** The scan's file universe: the read version's files, minus (for a
     * change-feed read) every file also listed in `excludeFilesOf`'s
     * manifest. ALL downstream planning — statistics, pruning, keyed
@@ -2225,6 +2226,16 @@ case class GlScan(path: String, required: StructType,
   @transient private lazy val statsCache: Map[String, GlFileStats] =
     GraftLines.readStats(path,
       SparkSession.active.sparkContext.hadoopConfiguration, statsSchema)
+  /** `fileUniverse` minus each file whose `_graft_stats` line proves no
+    * row can pass `pushed ++ groupPrune`; files without a line stay. */
+  @transient private lazy val statsPruned: Seq[(String, Long)] = {
+    val pruners = pushed ++ groupPrune
+    if (pruners.isEmpty) fileUniverse
+    else fileUniverse.filter { case (f, _) =>
+      statsCache.get(new Path(f).getName)
+        .forall(st => pruners.forall(GlFilters.mayMatch(_, st)))
+    }
+  }
 
   /** The ONE freshness rule for serving a manifest row count as exact
     * (manifest COUNT(*), planner numRows): the file's stats line must
@@ -2237,19 +2248,22 @@ case class GlScan(path: String, required: StructType,
     stats.get(new Path(file).getName)
       .filter(_.fileLen.contains(liveLen)).map(_.rows)
 
+  /** Post-pruning statistics for the planner ([[SupportsReportStatistics]]):
+    * sizeInBytes = the bytes of exactly the files this scan will plan
+    * (pushed + group filters applied against `_graft_stats`), and
+    * numRows = their exact manifest row counts when every surviving
+    * file carries a stats line (absent otherwise — never guess). This
+    * is what lets AQE/join planning see a filtered graftlines scan as
+    * broadcast-small even though the directory is huge: the estimate
+    * shrinks WITH the pruning, as every real table format's does. All
+    * driver-side metadata — one manifest read, no file opens. */
   override def estimateStatistics():
       org.apache.spark.sql.connector.read.Statistics = {
-    val files = fileUniverse
-    val stats = statsCache
-    val pruners = pushed ++ groupPrune
-    val kept = files.filter { case (f, _) =>
-      stats.get(new Path(f).getName)
-        .forall(st => pruners.forall(GlFilters.mayMatch(_, st)))
-    }
+    val kept = statsPruned
     val bytes = kept.map(_._2).sum
     // numRows is only a planner hint, but it rides the same freshness
     // proof as the manifest COUNT(*) — see freshRows
-    val keptRows = kept.map { case (f, len) => freshRows(stats, f, len) }
+    val keptRows = kept.map { case (f, len) => freshRows(statsCache, f, len) }
     val rowsOpt =
       if (keptRows.forall(_.isDefined)) Some(keptRows.flatten.sum) else None
     new org.apache.spark.sql.connector.read.Statistics {
@@ -2282,18 +2296,7 @@ case class GlScan(path: String, required: StructType,
     aggSpec.isEmpty && pushedLimit.isEmpty && groupPrune.isEmpty &&
       onPlan.isEmpty && !required.fieldNames.contains(GraftLines.FileCol)
 
-  private def prunedFiles(
-      conf: org.apache.hadoop.conf.Configuration): Seq[(String, Long)] = {
-    val files = fileUniverse
-    val stats = statsCache
-    files.filter { case (f, _) =>
-      stats.get(new Path(f).getName)
-        .forall(st => pushed.forall(GlFilters.mayMatch(_, st)))
-    }
-  }
-
   @transient private lazy val keyedPlan: Option[Seq[(String, Long, Any)]] = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
     if (!keyedEligible) None
     else buckets match {
       case Some((_, n)) =>
@@ -2303,7 +2306,7 @@ case class GlScan(path: String, required: StructType,
         // with a different n: an id >= n is a KeyGroupedPartitioning
         // key the registered bucket function can never produce, so it
         // must degrade like every other unprovable layout)
-        val keyed = prunedFiles(conf).map { case (f, len) =>
+        val keyed = statsPruned.map { case (f, len) =>
           GraftLines.bucketIdOf(new Path(f).getName)
             .filter(b => b >= 0 && b < n)
             .map(b => (f, len, java.lang.Integer.valueOf(b): Any))
@@ -2311,9 +2314,8 @@ case class GlScan(path: String, required: StructType,
         if (keyed.nonEmpty && keyed.forall(_.isDefined)) Some(keyed.flatten)
         else None
       case None => partCol.flatMap { pc =>
-        val stats = statsCache
-        val keyed = prunedFiles(conf).map { case (f, len) =>
-          stats.get(new Path(f).getName).flatMap(_.cols.get(pc)).collect {
+        val keyed = statsPruned.map { case (f, len) =>
+          statsCache.get(new Path(f).getName).flatMap(_.cols.get(pc)).collect {
             case GlColStats(0, mn, mx) if mn != null && mn == mx =>
               (f, len, mn)
           }
@@ -2358,7 +2360,6 @@ case class GlScan(path: String, required: StructType,
     * falls inside it (readers scan to the next newline — see
     * [[GlReader]]), so any split-size choice yields the same rows. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
     // COUNT(*)-only pushed aggregations with no filters answer from
     // the stats manifest alone — one metadata read, ZERO data-file
     // opens (the Iceberg/Delta manifest-count move). Strictly gated:
@@ -2386,37 +2387,20 @@ case class GlScan(path: String, required: StructType,
     }
     keyedPlan match {
       case Some(kf) =>
-        val splitSize =
-          math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
         return kf.flatMap { case (f, len, v) =>
-          def key = new GenericInternalRow(Array[Any](v))
-          if (len <= splitSize)
-            Seq(GlKeyedPartition(f, 0L, Long.MaxValue, key))
-          else (0L until len by splitSize).map(s0 =>
-            GlKeyedPartition(f, s0, math.min(s0 + splitSize, len), key))
+          GraftLines.splits(len).map { case (a, b) =>
+            GlKeyedPartition(f, a, b, new GenericInternalRow(Array[Any](v)))
+          }
         }.toArray
       case None => ()
     }
-    val files = fileUniverse
-    val pruners = pushed ++ groupPrune
-    val statKept = if (pruners.isEmpty) files else {
-      val stats = statsCache
-      files.filter { case (f, _) =>
-        val base = new Path(f).getName
-        stats.get(base).forall(st => pruners.forall(GlFilters.mayMatch(_, st)))
-      }
-    }
     val kept = runtimeAllowedFiles match {
-      case Some(allowed) => statKept.filter { case (f, _) => allowed(f) }
-      case None => statKept
+      case Some(allowed) => statsPruned.filter { case (f, _) => allowed(f) }
+      case None => statsPruned
     }
     onPlan.foreach(_(kept.map(_._1)))
-    val splitSize =
-      math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
     kept.flatMap { case (f, len) =>
-      if (len <= splitSize) Seq(GlInputPartition(f, 0L, Long.MaxValue))
-      else (0L until len by splitSize).map(s =>
-        GlInputPartition(f, s, math.min(s + splitSize, len)))
+      GraftLines.splits(len).map { case (a, b) => GlInputPartition(f, a, b) }
     }.toArray
   }
 
@@ -2526,9 +2510,6 @@ private[sources] class GlMicroBatchStream(path: String,
     }
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf)
-    val spark = SparkSession.active
-    val splitSize =
-      math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
     // ONE directory listing serves every fresh file's length — the
     // per-file getFileStatus loop cost N namenode RPCs per micro-batch
     val lens: Map[String, Long] =
@@ -2539,10 +2520,8 @@ private[sources] class GlMicroBatchStream(path: String,
       // a gen-listed file missing from the listing is loss — keep the
       // loud getFileStatus error path rather than silently skipping
       val len = lens.getOrElse(base, fs.getFileStatus(p).getLen)
-      if (len <= splitSize) Seq(GlInputPartition(p.toString, 0L,
-        Long.MaxValue))
-      else (0L until len by splitSize).map(o =>
-        GlInputPartition(p.toString, o, math.min(o + splitSize, len)))
+      GraftLines.splits(len).map { case (a, b) =>
+        GlInputPartition(p.toString, a, b) }
     }.toArray
   }
 

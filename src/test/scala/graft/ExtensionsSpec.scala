@@ -48,7 +48,8 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   private val installProbes =
-    Seq("q_join_asof", "q_sim_cosine_topk", "q_dedup_minhash_lsh")
+    Seq("q_join_asof", "q_sim_cosine_topk", "q_dedup_minhash_lsh",
+      "q_etl_catalog_table")
 
   test("SparkEntry.queries install what a session built without GraftExtensions lacks") {
     val want = installProbes.map(q => q -> rows(TestSpark.spark, q)).toMap

@@ -1195,31 +1195,71 @@ class GraftLinesSpec extends AnyFunSuite {
     }
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("s", StringType), StructField("d", DoubleType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .write.format("graftlines").mode("overwrite").save(p)
+    val src = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+      schema)
+    src.write.format("graftlines").mode("overwrite").save(p)
     val expected = spark.read.format("graftlines").load(p)
       .collect().map(_.toString).sorted.toSeq
     assert(expected.size == 60)
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val hfs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fileLen = hfs.listStatus(hp).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".gl"))
-      .map(_.getLen).sum
+    // the same rows behind the two other readers that plan byte ranges:
+    // an identity-keyed table (one file per g) and a streaming source
+    val pk = s"$dir/split_keyed"
+    src.withColumn("g", $"k" % 2).write.format("graftlines")
+      .option("partitionColumn", "g").mode("overwrite").save(pk)
+    val ps = s"$dir/split_stream"
+    val hps = new org.apache.hadoop.fs.Path(ps)
+    val hfs = hps.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    hfs.delete(hps, true)
+    hfs.mkdirs(hps)
+    hfs.create(new org.apache.hadoop.fs.Path(ps, GraftLines.VersionMarker),
+      true).close()
+    src.write.format("graftlines").mode("append").save(ps)
+    def fileLens(d: String): Seq[Long] =
+      hfs.listStatus(new org.apache.hadoop.fs.Path(d)).toSeq
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".gl"))
+        .map(_.getLen)
+    def wantParts(d: String, sz: Long): Int = fileLens(d)
+      .map(len => if (len <= sz) 1 else ((len + sz - 1) / sz).toInt).sum
+    assert(fileLens(pk).size == 2)
     // 8 forces boundaries INSIDE the header line; 37/256 land mid-line
     // and mid-multibyte-char; 1 << 20 disables splitting entirely
     for (sz <- Seq(8L, 37L, 256L, 1L << 20)) withMaxPartitionBytes(sz) {
       val df = spark.read.format("graftlines").load(p)
       val parts = glScan(df).planInputPartitions().length
-      val wantParts =
-        if (fileLen <= sz) 1 else ((fileLen + sz - 1) / sz).toInt
-      assert(parts == wantParts,
-        s"split size $sz: $parts partitions, expected $wantParts")
+      assert(parts == wantParts(p, sz),
+        s"split size $sz: $parts partitions, expected ${wantParts(p, sz)}")
       assert(df.collect().map(_.toString).sorted.toSeq == expected,
         s"split size $sz changed the row set")
       // pushed filters + per-partition limit still hold across ranges
       val f = df.filter($"k" >= 10L && $"k" < 50L)
       assert(f.count() == 40, s"split size $sz broke pushed filters")
       assert(df.limit(17).count() == 17, s"split size $sz broke limit")
+
+      val kdf = spark.read.format("graftlines").load(pk)
+      val kparts = glScan(kdf).planInputPartitions()
+      // GlKeyedPartition is private[sources]; its name is contract enough
+      assert(kparts.forall(_.getClass.getSimpleName == "GlKeyedPartition"),
+        s"split size $sz: the identity-partitioned scan is not keyed")
+      assert(kparts.length == wantParts(pk, sz),
+        s"split size $sz: ${kparts.length} keyed partitions, " +
+          s"expected ${wantParts(pk, sz)}")
+      assert(kdf.drop("g").collect().map(_.toString).sorted.toSeq == expected,
+        s"split size $sz changed the keyed row set")
+
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val streamParts = new java.util.concurrent.atomic.AtomicInteger
+      val q = spark.readStream.format("graftlines").load(ps)
+        .writeStream.foreachBatch {
+          (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            streamParts.addAndGet(b.rdd.getNumPartitions)
+            b.collect().foreach(r => got.add(r.toString))
+        }.start()
+      try q.processAllAvailable() finally q.stop()
+      assert(streamParts.get == wantParts(ps, sz),
+        s"split size $sz: ${streamParts.get} streamed partitions, " +
+          s"expected ${wantParts(ps, sz)}")
+      assert(got.toArray.map(_.toString).sorted.toSeq == expected,
+        s"split size $sz changed the streamed row set")
     }
   }
 

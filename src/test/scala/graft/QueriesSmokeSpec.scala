@@ -16,10 +16,18 @@ class QueriesSmokeSpec extends AnyFunSuite {
     * the driver hash-compares. */
   private val valueUnstable = Set("q_agg_kll_reaggregate")
 
+  /** A query never rebinds a catalog: Spark caches a plugin at first
+    * use, so a query-level rebinding would silently miss. */
+  private def catalogConfs(): Map[String, String] =
+    spark.conf.getAll.filter(_._1.startsWith("spark.sql.catalog."))
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs on sf0.001 and is deterministic") {
+      GraftExtensions.install(spark)
+      val catalogs = catalogConfs()
       val r1 = fn(spark, TestSpark.sf0001).collect()
       val r2 = fn(spark, TestSpark.sf0001).collect()
+      assert(catalogConfs() == catalogs, s"$name changed the catalog confs")
       if (valueUnstable(name))
         assert(r1.length == r2.length && r1.length > 0,
           s"$name returned different row counts across runs")

@@ -27,7 +27,7 @@ class GlEvolutionInteropSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val tbl = "graft_cat.interop.evo"
+  private val tbl = "graft_interop.interop.evo"
 
   /** expected live rows per committed version, replayed independently
     * of the connector: (k, v, w) with w null before the ALTER */
@@ -52,11 +52,11 @@ class GlEvolutionInteropSpec extends AnyFunSuite {
     }
 
   private lazy val history: Int = {
-    spark.conf.set("spark.sql.catalog.graft_cat",
+    spark.conf.set("spark.sql.catalog.graft_interop",
       "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.graft_cat.warehouse",
+    spark.conf.set("spark.sql.catalog.graft_interop.warehouse",
       GraftTmp.dir("warehouse_interop"))
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.interop")
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_interop.interop")
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     spark.sql(s"""CREATE TABLE $tbl (k BIGINT, v BIGINT)
       | USING graftlines TBLPROPERTIES ('versioned'='true')""".stripMargin)
@@ -207,18 +207,18 @@ class GlEvolutionInteropSpec extends AnyFunSuite {
     // a fresh append-only table (the streaming source is an append
     // feed; the main history's COW delete/compact generations would
     // re-emit rewritten rows by design)
-    spark.conf.set("spark.sql.catalog.graft_cat",
+    spark.conf.set("spark.sql.catalog.graft_interop",
       "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.graft_cat.warehouse",
+    spark.conf.set("spark.sql.catalog.graft_interop.warehouse",
       GraftTmp.dir("warehouse_interop"))
-    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.interop")
-    spark.sql("DROP TABLE IF EXISTS graft_cat.interop.evs")
-    spark.sql("""CREATE TABLE graft_cat.interop.evs (k BIGINT, v BIGINT)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_interop.interop")
+    spark.sql("DROP TABLE IF EXISTS graft_interop.interop.evs")
+    spark.sql("""CREATE TABLE graft_interop.interop.evs (k BIGINT, v BIGINT)
       | USING graftlines TBLPROPERTIES ('versioned'='true')""".stripMargin)
-    spark.sql("INSERT INTO graft_cat.interop.evs VALUES (1, 10), (2, 20)")
-    spark.sql("ALTER TABLE graft_cat.interop.evs ADD COLUMNS (w STRING)")
+    spark.sql("INSERT INTO graft_interop.interop.evs VALUES (1, 10), (2, 20)")
+    spark.sql("ALTER TABLE graft_interop.interop.evs ADD COLUMNS (w STRING)")
     spark.sql(
-      "INSERT INTO graft_cat.interop.evs VALUES (3, 30, 'x'), (4, 40, 'y')")
+      "INSERT INTO graft_interop.interop.evs VALUES (3, 30, 'x'), (4, 40, 'y')")
     val dir = new Path(GraftTmp.dir("warehouse_interop"), "interop/evs")
       .toString
     // path-based STREAM: schema must come from _graft_schema (with w),
