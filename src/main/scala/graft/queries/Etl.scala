@@ -867,15 +867,14 @@ object Etl extends QueryGroup {
       // lifecycle statement warehouse users actually type for a GDPR
       // erasure — q_etl_delete_cascade computes WHAT to delete as
       // dataframe algebra; this executes a delete as a STATEMENT
-      // against a connector table via DSv2 SupportsDelete. Execution
-      // is copy-on-write in the source (GraftLines.rewriteWithoutMatches):
-      // `_graft_stats` prunes provably-untouched files at plan time,
-      // affected files rewrite in parallel executor tasks (data never
-      // through the driver), fresh stats replace their manifest lines,
-      // and only exactly-evaluable predicates take this metadata path —
-      // anything else (LIKE, subqueries) falls through to the
-      // group-based COW rewrite and still deletes exactly
-      // (GraftLinesSpec pins all of it, including untouched-file byte
+      // against a connector table via DSv2 SupportsRowLevelOperations.
+      // Execution is the one group-based copy-on-write rewrite that
+      // UPDATE and MERGE use too: `_graft_stats` prunes provably-
+      // untouched files at plan time, Spark's runtime group filter
+      // keeps only the files that hold a match, those files are
+      // rewritten without the deleted rows in executor tasks (data
+      // never through the driver), and GraftLines.publish swaps them
+      // in (GraftLinesSpec pins it, including untouched-file byte
       // identity). Oracle: the surviving table per status — counts and
       // decimal-exact sums.
       "q_etl_sql_delete",

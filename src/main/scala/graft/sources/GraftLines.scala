@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider, TruncatableTable}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform, Expression => V2Expression}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns}
@@ -140,26 +140,21 @@ object GraftLines {
     * line — same forward/backward posture as the Bloom lines). Stats
     * maintenance is deliberately best-effort (mergeStats swallows
     * failures), which is safe for PRUNING (a stale line only ever
-    * widens the kept range after a same-name COW rewrite shrinks a
+    * widens the kept range after a same-name republish shrinks a
     * file) but NOT for the COUNT(*)-from-manifest shortcut, where a
     * stale row count would be served as an exact result. The recorded
     * byte length is the staleness detector: any consumer that treats
     * `rows` as EXACT must require `#len == FileStatus.getLen` and
     * degrade to a real scan otherwise. Why the length check is a real
-    * staleness PROOF for every current same-name rewrite (not mere
-    * defense-in-depth): the only paths that republish under an
-    * existing name are (a) the fast-path COW DELETE
-    * ([[rewriteWithoutMatches]], nameOverride = the old base name),
-    * which is removal-only — surviving lines are byte-identical, so a
-    * changed row count ALWAYS changes the length (every dropped row
-    * was >= 1 byte + newline); and (b) a plain-directory [[publish]]
-    * onto an existing target. Batch, COW and compact final names carry
-    * a driver-generated job tag ([[newJobTag]]), so in practice only
-    * the streaming sink's `part-<pid>-q<query>-e<E>-<task>` names meet
-    * an existing file, and a retried epoch deterministically rewrites
-    * the SAME rows, so an unchanged length accompanies an unchanged
-    * count. A future rewrite
-    * path that both changes the row set AND rewrites surviving values
+    * staleness PROOF, not mere defense-in-depth: the only path that
+    * republishes under an existing name is a plain-directory
+    * [[publish]] onto an existing target. Batch, COW and compact final
+    * names carry a driver-generated job tag ([[newJobTag]]), so in
+    * practice only the streaming sink's
+    * `part-<pid>-q<query>-e<E>-<task>` names meet an existing file,
+    * and a retried epoch deterministically rewrites the SAME rows, so
+    * an unchanged length accompanies an unchanged count. A future
+    * rewrite path that both changes the row set AND rewrites surviving values
     * under one name would break the proof (counts could change at a
     * coincidentally-preserved length) — such a path must mint fresh
     * names or record a content token (mtime / header checksum) beside
@@ -216,8 +211,11 @@ object GraftLines {
     * value — published to Spark through [[GraftCatalog]]'s
     * FunctionCatalog so both the write distribution and the reported
     * read partitioning resolve to the same canonical function. Bucket
-    * ids ride FILE NAMES (`…-b<id>.gl`) — integers need no escaping
-    * and survive every commit path. */
+    * ids ride FILE NAMES (`…-b<id>.gl`): integers need no escaping,
+    * and every batch write and row-level rewrite lands its files
+    * through [[writerFactory]], so the names survive every commit
+    * path except [[compact]] and the streaming sink, whose unbucketed
+    * names degrade the keyed scan to the ordinary one. */
   val BucketMarker = "_graft_buckets"
 
   private[sources] def bucketSpec(dir: String,
@@ -248,11 +246,10 @@ object GraftLines {
   private[sources] def bucketOf(v: Long, n: Int): Int =
     (((v % n) + n) % n).toInt
 
-  // the -b<id> tag may be followed by generation suffixes: versioned
-  // commits rename `…-b3.gl` → `…-b3-g7.gl` (and a versioned COW
-  // rewrite can stack another), so the id must parse through ANY
-  // trailing `-g<N>` run or bucketed+versioned tables would silently
-  // lose KeyGroupedPartitioning on every commit
+  // the -b<id> tag may be followed by a generation suffix: versioned
+  // commits rename `…-b3.gl` → `…-b3-g7.gl`, so the id must parse
+  // through the trailing `-g<N>` run or bucketed+versioned tables
+  // would silently lose KeyGroupedPartitioning on every commit
   private[sources] val BucketNamePattern =
     java.util.regex.Pattern.compile(".*-b(\\d+)(?:-g\\d+)*\\.gl$")
 
@@ -273,6 +270,26 @@ object GraftLines {
     "t" + java.lang.Long.toHexString(
       java.util.concurrent.ThreadLocalRandom.current().nextLong()
         | (1L << 60)).take(8)
+
+  /** The task writer factory of every batch write into `dir` (made
+    * here if missing): appends and overwrites ([[GlWrite]]) and
+    * row-level rewrites ([[GlReplaceWrite]]). With an identity
+    * partition column or a bucket spec each task fans its rows out to
+    * one file per value or bucket id ([[GlLayout]]); otherwise a task
+    * lands one file. */
+  private[sources] def writerFactory(dir: String, schema: StructType,
+      partitionCol: Option[String],
+      buckets: Option[(String, Int)]): DataWriterFactory = {
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
+    val p = new Path(dir)
+    p.getFileSystem(conf).mkdirs(p)
+    val layout = (partitionCol, buckets) match {
+      case (Some(c), _) => Some(GlLayout(schema.fieldIndex(c), None))
+      case (_, Some((c, n))) => Some(GlLayout(schema.fieldIndex(c), Some(n)))
+      case _ => None
+    }
+    GlWriterFactory(dir, schema, new SerializableConfiguration(conf), layout)
+  }
 
   private[sources] def bucketIdOf(baseName: String): Option[Int] = {
     val m = BucketNamePattern.matcher(baseName)
@@ -415,8 +432,8 @@ object GraftLines {
     finally br.close()
   }
 
-  /** Task commit messages, one [[GlCommitted]] per file (a partitioned
-    * or bucketed task reports a [[GlMultiCommitted]]; failed tasks
+  /** Task commit messages, one [[GlCommitted]] per file (a fan-out
+    * task, [[GlFanOutWriter]], reports a [[GlMultiCommitted]]; failed tasks
     * leave null slots). */
   private[sources] def committedFiles(
       messages: Array[WriterCommitMessage]): Seq[GlCommitted] =
@@ -1264,9 +1281,9 @@ object GraftLines {
       if (existing.isEmpty && newLines.isEmpty) { fs.delete(p, false); return }
       // writer-unique tmp (concurrent merges are last-writer-wins by
       // design — stats are best-effort — but they must not corrupt
-      // each other's in-flight bytes), published with the same atomic
-      // same-name replace as the COW rewrite so no crash instant
-      // leaves the manifest absent (absence costs pruning + exact
+      // each other's in-flight bytes), published with an atomic
+      // same-name replace so no crash instant leaves the manifest
+      // absent (absence costs pruning + exact
       // counts table-wide until the next merge)
       val tmp = new Path(p.getParent,
         p.getName + "." + java.util.UUID.randomUUID().toString + ".tmp")
@@ -1287,66 +1304,6 @@ object GraftLines {
           throw t
       }
     } catch { case _: Exception => () }
-  }
-
-  /** Executor-side copy-on-write rewrite for DELETE: stream `file`,
-    * drop every row satisfying the conjunction of `filters`, land the
-    * survivors under the file's own name. On local filesystems the
-    * same-name publish is ATOMIC (POSIX rename replaces the original
-    * in place — [[replaceByMove]]), so no crash instant leaves the
-    * file absent; elsewhere it is staged write + delete-original +
-    * rename, whose per-file window is the documented non-atomicity of
-    * a logless COW delete (the catalog/manifest layer is the
-    * transactional answer, as for writes). Returns the file's fresh
-    * stats lines, or Nil when every row matched and the file was
-    * deleted; a delete that leaves the file in place fails the task. */
-  private[sources] def rewriteWithoutMatches(file: String,
-      schema: StructType, filters: Array[Filter],
-      conf: org.apache.hadoop.conf.Configuration,
-      nullFillMissing: Boolean): Seq[String] = {
-    val p = new Path(file)
-    val fs = p.getFileSystem(conf)
-    val dir = p.getParent.toString
-    val base = p.getName
-    val reader = new GlReader(file, schema, Array.empty, None, conf,
-      nullFillMissing)
-    val writer = new GlWriter(dir, schema, 0, 0L, conf,
-      nameOverride = Some(base))
-    val idx = schema.fieldNames.zipWithIndex.toMap
-    try {
-      while (reader.next()) {
-        val row = reader.get()
-        val get: String => Any = { n =>
-          val i = idx(n)
-          if (row.isNullAt(i)) null
-          else schema.fields(i).dataType match {
-            case IntegerType | DateType => java.lang.Integer.valueOf(row.getInt(i))
-            case LongType | TimestampType => java.lang.Long.valueOf(row.getLong(i))
-            case DoubleType => java.lang.Double.valueOf(row.getDouble(i))
-            case BooleanType => java.lang.Boolean.valueOf(row.getBoolean(i))
-            case StringType => row.getUTF8String(i).toString
-            case other => throw new IllegalStateException(other.toString)
-          }
-        }
-        if (!filters.forall(GlFilters.eval(_, get))) writer.write(row)
-      }
-    } catch { case e: Throwable => writer.abort(); reader.close(); throw e }
-    reader.close()
-    writer.commit() match {
-      case GlCommitted(Some(staged), Some(fin), lines) =>
-        if (!(isLocalScheme(fs)
-            && replaceByMove(fs, new Path(staged), new Path(fin)))) {
-          require(removed(fs, p),
-            s"graftlines delete: could not remove $file before publish")
-          require(fs.rename(new Path(staged), new Path(fin)),
-            s"graftlines delete: could not publish rewritten $fin")
-        }
-        lines.map(l => s"$base\t$l")
-      case _ => // no survivors: the whole file is deleted
-        require(removed(fs, p), s"graftlines delete: could not remove " +
-          s"$file, whose every row matched — its rows are still visible")
-        Nil
-    }
   }
 
   /** Manifest read at plan time: baseName -> (rows, col -> (nulls, min,
@@ -1707,28 +1664,24 @@ private[sources] object GlFilters {
   }
 }
 
-/** Copy-on-write `DELETE FROM` ([[SupportsDelete]]): the row-level
-  * lifecycle op of real table formats, reachable through any catalog
-  * identifier (`DELETE FROM graft_cat.ns.t WHERE …`). Only predicates
-  * the reader can evaluate EXACTLY take this metadata path
-  * (`canDeleteWhere` — same honesty contract as filter pushdown);
-  * anything else (LIKE, subqueries, …) falls through to the
-  * group-based rewrite below, which deletes exactly too. Execution:
-  * `_graft_stats` prunes provably-untouched files at plan time — a
-  * GDPR delete keyed on a user id rewrites only the files whose
-  * min/max/bloom admit that key — and the affected files are rewritten
-  * in PARALLEL executor tasks (one per file, data never through the
-  * driver); their fresh stats lines replace the old manifest entries.
-  * Per-file publish is staged-write + delete + rename; the cross-file
-  * window of a logless COW delete is documented at
-  * [[GraftLines.rewriteWithoutMatches]]. */
+/** A graftlines directory as a DSv2 table: batch and streaming reads
+  * and writes, the `_file` metadata column, and the row-level
+  * statements of real table formats through any catalog identifier.
+  * Every `DELETE`, `UPDATE` and `MERGE` is one copy-on-write rewrite
+  * ([[GlRowLevelOperation]] → [[GlReplaceWrite]] →
+  * [[GraftLines.publish]]): `_graft_stats` and Spark's runtime group
+  * filter keep the rewrite to the files that hold a match, so a GDPR
+  * delete keyed on a user id rewrites only those files, and the
+  * replacement files keep the table's bucket or partition layout.
+  * `TRUNCATE TABLE` and an unconditional `DELETE` are
+  * [[truncateTable]]. */
 private[sources] class GlTable(path: String, tableSchema: StructType,
     nullFillMissing: Boolean = false,
     /** Set by the catalog's `VERSION AS OF` loadTable: every scan of
       * this Table instance reads that committed generation; writes are
       * rejected (you cannot write to the past). */
     pinnedVersion: Option[Int] = None)
-    extends Table with SupportsRead with SupportsWrite with SupportsDelete
+    extends Table with SupportsRead with SupportsWrite with TruncatableTable
     with SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   require(path != null && path.nonEmpty, "graftlines requires a path")
@@ -1854,50 +1807,25 @@ private[sources] class GlTable(path: String, tableSchema: StructType,
       queryId = info.queryId())
   }
 
-  /** Versioned tables decline the metadata DELETE path entirely: it
-    * rewrites files IN PLACE, which would corrupt committed history.
-    * Spark then routes the DELETE through the row-level COW machinery
-    * below, whose replace-commit is generation-aware. */
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    !GraftLines.isVersioned(path,
-      SparkSession.active.sparkContext.hadoopConfiguration) &&
-      filters.forall(GlFilters.supported(tableSchema, _))
-
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    val spark = SparkSession.active
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = GraftLines.listDataFiles(path, conf)
-    // same conservative pruning as the scan: a file is untouched when
-    // stats PROVE no row satisfies the delete conjunction
-    val stats = GraftLines.readStats(path, conf, tableSchema)
-    val affected = files.filter { f =>
-      stats.get(new Path(f).getName)
-        .forall(st => filters.forall(GlFilters.mayMatch(_, st)))
-    }
-    if (affected.isEmpty) return
-    val sconf = new SerializableConfiguration(conf)
-    val schema = tableSchema
-    val nfm = nullFillMissing
-    val newLines = spark.sparkContext
-      .parallelize(affected, affected.size)
-      .map(f => GraftLines.rewriteWithoutMatches(f, schema, filters,
-        sconf.value, nfm))
-      .collect().flatten.toSeq
-    GraftLines.mergeStats(path, conf,
-      dropNames = affected.map(new Path(_).getName).toSet,
-      newLines = newLines)
+  /** `TRUNCATE TABLE` and `DELETE FROM` without a condition: one
+    * [[GraftLines.publish]] that replaces every live file with none.
+    * On a versioned table that is an empty generation, so the
+    * truncated data stays readable with `VERSION AS OF`. */
+  override def truncateTable(): Boolean = {
+    GraftLines.publish(path,
+      SparkSession.active.sparkContext.hadoopConfiguration, Nil,
+      GlReplace.All)
+    true
   }
 
-  /** Group-based (copy-on-write) UPDATE / MERGE / complex DELETE:
-    * Spark rewrites the statement into a ReplaceData plan — read every
-    * row of the AFFECTED groups through [[GlGroupScanBuilder]] (files
-    * are the groups; condition filters prune files via `_graft_stats`
-    * but NEVER drop rows, so carry-over rows survive the rewrite),
-    * apply the modification, and hand the full replacement rows to
-    * [[GlReplaceWrite]], whose commit deletes exactly the scanned
-    * files and publishes the staged replacements. DELETE statements
-    * whose predicate `canDeleteWhere` accepts still take the cheaper
-    * metadata path above; subquery deletes fall through to this one. */
+  /** Group-based (copy-on-write) DELETE / UPDATE / MERGE: Spark
+    * rewrites the statement into a ReplaceData plan — read every row
+    * of the AFFECTED groups through [[GlGroupScanBuilder]] (files are
+    * the groups; condition filters prune files via `_graft_stats` but
+    * NEVER drop rows, so carry-over rows survive the rewrite), apply
+    * the modification, and hand the full replacement rows to
+    * [[GlReplaceWrite]], whose commit replaces exactly the scanned
+    * files with the staged replacements. */
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder =
     new RowLevelOperationBuilder {
@@ -1914,15 +1842,27 @@ private[sources] class GlRowLevelOperation(path: String,
     cmd: RowLevelOperation.Command) extends RowLevelOperation {
 
   /** Files the row-level scan planned — the groups commit replaces.
-    * Written at plan time on the driver; re-planning overwrites. */
-  @volatile private[sources] var scannedFiles: Seq[String] = Nil
+    * Written at plan time on the driver; re-planning overwrites. None
+    * when the scan was never planned: the optimizer pruned the read
+    * (see [[replaced]]). */
+  @volatile private[sources] var scannedFiles: Option[Seq[String]] = None
+
+  /** The live files the commit supersedes. A DELETE whose read was
+    * pruned has a condition the optimizer proved true for every row
+    * (`WHERE 1 = 1`), so it replaces every file; an UPDATE or MERGE
+    * whose read was pruned (a MERGE from an empty source) touches
+    * nothing. */
+  private[sources] def replaced: GlReplace = scannedFiles match {
+    case Some(files) => GlReplace.Files(files.map(new Path(_).getName).toSet)
+    case None if cmd == RowLevelOperation.Command.DELETE => GlReplace.All
+    case None => GlReplace.Append
+  }
 
   override def command(): RowLevelOperation.Command = cmd
 
   /** Ask for `_file`: it routes the replacement write through Spark's
     * metadata-projection task, so data rows arrive already stripped of
-    * the operation column (the writer-side strip stays as a fallback
-    * for metadata-free plans). */
+    * the operation column. */
   override def requiredMetadataAttributes(): Array[NamedReference] =
     Array(org.apache.spark.sql.connector.expressions.Expressions
       .column(GraftLines.FileCol))
@@ -1966,14 +1906,18 @@ private[sources] class GlGroupScanBuilder(op: GlRowLevelOperation,
         nullable = false)),
       Array.empty, None, None, schema, nullFillMissing,
       groupPrune = groupFilters,
-      onPlan = Some(files => op.scannedFiles = files))
+      onPlan = Some(files => op.scannedFiles = Some(files)))
 }
 
-/** Write side of a group-based rewrite: staged task writers exactly as
-  * [[GlWrite]], and a [[GraftLines.publish]] that replaces the files
-  * the paired scan planned. On a versioned table the statement becomes
-  * time-travelable for free: `VERSION AS OF n` replays the
-  * pre-statement table from the same bytes. */
+/** Write side of a group-based rewrite: staged task writers through
+  * the table's own layout ([[GraftLines.writerFactory]] with its
+  * `_graft_partcol`/`_graft_buckets` markers), and a
+  * [[GraftLines.publish]] that replaces the files the paired scan
+  * planned. Rows need no clustering first: the fan-out writer gives
+  * each key its own file, which is all the keyed scan asks. On a
+  * versioned table the statement becomes time-travelable for free:
+  * `VERSION AS OF n` replays the pre-statement table from the same
+  * bytes. */
 private[sources] class GlReplaceWrite(path: String, schema: StructType,
     op: GlRowLevelOperation) extends Write with BatchWrite {
   GraftLines.header(schema) // reject unstorable types before tasks launch
@@ -1983,18 +1927,14 @@ private[sources] class GlReplaceWrite(path: String, schema: StructType,
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    dir.getFileSystem(conf).mkdirs(dir)
-    GlOpStrippingFactory(
-      GlWriterFactory(path, schema, new SerializableConfiguration(conf)),
-      schema)
+    GraftLines.writerFactory(path, schema,
+      GraftLines.partitionCol(path, conf), GraftLines.bucketSpec(path, conf))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     GraftLines.publish(path,
       SparkSession.active.sparkContext.hadoopConfiguration,
-      GraftLines.committedFiles(messages),
-      GlReplace.Files(op.scannedFiles.map(new Path(_).getName).toSet))
+      GraftLines.committedFiles(messages), op.replaced)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     GraftLines.discardStaged(path, messages)
@@ -2240,7 +2180,7 @@ case class GlScan(path: String, required: StructType,
   /** The ONE freshness rule for serving a manifest row count as exact
     * (manifest COUNT(*), planner numRows): the file's stats line must
     * carry a `#len` equal to its LIVE length — stats merges are
-    * best-effort, and a same-name COW rewrite whose merge failed
+    * best-effort, and a same-name republish whose merge failed
     * leaves a stale count behind that only the length can expose.
     * Both consumers go through here so the rule cannot drift apart. */
   private def freshRows(stats: Map[String, GlFileStats],
@@ -3166,22 +3106,8 @@ private[sources] class GlWrite(path: String, schema: StructType,
   }
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
-    fs.mkdirs(dir)
-    (partitionCol, bucketSpec) match {
-      case (Some(c), _) =>
-        GlPartitionedWriterFactory(path, schema,
-          schema.fieldIndex(c), new SerializableConfiguration(conf))
-      case (_, Some((c, n))) =>
-        GlBucketedWriterFactory(path, schema,
-          schema.fieldIndex(c), n, new SerializableConfiguration(conf))
-      case _ =>
-        GlWriterFactory(path, schema, new SerializableConfiguration(conf))
-    }
-  }
+      info: PhysicalWriteInfo): DataWriterFactory =
+    GraftLines.writerFactory(path, schema, partitionCol, bucketSpec)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
@@ -3307,9 +3233,8 @@ private[sources] case class GlStreamingWriterFactory(path: String,
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new GlWriter(path, schema, partitionId, taskId, conf.value,
-      nameOverride = Some(
-        f"part-$partitionId%05d-q$queryId-e$epochId-$taskId${GraftLines.Ext}"))
+    new GlWriter(path, schema, conf.value,
+      f"part-$partitionId%05d-q$queryId-e$epochId-$taskId${GraftLines.Ext}")
 }
 
 /** `staged`: the task's staging path (written bytes); `file`: the
@@ -3321,8 +3246,8 @@ private[sources] case class GlCommitted(staged: Option[String],
     file: Option[String], statsLines: Seq[String] = Nil)
     extends WriterCommitMessage
 
-/** A partitioned task's commit: one [[GlCommitted]] per per-value file
-  * it wrote. The job commit flattens these into the ordinary path. */
+/** A fan-out task's commit: one [[GlCommitted]] per per-key file it
+  * wrote. The job commit flattens these into the ordinary path. */
 private[sources] case class GlMultiCommitted(msgs: Seq[GlCommitted])
     extends WriterCommitMessage
 
@@ -3339,105 +3264,91 @@ private[sources] object GlReplace {
   * versioned ([[GraftLines.gensOf]]). */
 private[sources] final case class GlGens(list: Seq[Int], versioned: Boolean)
 
-private[sources] case class GlPartitionedWriterFactory(path: String,
-    schema: StructType, partIdx: Int, conf: SerializableConfiguration,
-    jobTag: String = GraftLines.newJobTag())
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] =
-    new GlPartitionedWriter(path, schema, partitionId, taskId, conf.value,
-      partIdx, jobTag)
-}
+/** A table's file layout for the fan-out writer: the key column's
+  * index, and the bucket count when the table is bucketed (key = bucket
+  * id, [[GraftLines.bucketOf]]) rather than identity-partitioned (key =
+  * the value). */
+private[sources] final case class GlLayout(col: Int, numBuckets: Option[Int])
 
-private[sources] case class GlBucketedWriterFactory(path: String,
-    schema: StructType, colIdx: Int, numBuckets: Int,
-    conf: SerializableConfiguration,
+/** Task writers of one batch job. Every final name carries the job's
+  * tag ([[GraftLines.newJobTag]]): evaluated ONCE per factory on the
+  * driver, then serialized to every task. */
+private[sources] case class GlWriterFactory(path: String, schema: StructType,
+    conf: SerializableConfiguration, layout: Option[GlLayout] = None,
     jobTag: String = GraftLines.newJobTag()) extends DataWriterFactory {
   override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] =
-    new GlBucketedWriter(path, schema, partitionId, taskId, conf.value,
-      colIdx, numBuckets, jobTag)
-}
-
-/** Bucket-partitioned task writer: routes each row to the
-  * [[GlWriter]] for its bucket id (the shared
-  * [[GraftLines.bucketOf]] — identical to the FunctionCatalog-published
-  * form the planner resolves), landing files named `…-b<id>.gl` so the
-  * scan recovers every file's bucket without opening it. The engine
-  * already clustered rows by the bucket transform, so a task usually
-  * owns whole buckets. */
-private[sources] class GlBucketedWriter(dir: String, schema: StructType,
-    partitionId: Int, taskId: Long,
-    conf: org.apache.hadoop.conf.Configuration, colIdx: Int, numBuckets: Int,
-    jobTag: String)
-    extends DataWriter[InternalRow] {
-
-  private val colType = schema.fields(colIdx).dataType
-  private val writers =
-    scala.collection.mutable.LinkedHashMap.empty[Int, GlWriter]
-
-  override def write(row: InternalRow): Unit = {
-    require(!row.isNullAt(colIdx),
-      s"graftlines: NULL bucket value in column " +
-        s"'${schema.fields(colIdx).name}' — bucket partitioning " +
-        "requires non-null keys")
-    val v: Long = colType match {
-      case LongType => row.getLong(colIdx)
-      case IntegerType => row.getInt(colIdx).toLong
-      case other => throw new IllegalStateException(
-        s"unsupported bucket column type $other")
+      taskId: Long): DataWriter[InternalRow] = {
+    val base = f"part-$partitionId%05d-$taskId-$jobTag"
+    layout match {
+      case Some(l) => new GlFanOutWriter(path, schema, conf.value, base, l)
+      case None => new GlWriter(path, schema, conf.value, base + GraftLines.Ext)
     }
-    val b = GraftLines.bucketOf(v, numBuckets)
-    // jobTag BEFORE -b<id>: BucketNamePattern anchors on the suffix
-    writers.getOrElseUpdate(b, new GlWriter(dir, schema, partitionId, taskId,
-      conf, nameOverride = Some(
-        f"part-$partitionId%05d-$taskId-$jobTag-b$b${GraftLines.Ext}")))
-      .write(row)
   }
-
-  override def commit(): WriterCommitMessage =
-    GlMultiCommitted(writers.values
-      .map(_.commit().asInstanceOf[GlCommitted]).toSeq)
-  override def abort(): Unit = writers.values.foreach(_.abort())
-  override def close(): Unit = writers.values.foreach(_.close())
 }
 
-/** Identity-partitioned task writer: routes each row to the
-  * [[GlWriter]] for its partition value, so every landed file holds
-  * exactly ONE value — the invariant the scan recovers from stats
-  * (min == max) to report KeyGroupedPartitioning. The engine already
-  * clustered rows by the column (GlWrite.requiredDistribution), so a
-  * task usually owns whole values and the per-task writer map stays
-  * value-count bounded; per-task file names carry a dense index
-  * (`-p<k>`), not the value (values need no name-escaping that way). */
-private[sources] class GlPartitionedWriter(dir: String, schema: StructType,
-    partitionId: Int, taskId: Long,
-    conf: org.apache.hadoop.conf.Configuration, partIdx: Int,
-    jobTag: String)
+/** Partitioned or bucketed task writer: routes each row to the
+  * [[GlWriter]] for its key, so every landed file holds ONE key — the
+  * invariant behind the scan's KeyGroupedPartitioning.
+  *  - **Bucketed**: key = [[GraftLines.bucketOf]] of the column
+  *    (identical to the FunctionCatalog-published form the planner
+  *    resolves); files are named `…-b<id>.gl`, so the scan recovers
+  *    every file's bucket without opening it.
+  *  - **Identity-partitioned**: key = the value, which the scan
+  *    recovers from the file's stats (min == max); names carry a dense
+  *    per-task index (`-p<k>`), not the value, so values need no
+  *    name-escaping.
+  *
+  * A batch write clusters rows by the key first
+  * (GlWrite.requiredDistribution), so a task usually owns whole keys
+  * and the writer map stays small; a row-level rewrite does not, and
+  * a key then spans several files, which the scan groups. The job tag
+  * precedes the suffix: [[GraftLines.BucketNamePattern]] anchors on
+  * it. */
+private[sources] class GlFanOutWriter(dir: String, schema: StructType,
+    conf: org.apache.hadoop.conf.Configuration, base: String,
+    layout: GlLayout)
     extends DataWriter[InternalRow] {
 
-  private val partType = schema.fields(partIdx).dataType
+  private val i = layout.col
+  private val colType = schema.fields(i).dataType
+  private val nullKey = {
+    val c = schema.fields(i).name
+    if (layout.numBuckets.isDefined)
+      s"graftlines: NULL bucket value in column '$c' — bucket " +
+        "partitioning requires non-null keys"
+    else
+      s"graftlines: NULL partition value in column '$c' — identity " +
+        "partitioning requires non-null values (stats cannot recover a NULL)"
+  }
   private val writers =
     scala.collection.mutable.LinkedHashMap.empty[Any, GlWriter]
 
   override def write(row: InternalRow): Unit = {
-    require(!row.isNullAt(partIdx),
-      s"graftlines: NULL partition value in column " +
-        s"'${schema.fields(partIdx).name}' — identity partitioning " +
-        "requires non-null values (stats cannot recover a NULL)")
-    val v: Any = partType match {
-      case IntegerType | DateType => java.lang.Integer.valueOf(row.getInt(partIdx))
-      case LongType | TimestampType => java.lang.Long.valueOf(row.getLong(partIdx))
-      case DoubleType => java.lang.Double.valueOf(row.getDouble(partIdx))
-      case BooleanType => java.lang.Boolean.valueOf(row.getBoolean(partIdx))
-      case other => throw new IllegalStateException(
-        s"unsupported partition type $other")
+    require(!row.isNullAt(i), nullKey)
+    val key: Any = layout.numBuckets match {
+      case Some(n) =>
+        val v: Long = colType match {
+          case LongType => row.getLong(i)
+          case IntegerType => row.getInt(i).toLong
+          case other => throw new IllegalStateException(
+            s"unsupported bucket column type $other")
+        }
+        GraftLines.bucketOf(v, n)
+      case None =>
+        colType match {
+          case IntegerType | DateType => java.lang.Integer.valueOf(row.getInt(i))
+          case LongType | TimestampType => java.lang.Long.valueOf(row.getLong(i))
+          case DoubleType => java.lang.Double.valueOf(row.getDouble(i))
+          case BooleanType => java.lang.Boolean.valueOf(row.getBoolean(i))
+          case other => throw new IllegalStateException(
+            s"unsupported partition type $other")
+        }
     }
-    writers.getOrElseUpdate(v, new GlWriter(dir, schema, partitionId, taskId,
-      conf, nameOverride = Some(
-        f"part-$partitionId%05d-$taskId-$jobTag" +
-          f"-p${writers.size}${GraftLines.Ext}")))
-      .write(row)
+    writers.getOrElseUpdate(key, {
+      val suffix = if (layout.numBuckets.isDefined) s"-b$key"
+        else s"-p${writers.size}"
+      new GlWriter(dir, schema, conf, base + suffix + GraftLines.Ext)
+    }).write(row)
   }
 
   override def commit(): WriterCommitMessage =
@@ -3447,76 +3358,19 @@ private[sources] class GlPartitionedWriter(dir: String, schema: StructType,
   override def close(): Unit = writers.values.foreach(_.close())
 }
 
-/** Replacement rows from a group-based rewrite arrive with Spark's
-  * leading `__row_operation` INT column when the operation declares no
-  * metadata attributes — the plain DataWritingSparkTask applies no
-  * projection (only the metadata variant does, verified against
-  * Spark 4.1's ReplaceDataExec.writingTask). This factory strips it
-  * with Spark's own [[ProjectingInternalRow]] over ordinals 1..n, and
-  * insists the operation code is WRITE_OPERATION — any other code is a
-  * delta-write row shape this group-based connector must never
-  * reinterpret silently. Rows already matching the table arity pass
-  * through untouched, so a future Spark that projects for us keeps
-  * working. */
-private[sources] case class GlOpStrippingFactory(inner: DataWriterFactory,
-    schema: StructType) extends DataWriterFactory {
-  override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] = {
-    val d = inner.createWriter(partitionId, taskId)
-    new DataWriter[InternalRow] {
-      private val proj = org.apache.spark.sql.catalyst.ProjectingInternalRow(
-        schema, (1 to schema.length).toIndexedSeq)
-      override def write(row: InternalRow): Unit =
-        if (row.numFields == schema.length + 1) {
-          val code = row.getInt(0)
-          // group-based rewrites tag whole replacement rows WRITE (5)
-          // or WRITE_WITH_METADATA (6); per-row delta codes
-          // (DELETE/UPDATE/INSERT 1-3) are a delta-write shape this
-          // group-based connector must never reinterpret silently
-          require(code ==
-            org.apache.spark.sql.catalyst.util.RowDeltaUtils.WRITE_OPERATION
-            || code == org.apache.spark.sql.catalyst.util.RowDeltaUtils
-              .WRITE_WITH_METADATA_OPERATION,
-            s"graftlines: unexpected row operation code $code " +
-              "in group-based replace write")
-          proj.project(row)
-          d.write(proj)
-        } else d.write(row)
-      override def commit(): WriterCommitMessage = d.commit()
-      override def abort(): Unit = d.abort()
-      override def close(): Unit = d.close()
-    }
-  }
-}
-
-private[sources] case class GlWriterFactory(path: String, schema: StructType,
-    conf: SerializableConfiguration,
-    // evaluated ONCE per factory construction on the driver, then
-    // serialized to every task — all of a job's files share the tag
-    jobTag: String = GraftLines.newJobTag()) extends DataWriterFactory {
-  override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] =
-    new GlWriter(path, schema, partitionId, taskId, conf.value,
-      nameOverride = Some(
-        f"part-$partitionId%05d-$taskId-$jobTag${GraftLines.Ext}"))
-}
-
 /** Task-side writer: lazily creates the STAGING file
-  * `.part-<pid>-<taskId>.gl.staging` on first row (empty partitions
-  * land no file); the job commit renames it to its final
-  * `part-<pid>-<taskId>.gl` name. The dot-prefix + suffix keep it out
-  * of every data listing, so a task is invisible to readers until the
-  * whole job publishes. Task-unique names keep concurrent speculative
-  * attempts from colliding (attempt id is folded into taskId by
-  * Spark; only the winning attempt's message reaches the job commit). */
+  * `.<finalName>.staging` on first row (empty partitions land no
+  * file); the job commit renames it to `finalName`. The dot-prefix +
+  * suffix keep it out of every data listing, so a task is invisible
+  * to readers until the whole job publishes. The factories put the
+  * partition and task id in `finalName`: task-unique names keep
+  * concurrent speculative attempts from colliding (attempt id is
+  * folded into taskId by Spark; only the winning attempt's message
+  * reaches the job commit). */
 private[sources] class GlWriter(dir: String, schema: StructType,
-    partitionId: Int, taskId: Long,
-    conf: org.apache.hadoop.conf.Configuration,
-    nameOverride: Option[String] = None)
+    conf: org.apache.hadoop.conf.Configuration, finalName: String)
     extends DataWriter[InternalRow] {
 
-  private val finalName = nameOverride.getOrElse(
-    f"part-$partitionId%05d-$taskId${GraftLines.Ext}")
   private val file = new Path(dir, s".$finalName.staging")
   private var out: OutputStreamWriter = _
   private val types = schema.fields.map(_.dataType)

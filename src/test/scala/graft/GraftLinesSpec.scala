@@ -1345,9 +1345,9 @@ class GraftLinesSpec extends AnyFunSuite {
     }
     assert(!names.exists(_.contains(".staging")),
       s"no staging debris may survive the rewrite: $names")
-    // predicates the metadata path cannot evaluate exactly
-    // (canDeleteWhere false) fall through to the group-based COW
-    // rewrite and still delete EXACTLY — never approximately
+    // predicates the reader cannot evaluate exactly (LIKE) only stop
+    // pruning files: the rewrite still deletes EXACTLY, never
+    // approximately
     spark.sql("DELETE FROM graft_del.ns.t WHERE s LIKE 'hi%'")
     assert(spark.table("graft_del.ns.t").count() == 25,
       "LIKE DELETE via row-level rewrite removed the wrong rows")
@@ -1391,14 +1391,86 @@ class GraftLinesSpec extends AnyFunSuite {
     assert(afterMerge.filter($"k" === 5L).select($"v", $"s")
       .collect().map(_.toString).toSeq == Seq("[999,merged]"))
     assert(afterMerge.filter($"k" === 2000L).count() == 1)
-    // subquery DELETE: canDeleteWhere rejects it, the row-level
-    // rewrite path executes it
+    // subquery DELETE: the same row-level rewrite executes it
     Seq(0L, 1L, 2000L).toDF("k").createOrReplaceTempView("rlo_kill")
     spark.sql("DELETE FROM graft_rlo.ns.t WHERE k IN " +
       "(SELECT k FROM rlo_kill)")
     assert(spark.table("graft_rlo.ns.t").count() == 68)
     assert(spark.table("graft_rlo.ns.t")
       .filter($"k".isin(0L, 1L, 2000L)).count() == 0)
+  }
+
+  /** Binds catalog `name` over its own warehouse under the spec dir. */
+  private def catalog(name: String): Unit = {
+    spark.conf.set(s"spark.sql.catalog.$name", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$name.warehouse", s"$dir/${name}_wh")
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $name.ns")
+  }
+
+  test("DELETE FROM, DELETE WHERE 1 = 1 and TRUNCATE empty a plain table") {
+    catalog("graft_trunc")
+    val t = "graft_trunc.ns.t"
+    for (stmt <- Seq(s"DELETE FROM $t", s"DELETE FROM $t WHERE 1 = 1",
+        s"DELETE FROM $t WHERE k >= 0 OR true", s"TRUNCATE TABLE $t")) {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) USING graftlines")
+      (0L until 20L).map(k => (k, k * 10L)).toDF("k", "v").coalesce(2)
+        .writeTo(t).append()
+      spark.sql(stmt)
+      assert(spark.table(t).count() == 0, s"`$stmt` left rows behind")
+    }
+  }
+
+  test("DELETE and MERGE that match no row keep every row") {
+    catalog("graft_nomatch")
+    val t = "graft_nomatch.ns.t"
+    Seq.empty[Long].toDF("k").createOrReplaceTempView("nomatch_empty")
+    for (props <- Seq("", "TBLPROPERTIES ('versioned'='true')");
+        stmt <- Seq(s"DELETE FROM $t WHERE 1 = 0",
+          s"DELETE FROM $t WHERE k IN (SELECT k FROM nomatch_empty)",
+          s"""MERGE INTO $t t USING nomatch_empty s ON t.k = s.k
+            | WHEN MATCHED THEN DELETE""".stripMargin)) {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) USING graftlines " +
+        props)
+      (0L until 20L).map(k => (k, k * 10L)).toDF("k", "v").coalesce(2)
+        .writeTo(t).append()
+      spark.sql(stmt)
+      assert(spark.table(t).count() == 20, s"`$stmt` ($props) lost rows")
+    }
+  }
+
+  test("DELETE, UPDATE and MERGE keep the bucket and partition layout") {
+    catalog("graft_lay")
+    val t = "graft_lay.ns.t"
+    (30L until 50L).map(k => (k, k % 4, -k)).toDF("k", "g", "v")
+      .createOrReplaceTempView("lay_src")
+    for (layout <- Seq("bucket(8, k)", "g")) {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"CREATE TABLE $t (k BIGINT, g BIGINT, v BIGINT) " +
+        s"USING graftlines PARTITIONED BY ($layout)")
+      (0L until 40L).map(k => (k, k % 4, k)).toDF("k", "g", "v")
+        .repartition(3).writeTo(t).append()
+      def check(step: String, rows: Long, vSum: Long): Unit = {
+        val parts = glScan(spark.table(t)).planInputPartitions()
+        // GlKeyedPartition is private[sources]; its name is contract enough
+        assert(parts.nonEmpty &&
+          parts.forall(_.getClass.getSimpleName == "GlKeyedPartition"),
+          s"$layout: the scan is not keyed after $step")
+        val r = spark.table(t).agg(count(lit(1)), sum($"v")).collect()(0)
+        assert((r.getLong(0), r.getLong(1)) == ((rows, vSum)),
+          s"$layout: wrong rows after $step")
+      }
+      check("the append", 40, (0L until 40L).sum)
+      spark.sql(s"DELETE FROM $t WHERE k < 5")
+      check("DELETE", 35, (5L until 40L).sum)
+      spark.sql(s"UPDATE $t SET v = v + 100 WHERE k < 20")
+      check("UPDATE", 35, (5L until 40L).sum + 15 * 100)
+      spark.sql(s"""MERGE INTO $t t USING lay_src s ON t.k = s.k
+        | WHEN MATCHED THEN UPDATE SET v = s.v
+        | WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      check("MERGE", 45, (5L until 30L).sum + 15 * 100 - (30L until 50L).sum)
+    }
   }
 
   test("runtime group filtering: MERGE rewrites only matching files") {

@@ -287,7 +287,7 @@ class PlanSpec extends AnyFunSuite {
     // the IS NULL disguise: Catalyst canonicalizes `v <=> NULL` to
     // IsNull(v) before pushdown (either spelling must push whole; the
     // null-literal EqualNullSafe acceptance in GlFilters covers
-    // non-optimized producers like direct deleteWhere calls)
+    // producers that hand over filters without optimizing them)
     val dfn = spark.read.format("graftlines").load(p).filter("v <=> NULL")
     val scanN = dfn.queryExecution.sparkPlan.collectFirst {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>

@@ -101,6 +101,23 @@ class TimeTravelSpec extends AnyFunSuite {
       || e.getMessage.toLowerCase.contains("time travel"))
   }
 
+  test("DELETE FROM, DELETE WHERE 1 = 1 and TRUNCATE empty the table, not its history") {
+    setupCatalog("graft_tt_trunc")
+    val t = "graft_tt_trunc.ns.t"
+    for (stmt <- Seq(s"DELETE FROM $t", s"DELETE FROM $t WHERE 1 = 1",
+        s"DELETE FROM $t WHERE k >= 0 OR true", s"TRUNCATE TABLE $t")) {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"CREATE TABLE $t (k BIGINT, v BIGINT) USING graftlines " +
+        "TBLPROPERTIES ('versioned'='true')")
+      (0L until 20L).map(k => (k, k * 10L)).toDF("k", "v").coalesce(2)
+        .writeTo(t).append()
+      spark.sql(stmt)
+      assert(spark.table(t).count() == 0, s"`$stmt` left rows behind")
+      assert(spark.sql(s"SELECT * FROM $t VERSION AS OF 1").count() == 20,
+        s"`$stmt` lost the previous generation")
+    }
+  }
+
   test("expireVersions keeps the newest K generations and the live read") {
     val ns = setupCatalog("graft_tt3")
     spark.sql("DROP TABLE IF EXISTS graft_tt3.ns.t")

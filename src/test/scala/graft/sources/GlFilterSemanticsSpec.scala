@@ -208,22 +208,19 @@ class GlFilterSemanticsSpec extends AnyFunSuite {
   }
 
   test("DELETE honours three-valued logic: NULL-predicate rows survive") {
-    val p = GraftTmp.dir("filter3v_del")
-    val fs = new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(p), true)
+    spark.conf.set("spark.sql.catalog.graft_f3v", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_f3v.warehouse",
+      GraftTmp.dir("filter3v_del"))
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_f3v.ns")
+    spark.sql("DROP TABLE IF EXISTS graft_f3v.ns.t")
+    spark.sql("CREATE TABLE graft_f3v.ns.t (v BIGINT, s STRING) " +
+      "USING graftlines")
     Seq[(java.lang.Long, String)]((1L, "a"), (5L, "b"), (null, "x"))
-      .toDF("v", "s").coalesce(1)
-      .write.format("graftlines").mode("append").save(p)
-    spark.read.format("graftlines").load(p).createOrReplaceTempView("t3v")
-    // DELETE WHERE NOT(v = 5) OR s IS NULL: true for (1,'a'), NULL for
-    // (null,'x') — SQL deletes only where the predicate is TRUE
-    val tbl = new GlTable(p, spark.read.format("graftlines").load(p).schema)
-    tbl.deleteWhere(Array[org.apache.spark.sql.sources.Filter](
-      org.apache.spark.sql.sources.Or(
-        org.apache.spark.sql.sources.Not(
-          org.apache.spark.sql.sources.EqualTo("v", 5L)),
-        org.apache.spark.sql.sources.IsNull("s"))))
-    val left = spark.read.format("graftlines").load(p)
+      .toDF("v", "s").coalesce(1).writeTo("graft_f3v.ns.t").append()
+    // NOT(v = 5) OR s IS NULL: true for (1,'a'), NULL for (null,'x') —
+    // SQL deletes only where the predicate is TRUE
+    spark.sql("DELETE FROM graft_f3v.ns.t WHERE NOT(v = 5) OR s IS NULL")
+    val left = spark.table("graft_f3v.ns.t")
       .collect().map(_.toString).sorted.toSeq
     assert(left == Seq("[5,b]", "[null,x]"),
       s"only the definitely-true rows may be deleted, got $left")

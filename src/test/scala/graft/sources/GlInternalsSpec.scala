@@ -34,11 +34,10 @@ class GlInternalsSpec extends AnyFunSuite {
     assert(f1.jobTag.matches("t[0-9a-f]{8}"),
       s"tag '${f1.jobTag}' must be t+hex so it can never be parsed as " +
         "a -e<epoch>-, -b<id>, -g<N> or -p<k> suffix")
-    // same guarantee on the partitioned/bucketed factories
-    assert(GlPartitionedWriterFactory("/tmp/x", schema, 0, conf).jobTag
-      != GlPartitionedWriterFactory("/tmp/x", schema, 0, conf).jobTag)
-    assert(GlBucketedWriterFactory("/tmp/x", schema, 0, 4, conf).jobTag
-      != GlBucketedWriterFactory("/tmp/x", schema, 0, 4, conf).jobTag)
+    // same guarantee for partitioned/bucketed layouts
+    for (l <- Seq(GlLayout(0, None), GlLayout(0, Some(4))))
+      assert(GlWriterFactory("/tmp/x", schema, conf, Some(l)).jobTag
+        != GlWriterFactory("/tmp/x", schema, conf, Some(l)).jobTag)
   }
 
   test("a corrupt stats line drops only itself, never the whole manifest") {

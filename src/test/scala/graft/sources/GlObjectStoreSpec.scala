@@ -627,7 +627,7 @@ class GlObjectStoreSpec extends AnyFunSuite {
     } finally CopyRenameFileSystem.failDataFileDeletes.set(false)
     val msgs = Iterator.iterate[Throwable](e)(_.getCause)
       .takeWhile(_ != null).flatMap(t => Option(t.getMessage)).toSeq
-    assert(msgs.exists(_.contains("could not remove")), msgs)
+    assert(msgs.exists(_.contains("could not delete")), msgs)
     assert(spark.table("glcopy_del.ns.t").count() == 2)
     // with deletes healthy again the same statement empties the table
     spark.sql("DELETE FROM glcopy_del.ns.t WHERE k < 10")
