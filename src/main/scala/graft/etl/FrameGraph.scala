@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Frame-graph traversal: compose affine transfos along referential
   * paths (SURVEY §1.3 "frame graph (referentials+transfos) → plain
   * DataFrames nodes/edges; traversals = self-joins"; upstream li3ds
-  * datastore capability [unverified — empty reference mount]).
+  * datastore capability [unverified]).
   *
   * The li3ds datastore is a graph: referentials are nodes (world, rig
   * base, camera, image frames) and transfos are edges carrying an
@@ -74,24 +74,26 @@ object FrameGraph {
     * import generations — which is why membership is keyed by
     * (file, name), not name alone: natural transfo names repeat across
     * imports (every orimatis pose is 'affine_mat4x3', two rigs can both
-    * carry a 'cam_00'), and a name-only join would leak identically
+    * carry a 'cam_00'), and a name-only match would leak identically
     * named transfos from OTHER files into the snapshot.
+    *
+    * Tree rows are metadata, so the matching ones are collected once and
+    * the result is a plain filter on `transfos`: no join, and the tree
+    * aggregate runs once. A null file or member name never matches.
     */
   def snapshot(transfos: DataFrame, transfotrees: DataFrame,
       treeName: String, nameCol: String): DataFrame = {
     val matching = transfotrees.filter(col("tree_name") === treeName)
+      .select(col("file"), col("transfos")).collect()
     // tree_name is the file BASENAME: two same-named files imported
-    // from different directories both match, and the (file, name)
-    // semi-join below would then admit BOTH files' edges — precisely
-    // the blended generations this function exists to prevent. A
-    // metadata-sized count makes the ambiguity loud instead. Zero
-    // matches is equally loud (r16 review): a typo'd or never-imported
-    // tree name would otherwise return an EMPTY edge set, and every
+    // from different directories both match, and admitting both files'
+    // edges would blend the generations this function exists to keep
+    // apart. Zero matches is as loud: a typo'd or never-imported tree
+    // name would otherwise return an EMPTY edge set, and every
     // downstream composePath would report "no path" with no error
-    // anywhere — the silent-vanish class (same posture as Verify's
-    // unknown-query-name rejection). Callers probing for a
-    // maybe-absent tree filter transfotrees themselves first.
-    val n = matching.count()
+    // anywhere. Callers probing for a maybe-absent tree filter
+    // transfotrees themselves first.
+    val n = matching.length
     require(n != 0,
       s"FrameGraph.snapshot: no imported tree is named '$treeName' — " +
         "an absent snapshot must fail loudly, not yield an empty edge " +
@@ -100,12 +102,9 @@ object FrameGraph {
       s"FrameGraph.snapshot: tree name '$treeName' matches $n imported " +
         "trees (same-named files from different directories) — " +
         "disambiguate by filtering transfotrees to one file first")
-    val members = matching
-      .select(col("file").as("_fg_file"),
-        explode(col("transfos")).as("_fg_member"))
-    transfos.join(members,
-      col("file") === col("_fg_file") && col(nameCol) === col("_fg_member"),
-      "left_semi")
+    val members = Option(matching(0).getSeq[Any](1)).getOrElse(Nil)
+    transfos.filter(col("file") === lit(matching(0).get(0))
+      && col(nameCol).isin(members: _*))
   }
 
   /** All composed transfos from `from` to `to` in at most `maxHops`
@@ -254,27 +253,23 @@ object FrameGraph {
     // frame graphs are metadata-sized so shipping the deduplicated edge
     // set is the default, but a caller validating an edge table too
     // large to collect must be able to opt into a shuffle join instead
-    // of OOMing the driver (ADVICE r4)
+    // of OOMing the driver
     val dedupEdges = e
       .select(col("_v_src").as("_s_src"), col("_v_dst").as("_s_dst"))
       .distinct()
     val step = if (broadcastEdges) broadcast(dedupEdges) else dedupEdges
-    // Cycle probe by path DOUBLING (r7): R holds all reachable
-    // (origin, cur) pairs with path length <= len; R ∪ (R ∘ R) lifts
-    // len to 2*len because every intermediate length already exists in
-    // R, so log2(maxHops) rounds replace maxHops-1 frontier steps
-    // (3 chained join+distinct stages instead of 7 at the contract's
-    // maxHops = 8; remainder hops finish with single edge steps when
-    // maxHops isn't a power of two). The old stepping already carried
-    // every origin — doubling changes the round count, not the
-    // asymptotics. Each round localCheckpoints so the self-join reads
-    // a materialized table rather than doubling the lineage; a cycle
-    // within maxHops is then exactly an (origin, origin) pair.
-    // r16 (guide §1.2): checkpoints are LAZY — the doubling loop has
-    // no per-round driver read, so eager mode's separate per-round
-    // materialization job was redundant dispatch. (Lazy defers only
-    // that job: under AQE the checkpoint call still runs each round's
-    // shuffle stages synchronously while finalizing the plan.)
+    // Cycle probe by path DOUBLING: R holds all reachable (origin, cur)
+    // pairs with path length <= len; R ∪ (R ∘ R) lifts len to 2*len
+    // because every intermediate length already exists in R, so
+    // log2(maxHops) rounds replace maxHops-1 frontier steps (remainder
+    // hops finish with single edge steps when maxHops isn't a power of
+    // two). Each round localCheckpoints so the self-join reads a
+    // materialized table rather than doubling the lineage; a cycle
+    // within maxHops is then exactly an (origin, origin) pair. The
+    // checkpoints are lazy: no round reads a result on the driver, so an
+    // eager checkpoint's own materialization job would be pure dispatch
+    // (under AQE each round's shuffle stages still run when the
+    // checkpoint finalizes its plan).
     var reach = dedupEdges
       .select(col("_s_src").as("origin"), col("_s_dst").as("cur"))
       .localCheckpoint(eager = false)

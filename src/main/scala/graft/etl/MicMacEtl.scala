@@ -12,8 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Reference-parity ETL: MicMac photogrammetry XML -> li3ds-shaped
   * entity DataFrames (SURVEY §2A A1–A8; upstream micmac_li3ds
-  * autocal.py / blinis.py / orimatis.py / api.py [unverified — empty
-  * reference mount, grep anchors per SURVEY §1.2]).
+  * autocal.py / blinis.py / orimatis.py / api.py [unverified]).
   *
   * Spark-first shape: `spark.read.option("wholetext", true).text(glob)`
   * or an [[graft.sources.XmlManifest]] fetch supplies the documents
@@ -81,13 +80,57 @@ object MicMacEtl {
     * `schema`, evaluated once per document. The parse sits behind a
     * one-row Generate because Catalyst's PushDownPredicates moves a
     * Filter below a Project by inlining the projected expressions: over
-    * a plain `withColumn("x", from_xml(...))` every A8 filter got its
-    * own copy of the parse (33 in an autocal plan, 157 in an orimatis
-    * one). A predicate that reads a generator's output cannot move below
-    * the Generate, so the A8 checks stay as written and share one parse. */
+    * a plain `withColumn("x", from_xml(...))` every A8 filter would get
+    * its own copy of the parse. A predicate that reads a generator's
+    * output cannot move below the Generate, so the A8 checks stay as
+    * written and share one parse. */
   private def parseOnce(text: DataFrame, schema: StructType): DataFrame =
     text.select(col("file"),
       inline(array(struct(from_xml(col("value"), schema).as("x")))))
+
+  /** An importer's four outputs, each built on its first read and then
+    * kept. Building a frame analyses its whole plan on the driver, so a
+    * caller that reads only `transfos` does not pay for the other three;
+    * the shared trunk a core builds before calling this stays eager, so
+    * a bad path or schema still fails at the import call. The trees
+    * group the same `transfos` frame by `treeName`. */
+  private def outputs(sensors: => DataFrame, referentials: => DataFrame,
+      transfos: => DataFrame, treeName: Column): Outputs = {
+    lazy val t = transfos
+    Outputs("sensors" -> (() => sensors),
+      "referentials" -> (() => referentials), "transfos" -> (() => t),
+      "transfotrees" -> (() => transfoTree(t, treeName)))
+  }
+
+  /** A map whose values are built on first read and memoised; key
+    * queries (`contains`, `keySet`, `size`) build nothing. */
+  private[etl] final class Outputs private (cells: Map[String, Outputs.Cell])
+      extends scala.collection.immutable.AbstractMap[String, DataFrame] {
+    def get(key: String): Option[DataFrame] = cells.get(key).map(_.df)
+    def iterator: Iterator[(String, DataFrame)] =
+      cells.iterator.map { case (k, c) => k -> c.df }
+    override def keysIterator: Iterator[String] = cells.keysIterator
+    override def contains(key: String): Boolean = cells.contains(key)
+    override def knownSize: Int = cells.size
+    def removed(key: String): Map[String, DataFrame] = new Outputs(cells - key)
+    def updated[V >: DataFrame](key: String, value: V): Map[String, V] =
+      iterator.toMap.updated(key, value)
+  }
+
+  private[etl] object Outputs {
+    final class Cell(build: () => DataFrame) {
+      lazy val df: DataFrame = build()
+    }
+    def apply(outputs: (String, () => DataFrame)*): Outputs =
+      new Outputs(outputs.map { case (k, f) => k -> new Cell(f) }.toMap)
+  }
+
+  /** The rows that pass every A8 assertion, checked in the order given.
+    * One Filter rather than one per check: each Dataset step pays a fixed
+    * analyzer run on the driver, and Catalyst combines stacked filters
+    * into this same conjunction anyway. */
+  private def a8(df: DataFrame, asserts: Column*): DataFrame =
+    df.filter(asserts.map(_.isNull).reduce(_ && _))
 
   /** [[importAutocal]] over manifest-fetched XML (path, length, xml). */
   def importAutocalXml(xml: DataFrame,
@@ -115,35 +158,34 @@ object MicMacEtl {
   private def autocalCore(text: DataFrame,
       validityStart: Option[String],
       validityEnd: Option[String]): Map[String, DataFrame] = {
+    def dist(f: String) = col(s"c.CalibDistortion.$f")
     val parsed = parseOnce(text, autocalSchema)
       .select(col("file"), col("x.CalibrationInternConique").as("c"))
       .select(col("file"),
         col("c.F").as("focal"), vec(col("c.PP")).as("pp"),
         vec(col("c.SzIm")).as("sz_im"),
-        col("c.CalibDistortion").as("dist"))
-      .withColumn("dist_model",
-        when(col("dist.ModRad").isNotNull, lit("poly_radial"))
-          .when(col("dist.ModPhgrStd").isNotNull, lit("phgr_std")))
-      .withColumn("dist_params",
-        when(col("dist.ModRad").isNotNull,
-          concat(vec(col("dist.ModRad.CDist")),
-            col("dist.ModRad.CoeffDist")))
+        when(dist("ModRad").isNotNull, lit("poly_radial"))
+          .when(dist("ModPhgrStd").isNotNull, lit("phgr_std"))
+          .as("dist_model"),
+        when(dist("ModRad").isNotNull,
+          concat(vec(dist("ModRad.CDist")), dist("ModRad.CoeffDist")))
           .otherwise(concat(
-            vec(col("dist.ModPhgrStd.RadialePart.CDist")),
-            col("dist.ModPhgrStd.RadialePart.CoeffDist"),
-            array(col("dist.ModPhgrStd.P1"), col("dist.ModPhgrStd.P2"),
-              col("dist.ModPhgrStd.b1"), col("dist.ModPhgrStd.b2")))))
+            vec(dist("ModPhgrStd.RadialePart.CDist")),
+            dist("ModPhgrStd.RadialePart.CoeffDist"),
+            array(dist("ModPhgrStd.P1"), dist("ModPhgrStd.P2"),
+              dist("ModPhgrStd.b1"), dist("ModPhgrStd.b2"))))
+          .as("dist_params"))
     // A8: mandatory tags + known distortion model + COMPLETE distortion
     // parameters — a recognized model with a missing <CoeffDist> (or
     // center) concat()s to a NULL dist_params, which would otherwise
     // sail through to the exploder and fail as an anonymous executor
     // NPE instead of an error naming the file
-    val checked = parsed.filter(
+    val checked = a8(parsed,
       assert_true(col("focal").isNotNull && size(col("pp")) === 2
-        && size(col("sz_im")) === 2).isNull)
-      .filter(assert_true(col("dist_model").isNotNull,
-        concat(lit("unknown CalibDistortion model in "), col("file"))).isNull)
-      .filter(assert_true(
+        && size(col("sz_im")) === 2),
+      assert_true(col("dist_model").isNotNull,
+        concat(lit("unknown CalibDistortion model in "), col("file"))),
+      assert_true(
         col("dist_params").isNotNull && size(col("dist_params")) >= 3
           // array() EMBEDS null elements without nulling the concat, so
           // a ModPhgrStd missing P1/P2/b1/b2 passes the isNotNull check
@@ -151,20 +193,19 @@ object MicMacEtl {
           // would then fabricate 0.0 coefficients silently
           && forall(col("dist_params"), x => x.isNotNull),
         concat(lit("incomplete CalibDistortion parameters in "),
-          col("file"))).isNull)
-    val sensors = checked.select(col("file"),
-      lit("camera").as("sensor_type"),
-      map_from_arrays(array(lit("image_size")), array(col("sz_im")))
-        .as("specifications"))
-    val referentials = checked.select(col("file"), explode(array(
-      lit("camera"), lit("rawImage"), lit("undistortedImage")))
-      .as("referential"))
-    val transfos = withValidity(checked.select(col("file"),
-      expr("autocal_transfos(focal, pp, dist_model, dist_params)")),
-      validityStart, validityEnd)
-    Map("sensors" -> sensors, "referentials" -> referentials,
-      "transfos" -> transfos,
-      "transfotrees" -> transfoTree(transfos, col("transfo_name")))
+          col("file"))))
+    outputs(
+      sensors = checked.select(col("file"),
+        lit("camera").as("sensor_type"),
+        map_from_arrays(array(lit("image_size")), array(col("sz_im")))
+          .as("specifications")),
+      referentials = checked.select(col("file"), explode(array(
+        lit("camera"), lit("rawImage"), lit("undistortedImage")))
+        .as("referential")),
+      transfos = withValidity(checked.select(col("file"),
+        expr("autocal_transfos(focal, pp, dist_model, dist_params)")),
+        validityStart, validityEnd),
+      treeName = col("transfo_name"))
   }
 
   // ---------------------------------------------------------------- blinis
@@ -193,61 +234,66 @@ object MicMacEtl {
       validityEnd: Option[String]): Map[String, DataFrame] = {
     def complete3(c: Column): Column =
       c.isNotNull && size(c) === 3 && forall(c, x => x.isNotNull)
+    val arms = col("x.LiaisonsSHC.ParamOrientSHC")
     val parsed = parseOnce(text, blinisSchema)
       // A8 for the rig file shape, BEFORE the explode: a malformed XML
       // (PERMISSIVE parse -> null struct) or one missing <LiaisonsSHC>/
       // <ParamOrientSHC> yields a null array, and explode would emit
       // ZERO rows — the file silently vanishing from the import, where
       // autocal/orimatis fail loudly
-      .filter(assert_true(
-        col("x.LiaisonsSHC.ParamOrientSHC").isNotNull
-          && size(col("x.LiaisonsSHC.ParamOrientSHC")) >= 1,
+      .filter(assert_true(arms.isNotNull && size(arms) >= 1,
         concat(lit("missing LiaisonsSHC/ParamOrientSHC in "), col("file")))
         .isNull)
+      // IdGrp uniqueness is a property of the one document, so it is
+      // read off the array here rather than by grouping exploded rows
+      // (which costs a shuffle); it is asserted below, after the
+      // per-camera check
       .select(col("file"), col("x.KeyIm2TimeCam").as("rig"),
-        explode(col("x.LiaisonsSHC.ParamOrientSHC")).as("p"))
-      .select(col("file"), col("rig"),
+        (size(array_distinct(arms.getField("IdGrp"))) === size(arms))
+          .as("_unique"),
+        (size(arms) - 1).as("_last"),
+        posexplode(arms).as(Seq("_pos", "p")))
+      .select(col("file"), col("rig"), col("_unique"), col("_last"),
+        col("_pos"),
         col("p.IdGrp").as("cam"),
         vec(col("p.Vecteur")).as("t"),
         vec(col("p.Rot.CodageMatr.L1")).as("r1"),
         vec(col("p.Rot.CodageMatr.L2")).as("r2"),
         vec(col("p.Rot.CodageMatr.L3")).as("r3"))
-      // A8 per camera: a missing <Vecteur> would make mat4x3 NULL and a
+    val checked = a8(parsed,
+      // per camera: a missing <Vecteur> would make mat4x3 NULL and a
       // short/non-numeric CodageMatr row an 11-element or null-holed
       // array — both of which FrameGraph.compose's element_at reads as
       // silent NULLs in every composed pose instead of an import error
-      .filter(assert_true(
+      assert_true(
         col("rig").isNotNull && col("cam").isNotNull
           && complete3(col("t")) && complete3(col("r1"))
           && complete3(col("r2")) && complete3(col("r3")),
         concat(lit("incomplete ParamOrientSHC (IdGrp/Vecteur/CodageMatr) "
-          + "in "), col("file"))).isNull)
+          + "in "), col("file"))),
       // duplicate IdGrp within one rig file (a double-written arm):
       // transfoTree's collect_set would dedup the NAME while both
       // transfo rows survive, so the "consistent snapshot" would hand
-      // composePath a duplicate edge and double every pose through it
-      .withColumn("_dup_n", count(lit(1)).over(
-        Window.partitionBy(col("file"), col("cam"))))
-      .filter(assert_true(col("_dup_n") === 1,
-        concat(lit("duplicate ParamOrientSHC IdGrp in "), col("file")))
-        .isNull)
-      .drop("_dup_n")
+      // composePath a duplicate edge and double every pose through it.
+      // A file's rows pass this filter in explode order, so checking on
+      // its last row lets an incomplete arm anywhere in it fail first
+      assert_true(col("_unique") || col("_pos") < col("_last"),
+        concat(lit("duplicate ParamOrientSHC IdGrp in "), col("file"))))
     val mat43 = concat(
       col("r1"), slice(col("t"), 1, 1),
       col("r2"), slice(col("t"), 2, 1),
       col("r3"), slice(col("t"), 3, 1))
-    val transfos = withValidity(
-      parsed.select(col("file"), col("rig"), col("cam"),
-        lit("affine_mat4x3").as("transfo_type"), mat43.as("mat4x3")),
-      validityStart, validityEnd)
-    val referentials = parsed.select(col("file"), col("rig"), col("cam"))
-      .unionByName(parsed.select(col("file"), col("rig"),
-        lit("base").as("cam")).distinct())
-    val sensors = parsed.select(col("file"), col("rig")).distinct()
-      .withColumn("sensor_type", lit("group"))
-    Map("sensors" -> sensors, "referentials" -> referentials,
-      "transfos" -> transfos,
-      "transfotrees" -> transfoTree(transfos, col("cam")))
+    outputs(
+      sensors = checked.select(col("file"), col("rig")).distinct()
+        .withColumn("sensor_type", lit("group")),
+      referentials = checked.select(col("file"), col("rig"), col("cam"))
+        .unionByName(checked.select(col("file"), col("rig"),
+          lit("base").as("cam")).distinct()),
+      transfos = withValidity(
+        checked.select(col("file"), col("rig"), col("cam"),
+          lit("affine_mat4x3").as("transfo_type"), mat43.as("mat4x3")),
+        validityStart, validityEnd),
+      treeName = col("cam"))
   }
 
   // --------------------------------------------------------------- orimatis
@@ -312,28 +358,26 @@ object MicMacEtl {
   private def orimatisCore(text: DataFrame,
       validityStart: Option[String],
       validityEnd: Option[String]): Map[String, DataFrame] = {
+    val con = col("x.geometry.intrinseque.sensor")
+    val sph = col("x.geometry.intrinseque.spherique")
+    def either(f: String) = coalesce(
+      col(s"x.geometry.intrinseque.sensor.$f"),
+      col(s"x.geometry.intrinseque.spherique.$f"))
     val parsed = parseOnce(text, orimatisSchema)
-      .select(col("file"),
-        col("x.geometry.intrinseque.sensor").as("con"),
-        col("x.geometry.intrinseque.spherique").as("sph"),
+      .select(col("file"), con.as("con"), sph.as("sph"),
         col("x.geometry.extrinseque.systeme").as("srid_name"),
         col("x.geometry.extrinseque.sommet.easting").as("px"),
         col("x.geometry.extrinseque.sommet.northing").as("py"),
         col("x.geometry.extrinseque.sommet.altitude").as("pz"),
         col("x.geometry.extrinseque.rotation.Image2Ground").as("i2g"),
         col("x.geometry.extrinseque.rotation.quaternion").as("quat"),
-        col("x.geometry.extrinseque.rotation.mat3d").as("mat"))
-      .withColumn("flavor",
-        when(col("con").isNotNull, lit("conique"))
-          .when(col("sph").isNotNull, lit("spherique")))
-      .withColumn("sensor_name",
-        coalesce(col("con.name"), col("sph.name")))
-      .withColumn("width",
-        coalesce(col("con.image_size.width"), col("sph.image_size.width")))
-      .withColumn("height",
-        coalesce(col("con.image_size.height"), col("sph.image_size.height")))
-      .withColumn("ppa_c", coalesce(col("con.ppa.c"), col("sph.ppa.c")))
-      .withColumn("ppa_l", coalesce(col("con.ppa.l"), col("sph.ppa.l")))
+        col("x.geometry.extrinseque.rotation.mat3d").as("mat"),
+        when(con.isNotNull, lit("conique"))
+          .when(sph.isNotNull, lit("spherique")).as("flavor"),
+        either("name").as("sensor_name"),
+        either("image_size.width").as("width"),
+        either("image_size.height").as("height"),
+        either("ppa.c").as("ppa_c"), either("ppa.l").as("ppa_l"))
     // COMPLETE pose encodings only: a present-but-partial <quaternion>
     // (w missing, or an empty element) parses to a NON-NULL struct with
     // null fields — struct-level isNotNull would select it, null out
@@ -362,26 +406,25 @@ object MicMacEtl {
     // A8: exactly one intrinsics flavor, at least one COMPLETE pose
     // encoding, and a complete sommet (the translation column of the
     // pose — a null easting would hole the mat4x3 the same way)
-    val checked = parsed
-      .filter(assert_true(col("flavor").isNotNull,
-        concat(lit("unknown intrinseque flavor in "), col("file"))).isNull)
+    val checked = a8(parsed,
+      assert_true(col("flavor").isNotNull,
+        concat(lit("unknown intrinseque flavor in "), col("file"))),
       // a null sensor name would emit null-keyed transfos whose edges
       // never equi-join in FrameGraph traversals — the pose silently
       // VANISHING from every composed path instead of erroring
-      .filter(assert_true(col("sensor_name").isNotNull,
-        concat(lit("missing sensor <name> in "), col("file"))).isNull)
-      .filter(assert_true(quatComplete || matComplete,
+      assert_true(col("sensor_name").isNotNull,
+        concat(lit("missing sensor <name> in "), col("file"))),
+      assert_true(quatComplete || matComplete,
         concat(lit("missing or incomplete rotation (quaternion|mat3d) " +
-          "in "), col("file"))).isNull)
-      .filter(assert_true(col("px").isNotNull && col("py").isNotNull
+          "in "), col("file"))),
+      assert_true(col("px").isNotNull && col("py").isNotNull
           && col("pz").isNotNull,
-        concat(lit("missing or incomplete sommet in "), col("file")))
-        .isNull)
+        concat(lit("missing or incomplete sommet in "), col("file"))),
       // intrinsics completeness, per flavor: array(...) embeds a null
       // silently (the autocal path guards this with forall(isNotNull);
       // the pose path must too) — a [null, c, l] pinhole parameter row
       // fabricates a 0.0 focal length in any toDoubleArray consumer
-      .filter(assert_true(
+      assert_true(
         (col("con").isNull ||
           (col("con.ppa.focale").isNotNull && col("ppa_c").isNotNull &&
             col("ppa_l").isNotNull)) &&
@@ -392,7 +435,7 @@ object MicMacEtl {
             col("sph.frame.phi_min").isNotNull &&
             col("sph.frame.phi_max").isNotNull)),
         concat(lit("missing or incomplete intrinsics (focale/ppa/frame) " +
-          "in "), col("file"))).isNull)
+          "in "), col("file"))))
     // quaternion -> rotation matrix, row-major (orimatis.py A3 analog),
     // pure column arithmetic — codegen'd, no UDF; matrix poses pass
     // straight through (a complete quaternion wins when both are
@@ -413,9 +456,10 @@ object MicMacEtl {
       two * (q("x") * q("z") - q("y") * q("w")),
       two * (q("y") * q("z") + q("x") * q("w")),
       lit(1) - two * (q("x") * q("x") + q("y") * q("y")))
-    def m(row: Int, i: Int) = element_at(mrow(row), i + 1)
-    val rStored = (0 until 9).map(k =>
-      when(quatComplete, rq(k)).otherwise(m(k / 3 + 1, k % 3)))
+    // the stored rotation as one 9-element column, computed once per file
+    // (the entries below read it rather than each repeating both forms)
+    val rStored = when(quatComplete, array(rq: _*)).otherwise(array(
+      (0 until 9).map(k => element_at(mrow(k / 3 + 1), k % 3 + 1)): _*))
     // <Image2Ground>: true or ABSENT means the stored rotation already
     // maps image->ground (the pose orientation mat4x3 carries); FALSE
     // means it is stored ground->image and must be TRANSPOSED — the
@@ -424,7 +468,8 @@ object MicMacEtl {
     // and silently corrupt every composed pose downstream.
     val r = (0 until 9).map { k =>
       val kT = (k % 3) * 3 + k / 3 // R[i][j] <- R[j][i]
-      when(col("i2g") === lit(false), rStored(kT)).otherwise(rStored(k))
+      def at(i: Int) = element_at(col("_rot"), i + 1)
+      when(col("i2g") === lit(false), at(kT)).otherwise(at(k))
     }
     def transfo(t: String, params: Column): Column =
       struct(lit(t).as("transfo_type"), params.as("mat4x3"))
@@ -441,21 +486,21 @@ object MicMacEtl {
         array(col("ppa_c"), col("ppa_l"),
           col("sph.frame.lambda_min"), col("sph.frame.lambda_max"),
           col("sph.frame.phi_min"), col("sph.frame.phi_max"))))
-    // each file's two transfo rows come from one pass over it
-    val transfos = withValidity(
-      checked.select(col("file"), col("sensor_name"), col("srid_name"),
-        inline(array_compact(array(pose, intrinsics))))
-        .select("file", "sensor_name", "transfo_type", "srid_name", "mat4x3"),
-      validityStart, validityEnd)
-    val sensors = checked.select(col("file"), col("sensor_name"),
-      lit("camera").as("sensor_type"), col("flavor"),
-      col("width"), col("height"))
-    val referentials = checked.select(col("file"), col("sensor_name"),
-      explode(array(lit("world"), lit("camera"), lit("image")))
-        .as("referential"))
-    Map("sensors" -> sensors, "referentials" -> referentials,
-      "transfos" -> transfos,
-      "transfotrees" -> transfoTree(transfos, col("transfo_type")))
+    outputs(
+      sensors = checked.select(col("file"), col("sensor_name"),
+        lit("camera").as("sensor_type"), col("flavor"),
+        col("width"), col("height")),
+      referentials = checked.select(col("file"), col("sensor_name"),
+        explode(array(lit("world"), lit("camera"), lit("image")))
+          .as("referential")),
+      // each file's two transfo rows come from one pass over it
+      transfos = withValidity(checked.withColumn("_rot", rStored)
+        .select(col("file"), col("sensor_name"), col("srid_name"),
+          inline(array_compact(array(pose, intrinsics))))
+          .select("file", "sensor_name", "transfo_type", "srid_name",
+            "mat4x3"),
+        validityStart, validityEnd),
+      treeName = col("transfo_type"))
   }
 
   // ------------------------------------- validity windows + transfo trees
@@ -468,8 +513,8 @@ object MicMacEtl {
       start: Option[String], end: Option[String]): DataFrame = {
     def bound(v: Option[String]) = v.map(s => to_timestamp(lit(s)))
       .getOrElse(lit(null).cast(TimestampType))
-    transfos.withColumn("validity_start", bound(start))
-      .withColumn("validity_end", bound(end))
+    transfos.withColumns(Map("validity_start" -> bound(start),
+      "validity_end" -> bound(end)))
   }
 
   /** transfo_tree (SURVEY §1.3(b)): one tree per imported file — a

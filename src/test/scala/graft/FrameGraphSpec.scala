@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -235,5 +236,36 @@ class FrameGraphSpec extends AnyFunSuite {
         .snapshot(a("transfos"), trees2, "blinis_sample.xml", "cam")
     }
     assert(e.getMessage.contains("matches 2"), s"got: $e")
+  }
+
+  test("snapshot is a filter on transfos: no join, no aggregate") {
+    val out = graft.etl.MicMacEtl
+      .importBlinis(spark, s"$res/blinis_sample.xml")
+    val plan = graft.etl.FrameGraph.snapshot(
+      out("transfos"), out("transfotrees"), "blinis_sample.xml", "cam")
+      .queryExecution.optimizedPlan
+    assert(plan.collect { case j: Join => j }.isEmpty, s"$plan")
+    assert(plan.collect { case a: Aggregate => a }.isEmpty, s"$plan")
+  }
+
+  test("snapshot excludes a null-named transfo, as a semi-join does") {
+    val out = graft.etl.MicMacEtl
+      .importBlinis(spark, s"$res/blinis_sample.xml")
+    // a third arm of the same file with a null name: the tree's
+    // collect_set skips it, and so must the snapshot
+    val transfos = out("transfos").unionByName(out("transfos")
+      .filter(col("cam") === "cam_00").withColumn("cam", lit(null)))
+    val trees = graft.etl.MicMacEtl.transfoTree(transfos, col("cam"))
+    val snap = graft.etl.FrameGraph
+      .snapshot(transfos, trees, "blinis_sample.xml", "cam")
+    assert(snap.select("cam").collect().map(_.getString(0)).sorted.toSeq
+      == Seq("cam_00", "cam_01"))
+    // a null in the membership list matches no row either
+    val withNull = trees.withColumn("transfos",
+      array(lit("cam_01"), lit(null).cast("string")))
+    val one = graft.etl.FrameGraph
+      .snapshot(transfos, withNull, "blinis_sample.xml", "cam")
+    assert(one.select("cam").collect().map(_.getString(0)).toSeq
+      == Seq("cam_01"))
   }
 }

@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.XmlToStructs
+import org.apache.spark.sql.catalyst.plans.logical.Window
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -316,6 +319,47 @@ class MicMacEtlSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("duplicate ParamOrientSHC IdGrp"),
       s"got: ${e.getMessage}")
+  }
+
+  test("blinis A8: a duplicate IdGrp read through the manifest fails loudly") {
+    import spark.implicits._
+    val xml = XmlManifest.readXml(spark, Seq(
+      new java.io.File(s"$res/blinis_dup_idgrp.xml").getAbsolutePath).toDS())
+    val e = intercept[Exception] {
+      MicMacEtl.importBlinisXml(xml)("transfos").collect()
+    }
+    assert(e.getMessage.contains("duplicate ParamOrientSHC IdGrp"),
+      s"got: ${e.getMessage}")
+  }
+
+  test("blinis A8: an incomplete arm is reported before a duplicate IdGrp") {
+    // the duplicate pair comes first in the file and the arm without an
+    // <IdGrp> last: the per-camera check still names the file first
+    val e = intercept[Exception] {
+      importGlob("blinis_dup_then_null_idgrp.xml")("transfos").collect()
+    }
+    assert(e.getMessage.contains("incomplete ParamOrientSHC"),
+      s"got: ${e.getMessage}")
+  }
+
+  test("blinis transfos check IdGrp uniqueness without a window or shuffle") {
+    import spark.implicits._
+    // the manifest fetch repartitions its paths; the import pipeline
+    // behind it is what must not shuffle
+    val xml = XmlManifest.readXml(spark, Seq(
+      new java.io.File(s"$res/blinis_sample.xml").getAbsolutePath).toDS())
+      .localCheckpoint(eager = true)
+    val helper = new AdaptiveSparkPlanHelper {}
+    for ((name, out) <- Seq(
+        "glob" -> importGlob("blinis_sample.xml"),
+        "readXml" -> MicMacEtl.importBlinisXml(xml))) {
+      val qe = out("transfos").queryExecution
+      assert(qe.optimizedPlan.collect { case w: Window => w }.isEmpty,
+        s"$name: ${qe.optimizedPlan}")
+      assert(helper.collect(qe.executedPlan) {
+        case x: ShuffleExchangeExec => x }.isEmpty,
+        s"$name: ${qe.executedPlan}")
+    }
   }
 
   test("manifest-fetched XML runs the same import pipeline (the seam)") {

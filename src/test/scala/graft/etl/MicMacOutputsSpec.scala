@@ -1,0 +1,48 @@
+package graft.etl
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+
+/** The importers' lazily built outputs: each frame is built once, on its
+  * first read, while the shared trunk still fails at the import call. */
+class MicMacOutputsSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  private val res = "src/test/resources/micmac"
+
+  test("each output is built once, on its first read") {
+    val built = scala.collection.mutable.Map.empty[String, Int]
+    val names = Seq("sensors", "referentials", "transfos", "transfotrees")
+    val out = MicMacEtl.Outputs(names.map(k => k -> (() => {
+      built(k) = built.getOrElse(k, 0) + 1
+      spark.range(1).toDF()
+    })): _*)
+    assert(out.contains("transfos") && out.keySet == names.toSet
+      && out.size == 4 && built.isEmpty, "key queries build nothing")
+    assert(out("transfos") eq out("transfos"))
+    assert(built == Map("transfos" -> 1))
+    assert(out.iterator.map(_._1).toSeq == names)
+    assert(out.values.size == 4
+      && (out("transfos") eq out.get("transfos").get))
+    assert(built == names.map(_ -> 1).toMap, s"each thunk runs once: $built")
+  }
+
+  test("importer outputs iterate as the four tables") {
+    for (out <- Seq(
+        MicMacEtl.importAutocal(spark, s"$res/autocal_sample.xml"),
+        MicMacEtl.importBlinis(spark, s"$res/blinis_sample.xml"),
+        MicMacEtl.importOrimatis(spark, s"$res/orimatis_sample.xml")))
+      assert(out.map(_._1).toSeq
+        == Seq("sensors", "referentials", "transfos", "transfotrees"))
+  }
+
+  test("a missing glob path still fails at the import call") {
+    for (imp <- Seq[String => Map[String, _]](
+        MicMacEtl.importAutocal(spark, _),
+        MicMacEtl.importBlinis(spark, _),
+        MicMacEtl.importOrimatis(spark, _))) {
+      val e = intercept[Exception](imp(s"$res/no_such_dir/x.xml"))
+      assert(e.getMessage.contains("no_such_dir"), s"got: $e")
+    }
+  }
+}
