@@ -212,10 +212,8 @@ object GraftLines {
     * FunctionCatalog so both the write distribution and the reported
     * read partitioning resolve to the same canonical function. Bucket
     * ids ride FILE NAMES (`…-b<id>.gl`): integers need no escaping,
-    * and every batch write and row-level rewrite lands its files
-    * through [[writerFactory]], so the names survive every commit
-    * path except [[compact]] and the streaming sink, whose unbucketed
-    * names degrade the keyed scan to the ordinary one. */
+    * and every data file lands through [[writerFactory]], so the names
+    * survive every commit path. */
   val BucketMarker = "_graft_buckets"
 
   private[sources] def bucketSpec(dir: String,
@@ -253,33 +251,28 @@ object GraftLines {
   private[sources] val BucketNamePattern =
     java.util.regex.Pattern.compile(".*-b(\\d+)(?:-g\\d+)*\\.gl$")
 
-  /** Job-unique file-name tag for BATCH writes. Task ids are only
-    * unique per SparkContext (taskAttemptId restarts at 0 in a fresh
-    * application), so `part-<pid>-<tid>.gl` from two applications CAN
-    * collide — and the append commit's crashed-attempt replacement
-    * (delete-then-rename) would then silently swallow the earlier
-    * job's committed file. A driver-generated tag riding every final
-    * name restores global uniqueness; it also makes compact scratch
-    * names collision-free across applications. The leading 't' keeps
-    * the segment disjoint from the streaming `-e<epoch>-` tag (whose
-    * stale-epoch clear substring-matches names) and from `-b`/`-g`/
-    * `-p` suffix parsing. Streaming writers deliberately do NOT carry
-    * it: their epoch-keyed names are the replace-per-epoch idempotence
-    * mechanism, where cross-application collision is the CONTRACT. */
+  /** Job-unique file-name tag for batch writes. Task ids restart at 0
+    * in every application, so without it two applications' batch
+    * names could collide and a commit would replace a committed file.
+    * The leading 't' keeps the segment disjoint from the streaming
+    * [[epochTag]] and from `-b`/`-g`/`-p` suffix parsing. Streaming
+    * names carry no job tag: a replayed epoch must meet its own
+    * earlier names. */
   private[sources] def newJobTag(): String =
     "t" + java.lang.Long.toHexString(
       java.util.concurrent.ThreadLocalRandom.current().nextLong()
         | (1L << 60)).take(8)
 
-  /** The task writer factory of every batch write into `dir` (made
-    * here if missing): appends and overwrites ([[GlWrite]]) and
-    * row-level rewrites ([[GlReplaceWrite]]). With an identity
-    * partition column or a bucket spec each task fans its rows out to
-    * one file per value or bucket id ([[GlLayout]]); otherwise a task
-    * lands one file. */
+  /** The task writer factory of every data file written into `dir`
+    * (made here if missing): appends and overwrites ([[GlWrite]]),
+    * row-level rewrites ([[GlReplaceWrite]]), streaming epochs
+    * ([[GlStreamingWrite]], whose names carry `queryId`) and
+    * [[compact]]. With an identity partition column or a bucket spec
+    * each task fans its rows out to one file per value or bucket id
+    * ([[GlLayout]]); otherwise a task lands one file. */
   private[sources] def writerFactory(dir: String, schema: StructType,
-      partitionCol: Option[String],
-      buckets: Option[(String, Int)]): DataWriterFactory = {
+      partitionCol: Option[String], buckets: Option[(String, Int)],
+      queryId: String = queryTag("")): GlWriterFactory = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val p = new Path(dir)
     p.getFileSystem(conf).mkdirs(p)
@@ -288,8 +281,19 @@ object GraftLines {
       case (_, Some((c, n))) => Some(GlLayout(schema.fieldIndex(c), Some(n)))
       case _ => None
     }
-    GlWriterFactory(dir, schema, new SerializableConfiguration(conf), layout)
+    GlWriterFactory(dir, schema, new SerializableConfiguration(conf), layout,
+      queryId)
   }
+
+  /** The part of a streaming file name that identifies its epoch:
+    * replace-per-epoch matches it as a substring, so the trailing dash
+    * keeps epoch 1 from matching epoch 12. */
+  private[sources] def epochTag(queryId: String, epoch: Long): String =
+    s"-q$queryId-e$epoch-"
+
+  /** The name a versioned commit at generation `n` gives `name`. */
+  private[sources] def genName(name: String, n: Int): String =
+    name.stripSuffix(Ext) + s"-g$n$Ext"
 
   private[sources] def bucketIdOf(baseName: String): Option[Int] = {
     val m = BucketNamePattern.matcher(baseName)
@@ -525,8 +529,8 @@ object GraftLines {
     val published = msgs.collect {
       case GlCommitted(Some(s), Some(f), lines) =>
         val fp = new Path(f)
-        val dst = if (!versioned) fp else new Path(fp.getParent,
-          fp.getName.stripSuffix(Ext) + s"-g$next$Ext")
+        val dst = if (!versioned) fp
+          else new Path(fp.getParent, genName(fp.getName, next))
         if (fs.exists(dst)) {
           require(!versioned || epoch.nonEmpty,
             s"graftlines: commit target $dst already exists — concurrent " +
@@ -902,77 +906,61 @@ object GraftLines {
     (drop, dead)
   }
 
-  /** Small-file compaction (the OPTIMIZE lifecycle op — completes the
-    * table-management family: snapshot = versioned reads, clone =
-    * shared storage, vacuum/expire = reclaim, COMPACT = keep scan task
-    * counts proportional to bytes, not write history). Rewrites the
-    * CURRENT file set into at most `maxFiles` files via a distributed
-    * Spark job (read → coalesce → write to a scratch dir — data moves
-    * executor-to-executor, never through the driver), then swaps the
-    * result in with one [[publish]] that replaces the pre-compact
-    * files. On a versioned table that is a new generation listing the
-    * compacted files, with history intact (`expireVersions` reclaims
-    * the fragmented files later). The scratch write's stats lines ride
-    * along, so pruning keeps working on the compacted layout. Returns
-    * (files before, files after); no-op when already within budget. */
+  /** Small-file compaction (OPTIMIZE). Rewrites the current file set
+    * through the table's own [[writerFactory]] in one Spark job over
+    * `maxFiles` coalesced tasks, then swaps the result in with one
+    * [[publish]] that replaces the pre-compact files. Each task writes
+    * through one writer, so an unkeyed table ends with at most
+    * `maxFiles` files and a bucketed or identity-partitioned one with
+    * at most `maxFiles` single-key files per key: the keyed scan
+    * survives. The publish is pinned at the generation the rewrite read
+    * plus one, so a commit that lands meanwhile fails the compaction
+    * instead of being dropped from it. On a versioned table the
+    * fragmented generation stays readable until [[expireVersions]].
+    * Returns (files before, files after); no-op when already within
+    * budget. */
   def compact(dir: String, maxFiles: Int,
       spark: SparkSession): (Int, Int) = {
     require(maxFiles >= 1, "compact must keep at least one file")
     val conf = spark.sparkContext.hadoopConfiguration
-    val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf)
-    // the generation the rewrite is OF — captured before the Spark
-    // job so a commit landing mid-compact collides LOUDLY at publish
-    // time (the pinned generation) instead of being silently omitted
-    // from the compacted generation and later reclaimed as expired
     val snapshotGen = genVersions(dir, conf).lastOption.getOrElse(0)
     val before = resolveDataFileStatuses(dir, conf, None).map(_._1)
     if (before.size <= maxFiles) return (before.size, before.size)
-    // read with the UNION of the LIVE files' own header schemas (plus
-    // null-fill): a schema-evolved table holds files with different
-    // column sets, and inferring from whichever file lists first would
-    // either silently DROP an evolved column from the rewrite (old
-    // narrow header first — permanent data loss once the originals
-    // expire) or fail the read (wide header first, narrow file missing
-    // a column without null-fill). First-appearance order keeps the
-    // uniform-schema case byte-identical to the old inference.
+    // the union of the live files' headers, null-filled: on a
+    // schema-evolved table any one header would drop or fail a column.
+    // First-appearance order keeps a uniform table's schema as it is.
     val unionSchema = before.foldLeft(new StructType()) { (acc, f) =>
       headerSchemaOfFile(f, conf).fields.foldLeft(acc) { (a, fld) =>
         if (a.fieldNames.contains(fld.name)) a else a.add(fld)
       }
     }
-    val scratch = new Path(dir, ".compact-scratch").toString
-    fs.delete(new Path(scratch), true)
-    spark.read.schema(unionSchema)
-      .option(NullFillOption, "true")
-      .format("graftlines").load(dir)
-      .coalesce(maxFiles)
-      .write.format("graftlines").mode("overwrite").save(scratch)
-    // the scratch write's stats lines ride the publish as the tasks'
-    // lines would (the payload after the first tab is name-independent)
-    val statLines: Map[String, Seq[String]] = {
-      val sp = statsPath(scratch)
-      if (!fs.exists(sp)) Map.empty
-      else {
-        val br = new BufferedReader(new InputStreamReader(fs.open(sp), UTF_8))
-        try Iterator.continually(br.readLine()).takeWhile(_ != null)
-          .filter(_.contains('\t')).toSeq
-          .groupMap(l => l.substring(0, l.indexOf('\t')))(l =>
-            l.substring(l.indexOf('\t') + 1))
-        finally br.close()
-      }
+    val factory = writerFactory(dir, unionSchema, partitionCol(dir, conf),
+      bucketSpec(dir, conf))
+    val qe = spark.read.schema(unionSchema).option(NullFillOption, "true")
+      .format("graftlines").load(dir).coalesce(maxFiles).queryExecution
+    val msgs = scala.collection.mutable.ArrayBuffer.empty[WriterCommitMessage]
+    try org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+        Some("graftlines compact")) {
+      val rows = qe.toRdd
+      spark.sparkContext.runJob(rows,
+        (ctx: org.apache.spark.TaskContext, it: Iterator[InternalRow]) => {
+          val w = factory.createWriter(ctx.partitionId(), ctx.taskAttemptId())
+          try { it.foreach(w.write); w.commit() }
+          catch { case t: Throwable => w.abort(); throw t }
+          finally w.close()
+        },
+        rows.partitions.indices,
+        (_: Int, m: WriterCommitMessage) => msgs += m)
+    } catch { case t: Throwable =>
+      // the tasks that finished staged files no publish will rename
+      discardStaged(dir, msgs.toArray)
+      throw t
     }
-    val moved = listDataFiles(scratch, conf).zipWithIndex.map {
-      case (f, i) =>
-        val base = new Path(f).getName
-        GlCommitted(Some(f), Some(new Path(dirPath, s"compact-$i-$base")
-          .toString), statLines.getOrElse(base, Nil))
-    }
-    publish(dir, conf, moved,
+    val after = committedFiles(msgs.toArray).filter(_.staged.nonEmpty)
+    publish(dir, conf, after,
       GlReplace.Files(before.map(new Path(_).getName).toSet),
       pinnedGen = Some(snapshotGen + 1))
-    fs.delete(new Path(scratch), true)
-    (before.size, moved.size)
+    (before.size, after.size)
   }
 
   /** Stats refresh / back-fill (the ANALYZE TABLE lifecycle op).
@@ -2227,8 +2215,8 @@ case class GlScan(path: String, required: StructType,
     * exactly one non-null value (min == max, nulls == 0), the scan can
     * key every split by that value and report KeyGroupedPartitioning —
     * the storage-partitioned-join contract. Any file that cannot prove
-    * single-valuedness (pre-partitioning data, a compacted layout, a
-    * damaged manifest) degrades the WHOLE scan to the ordinary path:
+    * single-valuedness (pre-partitioning data, a damaged manifest)
+    * degrades the WHOLE scan to the ordinary path:
     * correctness never rides on the grouping, only the exchange-free
     * join plan does. Row-level-op scans (`_file` in the output),
     * aggregate/limit pushdown scans keep the ordinary path too. */
@@ -2807,6 +2795,7 @@ private[sources] class GlAggReader(file: String, tableSchema: StructType,
     spec.funcs.map(f => f.col.map(pos).getOrElse(-1)).toArray
   private val types: Array[DataType] = inputSchema.fields.map(_.dataType)
 
+  /** A group key cell, boxed: the key of the group map. */
   private def value(row: InternalRow, i: Int): Any =
     if (row.isNullAt(i)) null
     else types(i) match {
@@ -2818,64 +2807,35 @@ private[sources] class GlAggReader(file: String, tableSchema: StructType,
       case other => throw new IllegalStateException(other.toString)
     }
 
-  /** Spark's min/max ordering for the types we accept: ints/longs
-    * natural, doubles via Double.compare (NaN greatest — same as
-    * Spark's Ordering[Double]). Strings never reach here (declined at
-    * pushAggregation). */
-  private def lt(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: java.lang.Integer, y: java.lang.Integer) => x < y
-    case (x: java.lang.Long, y: java.lang.Long) => x < y
-    case (x: java.lang.Double, y: java.lang.Double) =>
-      java.lang.Double.compare(x, y) < 0
-    case _ => throw new IllegalStateException(s"unorderable: $a / $b")
-  }
-
-  // r16 hot loop (guide §1.2 step 2 — per-task work): the fold runs
-  // once per ROW of the file, so per-row allocations dominate the agg
-  // scan (measured 2.0 s vs 0.36 s for the plain row scan of the same
-  // file before this change). Fixes, values unchanged:
-  //  - counts live in a primitive long array instead of re-boxing a
-  //    java.lang.Long per row per count function;
-  //  - `count` null-tests via row.isNullAt instead of boxing the cell;
-  //  - the single-group-column case (the common pushed shape) keys the
-  //    map on the raw cell value instead of allocating a one-element
-  //    Seq wrapper per row (Scala's ## / == make nulls and UTF8String
-  //    keys behave identically to the Seq form).
-  // r17 (VERDICT r16 #3 — the residual 1.25 s vs 0.36 s plain-scan gap):
-  //  - min/max over the integer-backed types (int/long/date/timestamp)
-  //    fold through primitive long slots (opcodes 8/9) instead of the
-  //    boxed generic path — no per-row boxing, no pattern-matched lt;
-  //  - the single-STRING-group shape (every pushed demo groups on a
-  //    flag/brand/source column) probes an insertion-ordered array by
-  //    linear UTF8String.equals scan (a memcmp) instead of paying map
-  //    hashing machinery per row; past LINEAR_MAX observed groups —
-  //    where a linear scan would lose to hashing — the store migrates
-  //    itself (insertion order preserved) into the LinkedHashMap that
-  //    every other shape uses. Output order and values are unchanged
-  //    in all cases: first-observation order either way.
+  // The fold runs once per row, so it allocates nothing per row: counts
+  // and min/max live in primitive slots per (group, function), and a
+  // single group column keys the map on the raw cell. Min/max order is
+  // Spark's: natural for the long-backed types, Double.compare (NaN
+  // greatest) for doubles; [[GlScanBuilder.pushAggregation]] admits no
+  // other min/max type. A single string group column probes a small
+  // insertion-ordered array (a memcmp per entry) and moves to the map
+  // past LINEAR_MAX groups. Output is in first-observation order
+  // either way.
   private lazy val groups: Iterator[InternalRow] = {
-    // per-func state: cnt for counts; min/max in primitive double/long
-    // slots chosen by type once (allocation-free per row), with the
-    // boxed generic slot mm kept as the fallback for any other
-    // orderable type a future pushAggregation might admit
-    final class GState(val cnt: Array[Long], val mm: Array[Any],
-      val dbl: Array[Double], val lng: Array[Long], val seen: Array[Boolean])
+    final class GState(val cnt: Array[Long], val dbl: Array[Double],
+      val lng: Array[Long], val seen: Array[Boolean])
     val nf = spec.funcs.length
-    // opcodes: 0 countstar, 1 count, 2 min, 3 max (validated at push);
-    // +4 = double-specialized min/max, +6 = long-backed min/max
+    // opcodes: 0 countstar, 1 count, 2/3 min/max double, 4/5 min/max
+    // over a long-backed column (int, long, date, timestamp)
     val ops: Array[Int] = spec.funcs.zipWithIndex.map { case (f, j) =>
-      val base = f.kind match {
+      def typed(double: Int, long: Int) = types(funcIdx(j)) match {
+        case DoubleType => double
+        case IntegerType | DateType | LongType | TimestampType => long
+        case other => throw new IllegalStateException(
+          s"graftlines: pushed ${f.kind} over $other")
+      }
+      f.kind match {
         case "countstar" => 0
         case "count" => 1
-        case "min" => 2
-        case "max" => 3
+        case "min" => typed(2, 4)
+        case "max" => typed(3, 5)
         case other => throw new IllegalStateException(other)
       }
-      if (base >= 2) types(funcIdx(j)) match {
-        case DoubleType => base + 4
-        case IntegerType | DateType | LongType | TimestampType => base + 6
-        case _ => base
-      } else base
     }.toArray
     // long-backed min/max slots box back to the column's external type
     val intWidth: Array[Boolean] = spec.funcs.indices.map { j =>
@@ -2887,8 +2847,8 @@ private[sources] class GlAggReader(file: String, tableSchema: StructType,
     val single = groupIdx.length == 1
     val singleStr = single && types(groupIdx(0)) == StringType
     val m = scala.collection.mutable.LinkedHashMap[Any, GState]()
-    def fresh() = new GState(new Array[Long](nf), new Array[Any](nf),
-      new Array[Double](nf), new Array[Long](nf), new Array[Boolean](nf))
+    def fresh() = new GState(new Array[Long](nf), new Array[Double](nf),
+      new Array[Long](nf), new Array[Boolean](nf))
     // linear store for the single-string-group shape
     val LINEAR_MAX = 64
     var linKeys: Array[UTF8String] = null
@@ -2933,29 +2893,21 @@ private[sources] class GlAggReader(file: String, tableSchema: StructType,
         ops(j) match {
           case 0 => st.cnt(j) += 1
           case 1 => if (!row.isNullAt(funcIdx(j))) st.cnt(j) += 1
-          case 2 =>
-            val v = value(row, funcIdx(j))
-            if (v != null && (st.mm(j) == null || lt(v, st.mm(j))))
-              st.mm(j) = v
-          case 3 =>
-            val v = value(row, funcIdx(j))
-            if (v != null && (st.mm(j) == null || lt(st.mm(j), v)))
-              st.mm(j) = v
-          case 6 => // min(double) — Double.compare, NaN greatest (= lt)
+          case 2 => // min(double)
             if (!row.isNullAt(funcIdx(j))) {
               val v = row.getDouble(funcIdx(j))
               if (!st.seen(j) || java.lang.Double.compare(v, st.dbl(j)) < 0) {
                 st.dbl(j) = v; st.seen(j) = true
               }
             }
-          case 7 => // max(double)
+          case 3 => // max(double)
             if (!row.isNullAt(funcIdx(j))) {
               val v = row.getDouble(funcIdx(j))
               if (!st.seen(j) || java.lang.Double.compare(st.dbl(j), v) < 0) {
                 st.dbl(j) = v; st.seen(j) = true
               }
             }
-          case 8 => // min(int/long/date/timestamp) — natural long order
+          case 4 => // min(long-backed)
             if (!row.isNullAt(funcIdx(j))) {
               val v = if (intWidth(j)) row.getInt(funcIdx(j)).toLong
                       else row.getLong(funcIdx(j))
@@ -2963,7 +2915,7 @@ private[sources] class GlAggReader(file: String, tableSchema: StructType,
                 st.lng(j) = v; st.seen(j) = true
               }
             }
-          case 9 => // max(int/long/date/timestamp)
+          case 5 => // max(long-backed)
             if (!row.isNullAt(funcIdx(j))) {
               val v = if (intWidth(j)) row.getInt(funcIdx(j)).toLong
                       else row.getLong(funcIdx(j))
@@ -2984,22 +2936,18 @@ private[sources] class GlAggReader(file: String, tableSchema: StructType,
       val vs: Seq[Any] = (0 until nf).map { j =>
         ops(j) match {
           case 0 | 1 => java.lang.Long.valueOf(st.cnt(j))
-          case 2 | 3 => st.mm(j)
-          case 6 | 7 =>
-            if (st.seen(j)) java.lang.Double.valueOf(st.dbl(j)) else null
-          case _ =>
-            if (!st.seen(j)) null
-            else if (intWidth(j)) java.lang.Integer.valueOf(st.lng(j).toInt)
-            else java.lang.Long.valueOf(st.lng(j))
+          case _ if !st.seen(j) => null
+          case 2 | 3 => java.lang.Double.valueOf(st.dbl(j))
+          case _ if intWidth(j) => java.lang.Integer.valueOf(st.lng(j).toInt)
+          case _ => java.lang.Long.valueOf(st.lng(j))
         }
       }
       new GenericInternalRow((ks ++ vs).toArray[Any])
     }
-    // useLin still true ⇒ every state lives in the lin arrays (m can
-    // only be non-empty here via the global-agg empty-file row, whose
-    // shape never enters the lin path). useLin false ⇒ everything is
-    // in m — including any migrated lin entries, in their original
-    // first-observation order.
+    // useLin still true: every state lives in the lin arrays (m can
+    // only hold the global-agg empty-file row, a shape that never
+    // enters the lin path). useLin false: everything is in m,
+    // migrated lin entries in their first-observation order.
     if (useLin)
       (0 until linN).iterator.map(i => emit(linKeys(i), linStates(i))) ++
         m.iterator.map((emit _).tupled)
@@ -3097,12 +3045,13 @@ private[sources] class GlWrite(path: String, schema: StructType,
   /** Streaming sink (`writeStream.format("graftlines")`): append-only —
     * Complete mode would truncate the table every epoch, which on a
     * versioned table means a full rewrite per micro-batch; reject it
-    * loudly and keep the sink's semantics one thing (append). */
+    * loudly and keep the sink's semantics one thing (append). The
+    * stream keeps the table's layout, as a batch write does. */
   override def toStreaming: StreamingWrite = {
     require(!truncate,
       "graftlines: streaming supports Append output mode only — " +
         "Complete/Update would truncate the table every micro-batch")
-    new GlStreamingWrite(path, schema, queryId)
+    new GlStreamingWrite(path, schema, partitionCol, bucketSpec, queryId)
   }
 
   override def createBatchWriterFactory(
@@ -3134,14 +3083,19 @@ private[sources] class GlWrite(path: String, schema: StructType,
   *    epoch is found via [[GraftLines.committedEpochs]] and its bytes
   *    are dropped. Each sunk epoch streams back out of the micro-batch
   *    SOURCE over the same table as exactly one generation-diff batch.
-  *  - **Plain directory**: final names carry the query and epoch, and
-  *    the commit replaces the files of ITS OWN epoch (a crashed or
-  *    replayed attempt) — the overwrite-by-batchId idempotence
-  *    foreachBatch users hand-roll, native in the sink.
+  *  - **Plain directory**: final names carry the query and epoch
+  *    ([[GraftLines.epochTag]]), and the commit replaces the files of
+  *    ITS OWN epoch (a crashed or replayed attempt) — the
+  *    overwrite-by-batchId idempotence foreachBatch users hand-roll,
+  *    native in the sink.
   *
-  * Complete / Update output modes are rejected up front
+  * Task writers come from [[GraftLines.writerFactory]] with the
+  * table's partition column or bucket spec, so every epoch lands keyed
+  * files. Complete / Update output modes are rejected up front
   * ([[GlWrite.toStreaming]]). */
 private[sources] class GlStreamingWrite(path: String, schema: StructType,
+    partitionCol: Option[String] = None,
+    bucketSpec: Option[(String, Int)] = None,
     rawQueryId: String = "")
     extends StreamingWrite {
   /** Tag-safe identity of the owning streaming query: part of the
@@ -3175,17 +3129,13 @@ private[sources] class GlStreamingWrite(path: String, schema: StructType,
   }
 
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    dir.getFileSystem(conf).mkdirs(dir)
-    GlStreamingWriterFactory(path, schema,
-      new SerializableConfiguration(conf), queryId)
-  }
+      info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    GraftLines.writerFactory(path, schema, partitionCol, bucketSpec, queryId)
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
+    partitionCol.foreach(GraftLines.writePartitionCol(path, _, conf))
     val epoch = (epochId, queryId)
     val files = GraftLines.committedFiles(messages)
     // one generation listing per epoch serves the ledger and publish
@@ -3211,7 +3161,7 @@ private[sources] class GlStreamingWrite(path: String, schema: StructType,
       // query's epoch-0 files. Legacy names (pre-query-tag builds) no
       // longer match and linger as orphan debris rather than risk
       // cross-query deletion.
-      val tag = s"-q$queryId-e$epochId-"
+      val tag = GraftLines.epochTag(queryId, epochId)
       val stale = GraftLines.listDataFiles(path, conf)
         .map(new Path(_).getName).filter(_.contains(tag))
       GraftLines.publish(path, conf, files, GlReplace.Files(stale.toSet),
@@ -3222,19 +3172,6 @@ private[sources] class GlStreamingWrite(path: String, schema: StructType,
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
     GraftLines.discardStaged(path, messages)
-}
-
-/** Epoch rides the final name (`part-<pid>-e<E>-<task>.gl`): on a plain
-  * directory that makes replace-per-epoch possible; on a versioned one
-  * it keeps crashed-attempt targets collision-free across epochs. */
-private[sources] case class GlStreamingWriterFactory(path: String,
-    schema: StructType, conf: SerializableConfiguration,
-    queryId: String = "adhoc")
-    extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new GlWriter(path, schema, conf.value,
-      f"part-$partitionId%05d-q$queryId-e$epochId-$taskId${GraftLines.Ext}")
 }
 
 /** `staged`: the task's staging path (written bytes); `file`: the
@@ -3270,19 +3207,32 @@ private[sources] final case class GlGens(list: Seq[Int], versioned: Boolean)
   * the value). */
 private[sources] final case class GlLayout(col: Int, numBuckets: Option[Int])
 
-/** Task writers of one batch job. Every final name carries the job's
-  * tag ([[GraftLines.newJobTag]]): evaluated ONCE per factory on the
-  * driver, then serialized to every task. */
+/** The one producer of task writers ([[GraftLines.writerFactory]]).
+  * Final names before the layout suffix:
+  *  - batch: `part-<pid>-<task>-<jobTag>`; the job tag
+  *    ([[GraftLines.newJobTag]]) is drawn once per factory on the
+  *    driver and serialized to every task.
+  *  - streaming: `part-<pid>-q<query>-e<E>-<task>`, which carries the
+  *    [[GraftLines.epochTag]] replace-per-epoch matches and no job tag.
+  * A layout adds `-b<id>` or `-p<k>` ([[GlFanOutWriter]]); a versioned
+  * commit then adds `-g<N>`. */
 private[sources] case class GlWriterFactory(path: String, schema: StructType,
     conf: SerializableConfiguration, layout: Option[GlLayout] = None,
-    jobTag: String = GraftLines.newJobTag()) extends DataWriterFactory {
+    queryId: String = GraftLines.queryTag(""),
+    jobTag: String = GraftLines.newJobTag())
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] = {
-    val base = f"part-$partitionId%05d-$taskId-$jobTag"
-    layout match {
-      case Some(l) => new GlFanOutWriter(path, schema, conf.value, base, l)
-      case None => new GlWriter(path, schema, conf.value, base + GraftLines.Ext)
-    }
+      taskId: Long): DataWriter[InternalRow] =
+    writer(f"part-$partitionId%05d-$taskId-$jobTag")
+
+  override def createWriter(partitionId: Int, taskId: Long,
+      epochId: Long): DataWriter[InternalRow] =
+    writer(f"part-$partitionId%05d" +
+      GraftLines.epochTag(queryId, epochId) + taskId)
+
+  private def writer(base: String): DataWriter[InternalRow] = layout match {
+    case Some(l) => new GlFanOutWriter(path, schema, conf.value, base, l)
+    case None => new GlWriter(path, schema, conf.value, base + GraftLines.Ext)
   }
 }
 
@@ -3298,12 +3248,12 @@ private[sources] case class GlWriterFactory(path: String, schema: StructType,
   *    per-task index (`-p<k>`), not the value, so values need no
   *    name-escaping.
   *
-  * A batch write clusters rows by the key first
+  * An append clusters rows by the key first
   * (GlWrite.requiredDistribution), so a task usually owns whole keys
-  * and the writer map stays small; a row-level rewrite does not, and
-  * a key then spans several files, which the scan groups. The job tag
-  * precedes the suffix: [[GraftLines.BucketNamePattern]] anchors on
-  * it. */
+  * and the writer map stays small; a row-level rewrite or a compaction
+  * does not, and a key then spans several files, which the scan
+  * groups. The suffix ends the name before any `-g<N>`:
+  * [[GraftLines.BucketNamePattern]] anchors on it. */
 private[sources] class GlFanOutWriter(dir: String, schema: StructType,
     conf: org.apache.hadoop.conf.Configuration, base: String,
     layout: GlLayout)
@@ -3362,7 +3312,7 @@ private[sources] class GlFanOutWriter(dir: String, schema: StructType,
   * `.<finalName>.staging` on first row (empty partitions land no
   * file); the job commit renames it to `finalName`. The dot-prefix +
   * suffix keep it out of every data listing, so a task is invisible
-  * to readers until the whole job publishes. The factories put the
+  * to readers until the whole job publishes. The factory puts the
   * partition and task id in `finalName`: task-unique names keep
   * concurrent speculative attempts from colliding (attempt id is
   * folded into taskId by Spark; only the winning attempt's message

@@ -842,12 +842,16 @@ class GraftLinesSpec extends AnyFunSuite {
 
   test("partitioned tables degrade safely when single-value proof breaks") {
     val p = s"$dir/spj_degrade"
-    (0L until 100L).map(i => (i % 4, i)).toDF("nk", "v")
-      .repartition(3).write.format("graftlines")
-      .option("partitionColumn", "nk").mode("overwrite").save(p)
-    // compaction coalesces values into mixed files: the partitioning
-    // report must drop, the data must not change
-    GraftLines.compact(p, 1, spark)
+    val hp = new org.apache.hadoop.fs.Path(p)
+    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
+    val rows = (0L until 100L).map(i => (i % 4, i)).toDF("nk", "v")
+    // data appended before the table was partitioned holds mixed values
+    // in one file: the partitioning report must drop, the data must not
+    // change
+    rows.filter($"v" < 50L).coalesce(1).write.format("graftlines")
+      .mode("overwrite").save(p)
+    rows.filter($"v" >= 50L).repartition(3).write.format("graftlines")
+      .option("partitionColumn", "nk").mode("append").save(p)
     val base = spark.read.format("graftlines").load(p)
     assert(glScan(base).planInputPartitions().forall(p =>
       !p.isInstanceOf[org.apache.spark.sql.connector.read.HasPartitionKey]))

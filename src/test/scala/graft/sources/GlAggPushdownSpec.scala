@@ -24,13 +24,27 @@ class GlAggPushdownSpec extends AnyFunSuite {
     val pq = GraftTmp.dir("aggpush_pq")
     val fs = new Path(gl).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(gl), true); fs.delete(new Path(pq), true)
-    val rows: Seq[(java.lang.Long, String)] =
-      (0 until 90).map { i =>
-        val v: java.lang.Long = if (i % 7 == 0) null else Long.box(i % 13)
-        val s: String = if (i % 5 == 0) null else "abcxy"(i % 5).toString
-        (v, s)
-      }
-    val df = rows.toDF("v", "s")
+    // one column per typed min/max slot of the fold: int, double (with
+    // NaN, the greatest double), date and timestamp, each with NULLs
+    val rows = (0 until 90).map { i =>
+      val v: java.lang.Long = if (i % 7 == 0) null else Long.box(i % 13)
+      val s: String = if (i % 5 == 0) null else "abcxy"(i % 5).toString
+      val in: java.lang.Integer =
+        if (i % 6 == 0) null else Int.box(i * 37 % 23 - 11)
+      val d: java.lang.Double =
+        if (i % 8 == 0) null
+        else if (i % 11 == 0) Double.box(Double.NaN)
+        else Double.box(i % 9 * 1.5 - 4.0)
+      val dt =
+        if (i % 9 == 0) null
+        else java.sql.Date.valueOf(
+          java.time.LocalDate.of(2020, 1, 1).plusDays(i * 17 % 400))
+      val ts =
+        if (i % 10 == 0) null
+        else new java.sql.Timestamp(1600000000000L + i * 7919 % 1000 * 3600000L)
+      (v, s, in, d, dt, ts)
+    }
+    val df = rows.toDF("v", "s", "i", "d", "dt", "ts")
     df.write.format("graftlines")
       .option("clusterBy", "v").option("clusterPartitions", "6")
       .mode("append").save(gl)
@@ -45,6 +59,8 @@ class GlAggPushdownSpec extends AnyFunSuite {
     "count(v) AS cv, count(s) AS cs",
     "min(v) AS mn, max(v) AS mx",
     "count(*) AS n, min(v) AS mn, count(s) AS cs",
+    "min(i) AS imn, max(i) AS imx, min(d) AS dmn, max(d) AS dmx",
+    "min(dt) AS dtmn, max(dt) AS dtmx, min(ts) AS tsmn, max(ts) AS tsmx",
     // min/max on strings: DECLINED by the source (UTF-16 vs UTF8
     // ordering) — the whole aggregation must fall back to the row scan
     "min(s) AS smn, max(s) AS smx, count(*) AS n")

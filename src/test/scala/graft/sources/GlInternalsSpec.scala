@@ -20,6 +20,44 @@ class GlInternalsSpec extends AnyFunSuite {
     assert(GraftLines.bucketIdOf("part-00000-3-b5.gl.staging").isEmpty)
   }
 
+  test("file names: bucket ids and epoch tags parse from every shape") {
+    // one factory writes a batch and a streaming file for each layout;
+    // each name, bare and with a versioned commit's -g<N>, must yield
+    // its bucket id and match its own epoch tag and no other
+    val dir = graft.GraftTmp.dir("name_grammar_spec")
+    val hconf = new org.apache.hadoop.conf.Configuration()
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(hconf)
+    fs.delete(p, true); fs.mkdirs(p)
+    val schema = StructType(Seq(StructField("k", LongType)))
+    val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
+    val row = new org.apache.spark.sql.catalyst.expressions
+      .GenericInternalRow(Array[Any](7L)) // bucketOf(7, 4) == 3
+    for ((layout, suffix, bucket) <- Seq(
+        (None, "", None),
+        (Some(GlLayout(0, Some(4))), "-b3", Some(3)),
+        (Some(GlLayout(0, None)), "-p0", None))) {
+      val f = GlWriterFactory(dir, schema, conf, layout, queryId = "a1")
+      for ((w, shape) <- Seq(
+          f.createWriter(0, 5L) -> s"part-00000-5-${f.jobTag}",
+          f.createWriter(0, 5L, 12L) -> "part-00000-qa1-e12-5")) {
+        w.write(row)
+        val name = new org.apache.hadoop.fs.Path(GraftLines
+          .committedFiles(Array(w.commit())).head.file.get).getName
+        assert(name == shape + suffix + GraftLines.Ext)
+        val streaming = shape.contains("-qa1-")
+        for (n <- Seq(name, GraftLines.genName(name, 9))) {
+          assert(GraftLines.bucketIdOf(n) == bucket, n)
+          assert(n.contains(GraftLines.epochTag("a1", 12)) == streaming, n)
+          for ((q, e) <- Seq(("a1", 1L), ("a1", 2L), ("a1", 120L),
+              ("a", 12L), ("1", 12L)))
+            assert(!n.contains(GraftLines.epochTag(q, e)), s"$n vs $q/$e")
+        }
+      }
+    }
+    fs.delete(p, true)
+  }
+
   test("batch writer factories from different jobs never share final names") {
     // taskAttemptId restarts at 0 per SparkContext, so names keyed
     // only by (partitionId, taskId) collide across applications; the

@@ -1,0 +1,163 @@
+package graft.sources
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{count, lit, sum}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{GraftTmp, TestSpark}
+
+/** Every way a file lands in a bucketed or identity-partitioned table
+  * keeps the table's layout: the streaming sink and compaction write
+  * through the same writer factory as a batch append, so each file
+  * holds one key and the batch scan stays keyed. */
+class GlKeyedLayoutSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private val dir = GraftTmp.dir("keyed_layout_spec")
+  private def hconf = spark.sparkContext.hadoopConfiguration
+
+  /** (PARTITIONED BY clause, versioned) for every keyed table shape. */
+  private val shapes = for {
+    layout <- Seq("bucket(4, k)", "g")
+    versioned <- Seq(false, true)
+  } yield (layout, versioned)
+
+  private def catalog(name: String): Unit = {
+    spark.conf.set(s"spark.sql.catalog.$name", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$name.warehouse", s"$dir/${name}_wh")
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $name.ns")
+  }
+
+  private def create(t: String, layout: String, versioned: Boolean): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, g BIGINT, v BIGINT) " +
+      s"USING graftlines PARTITIONED BY ($layout)" +
+      (if (versioned) " TBLPROPERTIES ('versioned'='true')" else ""))
+  }
+
+  /** The key each live file of `tDir` provably holds: its bucket id on
+    * a bucketed table, its single stats value on a partitioned one. */
+  private def fileKeys(tDir: String): Seq[Option[Any]] = {
+    val files = GraftLines.resolveDataFileStatuses(tDir, hconf, None)
+      .map { case (f, _) => new Path(f).getName }
+    GraftLines.bucketSpec(tDir, hconf) match {
+      case Some((_, n)) =>
+        files.map(GraftLines.bucketIdOf(_).filter(_ < n))
+      case None =>
+        val col = GraftLines.partitionCol(tDir, hconf).get
+        val stats = GraftLines.readStats(tDir, hconf,
+          GraftLines.readDirSchema(tDir))
+        files.map(f => stats.get(f).flatMap(_.cols.get(col)).collect {
+          case GlColStats(0, mn, mx) if mn != null && mn == mx => mn
+        })
+    }
+  }
+
+  private def keyedScan(df: DataFrame): Boolean =
+    df.queryExecution.sparkPlan.collectFirst {
+      case b: BatchScanExec => b.scan.asInstanceOf[GlScan]
+    }.exists(_.outputPartitioning().isInstanceOf[KeyGroupedPartitioning])
+
+  private def totals(df: DataFrame): (Long, Long) = {
+    val r = df.agg(count(lit(1)), sum($"v")).collect()(0)
+    (r.getLong(0), r.getLong(1))
+  }
+
+  test("a stream into a keyed table lands keyed files; a replay lands once") {
+    catalog("graft_kstream")
+    val t = "graft_kstream.ns.t"
+    for ((layout, versioned) <- shapes) {
+      val what = s"$layout, versioned=$versioned"
+      create(t, layout, versioned)
+      val tDir = s"$dir/graft_kstream_wh/ns/t"
+      val cp = s"$dir/kstream_cp"
+      val fs = new Path(cp).getFileSystem(hconf)
+      fs.delete(new Path(cp), true)
+      val mem = MemoryStream[(Long, Long, Long)](spark)
+      def run(): Unit = {
+        val q = mem.toDF().toDF("k", "g", "v").writeStream
+          .option("checkpointLocation", cp).outputMode("append").toTable(t)
+        try q.processAllAvailable() finally q.stop()
+      }
+      mem.addData((0L until 20L).map(k => (k, k % 4, k)))
+      run()
+      mem.addData((20L until 40L).map(k => (k, k % 4, k)))
+      run()
+      // forget that the last epoch committed: the restart replays it
+      val commits = new Path(cp, "commits")
+      val last = fs.listStatus(commits).map(_.getPath.getName)
+        .flatMap(_.toIntOption).max
+      fs.delete(new Path(commits, last.toString), false)
+      fs.delete(new Path(commits, s".$last.crc"), false)
+      run()
+      assert(totals(spark.table(t)) == ((40L, (0L until 40L).sum)),
+        s"$what: the replayed epoch must land exactly one copy")
+      val keys = fileKeys(tDir)
+      assert(keys.nonEmpty && keys.forall(_.isDefined),
+        s"$what: a streamed file holds more than one key")
+      assert(keyedScan(spark.table(t)), s"$what: the scan is not keyed")
+    }
+  }
+
+  test("compact keeps a keyed table keyed, every row, and the old version") {
+    catalog("graft_kcompact")
+    val t = "graft_kcompact.ns.t"
+    val maxFiles = 2
+    for ((layout, versioned) <- shapes) {
+      val what = s"$layout, versioned=$versioned"
+      create(t, layout, versioned)
+      val tDir = s"$dir/graft_kcompact_wh/ns/t"
+      // unclustered appends: several files per key
+      for (i <- 0 until 4)
+        (0L until 40L).map(k => (k, k % 4, k * 10 + i)).toDF("k", "g", "v")
+          .repartition(3).writeTo(t).append()
+      val before = totals(spark.table(t))
+      val beforeKeys = fileKeys(tDir)
+      assert(beforeKeys.groupBy(identity).values.exists(_.size > maxFiles),
+        s"$what: the fixture must hold more than $maxFiles files per key")
+      val gen = GraftLines.currentVersion(tDir, hconf)
+      val (nb, na) = GraftLines.compact(tDir, maxFiles, spark)
+      assert(nb == beforeKeys.size && na < nb, s"$what: $nb -> $na")
+      val keys = fileKeys(tDir)
+      assert(keys.size == na && keys.forall(_.isDefined),
+        s"$what: a compacted file holds more than one key")
+      assert(keys.groupBy(identity).values.forall(_.size <= maxFiles),
+        s"$what: more than $maxFiles files for one key: $keys")
+      assert(keyedScan(spark.table(t)), s"$what: the scan is not keyed")
+      assert(totals(spark.table(t)) == before, s"$what: rows changed")
+      if (versioned)
+        assert(totals(spark.sql(s"SELECT * FROM $t VERSION AS OF $gen")) ==
+          before, s"$what: the pre-compact generation is not readable")
+    }
+  }
+
+  test("a failed compact discards its staged files and changes nothing") {
+    val p = s"$dir/compact_fail"
+    val fs = new Path(p).getFileSystem(hconf)
+    fs.delete(new Path(p), true)
+    for (i <- 0 until 2)
+      Seq((i.toLong, "x")).toDF("k", "s").coalesce(1)
+        .write.format("graftlines").mode("append").save(p)
+    // a large file whose LAST line does not parse: its task fails after
+    // the small files' tasks have staged and committed theirs
+    val bad = fs.create(new Path(p, "part-bad.gl"), true)
+    try {
+      val body = new StringBuilder(GraftLines.header(
+        org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, s STRING")))
+      body.append('\n')
+      (0 until 50000).foreach(i => body.append(s"$i\ty\n"))
+      body.append("not-a-number\ty\n")
+      bad.write(body.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    } finally bad.close()
+    def names() = fs.listStatus(new Path(p)).map(_.getPath.getName).toSet
+    val before = names()
+    intercept[Exception](GraftLines.compact(p, 2, spark))
+    assert(names() == before,
+      s"a failed compact must leave no file behind: ${names() -- before}")
+  }
+}

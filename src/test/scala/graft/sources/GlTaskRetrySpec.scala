@@ -137,7 +137,7 @@ class GlTaskRetrySpec extends AnyFunSuite {
     fs.delete(new Path(p), true)
     fs.mkdirs(new Path(p))
     fs.create(new Path(p, GraftLines.VersionMarker), true).close()
-    val sf = GlStreamingWriterFactory(p, schema,
+    val sf = GlWriterFactory(p, schema,
       new SerializableConfiguration(hconf))
     // a CRASHED attempt of this same epoch got far enough to rename
     // its targets before the driver died: plant them — one under the
