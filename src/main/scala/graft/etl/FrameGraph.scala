@@ -122,12 +122,11 @@ object FrameGraph {
   def composePath(edges: DataFrame, from: Column, to: Column,
       maxHops: Int = 8, srcCol: String = "src", dstCol: String = "dst",
       matCol: String = "mat4x3",
-      broadcastEdges: Boolean = true,
       materializeFrontiers: Boolean = false): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
     val base = edges.select(col(srcCol).as("_fg_src"),
       col(dstCol).as("_fg_dst"), col(matCol).as("_fg_mat"))
-    val step = stepSide(edges, srcCol, dstCol, matCol, broadcastEdges)
+    val step = stepSide(edges, srcCol, dstCol, matCol)
     var frontier = materialize(base.filter(col("_fg_src") === from)
       .withColumn("hops", lit(1)), materializeFrontiers)
     var reached = frontier.filter(col("_fg_dst") === to)
@@ -160,16 +159,13 @@ object FrameGraph {
     if (on) frontier.repartition(col("_fg_dst")) else frontier
 
   /** A frame graph is metadata — dimension-sized next to the fact
-    * tables it orients — so the per-hop join defaults to broadcasting
-    * the edge side: the frontier never shuffles, and the one broadcast
-    * exchange is reused across every hop. Pass
-    * `broadcastEdges = false` for an edge table too large to ship. */
+    * tables it orients — so the per-hop join broadcasts the edge side:
+    * the frontier never shuffles, and the one broadcast exchange is
+    * reused across every hop. */
   private def stepSide(edges: DataFrame, srcCol: String, dstCol: String,
-      matCol: String, broadcastEdges: Boolean): DataFrame = {
-    val step = edges.select(col(srcCol).as("_e_src"),
-      col(dstCol).as("_e_dst"), col(matCol).as("_e_mat"))
-    if (broadcastEdges) broadcast(step) else step
-  }
+      matCol: String): DataFrame =
+    broadcast(edges.select(col(srcCol).as("_e_src"),
+      col(dstCol).as("_e_dst"), col(matCol).as("_e_mat")))
 
   /** Composed transfos from `root` to EVERY referential reachable in at
     * most `maxHops` — the batch shape: one pass materializes the whole
@@ -184,10 +180,9 @@ object FrameGraph {
   def composeFromRoot(edges: DataFrame, root: Column, maxHops: Int = 8,
       srcCol: String = "src", dstCol: String = "dst",
       matCol: String = "mat4x3",
-      broadcastEdges: Boolean = true,
       materializeFrontiers: Boolean = false): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
-    val step = stepSide(edges, srcCol, dstCol, matCol, broadcastEdges)
+    val step = stepSide(edges, srcCol, dstCol, matCol)
     // frontier reuse-vs-recompute tradeoff: see [[materialize]]
     var frontier = materialize(edges
       .select(col(srcCol).as("_fg_src"), col(dstCol).as("_fg_dst"),
@@ -234,8 +229,7 @@ object FrameGraph {
     * bound the frontier to V² whatever the fault.
     */
   def validateTree(edges: DataFrame, maxHops: Int = 8,
-      srcCol: String = "src", dstCol: String = "dst",
-      broadcastEdges: Boolean = true): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
     val e = edges.select(col(srcCol).as("_v_src"), col(dstCol).as("_v_dst"))
     val multi = e.groupBy(col("_v_dst"))
@@ -249,15 +243,12 @@ object FrameGraph {
     val selfLoop = e.filter(col("_v_src") === col("_v_dst"))
       .select(lit("self_loop").as("kind"), col("_v_src").as("node"))
       .distinct()
-    // same edge-side broadcast policy as composePath/composeFromRoot:
-    // frame graphs are metadata-sized so shipping the deduplicated edge
-    // set is the default, but a caller validating an edge table too
-    // large to collect must be able to opt into a shuffle join instead
-    // of OOMing the driver
+    // same edge-side broadcast as composePath/composeFromRoot: frame
+    // graphs are metadata-sized, so the deduplicated edge set ships
     val dedupEdges = e
       .select(col("_v_src").as("_s_src"), col("_v_dst").as("_s_dst"))
       .distinct()
-    val step = if (broadcastEdges) broadcast(dedupEdges) else dedupEdges
+    val step = broadcast(dedupEdges)
     // Cycle probe by path DOUBLING: R holds all reachable (origin, cur)
     // pairs with path length <= len; R ∪ (R ∘ R) lifts len to 2*len
     // because every intermediate length already exists in R, so

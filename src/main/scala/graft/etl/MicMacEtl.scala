@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
@@ -61,10 +62,22 @@ object MicMacEtl {
           StructField("b2", DoubleType))))))))))))
 
   /** Glob -> (value, file) whole-document frame: the default text
-    * source all three importers share. */
-  private def wholeText(spark: SparkSession, glob: String): DataFrame =
-    spark.read.option("wholetext", "true").text(glob)
+    * source all three importers share. The glob is expanded here and
+    * Spark reads the matched paths: given the pattern itself, Spark's
+    * `FileStreamSink.hasMetadata` stats it as a path and logs the
+    * FileNotFoundException with a stack trace on every import. Spark
+    * globs every path it is given, so a matched name's own glob
+    * characters are escaped. A glob that matches nothing goes to Spark
+    * unexpanded, which fails the import naming the path. */
+  private def wholeText(spark: SparkSession, glob: String): DataFrame = {
+    val p = new Path(glob)
+    val hits = Option(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .globStatus(p)).toSeq.flatten
+      .map(_.getPath.toString.replaceAll("""([{}\[\]*?\\])""", """\\$1"""))
+    spark.read.option("wholetext", "true")
+      .text((if (hits.isEmpty) Seq(glob) else hits): _*)
       .withColumn("file", input_file_name())
+  }
 
   /** Adapt an [[graft.sources.XmlManifest]]-shaped frame
     * (path, length, xml — readXml or readPacked output) to the

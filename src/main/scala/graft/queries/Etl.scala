@@ -129,7 +129,7 @@ object Etl extends QueryGroup {
       oracleTreeSql),
 
     QueryDef(
-      // Tree-consistency validation (added r4): the check an import
+      // Tree-consistency validation: the check an import
       // runs before trusting composePath — a transfo_tree snapshot
       // must be a forest. The edge set is the clean nation-key chain
       // 0->1->...->6 plus three injected faults: a back edge 3 -> 1
@@ -175,7 +175,7 @@ object Etl extends QueryGroup {
         |ORDER BY kind, node""".stripMargin)),
 
     QueryDef(
-      // Multi-hop BFS (added r7): min-hop distance from one seed over
+      // Multi-hop BFS: min-hop distance from one seed over
       // the customer–supplier co-purchase graph (edges = distinct
       // (o_custkey, l_suppkey) pairs, traversed both ways; nodes
       // encoded 2k / 2k+1 so the two key spaces can share one BIGINT
@@ -219,12 +219,11 @@ object Etl extends QueryGroup {
           // would recompute the round's join chain twice), and visited
           // stays a lazy union of checkpointed hops: lineage depth is
           // O(rounds) of plain scans, no re-execution anywhere.
-          // Checkpoints are LAZY (r16, guide §1.2): the hop count is
-          // fixed and nothing driver-side reads a round, so the one
-          // terminal action materializes each hop (and the edge list)
-          // exactly once into the checkpoint cache — 5 fewer
-          // driver-dispatched jobs than eager rounds, same lineage
-          // truncation, bit-identical hops.
+          // Checkpoints are LAZY: the hop count is fixed and nothing
+          // driver-side reads a round, so the one terminal action
+          // materializes each hop (and the edge list) exactly once into
+          // the checkpoint cache with no driver-dispatched job per
+          // round, same lineage truncation, bit-identical hops.
           val next = edges
             .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
             .select(col("dst").as("node")).distinct()
@@ -274,7 +273,7 @@ object Etl extends QueryGroup {
         |FROM v4 GROUP BY hop ORDER BY hop""".stripMargin)),
 
     QueryDef(
-      // Declarative data-quality audit (added r7): the gate a pipeline
+      // Declarative data-quality audit: the gate a pipeline
       // runs before trusting a new table drop, as a CHECK LIST compiled
       // to minimal passes (operators/DataChecks.scala) — all four
       // row-local checks fuse into ONE aggregate over ONE scan;
@@ -457,8 +456,8 @@ object Etl extends QueryGroup {
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
 
     QueryDef(
-      // CSV sink round trip (added r4, beside JDBC / JSON lines /
-      // partitioned parquet): integral/string columns only — CSV is a
+      // CSV sink round trip (beside JDBC / JSON lines / partitioned
+      // parquet): integral/string columns only — CSV is a
       // text format, so the round trip is exact for those and the
       // read-back aggregate must hash-match the source-table oracle.
       // Explicit schema on read (never inferSchema — FIXTURES.md rule).
@@ -483,7 +482,7 @@ object Etl extends QueryGroup {
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
     QueryDef(
-      // ORC sink round trip (added r4) — fifth sink format beside
+      // ORC sink round trip — fifth sink format beside
       // JDBC / JSON lines / CSV / partitioned parquet: ORC is the
       // other columnar container a warehouse migration meets, and the
       // write -> explicit-schema read -> aggregate loop proves the
@@ -508,7 +507,7 @@ object Etl extends QueryGroup {
         |FROM documents GROUP BY source ORDER BY source""".stripMargin)),
 
     QueryDef(
-      // DataSource V2 connector round trip (added r5): the engine's own
+      // DataSource V2 connector round trip: the engine's own
       // pluggable source (graft.sources.GraftLines), not a built-in
       // format. The write path runs task-parallel DataWriters with
       // truncate-on-overwrite; the read path is the part the query
@@ -543,7 +542,7 @@ object Etl extends QueryGroup {
         |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
     QueryDef(
-      // Manifest snapshots (added r5): reproducible versioned reads
+      // Manifest snapshots: reproducible versioned reads
       // over an APPEND-ONLY file log, without a table format — the
       // li3ds-datastore answer to "what did the table look like before
       // yesterday's append?". Each commit appends data files and
@@ -611,7 +610,7 @@ object Etl extends QueryGroup {
         |ORDER BY version, o_orderstatus""".stripMargin)),
 
     QueryDef(
-      // Shallow clone (added r7): q_etl_snapshot gives ONE table two
+      // Shallow clone: q_etl_snapshot gives ONE table two
       // versions; this gives TWO tables one storage — the Delta
       // SHALLOW CLONE dev/test-sandbox op. The clone is born as a
       // manifest-only copy (require() states the zero-copy contract
@@ -678,10 +677,10 @@ object Etl extends QueryGroup {
         |ORDER BY tbl DESC, o_orderstatus""".stripMargin)),
 
     QueryDef(
-      // Unreferenced-file GC (added r8 — the Delta VACUUM / Iceberg
-      // remove_orphan_files lifecycle op, completing the manifest
-      // family: snapshot gives versioned reads, clone gives shared
-      // storage, vacuum RECLAIMS it). A rewrite commit (here: the full
+      // Unreferenced-file GC (the Delta VACUUM / Iceberg
+      // remove_orphan_files lifecycle op of the manifest family:
+      // snapshot gives versioned reads, clone gives shared storage,
+      // vacuum RECLAIMS it). A rewrite commit (here: the full
       // table recompacted) supersedes v1's files in the manifest but
       // leaves their bytes on disk for time travel; vacuum deletes
       // exactly the on-disk files the CURRENT manifest does not
@@ -747,7 +746,7 @@ object Etl extends QueryGroup {
         |ORDER BY phase DESC, o_orderstatus""".stripMargin)),
 
     QueryDef(
-      // DSv2 AGGREGATE pushdown (added r5, beside q_source_dsv2's
+      // DSv2 AGGREGATE pushdown (beside q_source_dsv2's
       // filter/prune/limit surface): count/min/max/count(col) are
       // pushed into the graftlines source as a PARTIAL aggregation —
       // each file reader emits one pre-aggregated row per group and
@@ -1003,7 +1002,7 @@ object Etl extends QueryGroup {
         |ORDER BY o_orderstatus""".stripMargin)),
 
     QueryDef(
-      // Z-order layout (added r5): the multi-dimensional data-layout
+      // Z-order layout: the multi-dimensional data-layout
       // primitive — interleave the low 16 bits of customer key and
       // order epoch-day into a Morton code, range-partition + sort the
       // write on it. Files then cover compact z-ranges, so min/max
@@ -1020,15 +1019,13 @@ object Etl extends QueryGroup {
           .withColumn("ck", expr("o_custkey & 65535"))
           .withColumn("dy",
             expr("(unix_micros(o_orderdate) div 86400000000) & 65535"))
-          // r16 (guide §4.1 — codegen-friendly expressions): the z
-          // value was a 16-step interpreted higher-order fold, and
-          // repartitionByRange's sampling pass evaluates it a second
-          // time. The closed form below is the standard Morton
-          // bit-spread (each 16-bit input spread to even bits via 4
-          // shift-or-mask rounds, dy's copy shifted up one) — pure
-          // BIGINT shifts/masks, whole-stage codegen'd, and provably
-          // the same integer: both place bit i of ck at bit 2i and
-          // bit i of dy at bit 2i+1.
+          // The z value is evaluated twice (repartitionByRange's
+          // sampling pass and the write), so it is the closed-form
+          // Morton bit-spread, not an interpreted higher-order fold:
+          // each 16-bit input spread to even bits via 4 shift-or-mask
+          // rounds, dy's copy shifted up one — pure BIGINT shifts/masks
+          // that whole-stage codegen compiles, placing bit i of ck at
+          // bit 2i and bit i of dy at bit 2i+1.
           .withColumn("zck", expr(
             """((ck | shiftleft(ck, 8)) & 16711935)""")) // 0x00FF00FF
           .withColumn("zck", expr(
@@ -1080,8 +1077,8 @@ object Etl extends QueryGroup {
         |FROM z GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
 
     QueryDef(
-      // Connector-native compaction on a VERSIONED table (added r8 —
-      // q_etl_compaction rewrites a parquet directory by hand; this is
+      // Connector-native compaction on a VERSIONED table
+      // (q_etl_compaction rewrites a parquet directory by hand; this is
       // the OPTIMIZE lifecycle op of the engine's own table format,
       // GraftLines.compact): a 16-way fragmented versioned graftlines
       // table compacts to <= 3 files through a distributed
@@ -1091,8 +1088,9 @@ object Etl extends QueryGroup {
       // it, and a crash mid-compact leaves the table exactly as it
       // was. require()s pin the physical contract (file counts, old
       // generation intact); the oracle pins the data surviving
-      // bit-for-bit. Stats ride along re-keyed, so pruning keeps
-      // working on the compacted layout.
+      // bit-for-bit. The rewrite's stats lines ride its commit
+      // messages into `_graft_stats`, so pruning keeps working on the
+      // compacted layout.
       "q_etl_table_compact",
       (s, d) => {
         val p = graft.GraftTmp.dir("gl_compact")
@@ -1133,7 +1131,7 @@ object Etl extends QueryGroup {
         |ORDER BY o_orderstatus""".stripMargin)),
 
     QueryDef(
-      // Small-file compaction (added r4): the operational sibling of
+      // Small-file compaction: the operational sibling of
       // XmlManifest's container-packing answer — a 64-way fragmented
       // parquet directory is rewritten into <= 4 splittable files with
       // coalesce (a partition-merging NARROW dependency: no shuffle, no
@@ -1169,7 +1167,7 @@ object Etl extends QueryGroup {
         |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
 
     QueryDef(
-      // Dynamic partition overwrite (added r4): the incremental-refresh
+      // Dynamic partition overwrite: the incremental-refresh
       // primitive — a daily pipeline rewrites ONLY the partitions
       // present in the incoming batch, leaving every other partition's
       // files untouched (no read-modify-write of the whole table, no
@@ -1207,8 +1205,8 @@ object Etl extends QueryGroup {
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     QueryDef(
-      // STATIC partition overwrite statement (added r8 —
-      // q_etl_partition_overwrite proves DYNAMIC mode, where the
+      // STATIC partition overwrite statement
+      // (q_etl_partition_overwrite proves DYNAMIC mode, where the
       // replaced partitions are whatever the data contains; the
       // `INSERT OVERWRITE … PARTITION (col = literal)` STATEMENT pins
       // the replaced partition in the QUERY TEXT, the backfill idiom:
@@ -1255,7 +1253,7 @@ object Etl extends QueryGroup {
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     QueryDef(
-      // Typed Dataset lane in batch (added r4): groupByKey +
+      // Typed Dataset lane in batch: groupByKey +
       // flatMapGroups with case-class-free tuple Encoders — the
       // sorted-iterator-per-key shape for per-key logic that outgrows
       // window functions (multi-pass state machines, custom emission).
@@ -1373,7 +1371,7 @@ object Etl extends QueryGroup {
         |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin)),
 
     QueryDef(
-      // CDC MERGE (added r5): apply a keyed changelog (upserts +
+      // CDC MERGE: apply a keyed changelog (upserts +
       // deletes, latest-wins by sequence number) onto a snapshot — the
       // table-format merge primitive (Delta MERGE / Hudi upsert /
       // "merge-on-read compaction") every incremental 100 TB pipeline
@@ -1445,7 +1443,7 @@ object Etl extends QueryGroup {
         |ORDER BY o_orderstatus""".stripMargin)),
 
     QueryDef(
-      // Schema evolution (added r5): a long-lived 100 TB table is
+      // Schema evolution: a long-lived 100 TB table is
       // written by v1 jobs for months before v2 adds a column — the
       // reader must merge parquet footers across generations and
       // null-fill the old files, or the table is unreadable without a
@@ -1496,7 +1494,7 @@ object Etl extends QueryGroup {
         |FROM u GROUP BY flag ORDER BY flag""".stripMargin)),
 
     QueryDef(
-      // Right-to-be-forgotten delete cascade (added r7): the data-
+      // Right-to-be-forgotten delete cascade: the data-
       // lifecycle op GDPR/CCPA forces on every warehouse — a deletion
       // request set (here: customers whose md5(custkey) lands in a 5%
       // hash slice, the fixture stand-in for an erasure queue)
@@ -1572,7 +1570,7 @@ object Etl extends QueryGroup {
         |ORDER BY b.o_orderstatus""".stripMargin)),
 
     QueryDef(
-      // Observation metrics (added r7): the `df.observe(...)` API — a
+      // Observation metrics: the `df.observe(...)` API — a
       // pipeline's audit counters (row count, exact sum, violation
       // tally) collected ON the main action's single pass, the
       // production alternative to re-scanning the table per metric
@@ -1779,7 +1777,7 @@ object Etl extends QueryGroup {
         |ORDER BY change, o_orderstatus""".stripMargin)),
 
     QueryDef(
-      // Triangle counting (added r8): the graph family's third
+      // Triangle counting: the graph family's third
       // primitive after reachability (q_graph_bfs_hops) and
       // componenthood (q_dedup_cluster*) — the motif count behind
       // clustering coefficients and community density. Node space:
@@ -1848,7 +1846,7 @@ object Etl extends QueryGroup {
         |FROM ne, w, t""".stripMargin)),
 
     QueryDef(
-      // PageRank (added r8): the canonical iterative graph rank, run
+      // PageRank: the canonical iterative graph rank, run
       // on the same bidirectional customer–supplier co-purchase graph
       // as q_graph_bfs_hops. The hash-match contract forbids floating
       // ranks (per-partition summation order would change low bits
@@ -1895,12 +1893,10 @@ object Etl extends QueryGroup {
         val teleport = 15L * r0u / 100L
         var ranks = deg.select(col("src").as("node"), lit(r0u).as("r"))
         for (_ <- 1 to 3) {
-          // r16 optimization (guide §1.2 step 1 / §2.3): contribution
-          // r div deg depends only on the SOURCE node, so compute it on
-          // the node-sized ranks ⋈ deg join FIRST and hang the single
-          // edge-sized join off that — the old edges ⋈ deg ⋈ ranks
-          // chain dragged the 2|E| edge table through TWO join stages
-          // per round. Same inner joins on the same unique keys, same
+          // Contribution r div deg depends only on the SOURCE node, so
+          // it is computed on the node-sized ranks ⋈ deg join FIRST and
+          // the single edge-sized join hangs off that: the 2|E| edge
+          // table goes through ONE join stage per round, not two. Same inner joins on the same unique keys, same
           // BIGINT ops, bit-identical ranks. Checkpoints are LAZY: the
           // round count is fixed (no convergence probe reads them), so
           // eager mode's separate per-round materialization job was
@@ -1961,9 +1957,8 @@ object Etl extends QueryGroup {
 
     QueryDef(
       // Label-propagation community detection, 3 synchronous rounds
-      // (added r8 — completes the graph family: componenthood = CC,
-      // reachability = BFS, centrality = PageRank, motifs = triangles,
-      // COMMUNITIES = LPA). Textbook LPA is nondeterministic (random
+      // (the graph family: componenthood = CC, reachability = BFS,
+      // centrality = PageRank, motifs = triangles, COMMUNITIES = LPA). Textbook LPA is nondeterministic (random
       // visit order, arbitrary ties) — unusable under a hash-match
       // contract — so this is the deterministic synchronous variant:
       // every node simultaneously adopts the label most frequent among
@@ -1981,7 +1976,7 @@ object Etl extends QueryGroup {
       // rounds in identical BIGINT arithmetic.
       "q_graph_label_prop",
       (s, d) => {
-        // Packing bound (r16 review): label ids ride in the LOW bits as
+        // Packing bound: label ids ride in the LOW bits as
         // BIG-1-label, so a node id >= BIG silently corrupts the argmax
         // (the subtraction goes negative and MAX ranks garbage). 2^22
         // held only to ~4M nodes — a production graph clears that
@@ -2012,8 +2007,8 @@ object Etl extends QueryGroup {
         // min(neighbor) — ONE aggregate instead of a join + two aggs.
         // Not a data assumption: it holds by construction of l0. The
         // oracle keeps the generic form; the results are identical.
-        // Checkpoints are LAZY (r16, guide §1.2): the maxId gate right
-        // below is the action that fills round 1's checkpoint cache
+        // Checkpoints are LAZY: the maxId gate right below is the
+        // action that fills round 1's checkpoint cache
         // (and the edge list riding inside its plan), and rounds 2-3
         // have no driver-side read at all. Lazy skips eager's separate
         // materialization job per round — under AQE the checkpoint call

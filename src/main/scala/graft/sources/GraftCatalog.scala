@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, NamespaceChange, SupportsNamespaces, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
-import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -52,8 +52,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * column in their header and read uniform NULL through the catalog
   * (`nullFillMissing` in [[GlReader]]). Deliberately unsupported,
   * loudly: every other ALTER (drop/rename/retype/reorder would
-  * re-interpret bytes on disk), partitioned CREATE (the format has no
-  * partition-directory reader yet), adopting a directory that already
+  * re-interpret bytes on disk), a `PARTITIONED BY` other than the two
+  * key layouts of [[GlKey]], adopting a directory that already
   * holds `.gl` files or `_graft*` markers, and rename across
   * namespaces on stores where directory rename is not atomic.
   *
@@ -204,66 +204,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       pinnedVersion = Some(version.toInt))
   }
 
-  /** `PARTITIONED BY` accepts exactly the two layouts the format can
-    * honour — `(col)` identity partitioning (one file per VALUE,
-    * stats-recovered — storage-partitioned joins on low-cardinality
-    * keys) and `(bucket(n, col))` hash buckets (one file per BUCKET,
-    * name-tagged — the same joins on arbitrary keys, resolved through
-    * this catalog's own bucket function). Anything else is rejected
-    * loudly. */
-  private def parsePartitioning(schema: StructType,
-      partitions: Array[Transform]): (Option[String], Option[(String, Int)]) = {
-    if (partitions.isEmpty) return (None, None)
-    require(partitions.length == 1,
-      "graftlines catalog: at most one partition transform is supported")
-    def colOf(r: NamedReference): String = {
-      require(r.fieldNames.length == 1,
-        "graftlines catalog: nested partition columns are not supported")
-      val c = r.fieldNames()(0)
-      require(schema.fieldNames.contains(c),
-        s"graftlines catalog: partition column '$c' is not in the schema")
-      c
-    }
-    partitions(0) match {
-      case t if t.name == "bucket" =>
-        val args = t.arguments()
-        require(args.length == 2, "bucket(numBuckets, col) expects 2 args")
-        val n = args(0) match {
-          case l: org.apache.spark.sql.connector.expressions.Literal[_]
-              if l.value().isInstanceOf[Int] => l.value().asInstanceOf[Int]
-          case other => throw new IllegalArgumentException(
-            s"bucket count must be an int literal, got $other")
-        }
-        require(n >= 1, s"bucket count must be positive: $n")
-        val c = args(1) match {
-          case r: NamedReference => colOf(r)
-          case other => throw new IllegalArgumentException(
-            s"bucket column must be a column reference, got $other")
-        }
-        val dt = schema.fields(schema.fieldIndex(c)).dataType
-        require(dt == org.apache.spark.sql.types.LongType
-          || dt == org.apache.spark.sql.types.IntegerType,
-          s"graftlines catalog: bucket column '$c' must be BIGINT/INT, " +
-            s"got $dt")
-        (None, Some((c, n)))
-      case t if t.name == "identity" =>
-        val c = colOf(t.references()(0))
-        require(GraftLines.statsEligible(
-          schema.fields(schema.fieldIndex(c)).dataType),
-          s"graftlines catalog: identity partition column '$c' must be an " +
-            "ordered non-string type (stats recover the per-file value)")
-        (Some(c), None)
-      case other => throw new UnsupportedOperationException(
-        s"graftlines catalog: unsupported partition transform $other — " +
-          "only (col) and (bucket(n, col)) are supported")
-    }
-  }
-
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform],
       properties: util.Map[String, String]): Table = {
     (ident.namespace() :+ ident.name()).foreach(checkCreatable)
-    val (pcol, bspec) = parsePartitioning(schema, partitions)
+    // `PARTITIONED BY (col)` or `(bucket(n, col))`: see GlKey
+    val key = GlKey.parse(partitions)
+    key.foreach(_.check(schema, "graftlines catalog"))
     GraftLines.header(schema) // loudly reject unstorable types up front
     // LOCATION/EXTERNAL would silently land data at the warehouse path
     // instead of where the user declared — external-location adoption
@@ -367,9 +314,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // publishing (see GraftLines.VersionMarker).
     if ("true".equalsIgnoreCase(properties.getOrDefault("versioned", "")))
       fs.create(new Path(dir, GraftLines.VersionMarker), true).close()
-    pcol.foreach(GraftLines.writePartitionCol(dir.toString, _, conf))
-    bspec.foreach { case (c, n) =>
-      GraftLines.writeBucketSpec(dir.toString, c, n, conf) }
+    key.foreach(GlKey.writeKey(dir.toString, _, conf))
     new GlTable(dir.toString, schema, nullFillMissing = true)
   }
 

@@ -66,6 +66,9 @@ import org.apache.spark.util.SerializableConfiguration
   *  - **File skipping**: writers accumulate per-file column stats into
   *    the `_graft_stats` manifest; `planInputPartitions` prunes files
   *    whose min/max prove no row can match the pushed filters.
+  *  - **Keyed tables**: identity-partitioned or bucketed directories
+  *    ([[GlKey]]) land one key per file and scan with
+  *    KeyGroupedPartitioning, so co-keyed tables join without exchange.
   *
   * Remaining honest limit (documented at [[GraftLines.publish]]): the
   * commit's rename loop is atomic per file, not across files, and two
@@ -188,56 +191,13 @@ object GraftLines {
   val VersionMarker = "_graft_versioned"
   val GenPrefix = "_graft_gen."
 
-  /** Identity partitioning as a table property (the Hive/Iceberg
-    * `PARTITIONED BY (col)` posture): the `_graft_partcol` marker
-    * holds the partition column's name. Partitioned writes route each
-    * task's rows into ONE FILE PER PARTITION VALUE (the engine first
-    * clusters rows by the column — see [[GlWrite]]), so every data
-    * file provably holds a single partition value, recoverable from
-    * its stats line (min == max). That single-value-per-file property
-    * is what lets the scan report [[org.apache.spark.sql.connector
-    * .read.partitioning.KeyGroupedPartitioning]] and two co-partitioned
-    * tables join with ZERO exchange — the storage-partitioned join.
-    * Restricted to stats-eligible (ordered, non-string) columns: the
-    * stats manifest is the value-recovery mechanism, and string
-    * min/max ordering is exactly what the connector refuses to trust. */
+  /** Marker of an identity-partitioned table: the column's name on one
+    * line. One of the two persisted forms of a [[GlKey]]. */
   val PartColMarker = "_graft_partcol"
 
-  /** Hash-BUCKET partitioning (the scalable sibling of identity
-    * partitioning: identity needs few distinct values, buckets cover
-    * arbitrary keys — orders⋈customer on custkey with zero exchange).
-    * The `_graft_buckets` marker holds `col \t numBuckets`; the bucket
-    * function is OURS — `((v % n) + n) % n` on the column's long/int
-    * value — published to Spark through [[GraftCatalog]]'s
-    * FunctionCatalog so both the write distribution and the reported
-    * read partitioning resolve to the same canonical function. Bucket
-    * ids ride FILE NAMES (`…-b<id>.gl`): integers need no escaping,
-    * and every data file lands through [[writerFactory]], so the names
-    * survive every commit path. */
+  /** Marker of a bucketed table: `col \t numBuckets` on one line. One of
+    * the two persisted forms of a [[GlKey]]. */
   val BucketMarker = "_graft_buckets"
-
-  private[sources] def bucketSpec(dir: String,
-      conf: org.apache.hadoop.conf.Configuration): Option[(String, Int)] = {
-    val p = new Path(new Path(dir), BucketMarker)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val br = new BufferedReader(new InputStreamReader(fs.open(p), UTF_8))
-      try Option(br.readLine()).map(_.trim.split('\t')).collect {
-        case Array(c, n) if n.toIntOption.exists(_ >= 1) => (c, n.toInt)
-      }
-      finally br.close()
-    }
-  }
-
-  private[sources] def writeBucketSpec(dir: String, col: String, n: Int,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val p = new Path(new Path(dir), BucketMarker)
-    val fs = p.getFileSystem(conf)
-    fs.mkdirs(new Path(dir))
-    val w = new OutputStreamWriter(fs.create(p, true), UTF_8)
-    try { w.write(s"$col\t$n"); w.write('\n') } finally w.close()
-  }
 
   /** The one bucket function, shared by writer routing and the
     * FunctionCatalog-published form: non-negative value mod n. */
@@ -267,21 +227,14 @@ object GraftLines {
     * (made here if missing): appends and overwrites ([[GlWrite]]),
     * row-level rewrites ([[GlReplaceWrite]]), streaming epochs
     * ([[GlStreamingWrite]], whose names carry `queryId`) and
-    * [[compact]]. With an identity partition column or a bucket spec
-    * each task fans its rows out to one file per value or bucket id
-    * ([[GlLayout]]); otherwise a task lands one file. */
+    * [[compact]]. On a keyed table each task fans its rows out to one
+    * file per key ([[GlFanOutWriter]]); otherwise a task lands one file. */
   private[sources] def writerFactory(dir: String, schema: StructType,
-      partitionCol: Option[String], buckets: Option[(String, Int)],
-      queryId: String = queryTag("")): GlWriterFactory = {
+      key: Option[GlKey], queryId: String = queryTag("")): GlWriterFactory = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val p = new Path(dir)
     p.getFileSystem(conf).mkdirs(p)
-    val layout = (partitionCol, buckets) match {
-      case (Some(c), _) => Some(GlLayout(schema.fieldIndex(c), None))
-      case (_, Some((c, n))) => Some(GlLayout(schema.fieldIndex(c), Some(n)))
-      case _ => None
-    }
-    GlWriterFactory(dir, schema, new SerializableConfiguration(conf), layout,
+    GlWriterFactory(dir, schema, new SerializableConfiguration(conf), key,
       queryId)
   }
 
@@ -298,32 +251,6 @@ object GraftLines {
   private[sources] def bucketIdOf(baseName: String): Option[Int] = {
     val m = BucketNamePattern.matcher(baseName)
     if (m.matches()) m.group(1).toIntOption else None
-  }
-
-  private[sources] def partitionCol(dir: String,
-      conf: org.apache.hadoop.conf.Configuration): Option[String] = {
-    val p = new Path(new Path(dir), PartColMarker)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val br = new BufferedReader(new InputStreamReader(fs.open(p), UTF_8))
-      try Option(br.readLine()).map(_.trim).filter(_.nonEmpty)
-      finally br.close()
-    }
-  }
-
-  private[sources] def writePartitionCol(dir: String, col: String,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val p = new Path(new Path(dir), PartColMarker)
-    val fs = p.getFileSystem(conf)
-    val existing = partitionCol(dir, conf)
-    require(existing.forall(_ == col),
-      s"graftlines: $dir is already partitioned by " +
-        s"'${existing.getOrElse("")}' — cannot repartition to '$col'")
-    if (existing.isEmpty) {
-      val w = new OutputStreamWriter(fs.create(p, true), UTF_8)
-      try { w.write(col); w.write('\n') } finally w.close()
-    }
   }
 
   private[sources] def isVersioned(dir: String,
@@ -918,24 +845,31 @@ object GraftLines {
     * instead of being dropped from it. On a versioned table the
     * fragmented generation stays readable until [[expireVersions]].
     * Returns (files before, files after); no-op when already within
-    * budget. */
+    * budget: at most `maxFiles` files, or on a keyed table at most
+    * `maxFiles` files per key with every file proving its key. */
   def compact(dir: String, maxFiles: Int,
       spark: SparkSession): (Int, Int) = {
     require(maxFiles >= 1, "compact must keep at least one file")
     val conf = spark.sparkContext.hadoopConfiguration
     val snapshotGen = genVersions(dir, conf).lastOption.getOrElse(0)
     val before = resolveDataFileStatuses(dir, conf, None).map(_._1)
-    if (before.size <= maxFiles) return (before.size, before.size)
+    val key = GlKey.keyOf(dir, conf)
     // the union of the live files' headers, null-filled: on a
     // schema-evolved table any one header would drop or fail a column.
     // First-appearance order keeps a uniform table's schema as it is.
-    val unionSchema = before.foldLeft(new StructType()) { (acc, f) =>
+    lazy val unionSchema = before.foldLeft(new StructType()) { (acc, f) =>
       headerSchemaOfFile(f, conf).fields.foldLeft(acc) { (a, fld) =>
         if (a.fieldNames.contains(fld.name)) a else a.add(fld)
       }
     }
-    val factory = writerFactory(dir, unionSchema, partitionCol(dir, conf),
-      bucketSpec(dir, conf))
+    val withinBudget = before.size <= maxFiles || key.exists { k =>
+      lazy val stats = readStats(dir, conf, unionSchema)
+      val keys = before.map(f => k.fileKey(new Path(f).getName, stats))
+      keys.forall(_.isDefined) &&
+        keys.groupBy(identity).values.forall(_.size <= maxFiles)
+    }
+    if (withinBudget) return (before.size, before.size)
+    val factory = writerFactory(dir, unionSchema, key)
     val qe = spark.read.schema(unionSchema).option(NullFillOption, "true")
       .format("graftlines").load(dir).coalesce(maxFiles).queryExecution
     val msgs = scala.collection.mutable.ArrayBuffer.empty[WriterCommitMessage]
@@ -1660,7 +1594,7 @@ private[sources] object GlFilters {
   * [[GraftLines.publish]]): `_graft_stats` and Spark's runtime group
   * filter keep the rewrite to the files that hold a match, so a GDPR
   * delete keyed on a user id rewrites only those files, and the
-  * replacement files keep the table's bucket or partition layout.
+  * replacement files keep the table's [[GlKey]].
   * `TRUNCATE TABLE` and an unconditional `DELETE` are
   * [[truncateTable]]. */
 private[sources] class GlTable(path: String, tableSchema: StructType,
@@ -1748,36 +1682,24 @@ private[sources] class GlTable(path: String, tableSchema: StructType,
     require(pinnedVersion.isEmpty,
       s"graftlines: cannot write to $path pinned at VERSION AS OF " +
         s"${pinnedVersion.getOrElse(-1)} — writes go to the live table")
-    // `.option("partitionColumn", col)` (or the table's existing
-    // `_graft_partcol` marker): identity-partitioned writes — rows
-    // cluster by the column and each task lands ONE FILE PER VALUE,
-    // the invariant behind storage-partitioned joins (see the marker's
-    // scaladoc in [[GraftLines]]).
+    // `.option("partitionColumn", col)` keys a path write by identity
+    // partitioning; without it the write takes the directory's own
+    // key ([[GlKey]])
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val bspec = GraftLines.bucketSpec(path, conf)
-    bspec.foreach { case (c, _) =>
-      require(info.schema().fieldNames.contains(c),
-        s"graftlines: bucket column '$c' is not in the write schema")
-    }
-    val pcol = Option(info.options.get("partitionColumn")).filter(_.nonEmpty)
-      .orElse(GraftLines.partitionCol(path, conf))
-    require(pcol.isEmpty || bspec.isEmpty,
-      "graftlines: a table cannot be both identity- and bucket-partitioned")
-    pcol.foreach { c =>
-      val f = info.schema().fields.find(_.name == c).getOrElse(
-        throw new IllegalArgumentException(
-          s"graftlines: partitionColumn '$c' is not in the write schema "
-            + info.schema().fieldNames.mkString("[", ", ", "]")))
-      require(GraftLines.statsEligible(f.dataType),
-        s"graftlines: partitionColumn '$c' must be an ordered non-string "
-          + s"type (stats recover the per-file value); got ${f.dataType}")
+    val stored = GlKey.keyOf(path, conf)
+    val key = Option(info.options.get("partitionColumn")).filter(_.nonEmpty)
+      .map(GlKey.Identity(_): GlKey).orElse(stored)
+    key.foreach { k =>
+      GlKey.requireCompatible(path, stored, k)
+      k.check(info.schema(), "graftlines")
     }
     // `.option("clusterBy", col)`: the write REQUESTS a range
     // distribution + sort on that column (see GlWrite), so files land
     // with tight, disjoint stats ranges and later scans prune sharply
     val cb = Option(info.options.get("clusterBy")).filter(_.nonEmpty)
-    require(cb.isEmpty || pcol.isEmpty,
-      "graftlines: clusterBy and partitionColumn are mutually exclusive")
+    require(cb.isEmpty || key.isEmpty,
+      "graftlines: clusterBy and partitionColumn are mutually exclusive " +
+        s"(the write is keyed by '${key.getOrElse("")}')")
     cb.foreach { c =>
       require(info.schema().fieldNames.contains(c),
         s"graftlines: clusterBy column '$c' is not in the write schema " +
@@ -1791,7 +1713,7 @@ private[sources] class GlTable(path: String, tableSchema: StructType,
         s"graftlines: clusterPartitions must be a positive int, got '$v'")
       v.toInt
     }
-    new GlWriteBuilder(path, info.schema(), cb, cp, pcol, bspec,
+    new GlWriteBuilder(path, info.schema(), cb, cp, key,
       queryId = info.queryId())
   }
 
@@ -1899,7 +1821,7 @@ private[sources] class GlGroupScanBuilder(op: GlRowLevelOperation,
 
 /** Write side of a group-based rewrite: staged task writers through
   * the table's own layout ([[GraftLines.writerFactory]] with its
-  * `_graft_partcol`/`_graft_buckets` markers), and a
+  * [[GlKey]]), and a
   * [[GraftLines.publish]] that replaces the files the paired scan
   * planned. Rows need no clustering first: the fan-out writer gives
   * each key its own file, which is all the keyed scan asks. On a
@@ -1913,11 +1835,9 @@ private[sources] class GlReplaceWrite(path: String, schema: StructType,
   override def toBatch: BatchWrite = this
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    GraftLines.writerFactory(path, schema,
-      GraftLines.partitionCol(path, conf), GraftLines.bucketSpec(path, conf))
-  }
+      info: PhysicalWriteInfo): DataWriterFactory =
+    GraftLines.writerFactory(path, schema, GlKey.keyOf(path,
+      SparkSession.active.sparkContext.hadoopConfiguration))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     GraftLines.publish(path,
@@ -2011,9 +1931,7 @@ private[sources] class GlScanBuilder(path: String, schema: StructType,
     val hconf = SparkSession.active.sparkContext.hadoopConfiguration
     GlScan(path, required, pushed, limit, agg,
       schema, nullFillMissing, versionAsOf = versionAsOf,
-      partCol = GraftLines.partitionCol(path, hconf),
-      buckets = GraftLines.bucketSpec(path, hconf),
-      excludeFilesOf = excludeFilesOf)
+      key = GlKey.keyOf(path, hconf), excludeFilesOf = excludeFilesOf)
   }
 }
 
@@ -2041,11 +1959,9 @@ case class GlScan(path: String, required: StructType,
     /** Time travel: plan this committed generation instead of the
       * latest (versioned tables only — see GraftLines.VersionMarker). */
     versionAsOf: Option[Int] = None,
-    /** The table's identity-partition column (`_graft_partcol`), when
-      * declared — enables KeyGroupedPartitioning reporting below. */
-    partCol: Option[String] = None,
-    /** Bucket partitioning (`_graft_buckets`): (column, numBuckets). */
-    buckets: Option[(String, Int)] = None,
+    /** The table's key, when it has one: enables KeyGroupedPartitioning
+      * reporting below. */
+    key: Option[GlKey] = None,
     /** Change-feed file delta: plan only files NOT listed in this
       * generation's manifest (option `excludeFilesOfVersion` — see
       * [[GlTable.newScanBuilder]] for the correctness argument). */
@@ -2210,63 +2126,35 @@ case class GlScan(path: String, required: StructType,
       s"PushedAggregation: ${aggSpec.getOrElse("none")}" +
       excludeFilesOf.fold("")(m => s", ExcludeFilesOfVersion: $m")
 
-  /** Identity-partitioned planning: when the table declares a
-    * partition column AND every surviving file's stats prove it holds
-    * exactly one non-null value (min == max, nulls == 0), the scan can
-    * key every split by that value and report KeyGroupedPartitioning —
-    * the storage-partitioned-join contract. Any file that cannot prove
-    * single-valuedness (pre-partitioning data, a damaged manifest)
-    * degrades the WHOLE scan to the ordinary path:
-    * correctness never rides on the grouping, only the exchange-free
-    * join plan does. Row-level-op scans (`_file` in the output),
-    * aggregate/limit pushdown scans keep the ordinary path too. */
+  /** Keyed planning: when the table has a [[GlKey]] AND every surviving
+    * file proves the one key it holds ([[GlKey.fileKey]]), the scan
+    * keys every split by it and reports KeyGroupedPartitioning — the
+    * storage-partitioned-join contract. Any file that cannot prove its
+    * key (pre-keying data, a damaged manifest, a bucket id out of
+    * range) degrades the WHOLE scan to the ordinary path: correctness
+    * never rides on the grouping, only the exchange-free join plan
+    * does. Row-level-op scans (`_file` in the output), aggregate/limit
+    * pushdown scans keep the ordinary path too. */
   private def keyedEligible: Boolean =
     aggSpec.isEmpty && pushedLimit.isEmpty && groupPrune.isEmpty &&
       onPlan.isEmpty && !required.fieldNames.contains(GraftLines.FileCol)
 
-  @transient private lazy val keyedPlan: Option[Seq[(String, Long, Any)]] = {
-    if (!keyedEligible) None
-    else buckets match {
-      case Some((_, n)) =>
-        // bucket id rides the file name — every planned file must carry
-        // one IN RANGE [0, n), else the whole scan degrades
-        // (pre-bucketing data, or files copied in from a table bucketed
-        // with a different n: an id >= n is a KeyGroupedPartitioning
-        // key the registered bucket function can never produce, so it
-        // must degrade like every other unprovable layout)
-        val keyed = statsPruned.map { case (f, len) =>
-          GraftLines.bucketIdOf(new Path(f).getName)
-            .filter(b => b >= 0 && b < n)
-            .map(b => (f, len, java.lang.Integer.valueOf(b): Any))
-        }
-        if (keyed.nonEmpty && keyed.forall(_.isDefined)) Some(keyed.flatten)
-        else None
-      case None => partCol.flatMap { pc =>
-        val keyed = statsPruned.map { case (f, len) =>
-          statsCache.get(new Path(f).getName).flatMap(_.cols.get(pc)).collect {
-            case GlColStats(0, mn, mx) if mn != null && mn == mx =>
-              (f, len, mn)
-          }
-        }
-        if (keyed.nonEmpty && keyed.forall(_.isDefined)) Some(keyed.flatten)
-        else None
+  @transient private lazy val keyedPlan: Option[Seq[(String, Long, Any)]] =
+    key.filter(_ => keyedEligible).flatMap { k =>
+      val keyed = statsPruned.map { case (f, len) =>
+        k.fileKey(new Path(f).getName, statsCache).map((f, len, _))
       }
+      if (keyed.nonEmpty && keyed.forall(_.isDefined)) Some(keyed.flatten)
+      else None
     }
-  }
 
   override def outputPartitioning():
       org.apache.spark.sql.connector.read.partitioning.Partitioning =
     keyedPlan match {
       case Some(kf) =>
-        val expr = buckets match {
-          case Some((c, n)) =>
-            org.apache.spark.sql.connector.expressions.Expressions.bucket(n, c)
-          case None =>
-            org.apache.spark.sql.connector.expressions.Expressions
-              .identity(partCol.get)
-        }
         new org.apache.spark.sql.connector.read.partitioning
-          .KeyGroupedPartitioning(Array(expr), kf.map(_._3).distinct.size)
+          .KeyGroupedPartitioning(Array(key.get.transform),
+            kf.map(_._3).distinct.size)
       case None =>
         new org.apache.spark.sql.connector.read.partitioning
           .UnknownPartitioning(0)
@@ -2967,14 +2855,12 @@ private[sources] class GlAggReader(file: String, tableSchema: StructType,
 
 private[sources] class GlWriteBuilder(path: String, schema: StructType,
     clusterBy: Option[String] = None, clusterParts: Option[Int] = None,
-    partitionCol: Option[String] = None,
-    bucketSpec: Option[(String, Int)] = None,
-    queryId: String = "")
+    key: Option[GlKey] = None, queryId: String = "")
     extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write = new GlWrite(path, schema, doTruncate,
-    clusterBy, clusterParts, partitionCol, bucketSpec, queryId)
+    clusterBy, clusterParts, key, queryId)
 }
 
 /** Batch append and overwrite: task writers stage, and the job commit
@@ -2982,9 +2868,7 @@ private[sources] class GlWriteBuilder(path: String, schema: StructType,
   * at commit time, not before the tasks launch). */
 private[sources] class GlWrite(path: String, schema: StructType,
     truncate: Boolean, clusterBy: Option[String] = None,
-    clusterParts: Option[Int] = None,
-    partitionCol: Option[String] = None,
-    bucketSpec: Option[(String, Int)] = None,
+    clusterParts: Option[Int] = None, key: Option[GlKey] = None,
     /** LogicalWriteInfo.queryId — the streaming query's STABLE id
       * (same across restarts from one checkpoint), the idempotence
       * scope of the epoch ledger. Batch writes never use it. */
@@ -3015,18 +2899,11 @@ private[sources] class GlWrite(path: String, schema: StructType,
 
   override def requiredDistribution():
       org.apache.spark.sql.connector.distributions.Distribution =
-    if (bucketSpec.nonEmpty)
-      // bucket partitioning: co-locate each bucket in one task; the
-      // transform resolves through GraftCatalog's FunctionCatalog
+    if (key.nonEmpty)
+      // co-locate each key in one task -> one file per key table-wide;
+      // a bucket transform resolves through GraftCatalog's FunctionCatalog
       org.apache.spark.sql.connector.distributions.Distributions.clustered(
-        Array(org.apache.spark.sql.connector.expressions.Expressions
-          .bucket(bucketSpec.get._2, bucketSpec.get._1)))
-    else if (partitionCol.nonEmpty)
-      // identity partitioning: co-locate equal values so a partition
-      // value lands in ONE task -> one file per value table-wide
-      org.apache.spark.sql.connector.distributions.Distributions.clustered(
-        Array(org.apache.spark.sql.connector.expressions.Expressions
-          .identity(partitionCol.get)))
+        Array(key.get.transform))
     else if (clusterBy.isEmpty)
       org.apache.spark.sql.connector.distributions.Distributions.unspecified()
     else
@@ -3051,18 +2928,16 @@ private[sources] class GlWrite(path: String, schema: StructType,
     require(!truncate,
       "graftlines: streaming supports Append output mode only — " +
         "Complete/Update would truncate the table every micro-batch")
-    new GlStreamingWrite(path, schema, partitionCol, bucketSpec, queryId)
+    new GlStreamingWrite(path, schema, key, queryId)
   }
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    GraftLines.writerFactory(path, schema, partitionCol, bucketSpec)
+    GraftLines.writerFactory(path, schema, key)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    // publishing a partitioned write makes the table partitioned for
-    // every later writer/reader (idempotent; conflicting column fails)
-    partitionCol.foreach(GraftLines.writePartitionCol(path, _, conf))
+    key.foreach(GlKey.writeKey(path, _, conf))
     GraftLines.publish(path, conf, GraftLines.committedFiles(messages),
       if (truncate) GlReplace.All else GlReplace.Append)
   }
@@ -3090,13 +2965,10 @@ private[sources] class GlWrite(path: String, schema: StructType,
   *    native in the sink.
   *
   * Task writers come from [[GraftLines.writerFactory]] with the
-  * table's partition column or bucket spec, so every epoch lands keyed
-  * files. Complete / Update output modes are rejected up front
+  * table's [[GlKey]], so every epoch lands keyed files. Complete / Update output modes are rejected up front
   * ([[GlWrite.toStreaming]]). */
 private[sources] class GlStreamingWrite(path: String, schema: StructType,
-    partitionCol: Option[String] = None,
-    bucketSpec: Option[(String, Int)] = None,
-    rawQueryId: String = "")
+    key: Option[GlKey] = None, rawQueryId: String = "")
     extends StreamingWrite {
   /** Tag-safe identity of the owning streaming query: part of the
     * idempotence key (epoch numbers are per query — see
@@ -3130,12 +3002,12 @@ private[sources] class GlStreamingWrite(path: String, schema: StructType,
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    GraftLines.writerFactory(path, schema, partitionCol, bucketSpec, queryId)
+    GraftLines.writerFactory(path, schema, key, queryId)
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    partitionCol.foreach(GraftLines.writePartitionCol(path, _, conf))
+    key.foreach(GlKey.writeKey(path, _, conf))
     val epoch = (epochId, queryId)
     val files = GraftLines.committedFiles(messages)
     // one generation listing per epoch serves the ledger and publish
@@ -3201,23 +3073,216 @@ private[sources] object GlReplace {
   * versioned ([[GraftLines.gensOf]]). */
 private[sources] final case class GlGens(list: Seq[Int], versioned: Boolean)
 
-/** A table's file layout for the fan-out writer: the key column's
-  * index, and the bucket count when the table is bucketed (key = bucket
-  * id, [[GraftLines.bucketOf]]) rather than identity-partitioned (key =
-  * the value). */
-private[sources] final case class GlLayout(col: Int, numBuckets: Option[Int])
+/** The key layout of a keyed graftlines table: identity partitioning
+  * on a column ([[GlKey.Identity]], the Hive/Iceberg `PARTITIONED BY
+  * (col)`) or hash buckets on one ([[GlKey.Bucket]], `PARTITIONED BY
+  * (bucket(n, col))`). An unkeyed table has none. Every data file of a
+  * keyed table holds ONE key, which is what lets the scan report
+  * KeyGroupedPartitioning and two co-keyed tables join with zero
+  * exchange (the storage-partitioned join).
+  *
+  *  - **A property of the directory**, not of a write: set once, by
+  *    `CREATE TABLE … PARTITIONED BY` or by the first commit of a path
+  *    write with `.option("partitionColumn", col)`, and kept by every
+  *    later writer (append, overwrite, row-level rewrite, streaming
+  *    epoch, [[GraftLines.compact]]), which reads it back. An overwrite
+  *    replaces data files, never the layout: a path overwrite without
+  *    `partitionColumn` into a keyed directory still lands keyed files.
+  *    A conflicting layout is refused ([[GlKey.writeKey]]).
+  *  - **Persisted only as a marker file** ([[GlKey.keyOf]],
+  *    [[GlKey.writeKey]]): `_graft_partcol` holds the column, and
+  *    `_graft_buckets` holds `col \t n`, one line each.
+  *  - **Identity**: a task writes one `-p<k>` file per value, and the
+  *    scan recovers the value from the file's stats (min == max), so
+  *    the column must be stats-eligible: ordered and non-string, since
+  *    string min/max ordering is what the connector refuses to trust.
+  *  - **Bucket**: key = [[GraftLines.bucketOf]] of an INT/BIGINT
+  *    column, the function [[GraftCatalog]]'s FunctionCatalog publishes,
+  *    so the write distribution and the read partitioning resolve to
+  *    one function. The id rides the file name (`-b<id>`), so the scan
+  *    recovers it without opening the file.
+  *
+  * A file that cannot prove its key ([[fileKey]]: data written before
+  * the table was keyed, a damaged manifest) degrades the whole scan to
+  * the ordinary unkeyed plan. */
+private[sources] sealed trait GlKey extends Product with Serializable {
+  def col: String
+
+  /** The V2 form: the write's clustered distribution, the scan's
+    * KeyGroupedPartitioning, and the `PARTITIONED BY` clause. */
+  def transform: Transform
+
+  /** The schema check of the catalog DDL and of path writes: the key
+    * column must exist with a type this layout can key. */
+  def check(schema: StructType, where: String): Unit
+
+  def nullMessage: String
+
+  /** The key of `row`, whose key column is ordinal `i` of type `dt`. */
+  def rowKey(row: InternalRow, i: Int, dt: DataType): Any
+
+  /** The name suffix of the `k`-th key file a task opens for `key`; it
+    * ends the name before any `-g<N>`. */
+  def suffix(key: Any, k: Int): String
+
+  /** The key the live file `name` provably holds. */
+  def fileKey(name: String, stats: => Map[String, GlFileStats]): Option[Any]
+
+  private[sources] def marker: String
+  private[sources] def line: String
+}
+
+private[sources] object GlKey {
+  final case class Identity(col: String) extends GlKey {
+    def transform: Transform =
+      org.apache.spark.sql.connector.expressions.Expressions.identity(col)
+    def check(schema: StructType, where: String): Unit =
+      checkType(schema, where, s"identity partition column '$col'", col,
+        "an ordered non-string type (stats recover the per-file value)")(
+        GraftLines.statsEligible)
+    def nullMessage: String =
+      s"graftlines: NULL partition value in column '$col' — identity " +
+        "partitioning requires non-null values (stats cannot recover a NULL)"
+    def rowKey(row: InternalRow, i: Int, dt: DataType): Any = dt match {
+      case IntegerType | DateType => java.lang.Integer.valueOf(row.getInt(i))
+      case LongType | TimestampType => java.lang.Long.valueOf(row.getLong(i))
+      case DoubleType => java.lang.Double.valueOf(row.getDouble(i))
+      case BooleanType => java.lang.Boolean.valueOf(row.getBoolean(i))
+      case other => throw new IllegalStateException(
+        s"unsupported partition type $other")
+    }
+    def suffix(key: Any, k: Int): String = s"-p$k"
+    def fileKey(name: String,
+        stats: => Map[String, GlFileStats]): Option[Any] =
+      stats.get(name).flatMap(_.cols.get(col)).collect {
+        case GlColStats(0, mn, mx) if mn != null && mn == mx => mn
+      }
+    private[sources] def marker: String = GraftLines.PartColMarker
+    private[sources] def line: String = col
+    override def toString: String = col
+  }
+
+  final case class Bucket(col: String, n: Int) extends GlKey {
+    def transform: Transform =
+      org.apache.spark.sql.connector.expressions.Expressions.bucket(n, col)
+    def check(schema: StructType, where: String): Unit =
+      checkType(schema, where, s"bucket column '$col'", col, "BIGINT/INT")(
+        dt => dt == LongType || dt == IntegerType)
+    def nullMessage: String =
+      s"graftlines: NULL bucket value in column '$col' — bucket " +
+        "partitioning requires non-null keys"
+    def rowKey(row: InternalRow, i: Int, dt: DataType): Any = {
+      val v: Long = dt match {
+        case LongType => row.getLong(i)
+        case IntegerType => row.getInt(i).toLong
+        case other => throw new IllegalStateException(
+          s"unsupported bucket column type $other")
+      }
+      GraftLines.bucketOf(v, n)
+    }
+    def suffix(key: Any, k: Int): String = s"-b$key"
+    // an id >= n (a file copied in from a table bucketed with another n)
+    // is a key the registered bucket function can never produce
+    def fileKey(name: String,
+        stats: => Map[String, GlFileStats]): Option[Any] =
+      GraftLines.bucketIdOf(name).filter(b => b >= 0 && b < n)
+        .map(java.lang.Integer.valueOf)
+    private[sources] def marker: String = GraftLines.BucketMarker
+    private[sources] def line: String = s"$col\t$n"
+    override def toString: String = s"bucket($n, $col)"
+  }
+
+  private def checkType(schema: StructType, where: String, what: String,
+      col: String, rule: String)(ok: DataType => Boolean): Unit = {
+    val f = schema.fields.find(_.name == col).getOrElse(
+      throw new IllegalArgumentException(s"$where: $what is not in the " +
+        "schema " + schema.fieldNames.mkString("[", ", ", "]")))
+    require(ok(f.dataType), s"$where: $what must be $rule; got ${f.dataType}")
+  }
+
+  /** The key a `PARTITIONED BY` clause declares: `(col)` or
+    * `(bucket(n, col))`; anything else is rejected loudly. */
+  def parse(partitions: Array[Transform]): Option[GlKey] = {
+    if (partitions.isEmpty) return None
+    require(partitions.length == 1,
+      "graftlines catalog: at most one partition transform is supported")
+    def colOf(e: V2Expression): String = e match {
+      case r: NamedReference =>
+        require(r.fieldNames.length == 1,
+          "graftlines catalog: nested partition columns are not supported")
+        r.fieldNames()(0)
+      case other => throw new IllegalArgumentException(
+        s"bucket column must be a column reference, got $other")
+    }
+    Some(partitions(0) match {
+      case t if t.name == "bucket" =>
+        val args = t.arguments()
+        require(args.length == 2, "bucket(numBuckets, col) expects 2 args")
+        val n = args(0) match {
+          case l: org.apache.spark.sql.connector.expressions.Literal[_]
+              if l.value().isInstanceOf[Int] => l.value().asInstanceOf[Int]
+          case other => throw new IllegalArgumentException(
+            s"bucket count must be an int literal, got $other")
+        }
+        require(n >= 1, s"bucket count must be positive: $n")
+        Bucket(colOf(args(1)), n)
+      case t if t.name == "identity" => Identity(colOf(t.references()(0)))
+      case other => throw new UnsupportedOperationException(
+        s"graftlines catalog: unsupported partition transform $other — " +
+          "only (col) and (bucket(n, col)) are supported")
+    })
+  }
+
+  /** The key persisted in `dir`'s marker file, if any. */
+  def keyOf(dir: String,
+      conf: org.apache.hadoop.conf.Configuration): Option[GlKey] = {
+    def read(name: String): Option[String] = {
+      val p = new Path(new Path(dir), name)
+      val fs = p.getFileSystem(conf)
+      if (!fs.exists(p)) None
+      else {
+        val br = new BufferedReader(new InputStreamReader(fs.open(p), UTF_8))
+        try Option(br.readLine()).map(_.trim) finally br.close()
+      }
+    }
+    read(GraftLines.BucketMarker).map(_.split('\t')).collect {
+      case Array(c, n) if n.toIntOption.exists(_ >= 1) => Bucket(c, n.toInt)
+    }.orElse(read(GraftLines.PartColMarker).filter(_.nonEmpty).map(Identity))
+  }
+
+  /** Refuses `key` for a directory that already has another one. */
+  def requireCompatible(dir: String, stored: Option[GlKey],
+      key: GlKey): Unit =
+    require(stored.forall(_ == key),
+      s"graftlines: $dir is already partitioned by " +
+        s"'${stored.getOrElse("")}' — cannot repartition to '$key'")
+
+  /** Persists `key` as `dir`'s marker; a no-op when `dir` already has
+    * it, an error when `dir` has another. */
+  def writeKey(dir: String, key: GlKey,
+      conf: org.apache.hadoop.conf.Configuration): Unit = {
+    val stored = keyOf(dir, conf)
+    requireCompatible(dir, stored, key)
+    if (stored.isEmpty) {
+      val p = new Path(new Path(dir), key.marker)
+      val w = new OutputStreamWriter(p.getFileSystem(conf).create(p, true),
+        UTF_8)
+      try { w.write(key.line); w.write('\n') } finally w.close()
+    }
+  }
+}
 
 /** The one producer of task writers ([[GraftLines.writerFactory]]).
-  * Final names before the layout suffix:
+  * Final names before the key suffix:
   *  - batch: `part-<pid>-<task>-<jobTag>`; the job tag
   *    ([[GraftLines.newJobTag]]) is drawn once per factory on the
   *    driver and serialized to every task.
   *  - streaming: `part-<pid>-q<query>-e<E>-<task>`, which carries the
   *    [[GraftLines.epochTag]] replace-per-epoch matches and no job tag.
-  * A layout adds `-b<id>` or `-p<k>` ([[GlFanOutWriter]]); a versioned
+  * A key adds `-b<id>` or `-p<k>` ([[GlFanOutWriter]]); a versioned
   * commit then adds `-g<N>`. */
 private[sources] case class GlWriterFactory(path: String, schema: StructType,
-    conf: SerializableConfiguration, layout: Option[GlLayout] = None,
+    conf: SerializableConfiguration, key: Option[GlKey] = None,
     queryId: String = GraftLines.queryTag(""),
     jobTag: String = GraftLines.newJobTag())
     extends DataWriterFactory with StreamingDataWriterFactory {
@@ -3230,75 +3295,33 @@ private[sources] case class GlWriterFactory(path: String, schema: StructType,
     writer(f"part-$partitionId%05d" +
       GraftLines.epochTag(queryId, epochId) + taskId)
 
-  private def writer(base: String): DataWriter[InternalRow] = layout match {
-    case Some(l) => new GlFanOutWriter(path, schema, conf.value, base, l)
+  private def writer(base: String): DataWriter[InternalRow] = key match {
+    case Some(k) => new GlFanOutWriter(path, schema, conf.value, base, k)
     case None => new GlWriter(path, schema, conf.value, base + GraftLines.Ext)
   }
 }
 
-/** Partitioned or bucketed task writer: routes each row to the
-  * [[GlWriter]] for its key, so every landed file holds ONE key — the
-  * invariant behind the scan's KeyGroupedPartitioning.
-  *  - **Bucketed**: key = [[GraftLines.bucketOf]] of the column
-  *    (identical to the FunctionCatalog-published form the planner
-  *    resolves); files are named `…-b<id>.gl`, so the scan recovers
-  *    every file's bucket without opening it.
-  *  - **Identity-partitioned**: key = the value, which the scan
-  *    recovers from the file's stats (min == max); names carry a dense
-  *    per-task index (`-p<k>`), not the value, so values need no
-  *    name-escaping.
-  *
-  * An append clusters rows by the key first
-  * (GlWrite.requiredDistribution), so a task usually owns whole keys
-  * and the writer map stays small; a row-level rewrite or a compaction
-  * does not, and a key then spans several files, which the scan
-  * groups. The suffix ends the name before any `-g<N>`:
-  * [[GraftLines.BucketNamePattern]] anchors on it. */
+/** Keyed task writer: routes each row to the [[GlWriter]] for its
+  * [[GlKey]], so every landed file holds ONE key — the invariant
+  * behind the scan's KeyGroupedPartitioning. An append clusters rows
+  * by the key first (GlWrite.requiredDistribution), so a task usually
+  * owns whole keys and the writer map stays small; a row-level rewrite
+  * or a compaction does not, and a key then spans several files, which
+  * the scan groups. */
 private[sources] class GlFanOutWriter(dir: String, schema: StructType,
-    conf: org.apache.hadoop.conf.Configuration, base: String,
-    layout: GlLayout)
+    conf: org.apache.hadoop.conf.Configuration, base: String, key: GlKey)
     extends DataWriter[InternalRow] {
 
-  private val i = layout.col
+  private val i = schema.fieldIndex(key.col)
   private val colType = schema.fields(i).dataType
-  private val nullKey = {
-    val c = schema.fields(i).name
-    if (layout.numBuckets.isDefined)
-      s"graftlines: NULL bucket value in column '$c' — bucket " +
-        "partitioning requires non-null keys"
-    else
-      s"graftlines: NULL partition value in column '$c' — identity " +
-        "partitioning requires non-null values (stats cannot recover a NULL)"
-  }
   private val writers =
     scala.collection.mutable.LinkedHashMap.empty[Any, GlWriter]
 
   override def write(row: InternalRow): Unit = {
-    require(!row.isNullAt(i), nullKey)
-    val key: Any = layout.numBuckets match {
-      case Some(n) =>
-        val v: Long = colType match {
-          case LongType => row.getLong(i)
-          case IntegerType => row.getInt(i).toLong
-          case other => throw new IllegalStateException(
-            s"unsupported bucket column type $other")
-        }
-        GraftLines.bucketOf(v, n)
-      case None =>
-        colType match {
-          case IntegerType | DateType => java.lang.Integer.valueOf(row.getInt(i))
-          case LongType | TimestampType => java.lang.Long.valueOf(row.getLong(i))
-          case DoubleType => java.lang.Double.valueOf(row.getDouble(i))
-          case BooleanType => java.lang.Boolean.valueOf(row.getBoolean(i))
-          case other => throw new IllegalStateException(
-            s"unsupported partition type $other")
-        }
-    }
-    writers.getOrElseUpdate(key, {
-      val suffix = if (layout.numBuckets.isDefined) s"-b$key"
-        else s"-p${writers.size}"
-      new GlWriter(dir, schema, conf, base + suffix + GraftLines.Ext)
-    }).write(row)
+    require(!row.isNullAt(i), key.nullMessage)
+    val k = key.rowKey(row, i, colType)
+    writers.getOrElseUpdate(k, new GlWriter(dir, schema, conf,
+      base + key.suffix(k, writers.size) + GraftLines.Ext)).write(row)
   }
 
   override def commit(): WriterCommitMessage =

@@ -36,6 +36,22 @@ class MicMacOutputsSpec extends AnyFunSuite {
         == Seq("sensors", "referentials", "transfos", "transfotrees"))
   }
 
+  test("a glob import reads files whose names hold glob characters") {
+    val dir = graft.GraftTmp.dir("micmac_glob_names")
+    val d = new java.io.File(dir)
+    Option(d.listFiles()).toSeq.flatten.foreach(_.delete())
+    d.mkdirs()
+    for (n <- Seq("a[1]", "b{2}", "c"))
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$res/orimatis_sample.xml"),
+        java.nio.file.Paths.get(dir, s"$n.xml"))
+    val files = MicMacEtl.importOrimatis(spark, s"$dir/*.xml")("sensors")
+      .select("file").collect().map(_.getString(0).split('/').last).toSet
+    // `file` is input_file_name(), a URL-encoded path
+    assert(files == Set("a%5B1%5D.xml", "b%7B2%7D.xml", "c.xml"),
+      s"got $files")
+  }
+
   test("a missing glob path still fails at the import call") {
     for (imp <- Seq[String => Map[String, _]](
         MicMacEtl.importAutocal(spark, _),

@@ -35,8 +35,8 @@ class GlInternalsSpec extends AnyFunSuite {
       .GenericInternalRow(Array[Any](7L)) // bucketOf(7, 4) == 3
     for ((layout, suffix, bucket) <- Seq(
         (None, "", None),
-        (Some(GlLayout(0, Some(4))), "-b3", Some(3)),
-        (Some(GlLayout(0, None)), "-p0", None))) {
+        (Some(GlKey.Bucket("k", 4)), "-b3", Some(3)),
+        (Some(GlKey.Identity("k")), "-p0", None))) {
       val f = GlWriterFactory(dir, schema, conf, layout, queryId = "a1")
       for ((w, shape) <- Seq(
           f.createWriter(0, 5L) -> s"part-00000-5-${f.jobTag}",
@@ -73,7 +73,7 @@ class GlInternalsSpec extends AnyFunSuite {
       s"tag '${f1.jobTag}' must be t+hex so it can never be parsed as " +
         "a -e<epoch>-, -b<id>, -g<N> or -p<k> suffix")
     // same guarantee for partitioned/bucketed layouts
-    for (l <- Seq(GlLayout(0, None), GlLayout(0, Some(4))))
+    for (l <- Seq(GlKey.Identity("k"), GlKey.Bucket("k", 4)))
       assert(GlWriterFactory("/tmp/x", schema, conf, Some(l)).jobTag
         != GlWriterFactory("/tmp/x", schema, conf, Some(l)).jobTag)
   }

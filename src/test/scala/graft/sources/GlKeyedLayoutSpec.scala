@@ -45,17 +45,10 @@ class GlKeyedLayoutSpec extends AnyFunSuite {
   private def fileKeys(tDir: String): Seq[Option[Any]] = {
     val files = GraftLines.resolveDataFileStatuses(tDir, hconf, None)
       .map { case (f, _) => new Path(f).getName }
-    GraftLines.bucketSpec(tDir, hconf) match {
-      case Some((_, n)) =>
-        files.map(GraftLines.bucketIdOf(_).filter(_ < n))
-      case None =>
-        val col = GraftLines.partitionCol(tDir, hconf).get
-        val stats = GraftLines.readStats(tDir, hconf,
-          GraftLines.readDirSchema(tDir))
-        files.map(f => stats.get(f).flatMap(_.cols.get(col)).collect {
-          case GlColStats(0, mn, mx) if mn != null && mn == mx => mn
-        })
-    }
+    val key = GlKey.keyOf(tDir, hconf).get
+    val stats = GraftLines.readStats(tDir, hconf,
+      GraftLines.readDirSchema(tDir))
+    files.map(key.fileKey(_, stats))
   }
 
   private def keyedScan(df: DataFrame): Boolean =
@@ -134,6 +127,84 @@ class GlKeyedLayoutSpec extends AnyFunSuite {
         assert(totals(spark.sql(s"SELECT * FROM $t VERSION AS OF $gen")) ==
           before, s"$what: the pre-compact generation is not readable")
     }
+  }
+
+  test("a second compact of a keyed table within budget per key is a no-op") {
+    catalog("graft_knoop")
+    val t = "graft_knoop.ns.t"
+    val tDir = s"$dir/graft_knoop_wh/ns/t"
+    for ((layout, versioned) <- shapes) {
+      val what = s"$layout, versioned=$versioned"
+      create(t, layout, versioned)
+      for (i <- 0 until 4)
+        (0L until 40L).map(k => (k, k % 4, k * 10 + i)).toDF("k", "g", "v")
+          .repartition(3).writeTo(t).append()
+      GraftLines.compact(tDir, 2, spark)
+      def live() = GraftLines.resolveDataFileStatuses(tDir, hconf, None)
+        .map { case (f, _) => new Path(f).getName }.toSet
+      val names = live()
+      val gens = GraftLines.genVersions(tDir, hconf)
+      assert(names.size > 2, s"$what: the fixture must keep > 2 files")
+      assert(GraftLines.compact(tDir, 2, spark) == ((names.size, names.size)),
+        s"$what: the second compact rewrote the table")
+      assert(live() == names, s"$what: live files changed")
+      assert(GraftLines.genVersions(tDir, hconf) == gens,
+        s"$what: the second compact wrote a generation")
+    }
+  }
+
+  test("a key the schema cannot hold is refused before anything lands") {
+    catalog("graft_kcheck")
+    val wh = s"$dir/graft_kcheck_wh/ns"
+    val fs = new Path(wh).getFileSystem(hconf)
+    def landed(d: String): Seq[String] =
+      if (!fs.exists(new Path(d))) Nil
+      else fs.listStatus(new Path(d)).map(_.getPath.getName).toSeq
+        .filter(n => n.endsWith(GraftLines.Ext) || n.startsWith("_graft"))
+    for ((t, ddl) <- Seq(
+        "s_part" -> "PARTITIONED BY (s)",
+        "d_bucket" -> "PARTITIONED BY (bucket(4, d))")) {
+      spark.sql(s"DROP TABLE IF EXISTS graft_kcheck.ns.$t")
+      intercept[IllegalArgumentException](spark.sql(
+        s"CREATE TABLE graft_kcheck.ns.$t (k BIGINT, s STRING, d DOUBLE) " +
+          s"USING graftlines $ddl"))
+      assert(landed(s"$wh/$t").isEmpty, s"$ddl: ${landed(s"$wh/$t")}")
+    }
+    val p = s"$dir/kcheck_path"
+    fs.delete(new Path(p), true)
+    intercept[IllegalArgumentException](Seq((1L, "a")).toDF("k", "s")
+      .write.format("graftlines").option("partitionColumn", "s")
+      .mode("append").save(p))
+    assert(landed(p).isEmpty, s"partitionColumn s: ${landed(p)}")
+    create("graft_kcheck.ns.b", "bucket(4, k)", versioned = false)
+    val before = landed(s"$wh/b")
+    intercept[IllegalArgumentException](Seq((1L, 2L, 3L)).toDF("k", "g", "v")
+      .write.format("graftlines").option("partitionColumn", "g")
+      .mode("append").save(s"$wh/b"))
+    assert(landed(s"$wh/b") == before,
+      s"partitionColumn g into a bucketed table: ${landed(s"$wh/b")}")
+  }
+
+  test("a table's key persists as one marker file of one line") {
+    catalog("graft_kmark")
+    val wh = s"$dir/graft_kmark_wh/ns"
+    val fs = new Path(wh).getFileSystem(hconf)
+    def markers(d: String): Map[String, String] =
+      fs.listStatus(new Path(d)).map(_.getPath.getName)
+        .filter(n => n == GraftLines.PartColMarker || n == GraftLines.BucketMarker)
+        .map { n =>
+          val in = fs.open(new Path(d, n))
+          try n -> new String(in.readAllBytes(), "UTF-8") finally in.close()
+        }.toMap
+    create("graft_kmark.ns.p", "g", versioned = false)
+    assert(markers(s"$wh/p") == Map("_graft_partcol" -> "g\n"))
+    create("graft_kmark.ns.b", "bucket(4, k)", versioned = false)
+    assert(markers(s"$wh/b") == Map("_graft_buckets" -> "k\t4\n"))
+    val p = s"$dir/kmark_path"
+    fs.delete(new Path(p), true)
+    Seq((1L, 2L)).toDF("k", "g").write.format("graftlines")
+      .option("partitionColumn", "g").mode("append").save(p)
+    assert(markers(p) == Map("_graft_partcol" -> "g\n"))
   }
 
   test("a failed compact discards its staged files and changes nothing") {
