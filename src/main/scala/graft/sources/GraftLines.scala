@@ -81,8 +81,10 @@ class GraftLines extends TableProvider with DataSourceRegister {
     * output dir that may not exist yet). */
   override def supportsExternalMetadata(): Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GraftLines.readDirSchema(GraftLines.pathOf(options))
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val dir = GraftLines.pathOf(options)
+    GraftLines.readDirSchema(dir, GraftLines.requestedVersion(dir, options))
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
@@ -678,16 +680,30 @@ object GraftLines {
     }
   }
 
-  /** The planner's file source: generation-resolved on versioned
-    * directories (requested or latest), raw directory listing
-    * otherwise. A gen-listed file missing from disk is loss (a manual
-    * delete or an over-eager retention sweep) — fail loudly, never
-    * silently return a partial version. */
+  /** The one answer to "which files make up this read": the live
+    * `(path, length)` of version `versionAsOf` (latest when None), minus
+    * every file generation `excludeFilesOf` lists. Batch, keyed,
+    * row-level and change-feed scans ([[GlScan]]), the micro-batch
+    * stream, schema inference, [[compact]] and [[refreshStats]] all
+    * resolve here. A directory without generations is its listing.
+    *
+    * The exclusion is the change feed: versioned names are never
+    * reused across generations (see [[VersionMarker]]), so a base name
+    * both manifests list holds the same bytes in both versions, and
+    * version v minus generation m's files is exactly what v added. A
+    * streaming micro-batch over offsets (s, e] is that delta with
+    * v = e and m = s ([[GlMicroBatchStream]]); a generation a retention
+    * sweep expired fails the read when its manifest is opened.
+    *
+    * A gen-listed file missing from disk is loss (a manual delete or
+    * an over-eager retention sweep): fail loudly, never return a
+    * partial version. */
   private[sources] def resolveDataFileStatuses(dir: String,
       conf: org.apache.hadoop.conf.Configuration,
-      versionAsOf: Option[Int]): Seq[(String, Long)] = {
+      versionAsOf: Option[Int],
+      excludeFilesOf: Option[Int] = None): Seq[(String, Long)] = {
     val gens = genVersions(dir, conf)
-    if (gens.isEmpty) {
+    val files = if (gens.isEmpty) {
       require(versionAsOf.isEmpty,
         s"graftlines: VERSION AS OF ${versionAsOf.getOrElse(-1)} on " +
           s"$dir, which has no committed generations")
@@ -708,6 +724,37 @@ object GraftLines {
           "outside expireVersions")
       present
     }
+    excludeFilesOf.fold(files) { m =>
+      val excl = readGen(dir, m, conf).toSet
+      files.filterNot { case (f, _) => excl.contains(new Path(f).getName) }
+    }
+  }
+
+  /** The generation a read's options ask for: `versionAsOf` (an
+    * integer) or `timestampAsOf` (epoch-ms, ISO instant or SQL
+    * timestamp, resolved by [[genAtTimestamp]]); None reads the latest.
+    * Schema inference and [[GlTable.newScanBuilder]] both resolve here,
+    * so a read is typed by the version it scans. */
+  private[sources] def requestedVersion(dir: String,
+      options: CaseInsensitiveStringMap): Option[Int] = {
+    val v = Option(options.get("versionAsOf")).map { s =>
+      require(s.toIntOption.isDefined,
+        s"graftlines: versionAsOf must be an integer, got '$s'")
+      s.toInt
+    }
+    val t = Option(options.get("timestampAsOf"))
+    require(v.isEmpty || t.isEmpty,
+      "graftlines: versionAsOf and timestampAsOf are mutually exclusive")
+    v.orElse(t.map { s =>
+      val ms = s.toLongOption.getOrElse {
+        try java.time.Instant.parse(s).toEpochMilli
+        catch { case _: java.time.format.DateTimeParseException =>
+          java.sql.Timestamp.valueOf(s).getTime
+        }
+      }
+      genAtTimestamp(dir, ms,
+        SparkSession.active.sparkContext.hadoopConfiguration)
+    })
   }
 
   /** `TIMESTAMP AS OF` resolution: the newest generation whose
@@ -734,14 +781,6 @@ object GraftLines {
         s"(earliest commit: ${stamped.head._2})")
     at.map(_._1).max
   }
-
-  private[sources] def parseTsOption(v: String): Long =
-    v.toLongOption.getOrElse {
-      try java.time.Instant.parse(v).toEpochMilli
-      catch { case _: java.time.format.DateTimeParseException =>
-        java.sql.Timestamp.valueOf(v).getTime
-      }
-    }
 
   /** Retention sweep for versioned tables: keep the newest `keepLast`
     * generations, delete older generation manifests and every data
@@ -851,7 +890,7 @@ object GraftLines {
       spark: SparkSession): (Int, Int) = {
     require(maxFiles >= 1, "compact must keep at least one file")
     val conf = spark.sparkContext.hadoopConfiguration
-    val snapshotGen = genVersions(dir, conf).lastOption.getOrElse(0)
+    val snapshotGen = currentVersion(dir, conf)
     val before = resolveDataFileStatuses(dir, conf, None).map(_._1)
     val key = GlKey.keyOf(dir, conf)
     // the union of the live files' headers, null-filled: on a
@@ -920,8 +959,8 @@ object GraftLines {
     val conf = spark.sparkContext.hadoopConfiguration
     val files = resolveDataFileStatuses(dir, conf, None)
     if (files.isEmpty) return (0, 0)
-    val schema = readHeaderSchema(dir)
-    val stats = readStats(dir, conf, schema)
+    // freshness needs only the `#len` lines, which parse under any schema
+    val stats = readStats(dir, conf, new StructType())
     val stale = files.filter { case (f, len) =>
       !stats.get(new Path(f).getName).exists(_.fileLen.contains(len))
     }
@@ -959,8 +998,6 @@ object GraftLines {
     p
   }
 
-  /** Schema from the header of the first data file (one driver-side
-    * directory listing — the same cost every path-based source pays). */
   /** One FILE's own header schema — executor-safe (takes the Hadoop
     * conf explicitly instead of reaching for SparkSession.active).
     * The authority for what THAT file stores; see [[refreshStats]]. */
@@ -992,26 +1029,30 @@ object GraftLines {
     * `_graft_schema` when present (the AUTHORITY on an evolved table —
     * per-file headers legitimately disagree with each other after
     * ALTER ADD COLUMNS, and which one header-inference would pick is
-    * an accident of file naming), else the first data file's header
-    * (raw directories, where every file carries the same schema by
-    * the writer's construction). */
-  private[sources] def readDirSchema(dir: String): StructType =
-    catalogSchemaOf(dir).getOrElse(readHeaderSchema(dir))
+    * an accident of file naming), else the header of version
+    * `versionAsOf` ([[readHeaderSchema]]). */
+  private[sources] def readDirSchema(dir: String,
+      versionAsOf: Option[Int] = None): StructType =
+    catalogSchemaOf(dir).getOrElse(readHeaderSchema(dir, versionAsOf))
 
-  private[sources] def readHeaderSchema(dir: String): StructType = {
+  /** The header of the first live file of version `versionAsOf`
+    * (latest when None), resolved like the scan's own files
+    * ([[resolveDataFileStatuses]]): an overwrite that changed the
+    * schema leaves superseded files on disk, and their header must not
+    * type the live ones. A version that lists no file (an empty
+    * overwrite) takes the first header on disk; its scan plans no file
+    * and reads 0 rows whatever the schema. */
+  private[sources] def readHeaderSchema(dir: String,
+      versionAsOf: Option[Int]): StructType = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val path = new Path(dir)
-    val fs = path.getFileSystem(conf)
-    val files = listDataFiles(dir, conf)
+    val live = resolveDataFileStatuses(dir, conf, versionAsOf).map(_._1)
+    val files = if (live.nonEmpty) live else listDataFiles(dir, conf)
     require(files.nonEmpty, s"graftlines: no $Ext files under $dir")
     // a retention sweep racing this read may delete a listed file
-    // before it is opened: the first header still on disk is the schema
+    // before it is opened: the next header is the schema
     val headers = files.iterator.flatMap { f =>
-      try {
-        val br = new BufferedReader(
-          new InputStreamReader(fs.open(new Path(f)), UTF_8))
-        try Some(parseHeader(br.readLine(), f)) finally br.close()
-      } catch { case _: java.io.FileNotFoundException => None }
+      try Some(headerSchemaOfFile(f, conf))
+      catch { case _: java.io.FileNotFoundException => None }
     }
     require(headers.hasNext, s"graftlines: no $Ext files left under $dir")
     headers.next()
@@ -1629,30 +1670,14 @@ private[sources] class GlTable(path: String, tableSchema: StructType,
       TableCapability.STREAMING_WRITE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // pinned catalog time travel wins; else the path-read options
-    // `.option("versionAsOf", n)` / `.option("timestampAsOf", t)`
-    // select a generation (t: epoch-ms, ISO instant, or SQL timestamp)
-    val vOpt = Option(options.get("versionAsOf")).map { s =>
-      require(s.toIntOption.isDefined,
-        s"graftlines: versionAsOf must be an integer, got '$s'")
-      s.toInt
-    }
-    val tOpt = Option(options.get("timestampAsOf"))
-    require(vOpt.isEmpty || tOpt.isEmpty,
-      "graftlines: versionAsOf and timestampAsOf are mutually exclusive")
-    val v = pinnedVersion.orElse(vOpt).orElse(tOpt.map { t =>
-      GraftLines.genAtTimestamp(path, GraftLines.parseTsOption(t),
-        SparkSession.active.sparkContext.hadoopConfiguration)
-    })
-    // `.option("excludeFilesOfVersion", m)`: the CHANGE-FEED primitive.
-    // Plan only the files of the read version that are NOT listed in
-    // generation m's manifest. Versioned file names are never reused
-    // across generations (see VersionMarker scaladoc), so a base name
-    // common to both manifests is byte-identical in both versions.
-    // "What changed between v1 and v3" is then two SMALL scans
-    // (v3 minus v1-files, v1 minus v3-files) + one anti-join each,
-    // independent of table size and of how many commits lie between —
-    // instead of two full version scans.
+    // pinned catalog time travel wins over the path-read options
+    val v = pinnedVersion.orElse(GraftLines.requestedVersion(path, options))
+    // `.option("excludeFilesOfVersion", m)`: the CHANGE-FEED read, the
+    // read version minus generation m's files (the delta of
+    // [[GraftLines.resolveDataFileStatuses]]). "What changed between
+    // v1 and v3" is then two SMALL scans (v3 minus v1-files, v1 minus
+    // v3-files) + one anti-join each, independent of table size and
+    // of how many commits lie between.
     //
     // Equivalence precondition (stated, not enforced): the two-sided
     // EXCEPT over delta reads equals the EXCEPT over full version
@@ -1963,8 +1988,8 @@ case class GlScan(path: String, required: StructType,
       * reporting below. */
     key: Option[GlKey] = None,
     /** Change-feed file delta: plan only files NOT listed in this
-      * generation's manifest (option `excludeFilesOfVersion` — see
-      * [[GlTable.newScanBuilder]] for the correctness argument). */
+      * generation's manifest (option `excludeFilesOfVersion`; see
+      * [[GraftLines.resolveDataFileStatuses]]). */
     excludeFilesOf: Option[Int] = None)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
@@ -2041,22 +2066,6 @@ case class GlScan(path: String, required: StructType,
 
   override def toBatch: Batch = this
 
-  /** The scan's file universe: the read version's files, minus (for a
-    * change-feed read) every file also listed in `excludeFilesOf`'s
-    * manifest. ALL downstream planning — statistics, pruning, keyed
-    * plans, the manifest count — works from this one resolution, so
-    * the delta read behaves exactly like a small table. */
-  private def resolvedFiles(
-      conf: org.apache.hadoop.conf.Configuration): Seq[(String, Long)] = {
-    val all = GraftLines.resolveDataFileStatuses(path, conf, versionAsOf)
-    excludeFilesOf match {
-      case None => all
-      case Some(m) =>
-        val excl = GraftLines.readGen(path, m, conf).toSet
-        all.filterNot { case (f, _) => excl.contains(new Path(f).getName) }
-    }
-  }
-
   // ONE metadata snapshot per scan: estimateStatistics (planning),
   // outputPartitioning/keyedPlan, and planInputPartitions (execution)
   // all consult the file list and the stats manifest — without these
@@ -2064,9 +2073,13 @@ case class GlScan(path: String, required: StructType,
   // the manifest up to four times on the driver (noticeable on object
   // stores). Same per-instance lifetime keyedPlan already relies on;
   // Spark caches planInputPartitions per Dataset anyway, so this adds
-  // no staleness window that did not already exist.
+  // no staleness window that did not already exist. As all planning
+  // works from the one resolution, a delta read behaves exactly like a
+  // small table.
   @transient private lazy val fileUniverse: Seq[(String, Long)] =
-    resolvedFiles(SparkSession.active.sparkContext.hadoopConfiguration)
+    GraftLines.resolveDataFileStatuses(path,
+      SparkSession.active.sparkContext.hadoopConfiguration, versionAsOf,
+      excludeFilesOf)
   @transient private lazy val statsCache: Map[String, GlFileStats] =
     GraftLines.readStats(path,
       SparkSession.active.sparkContext.hadoopConfiguration, statsSchema)
@@ -2228,18 +2241,17 @@ case class GlScan(path: String, required: StructType,
   }
 
   /** TABLE AS A STREAM: `spark.readStream` over a VERSIONED table.
-    * The generation manifests double as streaming offsets — offset N
-    * IS committed generation N, so a micro-batch is exactly "the files
-    * generation `end` lists that generation `start` did not" (the
-    * Delta readStream posture, reconstructed from the same versioning
-    * primitive). Filters/column pruning pushed into this ScanBuilder
-    * apply to every micro-batch. Checkpointed offsets survive restart:
-    * gen numbers are stable on disk, so resume is exact with no
-    * re-emission. Honest limits (documented, spec-pinned): the source
-    * is APPEND-driven — a COW rewrite's replacement files stream as
-    * new files (the ignoreChanges caveat every file-log stream has),
-    * and a retention sweep that expires a not-yet-consumed generation
-    * fails the stream loudly rather than silently skipping rows. */
+    * Offset N IS committed generation N, and a micro-batch is this
+    * scan's change-feed delta between two offsets (the Delta readStream
+    * posture, see [[GraftLines.resolveDataFileStatuses]]), so pushed
+    * filters, column pruning and stats pruning apply to every batch.
+    * Checkpointed offsets survive restart: gen numbers are stable on
+    * disk, so resume is exact with no re-emission. Honest limits
+    * (documented, spec-pinned): the source is APPEND-driven — a COW
+    * rewrite's replacement files stream as new files (the
+    * ignoreChanges caveat every file-log stream has), and a retention
+    * sweep that expires a not-yet-consumed generation fails the stream
+    * loudly rather than silently skipping rows. */
   override def toMicroBatchStream(checkpointLocation: String):
       MicroBatchStream = {
     require(aggSpec.isEmpty && pushedLimit.isEmpty,
@@ -2252,7 +2264,7 @@ case class GlScan(path: String, required: StructType,
     require(GraftLines.isVersioned(path, conf),
       s"graftlines: streaming reads require a VERSIONED table " +
         s"(generations are the offsets) — $path has no version marker")
-    new GlMicroBatchStream(path, required, pushed, nullFillMissing)
+    new GlMicroBatchStream(this)
   }
 }
 
@@ -2261,13 +2273,16 @@ private[sources] case class GlOffset(gen: Int) extends Offset {
   override def json(): String = gen.toString
 }
 
-private[sources] class GlMicroBatchStream(path: String,
-    required: StructType, pushed: Array[Filter],
-    nullFillMissing: Boolean) extends MicroBatchStream
+/** The micro-batch side of [[GlScan.toMicroBatchStream]]: offsets are
+  * [[GraftLines.currentVersion]], and the batch (s, e] plans as `scan`
+  * at version e minus generation s's files. */
+private[sources] class GlMicroBatchStream(scan: GlScan)
+    extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming
       .SupportsTriggerAvailableNow {
 
-  private def conf = SparkSession.active.sparkContext.hadoopConfiguration
+  private def latest: Int = GraftLines.currentVersion(scan.path,
+    SparkSession.active.sparkContext.hadoopConfiguration)
 
   /** Trigger.AvailableNow ("process everything that exists, then
     * stop" — the batch-cadence way to run a streaming pipeline): the
@@ -2278,8 +2293,7 @@ private[sources] class GlMicroBatchStream(path: String,
   @transient private var availableNowCap: Option[Int] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap =
-      Some(GraftLines.genVersions(path, conf).lastOption.getOrElse(0))
+    availableNowCap = Some(latest)
 
   override def getDefaultReadLimit:
       org.apache.spark.sql.connector.read.streaming.ReadLimit =
@@ -2288,62 +2302,32 @@ private[sources] class GlMicroBatchStream(path: String,
   override def latestOffset(start: Offset,
       limit: org.apache.spark.sql.connector.read.streaming.ReadLimit):
       Offset = {
-    val latest = GraftLines.genVersions(path, conf).lastOption.getOrElse(0)
-    GlOffset(availableNowCap.fold(latest)(math.min(latest, _)))
+    val now = latest
+    GlOffset(availableNowCap.fold(now)(math.min(now, _)))
   }
 
-  override def reportLatestOffset(): Offset =
-    GlOffset(GraftLines.genVersions(path, conf).lastOption.getOrElse(0))
+  override def reportLatestOffset(): Offset = GlOffset(latest)
 
   override def initialOffset(): Offset = GlOffset(0)
 
-  override def latestOffset(): Offset =
-    GlOffset(GraftLines.genVersions(path, conf).lastOption.getOrElse(0))
+  override def latestOffset(): Offset = GlOffset(latest)
 
   override def deserializeOffset(json: String): Offset =
     GlOffset(json.trim.toInt)
 
+  /** Gen 0 is before the first commit, so the first batch excludes
+    * nothing. */
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GlOffset].gen
     val e = end.asInstanceOf[GlOffset].gen
-    if (e <= s) return Array.empty
-    // gen 0 = before the first commit. A consumed generation expired
-    // by a retention sweep mid-stream throws on readGen — loud, never
-    // a silent row skip.
-    val before: Set[String] =
-      if (s == 0) Set.empty else GraftLines.readGen(path, s, conf).toSet
-    val fresh0 = GraftLines.readGen(path, e, conf).filterNot(before)
-    // stats-manifest pruning, same as the batch scan: a pushed filter
-    // whose min/max/Bloom provably matches nothing in a fresh file
-    // skips that file — without this, every micro-batch re-reads files
-    // the batch path would never open (the reader stays exact either
-    // way; this is pure IO)
-    val fresh = if (pushed.isEmpty) fresh0 else {
-      val stats = GraftLines.readStats(path, conf, required)
-      fresh0.filter(base => stats.get(base)
-        .forall(st => pushed.forall(GlFilters.mayMatch(_, st))))
-    }
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
-    // ONE directory listing serves every fresh file's length — the
-    // per-file getFileStatus loop cost N namenode RPCs per micro-batch
-    val lens: Map[String, Long] =
-      GraftLines.listDataFileStatuses(path, conf)
-        .map { case (f, l) => new Path(f).getName -> l }.toMap
-    fresh.flatMap { base =>
-      val p = new Path(dir, base)
-      // a gen-listed file missing from the listing is loss — keep the
-      // loud getFileStatus error path rather than silently skipping
-      val len = lens.getOrElse(base, fs.getFileStatus(p).getLen)
-      GraftLines.splits(len).map { case (a, b) =>
-        GlInputPartition(p.toString, a, b) }
-    }.toArray
+    if (e <= s) Array.empty
+    else scan.copy(versionAsOf = Some(e),
+      excludeFilesOf = Some(s).filter(_ > 0)).planInputPartitions()
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GlReaderFactory(required, pushed, None, None,
-      new SerializableConfiguration(conf), nullFillMissing)
+    scan.createReaderFactory()
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -2965,8 +2949,8 @@ private[sources] class GlWrite(path: String, schema: StructType,
   *    native in the sink.
   *
   * Task writers come from [[GraftLines.writerFactory]] with the
-  * table's [[GlKey]], so every epoch lands keyed files. Complete / Update output modes are rejected up front
-  * ([[GlWrite.toStreaming]]). */
+  * table's [[GlKey]], so every epoch lands keyed files. Complete /
+  * Update output modes are rejected up front ([[GlWrite.toStreaming]]). */
 private[sources] class GlStreamingWrite(path: String, schema: StructType,
     key: Option[GlKey] = None, rawQueryId: String = "")
     extends StreamingWrite {

@@ -209,6 +209,46 @@ class TimeTravelSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("mutually exclusive"))
   }
 
+  test("a schema-changing overwrite: every version reads with its own header") {
+    // the overwrite leaves gen 1's file on disk beside gen 2's, and
+    // inference must type each read by the version it scans, not by
+    // whichever header sorts first in the directory
+    val p = s"$dir/schema_overwrite"
+    markVersioned(p)
+    Seq(1, 2).toDF("a").coalesce(1)
+      .write.format("graftlines").mode("append").save(p)
+    Thread.sleep(1100) // distinct mtimes at 1s filesystem granularity
+    Seq("x", "y", "z").toDF("b").coalesce(1)
+      .write.format("graftlines").mode("overwrite").save(p)
+    def mtime(n: Int): Long = hfs(p).getFileStatus(
+      new org.apache.hadoop.fs.Path(p, s"${GraftLines.GenPrefix}$n"))
+      .getModificationTime
+    val (t1, t2) = (mtime(1), mtime(2))
+    assert(t1 < t2, s"commit instants must be distinguishable: $t1 / $t2")
+    def read(opts: (String, String)*) =
+      spark.read.format("graftlines").options(opts.toMap).load(p)
+    def check(df: org.apache.spark.sql.DataFrame, col: String,
+        rows: Seq[Any]): Unit = {
+      assert(df.schema.fieldNames.toSeq == Seq(col), df.schema)
+      assert(df.collect().map(_.get(0)).toSeq.sortBy(_.toString) == rows)
+    }
+    val gen2 = Seq("x", "y", "z")
+    check(read(), "b", gen2)
+    check(read("versionAsOf" -> "2"), "b", gen2)
+    check(read("timestampAsOf" -> (t2 + 1000).toString), "b", gen2)
+    check(read("versionAsOf" -> "1"), "a", Seq(1, 2))
+    check(read("timestampAsOf" -> ((t1 + t2) / 2).toString), "a", Seq(1, 2))
+    // an empty overwrite lists no file: the read is empty, whichever
+    // header on disk types it, and history keeps its own schemas
+    Seq.empty[String].toDF("b")
+      .write.format("graftlines").mode("overwrite").save(p)
+    assert(read().count() == 0)
+    assert(read().collect().isEmpty)
+    assert(read("versionAsOf" -> "3").count() == 0)
+    check(read("versionAsOf" -> "2"), "b", gen2)
+    check(read("versionAsOf" -> "1"), "a", Seq(1, 2))
+  }
+
   test("excludeFilesOfVersion plans only the files the versions don't share") {
     val p = s"$dir/cdf_delta"
     markVersioned(p)
