@@ -102,10 +102,9 @@ object ClusterSmoke {
       // then latest + time-travel reads back through the DSv2 scan
       val dir = GraftTmp.dir(s"smoke_gl_${master.replaceAll("[^a-z0-9]", "_")}")
       val hp = new org.apache.hadoop.fs.Path(dir)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(hp, true); fs.mkdirs(hp)
-      fs.create(new org.apache.hadoop.fs.Path(hp,
-        graft.sources.GraftLines.VersionMarker), true).close()
+      val hconf = spark.sparkContext.hadoopConfiguration
+      hp.getFileSystem(hconf).delete(hp, true)
+      graft.sources.GraftLines.markVersioned(dir, hconf)
       import spark.implicits._
       (0L until 100L).toDF("v").repartition(4)
         .write.format("graftlines").mode("append").save(dir)
@@ -220,9 +219,9 @@ object ClusterSmoke {
       val dir = GraftTmp.dir("smoke_gl_loss")
       val hp = new org.apache.hadoop.fs.Path(dir)
       val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(hp, true); fs.mkdirs(hp)
-      fs.create(new org.apache.hadoop.fs.Path(hp,
-        graft.sources.GraftLines.VersionMarker), true).close()
+      fs.delete(hp, true)
+      graft.sources.GraftLines.markVersioned(dir,
+        spark.sparkContext.hadoopConfiguration)
       println("[cluster-smoke] loss phase: killing one executor mid-write")
       val (l2, pid2) = armKiller(spark, stage = 0, delayMs = 400)
       try {

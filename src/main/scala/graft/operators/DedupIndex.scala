@@ -101,12 +101,8 @@ object DedupIndex {
     val conf = s.sparkContext.hadoopConfiguration
     for ((_, dir) <- tableDirs(indexDir)) {
       val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) {
-        fs.mkdirs(p)
-        fs.create(new org.apache.hadoop.fs.Path(p,
-          graft.sources.GraftLines.VersionMarker), true).close()
-      }
+      if (!p.getFileSystem(conf).exists(p))
+        graft.sources.GraftLines.markVersioned(dir, conf)
     }
     import s.implicits._
     val meta = Seq(("nbands", NBands.toLong),

@@ -1097,9 +1097,8 @@ object Etl extends QueryGroup {
         val hp = new org.apache.hadoop.fs.Path(p)
         val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
         fs.delete(hp, true)
-        fs.mkdirs(hp)
-        fs.create(new org.apache.hadoop.fs.Path(p,
-          graft.sources.GraftLines.VersionMarker), true).close()
+        graft.sources.GraftLines.markVersioned(p,
+          s.sparkContext.hadoopConfiguration)
         Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_custkey"),
             col("o_orderstatus"),

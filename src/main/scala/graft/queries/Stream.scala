@@ -797,9 +797,8 @@ object Stream extends QueryGroup {
           .getFileSystem(s.sparkContext.hadoopConfiguration)
         Seq(p, out).foreach(x => hfs.delete(
           new org.apache.hadoop.fs.Path(x), true))
-        hfs.mkdirs(new org.apache.hadoop.fs.Path(p))
-        hfs.create(new org.apache.hadoop.fs.Path(p,
-          graft.sources.GraftLines.VersionMarker), true).close()
+        graft.sources.GraftLines.markVersioned(p,
+          s.sparkContext.hadoopConfiguration)
         val ev = Tables.events(s, d)
           .select(col("event_id"), col("event_type"),
             expr("cast(cast(value as decimal(14,2)) * 100 as bigint)")
@@ -862,9 +861,8 @@ object Stream extends QueryGroup {
           .getFileSystem(s.sparkContext.hadoopConfiguration)
         Seq(out, cp).foreach(x => hfs.delete(
           new org.apache.hadoop.fs.Path(x), true))
-        hfs.mkdirs(new org.apache.hadoop.fs.Path(out))
-        hfs.create(new org.apache.hadoop.fs.Path(out,
-          graft.sources.GraftLines.VersionMarker), true).close()
+        graft.sources.GraftLines.markVersioned(out,
+          s.sparkContext.hadoopConfiguration)
         val q = Tables.eventsReadStream(s, d)
           .select(col("event_id"), col("event_type"),
             expr("cast(cast(value as decimal(14,2)) * 100 as bigint)")

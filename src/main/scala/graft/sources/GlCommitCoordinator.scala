@@ -108,9 +108,10 @@ private[sources] object GlCommitCoordinator {
   val ArbiterMarker = "_graft_arbiter"
 
   /** The mode the table itself is pinned to, if any: the marker's
-    * first line ("jdbc" today). An EMPTY marker (a brander that died
-    * between create and write) still reads as pinned-jdbc — the
-    * conservative side, since only arbitrated commits ever create it.
+    * first line ("jdbc" today). An EMPTY marker ([[brand]] never
+    * publishes one, a manual `touch` does) still reads as pinned-jdbc
+    * — the conservative side, since only arbitrated commits ever
+    * create it.
     * A FAILING probe fails the commit: reading an outage as "unpinned"
     * would wave an fs-mode committer through on a pinned table, which
     * is the exact lost-commit hazard the marker exists to block. */
@@ -129,17 +130,15 @@ private[sources] object GlCommitCoordinator {
     } finally in.close()
   }
 
-  /** Brand the table as arbitrated. Racing branders write identical
-    * constant bytes, so a failed no-overwrite create with the marker
-    * present is success; a failed create with NO marker fails the
-    * commit — publishing unbranded would leave every future fs-mode
-    * committer unwarned, which is the hazard the marker closes. */
+  /** Brand the table as arbitrated, create-once ([[GlMetaFile]]).
+    * Racing branders write identical constant bytes, so a failed
+    * publish with the marker present is success; a failed publish with
+    * NO marker fails the commit — publishing unbranded would leave
+    * every future fs-mode committer unwarned, which is the hazard the
+    * marker closes. */
   private def brand(fs: FileSystem, m: Path): Unit = {
-    try {
-      val out = fs.create(m, false)
-      try out.write("jdbc\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    } catch {
+    try GlMetaFile.createOnce(fs, m, Seq("jdbc"))
+    catch {
       case e: java.io.IOException =>
         val present = try fs.exists(m) catch { case _: Exception => false }
         if (!present) throw new java.io.IOException(

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter}
+import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
@@ -147,32 +147,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     GraftCatalog.readSchemaFile(fs, sf)
   }
 
-  /** Publish `_graft_schema`. `exclusive = true` (CREATE) uses the
-    * filesystem's no-overwrite create as the one-winner CAS — two
-    * racing CREATE TABLE for one identifier cannot both succeed (the
-    * exists() pre-check alone is check-then-act). `exclusive = false`
-    * (ALTER) REPLACES the file atomically where the store can
-    * (same-name POSIX move), never in place: `fs.create(sf, true)`
-    * truncates first, so a concurrent reader would see an empty
-    * header and a crash mid-write would strand the table unreadable
-    * forever with tableExists still true. */
+  /** Publishes `_graft_schema` ([[GlMetaFile]]): create-once for
+    * CREATE, so two racing CREATE TABLE for one identifier cannot both
+    * succeed, and replace for ALTER, never in place — a truncated
+    * schema would strand the table unreadable with tableExists still
+    * true. */
   private def writeSchema(dir: Path, schema: StructType,
-      exclusive: Boolean): Unit = {
-    val sf = schemaFile(dir)
-    if (exclusive) {
-      val w = new OutputStreamWriter(fs.create(sf, false), UTF_8)
-      try { w.write(GraftLines.header(schema)); w.write('\n') }
-      finally w.close()
-    } else {
-      val tmp = new Path(dir,
-        GraftCatalog.SchemaName + "." +
-          java.util.UUID.randomUUID().toString + ".tmp")
-      val w = new OutputStreamWriter(fs.create(tmp, true), UTF_8)
-      try { w.write(GraftLines.header(schema)); w.write('\n') }
-      finally w.close()
-      if (!GraftLines.replaceByMove(fs, tmp, sf))
-        GraftCatalog.replaceSchemaFallback(fs, tmp, sf)
-    }
+      create: Boolean): Unit = {
+    val lines = Seq(GraftLines.header(schema))
+    if (create) GlMetaFile.createOnce(fs, schemaFile(dir), lines)
+    else GlMetaFile.replace(fs, schemaFile(dir), lines)
   }
 
   /** Catalog-managed tables read with `nullFillMissing = true`: the
@@ -197,7 +181,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     require(version.toIntOption.isDefined,
       s"graftlines catalog: VERSION AS OF expects a generation number, " +
         s"got '$version'")
-    require(GraftLines.isVersioned(dir.toString, conf),
+    require(GraftLines.gensOf(dir.toString, conf).versioned,
       s"graftlines catalog: $ident is not a versioned table — create it " +
         "with TBLPROPERTIES ('versioned'='true')")
     new GlTable(dir.toString, schema, nullFillMissing = true,
@@ -293,27 +277,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           + "refusing to adopt (drop the directory or pick a new name)")
     }
     fs.mkdirs(dir)
-    try writeSchema(dir, schema, exclusive = true)
+    try writeSchema(dir, schema, create = true)
     catch {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        throw new TableAlreadyExistsException(ident)
-      case e: java.io.IOException
-          if Option(e.getMessage).exists(_.toLowerCase
-            .contains("already exist"))
-            && (try fs.exists(schemaFile(dir))
-            catch { case _: Exception => false }) =>
-        // the message heuristic alone would misreport any store error
-        // whose text happens to say "already exists" (a lease or
-        // temp-file collision from a connector) as a benign concurrent-
-        // create race — only translate when the schema file actually
-        // landed, i.e. a racer genuinely won the exclusive create
         throw new TableAlreadyExistsException(ident)
     }
     // TBLPROPERTIES ('versioned'='true') opts the table into time
     // travel: the marker flips every commit path to generation
     // publishing (see GraftLines.VersionMarker).
     if ("true".equalsIgnoreCase(properties.getOrDefault("versioned", "")))
-      fs.create(new Path(dir, GraftLines.VersionMarker), true).close()
+      GraftLines.markVersioned(dir.toString, conf)
     key.foreach(GlKey.writeKey(dir.toString, _, conf))
     new GlTable(dir.toString, schema, nullFillMissing = true)
   }
@@ -361,7 +334,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
     GraftLines.header(schema) // reject unstorable added types up front
     val dir = tablePath(ident)
-    writeSchema(dir, schema, exclusive = false)
+    writeSchema(dir, schema, create = false)
     new GlTable(dir.toString, schema, nullFillMissing = true)
   }
 
@@ -515,42 +488,6 @@ object GraftCatalog {
       sf: Path): org.apache.spark.sql.types.StructType = {
     val br = new BufferedReader(new InputStreamReader(fs.open(sf), UTF_8))
     try GraftLines.parseHeader(br.readLine(), sf.toString) finally br.close()
-  }
-
-  /** Non-POSIX ALTER publish fallback: rename-onto-existing fails on
-    * HDFS, so delete + rename with its (documented) brief absent
-    * window. The failure protocol matters more than the happy path:
-    * once the delete succeeds, the staged tmp is the ONLY surviving
-    * schema copy — sweeping it on a failed rename would strand the
-    * table permanently (tableExists false, loadTable fails, manual
-    * header reconstruction the only recovery). So a failed rename is
-    * retried once; if the schema file is then still absent the tmp is
-    * KEPT and named in the error. The tmp is swept only when sf is
-    * confirmed present (the delete failed, or a racer republished). */
-  private[sources] def replaceSchemaFallback(
-      fs: org.apache.hadoop.fs.FileSystem, tmp: Path, sf: Path): Unit = {
-    try {
-      fs.delete(sf, false)
-      require(fs.rename(tmp, sf),
-        s"graftlines catalog: failed publishing schema $sf")
-    } catch { case t: Throwable =>
-      val retried =
-        try fs.rename(tmp, sf) catch { case _: Exception => false }
-      if (!retried) {
-        val present =
-          try fs.exists(sf) catch { case _: Exception => false }
-        if (present) {
-          try fs.delete(tmp, false) catch { case _: Exception => () }
-          throw t
-        }
-        throw new java.io.IOException(
-          s"graftlines catalog: failed publishing schema $sf and the " +
-            s"old copy is already deleted — the staged copy $tmp is " +
-            "the only surviving schema and was KEPT; restore the " +
-            s"table by renaming it onto $sf", t)
-      }
-      // the retry landed the same staged bytes: published after all
-    }
   }
 
   import org.apache.spark.sql.catalyst.InternalRow

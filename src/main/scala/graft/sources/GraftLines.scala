@@ -56,7 +56,9 @@ import org.apache.spark.util.SerializableConfiguration
   *    never observe a half-written job; `mode("overwrite")` plans
   *    OverwriteByExpression(true) which this builder satisfies via
   *    [[SupportsTruncate]], with the old files replaced at commit
-  *    time. Job abort deletes only staging files.
+  *    time. Job abort deletes only staging files. Every `_graft_*`
+  *    metadata file a commit writes is published whole
+  *    ([[GlMetaFile]]).
   *
   *  - **Columnar read** ([[PartitionReaderFactory.supportColumnarReads]]):
   *    ordinary scans emit `ColumnarBatch`es of reusable on-heap column
@@ -83,7 +85,7 @@ class GraftLines extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val dir = GraftLines.pathOf(options)
-    GraftLines.readDirSchema(dir, GraftLines.requestedVersion(dir, options))
+    GraftLines.readDirSchema(dir, GraftLines.requestedVersion(dir, options)._1)
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -143,10 +145,12 @@ object GraftLines {
     * \t byteLen \t - \t ok` (the marker rides the column slot, so a
     * reader that predates it sees an unknown column name and skips the
     * line — same forward/backward posture as the Bloom lines). Stats
-    * maintenance is deliberately best-effort (mergeStats swallows
-    * failures), which is safe for PRUNING (a stale line only ever
-    * widens the kept range after a same-name republish shrinks a
-    * file) but NOT for the COUNT(*)-from-manifest shortcut, where a
+    * maintenance is deliberately best-effort: [[mergeStats]] publishes
+    * the whole manifest or nothing ([[GlMetaFile.replace]]) and
+    * swallows a failed publish, so the manifest a commit leaves may be
+    * the previous one or none. That is safe for PRUNING (a stale line
+    * only ever widens the kept range after a same-name republish
+    * shrinks a file) but NOT for the COUNT(*)-from-manifest shortcut, where a
     * stale row count would be served as an exact result. The recorded
     * byte length is the staleness detector: any consumer that treats
     * `rows` as EXACT must require `#len == FileStatus.getLen` and
@@ -169,9 +173,10 @@ object GraftLines {
   /** Opt-in TIME TRAVEL, as a table feature (the Delta/Iceberg
     * posture: versioning is a property of the TABLE, not a reader
     * flag). A directory is versioned iff the `_graft_versioned`
-    * marker exists (written by the catalog for
-    * `TBLPROPERTIES ('versioned'='true')`) or any generation manifest
-    * `_graft_gen.<N>` does. On a versioned table every commit —
+    * marker exists (written by [[markVersioned]], which the catalog
+    * calls for `TBLPROPERTIES ('versioned'='true')`) or any generation
+    * manifest `_graft_gen.<N>` does; [[gensOf]] is the one place that
+    * decides it. On a versioned table every commit —
     * append, overwrite, row-level COW rewrite, streaming epoch or
     * compact ([[publish]]) — writes a NEW generation manifest listing
     * the data files of that version and deletes nothing; data files
@@ -255,11 +260,15 @@ object GraftLines {
     if (m.matches()) m.group(1).toIntOption else None
   }
 
-  private[sources] def isVersioned(dir: String,
-      conf: org.apache.hadoop.conf.Configuration): Boolean = {
+  /** Makes `dir` (created if missing) a versioned table: the one
+    * writer of [[VersionMarker]], an empty file whose presence is the
+    * whole fact. [[gensOf]] is its one reader. */
+  def markVersioned(dir: String,
+      conf: org.apache.hadoop.conf.Configuration): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
-    fs.exists(new Path(p, VersionMarker)) || genVersions(dir, conf).nonEmpty
+    fs.mkdirs(p)
+    fs.create(new Path(p, VersionMarker), true).close()
   }
 
   /** Latest committed generation of a versioned table — the number
@@ -315,8 +324,8 @@ object GraftLines {
     * directory's generation manifests (the streaming sink's idempotence
     * ledger): generation manifests published by [[GlStreamingWrite]]
     * carry a `#epoch:<E>:<query>` first line, so "was this epoch
-    * committed?" is answered by the SAME atomic rename that published
-    * the data — there is no separate log whose lag could double-commit
+    * committed?" is answered by the SAME publish ([[GlMetaFile]]) that
+    * published the data — there is no separate log whose lag could double-commit
     * a replayed micro-batch. The QUERY tag is part of the key because
     * epoch numbers are per query: a replacement job with a fresh
     * checkpoint restarts at epoch 0, and a ledger keyed on the bare
@@ -343,7 +352,7 @@ object GraftLines {
 
   /** The `#epoch:<E>[:<query>]` tag of one generation manifest, if it
     * carries one — ("" query = pre-tag legacy manifest). A manifest's
-    * first line is immutable once the publish rename lands, so a
+    * first line is immutable once its publish lands, so a
     * generation's answer here never changes — which is what lets
     * [[GlStreamingWrite]] cache it per generation instead of
     * re-reading every manifest on every epoch commit. */
@@ -492,37 +501,25 @@ object GraftLines {
     if (versioned) Some(next) else None
   }
 
-  /** Publish generation `n` via temp + rename (readers see a complete
-    * manifest or none — same discipline as the stats manifest). Unlike
-    * stats, a failed generation publish FAILS the commit: the
-    * generation manifest is the source of truth for what a versioned
-    * read returns, not an optimization.
-    *
-    * A destination that ALREADY exists fails the commit loudly: two
-    * committers that both computed `n` as the next generation would
-    * otherwise last-writer-win on filesystems whose rename clobbers
-    * (Hadoop's local FS does; HDFS's rename-onto-existing fails and
-    * is the true compare-and-swap) — and since each job's DATA file
-    * names are job-unique, the manifest is the one place the race
-    * surfaces.
-    *
-    * On stores WITHOUT an atomic no-clobber primitive (S3A/GCS
-    * implement rename as exists-check + copy), set
-    * `graft.lines.commit.coordinator=jdbc` to arbitrate the publish
-    * through [[GlCommitCoordinator]] — the CAS moves to a shared
-    * database's `(dir, gen)` primary key and the filesystem's rename
-    * semantics stop mattering. With the default `fs` mode the
-    * residual check-then-rename window on such stores remains the
-    * documented honest limit: serialize writers through the catalog. */
+  /** Publishes generation `n` create-once ([[GlMetaFile]]), the
+    * commit's compare-and-swap: two committers that both computed `n`
+    * would otherwise last-writer-win, and since data file names are
+    * job-unique the manifest is the one place the race surfaces. Unlike
+    * stats, a failed publish fails the commit: the manifest is what a
+    * versioned read returns. With
+    * `graft.lines.commit.coordinator=jdbc` the staged manifest goes to
+    * [[GlCommitCoordinator.publish]] instead, whose claims table is the
+    * CAS on stores without an atomic no-clobber primitive. */
   private[sources] def writeGen(dir: String, n: Int, baseNames: Seq[String],
       conf: org.apache.hadoop.conf.Configuration,
       epoch: Option[(Long, String)] = None): Unit = {
     val p = genPath(dir, n)
     val fs = p.getFileSystem(conf)
-    require(!fs.exists(p),
+    def raced = new IllegalArgumentException(
       s"graftlines: generation manifest $p already exists — concurrent " +
         "committers race on the generation number; serialize writers " +
         "through the catalog")
+    if (fs.exists(p)) throw raced
     // resolve the committer's mode and cross-check the TABLE's pin
     // before any staging I/O: an fs-mode committer on an arbitrated
     // table must fail loudly here, not silently race the claims CAS
@@ -530,155 +527,20 @@ object GraftLines {
     // table; see GlCommitCoordinator.ArbiterMarker)
     val arbiter = GlCommitCoordinator.forConf(conf)
     GlCommitCoordinator.enforceTableMode(fs, dir, arbiter.isDefined)
-    // writer-unique tmp name (the data-file staging discipline): a
-    // shared tmp would let two racers truncate or steal each other's
-    // in-flight manifest, corrupting the very CAS the exists checks add
-    val tmp = new Path(p.getParent,
-      p.getName + "." + java.util.UUID.randomUUID().toString + ".tmp")
-    try {
-      val w = new OutputStreamWriter(fs.create(tmp, true), UTF_8)
-      try {
-        epoch.foreach { case (e, q) =>
-          w.write(s"#epoch:$e:$q"); w.write('\n') }
-        baseNames.sorted.foreach { b => w.write(b); w.write('\n') }
-      } finally w.close()
-      // re-check at the last instant: the first check ran before the
-      // tmp write, and a racer may have published while we streamed it
-      require(!fs.exists(p),
-        s"graftlines: generation manifest $p already exists — concurrent " +
-          "committers race on the generation number; serialize writers " +
-          "through the catalog")
-      if (arbiter.isDefined) {
-        // externally-arbitrated CAS (object-store mode): the claims
-        // table serializes generation n; rename semantics no longer
-        // carry the correctness load. Throws the same loud
-        // "concurrent committers" error on a lost race.
-        arbiter.get.publish(fs, dir, n, tmp, p)
-      } else if (isLocalScheme(fs) && publishByLink(fs, tmp, p)) {
-        // local filesystems: POSIX rename CLOBBERS an existing
-        // destination, so check-then-rename has a real lost-commit
-        // window (the 6-writer soak hit it). link(2) is the atomic
-        // publish-or-fail primitive there: it creates the destination
-        // complete (same inode as the fully-written tmp) and FAILS if
-        // it already exists. publishByLink throws the loud
-        // concurrent-committers error on that failure; false means
-        // links are unsupported on this mount -> rename fallback below.
-        // Post-publish work is BEST-EFFORT: the manifest is durable,
-        // so failing the commit here would be a phantom failure a
-        // retrying caller turns into duplicate rows
-        try {
-          def crc(q: Path) = new Path(q.getParent, "." + q.getName + ".crc")
-          // carry the checksum sidecar to the destination (the
-          // manifest is the source of truth — keep it verifiable)
-          if (!fs.rename(crc(tmp), crc(p))) fs.delete(crc(tmp), false)
-        } catch { case _: Exception => () }
-        try fs.delete(tmp, false) catch { case _: Exception => () }
-      } else {
-        // HDFS: rename-onto-existing fails atomically in the NameNode,
-        // so the rename itself is the compare-and-swap. That guarantee
-        // is SCHEME-SPECIFIC: object-store connectors (S3A, GCS)
-        // implement rename as a client-side exists-check + copy, which
-        // reopens the same check-then-rename window the link(2) path
-        // closes on local mounts. On such stores this branch is
-        // best-effort only — concurrent committers there must be
-        // serialized through the catalog (the exists() check above is
-        // the loud first line of defense), or the table should live on
-        // a filesystem with atomic no-clobber rename.
-        require(fs.rename(tmp, p),
-          s"graftlines: failed publishing generation manifest $p")
-      }
-    } catch {
-      case d: GlCommitInDoubtException =>
-        // the arbiter holds a claim recording THIS tmp as generation
-        // n's bytes: it is the recovery source the next committer
-        // publishes from — deleting it would wedge the generation
-        // behind the non-retryable unrecoverable-claim error
-        throw d
-      case t: Throwable =>
-        // the loser (or a crashed publish) must not leave its tmp as a
-        // permanent dropping in the table directory
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
-        throw t
+    val lines = epoch.map { case (e, q) => s"#epoch:$e:$q" }.toSeq ++
+      baseNames.sorted
+    try GlMetaFile.createOnce(fs, p, lines,
+      arbiter.map(a => (tmp: Path) => a.publish(fs, dir, n, tmp, p)))
+    catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException => throw raced
     }
   }
-
-  /** Non-throwing local-scheme probe: FileSystem.getScheme's base
-    * implementation THROWS UnsupportedOperationException, so a
-    * third-party FS that doesn't override it must take the portable
-    * rename path, not break every commit. */
-  private def isLocalScheme(fs: org.apache.hadoop.fs.FileSystem): Boolean =
-    try "file" == fs.getUri.getScheme catch { case _: Exception => false }
 
   /** Checked delete: true once `p` is gone. A store may report false
     * with the file still in place; every path that deletes rows treats
     * that as a failure, never as done. */
   private def removed(fs: org.apache.hadoop.fs.FileSystem, p: Path): Boolean =
     fs.delete(p, false) || !fs.exists(p)
-
-  /** Atomic local-FS same-name replace: publish `staged` over `dst`
-    * with POSIX rename, which replaces the destination in place — no
-    * instant leaves the file absent (the delete-then-rename fallback
-    * has exactly that crash window). Ordered around the checksummed
-    * local FS's `.crc` sidecars so every intermediate state READS
-    * correctly: the stale sidecar is dropped first (a data file with
-    * no sidecar reads unverified; new-data-under-old-crc would fail
-    * every read), then the one atomic data move, then the sidecar
-    * restore — and after the move succeeds there is no falling back,
-    * because the new data is already live. Returns false (caller uses
-    * delete+rename) only when the move itself cannot run. */
-  private[sources] def replaceByMove(fs: org.apache.hadoop.fs.FileSystem,
-      staged: Path, dst: Path): Boolean = {
-    def crc(q: Path) = new Path(q.getParent, "." + q.getName + ".crc")
-    def nio(q: Path) =
-      java.nio.file.Paths.get(fs.makeQualified(q).toUri.getPath)
-    try {
-      fs.delete(crc(dst), false)
-      java.nio.file.Files.move(nio(staged), nio(dst),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } catch { case _: Exception => return false }
-    // best-effort sidecar restore: a failure here leaves dst readable
-    // (unverified) and must not trigger the fallback — the survivors
-    // are already published. A THROWING rename still cleans the staged
-    // sidecar (otherwise it leaks as permanent '..x.staging.crc'
-    // debris no sweep matches)
-    try {
-      if (!fs.rename(crc(staged), crc(dst))) fs.delete(crc(staged), false)
-    } catch { case _: Exception =>
-      try fs.delete(crc(staged), false) catch { case _: Exception => () }
-    }
-    true
-  }
-
-  /** Atomic local-FS publish: hard-link `tmp` to `p` — link(2) fails
-    * if `p` exists, atomically, which POSIX rename does not. Returns
-    * false ONLY when the mount does not support hard links (caller
-    * falls back to rename and its documented window); throws the loud
-    * concurrent-committers error when `p` already exists, and
-    * rethrows any OTHER failure — falling back to the clobbering
-    * rename on a transient error (EIO, ENOSPC) would silently
-    * reintroduce the exact lost-commit window this primitive closes,
-    * whereas a loud commit failure is safely retryable. */
-  private def publishByLink(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: Path, p: Path): Boolean = {
-    val src = java.nio.file.Paths.get(
-      fs.makeQualified(tmp).toUri.getPath)
-    val dst = java.nio.file.Paths.get(fs.makeQualified(p).toUri.getPath)
-    try { java.nio.file.Files.createLink(dst, src); true }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalArgumentException(
-          s"graftlines: generation manifest $p already exists — " +
-            "concurrent committers race on the generation number; " +
-            "serialize writers through the catalog")
-      case _: UnsupportedOperationException => false
-      case e: java.nio.file.FileSystemException
-          // ENOTSUP/EPERM are how linkless mounts (some FUSE/network
-          // local mounts) surface; anything else is a real I/O error
-          if Option(e.getReason).exists(r =>
-            r.contains("not supported") || r.contains("not permitted")) =>
-        false
-    }
-  }
 
   /** The one answer to "which files make up this read": the live
     * `(path, length)` of version `versionAsOf` (latest when None), minus
@@ -730,37 +592,66 @@ object GraftLines {
     }
   }
 
-  /** The generation a read's options ask for: `versionAsOf` (an
-    * integer) or `timestampAsOf` (epoch-ms, ISO instant or SQL
-    * timestamp, resolved by [[genAtTimestamp]]); None reads the latest.
-    * Schema inference and [[GlTable.newScanBuilder]] both resolve here,
-    * so a read is typed by the version it scans. */
+  /** A read's version options, parsed once for batch reads (
+    * [[GlTable.newScanBuilder]]), schema inference and the stream:
+    * (the generation to read, the generation whose files to exclude).
+    * The first is `versionAsOf` (an integer) or `timestampAsOf`
+    * (epoch-ms, ISO instant or SQL timestamp, resolved by
+    * [[genAtTimestamp]]); None reads the latest, and inference types a
+    * read by the version it scans.
+    *
+    * The second is `excludeFilesOfVersion`, the CHANGE-FEED read: the
+    * read version minus generation m's files (the delta of
+    * [[resolveDataFileStatuses]]). "What changed between v1 and v3" is
+    * then two SMALL scans (v3 minus v1-files, v1 minus v3-files) + one
+    * anti-join each, independent of table size and of how many commits
+    * lie between. Equivalence precondition (stated, not enforced): the
+    * two-sided EXCEPT over delta reads equals the EXCEPT over full
+    * version scans iff no full row VALUE is duplicated across a common
+    * file and a differing file of the same version — e.g. a row living
+    * in untouched file C and also in rewritten file F would surface as
+    * a spurious delete when F drops it, because the common file that
+    * still holds it was (correctly) never scanned. Keyed/deduplicated
+    * tables satisfy this by construction (each row value lives in
+    * exactly one file per version); for multiset tables the delta read
+    * is still exactly "the rows of the files that changed" — a
+    * well-defined feed on its own — but not an EXCEPT replacement. */
   private[sources] def requestedVersion(dir: String,
-      options: CaseInsensitiveStringMap): Option[Int] = {
-    val v = Option(options.get("versionAsOf")).map { s =>
+      options: CaseInsensitiveStringMap): (Option[Int], Option[Int]) = {
+    def conf = SparkSession.active.sparkContext.hadoopConfiguration
+    def int(name: String): Option[Int] = Option(options.get(name)).map { s =>
       require(s.toIntOption.isDefined,
-        s"graftlines: versionAsOf must be an integer, got '$s'")
+        s"graftlines: $name must be an integer, got '$s'")
       s.toInt
     }
+    val v = int("versionAsOf")
     val t = Option(options.get("timestampAsOf"))
     require(v.isEmpty || t.isEmpty,
       "graftlines: versionAsOf and timestampAsOf are mutually exclusive")
-    v.orElse(t.map { s =>
+    val version = v.orElse(t.map { s =>
       val ms = s.toLongOption.getOrElse {
         try java.time.Instant.parse(s).toEpochMilli
         catch { case _: java.time.format.DateTimeParseException =>
           java.sql.Timestamp.valueOf(s).getTime
         }
       }
-      genAtTimestamp(dir, ms,
-        SparkSession.active.sparkContext.hadoopConfiguration)
+      genAtTimestamp(dir, ms, conf)
     })
+    val excluded = int("excludeFilesOfVersion").map { m =>
+      val gens = genVersions(dir, conf)
+      require(gens.contains(m),
+        s"graftlines: excludeFilesOfVersion $m on $dir " +
+          s"(committed generations: ${gens.mkString(", ")})")
+      m
+    }
+    (version, excluded)
   }
 
   /** `TIMESTAMP AS OF` resolution: the newest generation whose
     * manifest was PUBLISHED at or before the target instant — commit
-    * time is the generation manifest's filesystem mtime, stamped by
-    * the atomic rename that made the version visible (the same
+    * time is the generation manifest's filesystem mtime, stamped as
+    * its staged copy is written just before the publish that made the
+    * version visible (the same
     * convention Delta reads from its log entries' timestamps). Honest
     * limits, stated: mtimes come from the storage system's clock, and
     * copying a table byte-for-byte refreshes them — version numbers
@@ -1218,14 +1109,10 @@ object GraftLines {
   /** Manifest maintenance shared by job commit and DELETE: drop every
     * line whose file is in `dropNames`, append `newLines` (already
     * base-name-prefixed), `replaceAll` discards the old manifest
-    * entirely. Failures are swallowed — stats are an optimization and
-    * must never fail a committed mutation. Rewrite goes via temp +
-    * rename, not in-place create: a crash mid-write (or a reader
-    * racing the rewrite) must see either the old complete manifest or
-    * the new one, never a half-written file. Rename is atomic on HDFS
-    * and the local FS; the delete-before-rename gap (rename onto an
-    * existing path is not portable) degrades a concurrent reader to
-    * "no stats", which is the designed fallback, not a wrong skip. */
+    * entirely. The rewrite publishes through [[GlMetaFile.replace]].
+    * Failures are swallowed — stats are an optimization and must never
+    * fail a committed mutation; a manifest a failed publish left absent
+    * reads as "no stats", the designed fallback, never a wrong skip. */
   private[sources] def mergeStats(dir: String,
       conf: org.apache.hadoop.conf.Configuration,
       dropNames: Set[String], newLines: Seq[String],
@@ -1241,31 +1128,8 @@ object GraftLines {
             .toList.filterNot(l => dropNames.contains(l.takeWhile(_ != '\t')))
           finally br.close()
         }
-      if (existing.isEmpty && newLines.isEmpty) { fs.delete(p, false); return }
-      // writer-unique tmp (concurrent merges are last-writer-wins by
-      // design — stats are best-effort — but they must not corrupt
-      // each other's in-flight bytes), published with an atomic
-      // same-name replace so no crash instant leaves the manifest
-      // absent (absence costs pruning + exact
-      // counts table-wide until the next merge)
-      val tmp = new Path(p.getParent,
-        p.getName + "." + java.util.UUID.randomUUID().toString + ".tmp")
-      try {
-        val w = new OutputStreamWriter(fs.create(tmp, true), UTF_8)
-        try (existing ++ newLines).foreach { l => w.write(l); w.write('\n') }
-        finally w.close()
-        if (!(isLocalScheme(fs) && replaceByMove(fs, tmp, p))) {
-          fs.delete(p, false)
-          if (!fs.rename(tmp, p)) fs.delete(tmp, false)
-        }
-      } catch {
-        case t: Throwable =>
-          // the uniquely-named tmp must not accumulate as permanent
-          // debris across failed merges (the old fixed name at least
-          // self-overwrote)
-          try fs.delete(tmp, false) catch { case _: Throwable => () }
-          throw t
-      }
+      if (existing.isEmpty && newLines.isEmpty) fs.delete(p, false)
+      else GlMetaFile.replace(fs, p, existing ++ newLines)
     } catch { case _: Exception => () }
   }
 
@@ -1670,37 +1534,10 @@ private[sources] class GlTable(path: String, tableSchema: StructType,
       TableCapability.STREAMING_WRITE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val (v, x) = GraftLines.requestedVersion(path, options)
     // pinned catalog time travel wins over the path-read options
-    val v = pinnedVersion.orElse(GraftLines.requestedVersion(path, options))
-    // `.option("excludeFilesOfVersion", m)`: the CHANGE-FEED read, the
-    // read version minus generation m's files (the delta of
-    // [[GraftLines.resolveDataFileStatuses]]). "What changed between
-    // v1 and v3" is then two SMALL scans (v3 minus v1-files, v1 minus
-    // v3-files) + one anti-join each, independent of table size and
-    // of how many commits lie between.
-    //
-    // Equivalence precondition (stated, not enforced): the two-sided
-    // EXCEPT over delta reads equals the EXCEPT over full version
-    // scans iff no full row VALUE is duplicated across a common file
-    // and a differing file of the same version — e.g. a row living in
-    // untouched file C and also in rewritten file F would surface as a
-    // spurious delete when F drops it, because the common file that
-    // still holds it was (correctly) never scanned. Keyed/deduplicated
-    // tables satisfy this by construction (each row value lives in
-    // exactly one file per version); for multiset tables the delta
-    // read is still exactly "the rows of the files that changed" — a
-    // well-defined feed on its own — but not an EXCEPT replacement.
-    val x = Option(options.get("excludeFilesOfVersion")).map { s =>
-      require(s.toIntOption.isDefined,
-        s"graftlines: excludeFilesOfVersion must be an integer, got '$s'")
-      val conf = SparkSession.active.sparkContext.hadoopConfiguration
-      val gens = GraftLines.genVersions(path, conf)
-      require(gens.contains(s.toInt),
-        s"graftlines: excludeFilesOfVersion ${s.toInt} on $path " +
-          s"(committed generations: ${gens.mkString(", ")})")
-      s.toInt
-    }
-    new GlScanBuilder(path, tableSchema, nullFillMissing, v, x)
+    new GlScanBuilder(path, tableSchema, nullFillMissing,
+      pinnedVersion.orElse(v), x)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -2260,8 +2097,12 @@ case class GlScan(path: String, required: StructType,
       "graftlines streaming: excludeFilesOfVersion is a batch change-" +
         "feed option; the streaming source IS the incremental feed " +
         "(offsets are generations) — drop the option")
+    require(versionAsOf.isEmpty,
+      "graftlines streaming: versionAsOf / timestampAsOf pin a batch " +
+        "read to one version; the streaming source reads every " +
+        "generation from the first — drop the option")
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    require(GraftLines.isVersioned(path, conf),
+    require(GraftLines.gensOf(path, conf).versioned,
       s"graftlines: streaming reads require a VERSIONED table " +
         s"(generations are the offsets) — $path has no version marker")
     new GlMicroBatchStream(this)
@@ -2963,7 +2804,7 @@ private[sources] class GlStreamingWrite(path: String, schema: StructType,
   GraftLines.header(schema) // reject unstorable schemas before tasks launch
 
   // Incremental committed-epoch ledger: a generation manifest's
-  // #epoch tag is immutable once its publish rename lands, so each
+  // #epoch tag is immutable once its publish lands, so each
   // commit only has to read manifests NEWER than the last scan.
   // Without the cache a long-running stream into a versioned table
   // pays O(generations) driver file opens per micro-batch — quadratic
@@ -3241,17 +3082,23 @@ private[sources] object GlKey {
       s"graftlines: $dir is already partitioned by " +
         s"'${stored.getOrElse("")}' — cannot repartition to '$key'")
 
-  /** Persists `key` as `dir`'s marker; a no-op when `dir` already has
-    * it, an error when `dir` has another. */
+  /** Persists `key` as `dir`'s marker, create-once ([[GlMetaFile]]): a
+    * no-op when `dir` already has it, an error when `dir` has another.
+    * A racer's marker published first counts when it holds the same
+    * key; the re-read also refuses the other layout's marker when it
+    * landed first. */
   def writeKey(dir: String, key: GlKey,
       conf: org.apache.hadoop.conf.Configuration): Unit = {
     val stored = keyOf(dir, conf)
     requireCompatible(dir, stored, key)
     if (stored.isEmpty) {
       val p = new Path(new Path(dir), key.marker)
-      val w = new OutputStreamWriter(p.getFileSystem(conf).create(p, true),
-        UTF_8)
-      try { w.write(key.line); w.write('\n') } finally w.close()
+      try GlMetaFile.createOnce(p.getFileSystem(conf), p, Seq(key.line))
+      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => () }
+      val now = keyOf(dir, conf)
+      requireCompatible(dir, now, key)
+      require(now.nonEmpty,
+        s"graftlines: key marker $p holds no key — delete it and retry")
     }
   }
 }

@@ -224,4 +224,24 @@ class GlStreamSourceSpec extends AnyFunSuite {
     assert(chain(e).exists(m => m != null && m.contains("VERSIONED")),
       s"unexpected error: ${chain(e).mkString(" | ")}")
   }
+
+  test("a stream pinned by versionAsOf or timestampAsOf is rejected naming the option") {
+    val p = freshDir("pinned")
+    markVersioned(p)
+    Seq(1L).toDF("k").coalesce(1)
+      .write.format("graftlines").mode("append").save(p)
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Nil else String.valueOf(t.getMessage) +: chain(t.getCause)
+    for ((opt, v) <- Seq("versionAsOf" -> "1",
+        "timestampAsOf" -> System.currentTimeMillis().toString)) {
+      val e = intercept[Exception] {
+        val q = spark.readStream.format("graftlines").option(opt, v).load(p)
+          .writeStream.format("memory").queryName(s"gl_pinned_$opt")
+          .outputMode("append").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      assert(chain(e).exists(m => m.contains("streaming") && m.contains(opt)),
+        s"$opt: ${chain(e).mkString(" | ")}")
+    }
+  }
 }

@@ -1337,7 +1337,7 @@ class GraftLinesSpec extends AnyFunSuite {
     val q = spark.table("graft_del.ns.t").filter($"k" === 10L)
     assert(q.count() == 0)
     // the atomic same-name publish must keep the directory's checksum
-    // convention coherent (step 3 of replaceByMove): IF this FS writes
+    // convention coherent: IF this FS writes
     // .crc sidecars (cache-dependent on local FS), the rewritten file
     // must carry one like its untouched peers — a missing sidecar is
     // fine, a stale one would fail every read. And no .staging debris
@@ -1552,5 +1552,27 @@ class GraftLinesSpec extends AnyFunSuite {
       assert(df.groupBy($"g").agg(count(lit(1)), min($"k"), max($"d"))
         .collect().map(_.toString).sorted.toSeq == truth)
     }
+  }
+
+  test("a failing _graft_stats publish leaves the commit done and reads exact") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.glmeta.impl",
+      classOf[graft.sources.MetaFaultFileSystem].getName)
+    val p = s"glmeta:$dir/stats_publish_fault"
+    val hp = new org.apache.hadoop.fs.Path(p)
+    val fs = hp.getFileSystem(hconf)
+    fs.delete(hp, true)
+    (1L to 3L).toDF("k").coalesce(1)
+      .write.format("graftlines").mode("append").save(p)
+    val fault = graft.sources.MetaFaultFileSystem.failRenamesOnto
+    fault.set(Set(GraftLines.StatsName))
+    try (4L to 5L).toDF("k").coalesce(1) // must not throw
+      .write.format("graftlines").mode("append").save(p)
+    finally fault.set(Set.empty)
+    val df = spark.read.format("graftlines").load(p)
+    assert(df.agg(count(lit(1))).head().getLong(0) == 5L)
+    assert(df.agg(sum($"k")).head().getLong(0) == 15L)
+    assert(df.filter($"k" >= 4L).as[Long].collect().sorted.toSeq
+      == Seq(4L, 5L), "no stale stats line may prune the new file")
   }
 }

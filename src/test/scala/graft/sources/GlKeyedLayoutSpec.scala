@@ -1,11 +1,19 @@
 package graft.sources
 
+import java.util.concurrent.{BrokenBarrierException, CyclicBarrier,
+  TimeUnit, TimeoutException}
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.util.Try
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{count, lit, sum}
+import org.apache.spark.sql.functions.{count, lit, sum, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{GraftTmp, TestSpark}
@@ -13,7 +21,9 @@ import graft.{GraftTmp, TestSpark}
 /** Every way a file lands in a bucketed or identity-partitioned table
   * keeps the table's layout: the streaming sink and compaction write
   * through the same writer factory as a batch append, so each file
-  * holds one key and the batch scan stays keyed. */
+  * holds one key and the batch scan stays keyed. The key marker is
+  * published create-once ([[GlMetaFile]]): racing first commits agree
+  * on one key, and a failed publish leaves no marker at all. */
 class GlKeyedLayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -231,4 +241,84 @@ class GlKeyedLayoutSpec extends AnyFunSuite {
     assert(names() == before,
       s"a failed compact must leave no file behind: ${names() -- before}")
   }
+
+  test("racing first commits: one key lands from both, another is refused") {
+    val fs = new Path(dir).getFileSystem(hconf)
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Nil else String.valueOf(t.getMessage) +: chain(t.getCause)
+    // each commit's one task waits for the other's, so both drivers
+    // have found the directory unkeyed before either commits
+    val meet = udf { (k: Long) => KeyRace.meet(); k }.asNondeterministic()
+    for (other <- Seq("g", "v")) {
+      val p = s"$dir/key_race_$other"
+      fs.delete(new Path(p), true)
+      KeyRace.barrier = new CyclicBarrier(2)
+      def commit(key: String, k: Long): Future[Try[Unit]] = Future(Try(
+        spark.range(k, k + 1, 1, 1)
+          .select(meet($"id").as("k"), lit(k).as("g"), lit(k).as("v"))
+          .write.format("graftlines").option("partitionColumn", key)
+          .mode("append").save(p)))
+      val keys = Seq("g", other)
+      val results = Await.result(
+        Future.sequence(Seq(commit(keys(0), 1L), commit(keys(1), 2L))),
+        5.minutes)
+      val rows = spark.read.format("graftlines").load(p)
+        .select($"k", $"g").as[(Long, Long)].collect().sorted.toSeq
+      if (other == "g") {
+        assert(results.forall(_.isSuccess), s"same key: $results")
+        assert(rows == Seq((1L, 1L), (2L, 2L)))
+        assert(GlKey.keyOf(p, hconf).contains(GlKey.Identity("g")))
+      } else {
+        val won = results.indexWhere(_.isSuccess)
+        assert(won >= 0 && results.count(_.isSuccess) == 1,
+          s"exactly one of two keys must land: $results")
+        assert(chain(results(1 - won).failed.get)
+          .exists(_.contains("cannot repartition")),
+          s"the loser must be refused for its key: ${results(1 - won)}")
+        assert(GlKey.keyOf(p, hconf).contains(GlKey.Identity(keys(won))))
+        assert(rows == Seq((won + 1L, won + 1L)),
+          s"only the winner's rows may land: $rows")
+      }
+    }
+  }
+
+  test("a key marker whose publish fails is absent, never empty") {
+    hconf.set("fs.glmeta.impl", classOf[MetaFaultFileSystem].getName)
+    val p = s"glmeta:$dir/key_fault"
+    val fs = new Path(p).getFileSystem(hconf)
+    def names: Set[String] =
+      if (!fs.exists(new Path(p))) Set.empty
+      else fs.listStatus(new Path(p)).map(_.getPath.getName).toSet
+    def append(): Unit = Seq((1L, 2L)).toDF("k", "g").write
+      .format("graftlines").option("partitionColumn", "g")
+      .mode("append").save(p)
+    val marker = GraftLines.PartColMarker
+    for ((what, fault) <- Seq(
+        "a failing rename" -> MetaFaultFileSystem.failRenamesOnto,
+        "a failing write" -> MetaFaultFileSystem.failWritesOf)) {
+      fs.delete(new Path(p), true)
+      fault.set(Set(marker))
+      try intercept[Exception](append())
+      finally fault.set(Set.empty)
+      assert(!names.exists(_.startsWith(marker)),
+        s"$what must leave no marker, empty or staged: $names")
+      assert(!names.exists(_.endsWith(GraftLines.Ext)),
+        s"$what: the refused commit's rows landed: $names")
+      append()
+      assert(GlKey.keyOf(p, hconf).contains(GlKey.Identity("g")), what)
+      assert(spark.read.format("graftlines").load(p).count() == 1, what)
+    }
+  }
+}
+
+/** The meeting point of the racing commits above: tasks run in the
+  * driver's JVM, so a UDF reaches it without serializing it. */
+object KeyRace {
+  @volatile var barrier: CyclicBarrier = new CyclicBarrier(1)
+
+  /** Waits for the other racer; a timeout or a broken barrier lets the
+    * commit go on unsynchronized. */
+  def meet(): Unit =
+    try barrier.await(60, TimeUnit.SECONDS)
+    catch { case _: TimeoutException | _: BrokenBarrierException => () }
 }
