@@ -1,6 +1,5 @@
 package graft.etl
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
@@ -11,21 +10,25 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.XmlManifest.readGlob
+
 /** Reference-parity ETL: MicMac photogrammetry XML -> li3ds-shaped
   * entity DataFrames (SURVEY §2A A1–A8; upstream micmac_li3ds
   * autocal.py / blinis.py / orimatis.py / api.py [unverified]).
   *
-  * Spark-first shape: `spark.read.option("wholetext", true).text(glob)`
-  * or an [[graft.sources.XmlManifest]] fetch supplies the documents
-  * (A1), `parseOnce` runs `from_xml` with an explicit schema exactly
-  * once per document (A2), column expressions derive matrices (A3), a
-  * custom Catalyst `Generator` explodes one calibration into its N
-  * transfos (A4 — the UDTF surface), dense_rank assigns deterministic
-  * surrogate keys (A6), and get-or-create upsert is a left-anti union
-  * on the natural key (A5). Sinks: parquet via Verify, JDBC via
-  * q_etl_jdbc_sink (A7). Missing mandatory tags fail the non-null
-  * checks (A8), which read the one parsed struct; orimatis emits each
-  * file's pose and intrinsics transfos from one pass over it.
+  * Spark-first shape: an [[graft.sources.XmlManifest]] fetch supplies
+  * the documents as (path, length, xml) rows (A1) — a manifest through
+  * `import*Xml`, a glob through `import*`, which expands it into one —
+  * so a file carries one `file` value either way. `parseOnce` runs
+  * `from_xml` with an explicit schema exactly once per document (A2),
+  * column expressions derive matrices (A3), a custom Catalyst
+  * `Generator` explodes one calibration into its N transfos (A4 — the
+  * UDTF surface), dense_rank assigns deterministic surrogate keys
+  * (A6), and get-or-create upsert is a left-anti union on the natural
+  * key (A5). Sinks: parquet via Verify, JDBC via q_etl_jdbc_sink (A7).
+  * Missing mandatory tags fail the non-null checks (A8), which read the
+  * one parsed struct; orimatis emits each file's pose and intrinsics
+  * transfos from one pass over it.
   */
 object MicMacEtl {
 
@@ -61,35 +64,7 @@ object MicMacEtl {
           StructField("b1", DoubleType),
           StructField("b2", DoubleType))))))))))))
 
-  /** Glob -> (value, file) whole-document frame: the default text
-    * source all three importers share. The glob is expanded here and
-    * Spark reads the matched paths: given the pattern itself, Spark's
-    * `FileStreamSink.hasMetadata` stats it as a path and logs the
-    * FileNotFoundException with a stack trace on every import. Spark
-    * globs every path it is given, so a matched name's own glob
-    * characters are escaped. A glob that matches nothing goes to Spark
-    * unexpanded, which fails the import naming the path. */
-  private def wholeText(spark: SparkSession, glob: String): DataFrame = {
-    val p = new Path(glob)
-    val hits = Option(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .globStatus(p)).toSeq.flatten
-      .map(_.getPath.toString.replaceAll("""([{}\[\]*?\\])""", """\\$1"""))
-    spark.read.option("wholetext", "true")
-      .text((if (hits.isEmpty) Seq(glob) else hits): _*)
-      .withColumn("file", input_file_name())
-  }
-
-  /** Adapt an [[graft.sources.XmlManifest]]-shaped frame
-    * (path, length, xml — readXml or readPacked output) to the
-    * (value, file) shape the importer cores consume. This is the seam
-    * the manifest source exists for: at millions-of-files scale the
-    * glob entry points' InMemoryFileIndex melts the driver, so the
-    * manifest fetch (or its packed-container form) replaces the text
-    * source and the SAME parse/validate/emit pipeline runs behind it. */
-  private def fromManifest(xml: DataFrame): DataFrame =
-    xml.select(col("xml").as("value"), col("path").as("file"))
-
-  /** (value, file) -> (file, x): `x` is the document parsed against
+  /** (path, xml) -> (file, x): `x` is the document parsed against
     * `schema`, evaluated once per document. The parse sits behind a
     * one-row Generate because Catalyst's PushDownPredicates moves a
     * Filter below a Project by inlining the projected expressions: over
@@ -97,16 +72,16 @@ object MicMacEtl {
     * its own copy of the parse. A predicate that reads a generator's
     * output cannot move below the Generate, so the A8 checks stay as
     * written and share one parse. */
-  private def parseOnce(text: DataFrame, schema: StructType): DataFrame =
-    text.select(col("file"),
-      inline(array(struct(from_xml(col("value"), schema).as("x")))))
+  private def parseOnce(xml: DataFrame, schema: StructType): DataFrame =
+    xml.select(col("path").as("file"),
+      inline(array(struct(from_xml(col("xml"), schema).as("x")))))
 
   /** An importer's four outputs, each built on its first read and then
     * kept. Building a frame analyses its whole plan on the driver, so a
     * caller that reads only `transfos` does not pay for the other three;
-    * the shared trunk a core builds before calling this stays eager, so
-    * a bad path or schema still fails at the import call. The trees
-    * group the same `transfos` frame by `treeName`. */
+    * the shared trunk an importer builds before calling this stays
+    * eager, so a bad glob or schema still fails at the import call. The
+    * trees group the same `transfos` frame by `treeName`. */
   private def outputs(sensors: => DataFrame, referentials: => DataFrame,
       transfos: => DataFrame, treeName: Column): Outputs = {
     lazy val t = transfos
@@ -145,34 +120,20 @@ object MicMacEtl {
   private def a8(df: DataFrame, asserts: Column*): DataFrame =
     df.filter(asserts.map(_.isNull).reduce(_ && _))
 
-  /** [[importAutocal]] over manifest-fetched XML (path, length, xml). */
-  def importAutocalXml(xml: DataFrame,
-      validityStart: Option[String] = None,
-      validityEnd: Option[String] = None): Map[String, DataFrame] =
-    autocalCore(fromManifest(xml), validityStart, validityEnd)
-
-  /** [[importBlinis]] over manifest-fetched XML (path, length, xml). */
-  def importBlinisXml(xml: DataFrame,
-      validityStart: Option[String] = None,
-      validityEnd: Option[String] = None): Map[String, DataFrame] =
-    blinisCore(fromManifest(xml), validityStart, validityEnd)
-
-  /** [[importOrimatis]] over manifest-fetched XML (path, length, xml). */
-  def importOrimatisXml(xml: DataFrame,
-      validityStart: Option[String] = None,
-      validityEnd: Option[String] = None): Map[String, DataFrame] =
-    orimatisCore(fromManifest(xml), validityStart, validityEnd)
-
+  /** one calibration file -> camera sensor, its referentials and the
+    * projection/distortion/pixel transfos */
   def importAutocal(spark: SparkSession, glob: String,
       validityStart: Option[String] = None,
       validityEnd: Option[String] = None): Map[String, DataFrame] =
-    autocalCore(wholeText(spark, glob), validityStart, validityEnd)
+    importAutocalXml(readGlob(spark, glob), validityStart, validityEnd)
 
-  private def autocalCore(text: DataFrame,
-      validityStart: Option[String],
-      validityEnd: Option[String]): Map[String, DataFrame] = {
+  /** [[importAutocal]] over fetched documents (path, length, xml: a
+    * [[graft.sources.XmlManifest]] fetch or its packed form). */
+  def importAutocalXml(xml: DataFrame,
+      validityStart: Option[String] = None,
+      validityEnd: Option[String] = None): Map[String, DataFrame] = {
     def dist(f: String) = col(s"c.CalibDistortion.$f")
-    val parsed = parseOnce(text, autocalSchema)
+    val parsed = parseOnce(xml, autocalSchema)
       .select(col("file"), col("x.CalibrationInternConique").as("c"))
       .select(col("file"),
         col("c.F").as("focal"), vec(col("c.PP")).as("pp"),
@@ -240,15 +201,16 @@ object MicMacEtl {
   def importBlinis(spark: SparkSession, glob: String,
       validityStart: Option[String] = None,
       validityEnd: Option[String] = None): Map[String, DataFrame] =
-    blinisCore(wholeText(spark, glob), validityStart, validityEnd)
+    importBlinisXml(readGlob(spark, glob), validityStart, validityEnd)
 
-  private def blinisCore(text: DataFrame,
-      validityStart: Option[String],
-      validityEnd: Option[String]): Map[String, DataFrame] = {
+  /** [[importBlinis]] over fetched documents (path, length, xml). */
+  def importBlinisXml(xml: DataFrame,
+      validityStart: Option[String] = None,
+      validityEnd: Option[String] = None): Map[String, DataFrame] = {
     def complete3(c: Column): Column =
       c.isNotNull && size(c) === 3 && forall(c, x => x.isNotNull)
     val arms = col("x.LiaisonsSHC.ParamOrientSHC")
-    val parsed = parseOnce(text, blinisSchema)
+    val parsed = parseOnce(xml, blinisSchema)
       // A8 for the rig file shape, BEFORE the explode: a malformed XML
       // (PERMISSIVE parse -> null struct) or one missing <LiaisonsSHC>/
       // <ParamOrientSHC> yields a null array, and explode would emit
@@ -366,17 +328,18 @@ object MicMacEtl {
   def importOrimatis(spark: SparkSession, glob: String,
       validityStart: Option[String] = None,
       validityEnd: Option[String] = None): Map[String, DataFrame] =
-    orimatisCore(wholeText(spark, glob), validityStart, validityEnd)
+    importOrimatisXml(readGlob(spark, glob), validityStart, validityEnd)
 
-  private def orimatisCore(text: DataFrame,
-      validityStart: Option[String],
-      validityEnd: Option[String]): Map[String, DataFrame] = {
+  /** [[importOrimatis]] over fetched documents (path, length, xml). */
+  def importOrimatisXml(xml: DataFrame,
+      validityStart: Option[String] = None,
+      validityEnd: Option[String] = None): Map[String, DataFrame] = {
     val con = col("x.geometry.intrinseque.sensor")
     val sph = col("x.geometry.intrinseque.spherique")
     def either(f: String) = coalesce(
       col(s"x.geometry.intrinseque.sensor.$f"),
       col(s"x.geometry.intrinseque.spherique.$f"))
-    val parsed = parseOnce(text, orimatisSchema)
+    val parsed = parseOnce(xml, orimatisSchema)
       .select(col("file"), con.as("con"), sph.as("sph"),
         col("x.geometry.extrinseque.systeme").as("srid_name"),
         col("x.geometry.extrinseque.sommet.easting").as("px"),

@@ -364,34 +364,63 @@ class MicMacEtlSpec extends AnyFunSuite {
 
   test("manifest-fetched XML runs the same import pipeline (the seam)") {
     import spark.implicits._
-    // the billion-file path: paths fetched executor-side by XmlManifest,
-    // fed to the importer WITHOUT the glob text source — outputs must
-    // be identical to the glob entry point on the same files
-    val manifest = Seq(
-      new java.io.File(s"$res/orimatis_sample.xml").getAbsolutePath).toDS()
-    val xml = graft.sources.XmlManifest.readXml(spark, manifest, parts = 2)
-    val viaManifest = graft.etl.MicMacEtl.importOrimatisXml(xml)
-    val viaGlob = graft.etl.MicMacEtl
-      .importOrimatis(spark, s"$res/orimatis_sample.xml")
-    for (k <- Seq("sensors", "referentials", "transfos", "transfotrees")) {
-      // `file` is a URI in the glob path and a raw path in the manifest
-      // — compare on the basename-normalized rows
-      def norm(df: org.apache.spark.sql.DataFrame) = df
-        .withColumn("file", regexp_extract(col("file"), "([^/]+)$", 1))
-        .collect().map(_.toString).sorted.toSeq
-      assert(norm(viaManifest(k)) == norm(viaGlob(k)), s"table $k diverged")
+    // one corpus, named by a glob and by a manifest of raw paths: the
+    // rows are identical, `file` included, for names that URL encoding
+    // or a glob would change
+    val dir = GraftTmp.dir("micmac_seam")
+    val importers = Seq[(String, String => Map[String, DataFrame],
+        DataFrame => Map[String, DataFrame])](
+      ("autocal", MicMacEtl.importAutocal(spark, _),
+        MicMacEtl.importAutocalXml(_)),
+      ("blinis", MicMacEtl.importBlinis(spark, _),
+        MicMacEtl.importBlinisXml(_)),
+      ("orimatis", MicMacEtl.importOrimatis(spark, _),
+        MicMacEtl.importOrimatisXml(_)))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for ((kind, viaGlobOf, viaXml) <- importers) {
+      val d = java.nio.file.Paths.get(dir, kind)
+      val names = Seq("a[1]", "b%2", "c d").map(n => d.resolve(s"$n.xml"))
+      java.nio.file.Files.createDirectories(d)
+      for (n <- names) java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$res/${kind}_sample.xml"), n,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      val viaManifest = viaXml(XmlManifest.readXml(spark,
+        names.map(_.toString).toDS(), parts = 2))
+      val viaGlob = viaGlobOf(s"$d/*.xml")
+      for (k <- Seq("sensors", "referentials", "transfos", "transfotrees"))
+        assert(rows(viaManifest(k)) == rows(viaGlob(k)),
+          s"$kind $k diverged")
+      // three files, each with its fixture's transfos
+      assert(viaGlob("transfos").select("file").distinct().count() == 3)
+      assert(viaGlob("transfos").count()
+        == 3 * Map("autocal" -> 3, "blinis" -> 2, "orimatis" -> 2)(kind))
     }
-    // and the same for autocal + blinis entry points
-    val am = Seq(new java.io.File(s"$res/autocal_sample.xml")
-      .getAbsolutePath).toDS()
-    val bm = Seq(new java.io.File(s"$res/blinis_sample.xml")
-      .getAbsolutePath).toDS()
-    assert(graft.etl.MicMacEtl
-      .importAutocalXml(graft.sources.XmlManifest.readXml(spark, am))(
-        "transfos").count() == 3)
-    assert(graft.etl.MicMacEtl
-      .importBlinisXml(graft.sources.XmlManifest.readXml(spark, bm))(
-        "transfos").count() == 2)
+  }
+
+  test("a manifest that lists a file twice fails every importer naming it") {
+    import spark.implicits._
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    // one file named absolute and relative: the same path once qualified
+    def twice(f: String) = XmlManifest.readXml(spark, Seq(
+      new java.io.File(s"$res/$f").getAbsolutePath, s"$res/$f").toDS(),
+      parts = 2)
+    val runs = Seq[(String, () => Any)](
+      "autocal_sample.xml" -> (() => MicMacEtl
+        .importAutocalXml(twice("autocal_sample.xml"))("transfos").collect()),
+      "blinis_sample.xml" -> (() => MicMacEtl
+        .importBlinisXml(twice("blinis_sample.xml"))("transfos").collect()),
+      "orimatis_sample.xml" -> (() => MicMacEtl
+        .importOrimatisXml(twice("orimatis_sample.xml"))("transfos")
+        .collect()),
+      "orimatis_matrix.xml" -> (() => XmlManifest.pack(spark, Seq(
+        s"$res/orimatis_matrix.xml", s"./$res/orimatis_matrix.xml").toDS(),
+        GraftTmp.dir("micmac_pack_twice"))))
+    for ((f, run) <- runs) {
+      val e = intercept[Exception](run())
+      assert(msgs(e).exists(m => m.contains("listed twice")
+        && m.contains(s"/$f")), s"$f: $e")
+    }
   }
 
   /** The glob importer a fixture belongs to, by its name prefix. */

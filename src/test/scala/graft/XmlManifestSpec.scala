@@ -6,8 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The manifest-driven XML source must return byte-identical content to
   * a direct local read, fetch executor-side from a path Dataset (no
-  * driver file listing), and slot into the same from_xml parse path the
-  * wholetext importers use.
+  * driver file listing), and slot into the importers' from_xml parse.
   */
 class XmlManifestSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -25,7 +24,8 @@ class XmlManifestSpec extends AnyFunSuite {
       .collect().map(r => (r.getAs[String]("path"), r.getAs[Long]("length"),
         r.getAs[String]("xml")))
       .sortBy(_._1)
-    assert(got.map(_._1).toSeq == fixtures)
+    // each path comes back qualified
+    assert(got.map(_._1).toSeq == fixtures.map("file:" + _))
     fixtures.zip(got).foreach { case (p, (_, len, xml)) =>
       val expected = new String(Files.readAllBytes(Paths.get(p)), "UTF-8")
       assert(xml == expected, s"content mismatch for $p")

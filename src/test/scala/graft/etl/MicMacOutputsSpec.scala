@@ -41,24 +41,29 @@ class MicMacOutputsSpec extends AnyFunSuite {
     val d = new java.io.File(dir)
     Option(d.listFiles()).toSeq.flatten.foreach(_.delete())
     d.mkdirs()
-    for (n <- Seq("a[1]", "b{2}", "c"))
+    for (n <- Seq("a[1]", "b{2}", "c", "d%25", "e f"))
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$res/orimatis_sample.xml"),
         java.nio.file.Paths.get(dir, s"$n.xml"))
     val files = MicMacEtl.importOrimatis(spark, s"$dir/*.xml")("sensors")
       .select("file").collect().map(_.getString(0).split('/').last).toSet
-    // `file` is input_file_name(), a URL-encoded path
-    assert(files == Set("a%5B1%5D.xml", "b%7B2%7D.xml", "c.xml"),
-      s"got $files")
+    // `file` is the raw qualified path, never URL-encoded
+    assert(files == Set("a[1].xml", "b{2}.xml", "c.xml", "d%25.xml",
+      "e f.xml"), s"got $files")
   }
 
   test("a missing glob path still fails at the import call") {
+    // so does a glob that matches a directory, naming it
+    val dir = graft.GraftTmp.dir("micmac_glob_dir")
+    new java.io.File(dir, "sub.xml").mkdirs()
     for (imp <- Seq[String => Map[String, _]](
         MicMacEtl.importAutocal(spark, _),
         MicMacEtl.importBlinis(spark, _),
         MicMacEtl.importOrimatis(spark, _))) {
       val e = intercept[Exception](imp(s"$res/no_such_dir/x.xml"))
       assert(e.getMessage.contains("no_such_dir"), s"got: $e")
+      val d = intercept[Exception](imp(s"$dir/*.xml"))
+      assert(d.getMessage.contains("sub.xml"), s"got: $d")
     }
   }
 }
