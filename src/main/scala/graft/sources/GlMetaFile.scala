@@ -41,7 +41,15 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
   * Any other failure removes the tmp and rethrows (an in-doubt arbiter
   * publish keeps it: the claim records it as the recovery source). The
   * caller decides what a failure means: a generation, schema or key
-  * fails its statement, the stats manifest is best-effort. */
+  * fails its statement, the stats manifest is best-effort.
+  *
+  * Stats invariant: after the next successful commit a table holds one
+  * `_graft_stats` and no `_graft_stats.*.tmp`. A `replace` that KEPT
+  * its tmp leaves it for that commit's [[GraftLines.mergeStats]], which
+  * deletes every stats tmp it listed before staging its own once its
+  * publish succeeds. A concurrent merge that loses its in-flight tmp
+  * this way fails its publish, and the table reads as "no stats" (scan
+  * every file) until the next commit, never as a wrong skip. */
 private[sources] object GlMetaFile {
 
   /** Publishes `lines` as `p`, failing if `p` exists. */

@@ -6,8 +6,8 @@ import java.util
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, StructFilters, expressions => cx}
+import org.apache.spark.sql.catalyst.expressions.{BasePredicate, BoundReference, GenericInternalRow, Predicate, SpecificInternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider, TruncatableTable}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform, Expression => V2Expression}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
@@ -873,7 +873,8 @@ object GraftLines {
         val base = new Path(f).getName
         val fileSchema = headerSchemaOfFile(f, sconf.value)
         val acc = new GlStatsAcc(fileSchema)
-        val r = new GlReader(f, fileSchema, Array.empty, None, sconf.value)
+        val r = new GlReader(f, fileSchema, fileSchema, Array.empty, None,
+          sconf.value)
         try { while (r.next()) acc.add(r.get()) } finally r.close()
         acc.lines(len).map(l => s"$base\t$l")
       }.collect().toSeq
@@ -1077,8 +1078,10 @@ object GraftLines {
     sb.toString
   }
 
-  /** Parse one field to its JVM-comparison value (String for strings —
-    * UTF8String conversion happens only at row emission). */
+  /** Parse one field to its Catalyst internal value: boxed primitives
+    * (int for dates, long for timestamps), a fresh [[UTF8String]] for
+    * strings, null for `\N`. [[GlReader]] puts it in its row slot;
+    * `_graft_stats` min/max use it for the stats-eligible types. */
   private[sources] def parseCell(raw: String, dt: DataType): Any = {
     if (raw == "\\N") return null
     dt match {
@@ -1086,17 +1089,17 @@ object GraftLines {
       case LongType | TimestampType => java.lang.Long.valueOf(raw)
       case DoubleType => java.lang.Double.valueOf(raw)
       case BooleanType => java.lang.Boolean.valueOf(raw)
-      case StringType => unescape(raw)
+      case StringType => UTF8String.fromString(unescape(raw))
       case other => throw new IllegalStateException(other.toString)
     }
   }
 
   /** Columns whose min/max may steer file skipping: exactly the types
-    * whose pushed-filter comparisons the reader evaluates with
-    * Spark-identical ordering. Strings are EXCLUDED on the same ground
-    * min/max string aggregates are declined — java UTF-16 order vs
-    * Spark UTF8-byte order diverge on supplementary characters, and a
-    * wrong skip is silent data loss, not a perf bug. Date/timestamp
+    * [[GlFilters.mayMatch]] compares in Spark's own order. Strings are
+    * EXCLUDED on the same ground min/max string aggregates are declined
+    * — java UTF-16 order vs Spark UTF8-byte order diverge on
+    * supplementary characters, and a wrong skip is silent data loss,
+    * not a perf bug. Date/timestamp
     * literals never push (GlFilters declines them), so their stats
     * would be dead weight. */
   private[sources] def statsEligible(dt: DataType): Boolean = dt match {
@@ -1109,10 +1112,12 @@ object GraftLines {
   /** Manifest maintenance shared by job commit and DELETE: drop every
     * line whose file is in `dropNames`, append `newLines` (already
     * base-name-prefixed), `replaceAll` discards the old manifest
-    * entirely. The rewrite publishes through [[GlMetaFile.replace]].
-    * Failures are swallowed — stats are an optimization and must never
-    * fail a committed mutation; a manifest a failed publish left absent
-    * reads as "no stats", the designed fallback, never a wrong skip. */
+    * entirely. The rewrite publishes through [[GlMetaFile.replace]],
+    * then deletes the `_graft_stats.*.tmp` files it superseded (the
+    * stats invariant in [[GlMetaFile]]). Failures are swallowed — stats
+    * are an optimization and must never fail a committed mutation; a
+    * manifest a failed publish left absent reads as "no stats", the
+    * designed fallback, never a wrong skip. */
   private[sources] def mergeStats(dir: String,
       conf: org.apache.hadoop.conf.Configuration,
       dropNames: Set[String], newLines: Seq[String],
@@ -1128,8 +1133,11 @@ object GraftLines {
             .toList.filterNot(l => dropNames.contains(l.takeWhile(_ != '\t')))
           finally br.close()
         }
+      // listed before this publish stages its own tmp
+      val debris = fs.globStatus(new Path(dir, s"$StatsName.*.tmp"))
       if (existing.isEmpty && newLines.isEmpty) fs.delete(p, false)
       else GlMetaFile.replace(fs, p, existing ++ newLines)
+      debris.foreach(st => fs.delete(st.getPath, false))
     } catch { case _: Exception => () }
   }
 
@@ -1269,11 +1277,13 @@ private[sources] object GlBloom {
         16)))
 }
 
-/** Which V1 filters the source accepts for pushdown, and their exact
-  * executor-side evaluation. Accepted ⇒ Spark drops its own copy, so
-  * the semantics here must match Spark's to the bit: that is why
-  * date/timestamp literals and NaN/−0.0 doubles are declined (residual)
-  * rather than approximated.
+/** Which V1 filters the source accepts for pushdown ([[supported]])
+  * and how `_graft_stats` prunes files with them ([[mayMatch]]).
+  * Accepted ⇒ Spark drops its own copy, so the reader must answer
+  * exactly as Spark would: it evaluates the accepted filters with
+  * Catalyst's own predicate over the parsed row (see [[GlReader]]).
+  * Date/timestamp literals and NaN doubles are declined (residual), so
+  * neither the push contract nor stats pruning has to model them.
   */
 private[sources] object GlFilters {
 
@@ -1291,8 +1301,7 @@ private[sources] object GlFilters {
     // primitive compare semantics differ).
     case EqualNullSafe(a, v) =>
       if (v == null) atomic(schema, a) else litOk(schema, a, v)
-    // byte-prefix on the same UTF-8 encoding utf8Cmp compares with —
-    // identical to UTF8String.startsWith for any well-formed string
+    // UTF8String.startsWith: a byte prefix of the UTF-8 encoding
     case StringStartsWith(a, v) => stringCol(schema, a) && v != null
     case GreaterThan(a, v) => litOk(schema, a, v)
     case GreaterThanOrEqual(a, v) => litOk(schema, a, v)
@@ -1327,63 +1336,6 @@ private[sources] object GlFilters {
       case _: UTF8String => true
       case _ => false // dates, timestamps, decimals, binaries: residual
     })
-
-  def references(f: Filter): Seq[String] = f.references.toSeq
-
-  /** Exact evaluation over parsed values; a row passes iff the
-    * predicate is DEFINITELY TRUE. `get` yields the JVM value of a
-    * column for the current row. */
-  def eval(f: Filter, get: String => Any): Boolean =
-    eval3(f, get).contains(true)
-
-  /** SQL THREE-VALUED evaluation — Some(true/false), None = NULL.
-    * Accepted pushdown removes Spark's own copy of the predicate, so
-    * this must match catalyst to the bit, and two-valued logic does
-    * not: `NOT(v = 5)` on v = NULL is NULL in SQL (row dropped; rows
-    * deleted only when TRUE), but a two-valued Not computes !(false) =
-    * true. Bare-conjunct cases are rescued by the optimizer's inferred
-    * IsNotNull constraints, which is exactly why the bug class hides:
-    * an Or above the Not (`NOT(v = 5) OR s IS NULL`) blocks that
-    * inference and the divergence goes live. Comparisons on a NULL
-    * column value are None; And/Or use Kleene logic (false dominates
-    * And, true dominates Or, otherwise NULL is contagious); Not maps
-    * None to None. In-list NULL literals never reach here (declined at
-    * push time), so In's NULL case is only a NULL probe value. */
-  private def eval3(f: Filter, get: String => Any): Option[Boolean] =
-    f match {
-      case AlwaysTrue() => Some(true)
-      case And(l, r) => (eval3(l, get), eval3(r, get)) match {
-        case (Some(false), _) | (_, Some(false)) => Some(false)
-        case (Some(true), Some(true)) => Some(true)
-        case _ => None
-      }
-      case Or(l, r) => (eval3(l, get), eval3(r, get)) match {
-        case (Some(true), _) | (_, Some(true)) => Some(true)
-        case (Some(false), Some(false)) => Some(false)
-        case _ => None
-      }
-      case Not(c) => eval3(c, get).map(!_)
-      case IsNull(a) => Some(get(a) == null)
-      case IsNotNull(a) => Some(get(a) != null)
-      case EqualTo(a, v) => withVal(get(a))(cmp(_, v) == 0)
-      // total: NULL <=> NULL is true, NULL <=> lit is false — the one
-      // comparison that never yields SQL NULL
-      case EqualNullSafe(a, v) =>
-        val x = get(a)
-        if (v == null) Some(x == null)
-        else Some(x != null && cmp(x, v) == 0)
-      case StringStartsWith(a, v) =>
-        withVal(get(a))(x => startsWithUtf8(x.toString, v))
-      case GreaterThan(a, v) => withVal(get(a))(cmp(_, v) > 0)
-      case GreaterThanOrEqual(a, v) => withVal(get(a))(cmp(_, v) >= 0)
-      case LessThan(a, v) => withVal(get(a))(cmp(_, v) < 0)
-      case LessThanOrEqual(a, v) => withVal(get(a))(cmp(_, v) <= 0)
-      case In(a, vs) => withVal(get(a))(x => vs.exists(cmp(x, _) == 0))
-      case other => throw new IllegalStateException(s"unpushable: $other")
-    }
-
-  private def withVal(x: Any)(p: Any => Boolean): Option[Boolean] =
-    if (x == null) None else Some(p(x))
 
   /** Conservative file-level pruning: true ⇔ the file MAY hold a row
     * matching `f`, judged from per-column (nulls, min, max). Any
@@ -1443,52 +1395,13 @@ private[sources] object GlFilters {
     case d: java.lang.Double =>
       val x = d.doubleValue(); val y = num(lit).doubleValue()
       if (x == y) 0 else java.lang.Double.compare(x, y)
-    case s: String => utf8Cmp(s, lit.toString)
     case b: java.lang.Boolean =>
       java.lang.Boolean.compare(b, lit.asInstanceOf[java.lang.Boolean])
     case other => throw new IllegalStateException(
       s"uncomparable column value: $other")
   }
 
-  /** Spark string ordering is UNSIGNED UTF-8 BYTE order
-    * (UTF8String.compareTo), which differs from Java's UTF-16
-    * code-unit compareTo exactly when a supplementary character
-    * (surrogate-encoded, >= U+10000) meets a BMP char in
-    * [U+E000, U+FFFF]: UTF-8 puts the supplementary LAST (0xF0 > 0xEE
-    * lead byte), UTF-16 puts its 0xD800-range surrogate FIRST. Pushed
-    * range filters are evaluated here INSTEAD of by Spark (accepted
-    * pushdown leaves no residual), so this comparison must be
-    * byte-identical to Spark's or hostile strings silently corrupt
-    * range predicates. */
-  private def utf8Cmp(a: String, b: String): Int = {
-    val x = a.getBytes(UTF_8); val y = b.getBytes(UTF_8)
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val c = java.lang.Integer.compare(x(i) & 0xff, y(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    java.lang.Integer.compare(x.length, y.length)
-  }
-
   private def num(lit: Any): Number = lit.asInstanceOf[Number]
-
-  /** Spark's StartsWith is UTF8String.startsWith — a BYTE-prefix match
-    * on the UTF-8 encoding. Equivalent to String.startsWith for
-    * well-formed strings, but computed on the same bytes utf8Cmp
-    * orders by, so the two pushed string predicates share one
-    * encoding story. */
-  private def startsWithUtf8(s: String, prefix: String): Boolean = {
-    val x = s.getBytes(UTF_8); val p = prefix.getBytes(UTF_8)
-    if (p.length > x.length) return false
-    var i = 0
-    while (i < p.length) {
-      if (x(i) != p(i)) return false
-      i += 1
-    }
-    true
-  }
 }
 
 /** A graftlines directory as a DSv2 table: batch and streaming reads
@@ -1879,8 +1792,9 @@ case class GlScan(path: String, required: StructType,
   }
 
   /** Filter columns may be pruned out of `required` (Spark removes
-    * pushed filters from the plan before pruning), so stats typing uses
-    * the full table schema when the builder provided it. */
+    * pushed filters from the plan before pruning), so stats typing and
+    * the readers' filter-only slots use the full table schema when the
+    * builder provided it. */
   private def statsSchema: StructType =
     if (tableSchema.fields.nonEmpty) tableSchema else required
 
@@ -2073,8 +1987,8 @@ case class GlScan(path: String, required: StructType,
   override def createReaderFactory(): PartitionReaderFactory = {
     val conf = new SerializableConfiguration(
       SparkSession.active.sparkContext.hadoopConfiguration)
-    GlReaderFactory(required, pushed, pushedLimit, aggSpec, conf,
-      nullFillMissing)
+    GlReaderFactory(required, statsSchema, pushed, pushedLimit, aggSpec,
+      conf, nullFillMissing)
   }
 
   /** TABLE AS A STREAM: `spark.readStream` over a VERSIONED table.
@@ -2196,7 +2110,10 @@ private[sources] case class GlKeyedPartition(file: String,
   override def partitionKey(): InternalRow = key
 }
 
+/** `dataSchema` types the columns the pushed filters read but the scan
+  * does not return (Spark prunes them out of `required`). */
 private[sources] case class GlReaderFactory(required: StructType,
+    dataSchema: StructType,
     pushed: Array[Filter], limit: Option[Int], aggSpec: Option[GlAggSpec],
     conf: SerializableConfiguration, nullFillMissing: Boolean = false)
     extends PartitionReaderFactory {
@@ -2206,10 +2123,13 @@ private[sources] case class GlReaderFactory(required: StructType,
     case other => throw new IllegalStateException(other.getClass.getName)
   }
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+  /** Row reads serve aggregate-pushdown scans only: every other
+    * partition is columnar ([[supportColumnarReads]]), so Spark never
+    * asks for its rows. */
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
       case c: GlStatsCountPartition =>
-        return new PartitionReader[InternalRow] {
+        new PartitionReader[InternalRow] {
           private var done = false
           override def next(): Boolean =
             if (done) false else { done = true; true }
@@ -2218,16 +2138,13 @@ private[sources] case class GlReaderFactory(required: StructType,
               Array.fill[Any](c.nFuncs)(java.lang.Long.valueOf(c.rows)))
           override def close(): Unit = ()
         }
-      case _ => ()
+      case _ =>
+        val spec = aggSpec.getOrElse(throw new IllegalStateException(
+          "graftlines: ordinary scans read columnar, not row by row"))
+        val (file, start, end) = range(p)
+        new GlAggReader(file, required, spec, pushed, conf.value,
+          nullFillMissing, start, end)
     }
-    val (file, start, end) = range(p)
-    aggSpec match {
-      case Some(spec) => new GlAggReader(file, required, spec, pushed,
-        conf.value, nullFillMissing, start, end)
-      case None => new GlReader(file, required, pushed, limit, conf.value,
-        nullFillMissing, start, end)
-    }
-  }
 
   /** Ordinary scans hand Spark [[org.apache.spark.sql.vectorized.ColumnarBatch]]es
     * instead of one row at a time: downstream operators read straight
@@ -2243,28 +2160,31 @@ private[sources] case class GlReaderFactory(required: StructType,
       p: InputPartition): PartitionReader[ColumnarBatch] = {
     require(aggSpec.isEmpty, "columnar read not offered for agg scans")
     val (file, start, end) = range(p)
-    new GlColumnarReader(file, required, pushed, limit, conf.value,
-      nullFillMissing = nullFillMissing, start = start, end = end)
+    new GlColumnarReader(file, required, dataSchema, pushed, limit,
+      conf.value, nullFillMissing = nullFillMissing, start = start,
+      end = end)
   }
 }
 
-/** Columnar reader: wraps the row reader's parse/filter/prune logic
-  * and packs its output into reusable [[OnHeapColumnVector]]s,
-  * `batchSize` rows per [[ColumnarBatch]]. Parsing stays row-wise (the
-  * format is line-oriented — a text format cannot skip column bytes
-  * the way parquet column chunks can, which is exactly the documented
-  * reason a production format would be a columnar container); the win
-  * is downstream: one virtual call per BATCH instead of per row, and
+/** Columnar reader: packs [[GlReader]]'s rows into reusable
+  * [[OnHeapColumnVector]]s, `batchSize` rows per [[ColumnarBatch]].
+  * It copies the first `required.length` slots of the reader's one
+  * reused row through the typed getters; the slots after them hold
+  * filter-only columns. Parsing stays row-wise (the format is
+  * line-oriented — a text format cannot skip column bytes the way
+  * parquet column chunks can, which is exactly the documented reason a
+  * production format would be a columnar container); the win is
+  * downstream: one virtual call per BATCH instead of per row, and
   * vector-at-a-time access for Spark's codegen'd consumers. */
 private[sources] class GlColumnarReader(file: String, required: StructType,
-    pushed: Array[Filter], limit: Option[Int],
+    dataSchema: StructType, pushed: Array[Filter], limit: Option[Int],
     conf: org.apache.hadoop.conf.Configuration, batchSize: Int = 4096,
     nullFillMissing: Boolean = false,
     start: Long = 0L, end: Long = Long.MaxValue)
     extends PartitionReader[ColumnarBatch] {
 
-  private val inner = new GlReader(file, required, pushed, limit, conf,
-    nullFillMissing, start, end)
+  private val inner = new GlReader(file, required, dataSchema, pushed, limit,
+    conf, nullFillMissing, start, end)
   private val vectors: Array[OnHeapColumnVector] =
     OnHeapColumnVector.allocateColumns(batchSize, required)
   private val batch = new ColumnarBatch(
@@ -2303,10 +2223,23 @@ private[sources] class GlColumnarReader(file: String, required: StructType,
   override def close(): Unit = { inner.close(); batch.close() }
 }
 
-/** Row-based file reader: parses only required ∪ filter-referenced
-  * columns, applies pushed filters BEFORE building the output row. Each
-  * file's own header is the authority for its column order (files from
-  * different writes may legally order columns differently).
+/** Row-based file reader: parses each owned line's needed cells into
+  * ONE reused [[SpecificInternalRow]] and keeps the line when the
+  * pushed filters pass. The row's layout is `required` first (the
+  * `_file` metadata column among them when asked for, set once per
+  * file), then the columns only the pushed filters read, typed by
+  * `dataSchema`. The filters are evaluated by ONE Catalyst predicate
+  * (`Predicate.create` over `StructFilters.filterToExpression`, the
+  * CSV and JSON readers' translation) bound to that layout, so an
+  * accepted pushdown answers with Spark's own three-valued logic,
+  * string order and double semantics. `get()` returns the same row
+  * object every time: a consumer that keeps a value copies it. Each
+  * string cell is a fresh [[UTF8String]], so a kept string never
+  * aliases a reused buffer.
+  *
+  * Each file's own header is the authority for its column order (files
+  * from different writes may legally order columns differently), and
+  * every column the row holds must exist there with the row's type.
   *
   * `[start, end)` is the task's byte range for block-split files (the
   * whole file when `(0, Long.MaxValue)`). Ownership is the classic
@@ -2324,13 +2257,13 @@ private[sources] class GlColumnarReader(file: String, required: StructType,
   * comes through the CATALOG (whose `_graft_schema` is authoritative
   * and whose ALTER TABLE appends nullable columns), a column absent
   * from this file's header is a column added AFTER the file was
-  * written — every row reads NULL for it, matching what a rewrite
-  * would have produced. Path-based reads keep the loud
-  * missing-column error: without a catalog schema there is no way to
-  * distinguish evolution from a typo'd directory mix, and silence
-  * there would hide real corruption. */
+  * written — its slot stays NULL on every row, matching what a rewrite
+  * would have produced, and the filters see that NULL. Path-based
+  * reads keep the loud missing-column error: without a catalog schema
+  * there is no way to distinguish evolution from a typo'd directory
+  * mix, and silence there would hide real corruption. */
 private[sources] class GlReader(file: String, required: StructType,
-    pushed: Array[Filter], limit: Option[Int],
+    dataSchema: StructType, pushed: Array[Filter], limit: Option[Int],
     conf: org.apache.hadoop.conf.Configuration,
     nullFillMissing: Boolean = false,
     start: Long = 0L, end: Long = Long.MaxValue)
@@ -2377,53 +2310,52 @@ private[sources] class GlReader(file: String, required: StructType,
       try GraftLines.parseHeader(hbr.readLine(), file) finally hbr.close()
     }
   }
-  private val filterRefs: Set[String] =
-    pushed.flatMap(GlFilters.references).toSet
-  private val needed: Set[String] =
-    required.fieldNames.toSet ++ filterRefs
-
-  // per file-column: parse it at all? (pruning = skipping conversion)
-  private val parseCol: Array[Boolean] =
-    fileSchema.fields.map(f => needed.contains(f.name))
   private val fileTypes: Array[DataType] = fileSchema.fields.map(_.dataType)
-  private val colPos: Map[String, Int] =
-    fileSchema.fieldNames.zipWithIndex.toMap
 
-  // loud contract: every needed column must exist with the asked type —
-  // unless the catalog vouched for evolution (missing column reads
-  // uniformly NULL, position -1 below) or it is the synthetic `_file`
-  // metadata column every reader can produce
+  private val layout: StructType = failClosing(StructType(required.fields ++
+    pushed.flatMap(_.references).distinct
+      .filterNot(required.fieldNames.contains).map(dataSchema(_))))
+  private val row = new SpecificInternalRow(layout)
+
+  // loud contract: every column of the row must exist in the file with
+  // the row's type — unless the catalog vouched for evolution (its slot
+  // stays NULL) or it is the synthetic `_file` metadata column
   failClosing {
-    needed.foreach { n =>
-      colPos.get(n) match {
-        case None if n == GraftLines.FileCol => ()
-        case None if nullFillMissing => ()
-        case None => throw new IllegalArgumentException(
-          s"graftlines: column '$n' missing from $file")
-        case Some(i) =>
-          required.fields.find(_.name == n).foreach { rf =>
-            require(rf.dataType == fileTypes(i),
-              s"graftlines: column '$n' is ${fileTypes(i).catalogString} in "
-                + s"$file, query expects ${rf.dataType.catalogString}")
-          }
+    layout.fields.zipWithIndex.foreach { case (f, slot) =>
+      fileSchema.fieldNames.indexOf(f.name) match {
+        case -1 if f.name == GraftLines.FileCol =>
+          row.update(slot, UTF8String.fromString(file))
+        case -1 if nullFillMissing => ()
+        case -1 => throw new IllegalArgumentException(
+          s"graftlines: column '${f.name}' missing from $file")
+        case i =>
+          require(f.dataType == fileTypes(i),
+            s"graftlines: column '${f.name}' is " +
+              s"${fileTypes(i).catalogString} in $file, query expects " +
+              f.dataType.catalogString)
       }
     }
   }
 
-  private val requiredPos: Array[Int] =
-    required.fieldNames.map(colPos.getOrElse(_, -1))
-  private val requiredIsString: Array[Boolean] =
-    required.fields.map(_.dataType == StringType)
-  private val requiredIsFileCol: Array[Boolean] =
-    required.fieldNames.map(_ == GraftLines.FileCol)
-  private val fileColValue = UTF8String.fromString(file)
-  private val getter: String => Any = { // for filter eval
-    val pos = filterRefs.iterator.map(n => n -> colPos.getOrElse(n, -1)).toMap
-    n => { val i = pos(n); if (i < 0) null else parsed(i) }
+  // per file column: its slot in `row`, or -1 (pruned: never converted)
+  private val slotOf: Array[Int] =
+    fileSchema.fieldNames.map(layout.fieldNames.indexOf(_))
+
+  private val predicate: Option[BasePredicate] = failClosing {
+    def ref(n: String) = Some(BoundReference(layout.fieldIndex(n),
+      layout(n).dataType, nullable = true))
+    pushed.toSeq.map(f => StructFilters.filterToExpression(f, ref)
+      .getOrElse(throw new IllegalStateException(
+        s"graftlines: cannot evaluate pushed filter $f")))
+      .reduceOption(cx.And(_, _))
+      // `a <=> NULL` translates with an untyped NULL literal, which
+      // codegen cannot compare: it is `a IS NULL`, as Spark's optimizer
+      // rewrites it
+      .map(_.transform { case cx.EqualNullSafe(r, cx.Literal(null, _)) =>
+        cx.IsNull(r) })
+      .map { e => val p = Predicate.create(e); p.initialize(0); p }
   }
 
-  private var parsed: Array[Any] = _
-  private var current: InternalRow = _
   private var emitted = 0
 
   override def next(): Boolean = {
@@ -2436,25 +2368,13 @@ private[sources] class GlReader(file: String, required: StructType,
       require(cells.length == fileTypes.length,
         s"graftlines: row with ${cells.length} cells, "
           + s"header has ${fileTypes.length} ($file)")
-      parsed = new Array[Any](fileTypes.length)
       var i = 0
       while (i < cells.length) {
-        if (parseCol(i)) parsed(i) = GraftLines.parseCell(cells(i), fileTypes(i))
+        if (slotOf(i) >= 0)
+          row.update(slotOf(i), GraftLines.parseCell(cells(i), fileTypes(i)))
         i += 1
       }
-      if (pushed.forall(GlFilters.eval(_, getter))) {
-        val out = new Array[Any](requiredPos.length)
-        var j = 0
-        while (j < requiredPos.length) {
-          if (requiredIsFileCol(j)) out(j) = fileColValue
-          else {
-            val v = if (requiredPos(j) < 0) null else parsed(requiredPos(j))
-            out(j) = if (v != null && requiredIsString(j))
-              UTF8String.fromString(v.asInstanceOf[String]) else v
-          }
-          j += 1
-        }
-        current = new GenericInternalRow(out)
+      if (predicate.forall(_.eval(row))) {
         emitted += 1
         return true
       }
@@ -2474,7 +2394,7 @@ private[sources] class GlReader(file: String, required: StructType,
     lineText.toString
   }
 
-  override def get(): InternalRow = current
+  override def get(): InternalRow = row
   private var closed = false
   override def close(): Unit = if (!closed) { closed = true; lr.close() }
 }
@@ -2499,8 +2419,8 @@ private[sources] class GlAggReader(file: String, tableSchema: StructType,
     tableSchema.fields.find(_.name == n).getOrElse(throw
       new IllegalArgumentException(
         s"graftlines: aggregated column '$n' missing from table schema"))))
-  private val inner = new GlReader(file, inputSchema, pushed, None, conf,
-    nullFillMissing, start, end)
+  private val inner = new GlReader(file, inputSchema, tableSchema, pushed,
+    None, conf, nullFillMissing, start, end)
 
   private val pos: Map[String, Int] = inputCols.zipWithIndex.toMap
   private val groupIdx: Array[Int] = spec.groupCols.map(pos).toArray
@@ -2508,7 +2428,8 @@ private[sources] class GlAggReader(file: String, tableSchema: StructType,
     spec.funcs.map(f => f.col.map(pos).getOrElse(-1)).toArray
   private val types: Array[DataType] = inputSchema.fields.map(_.dataType)
 
-  /** A group key cell, boxed: the key of the group map. */
+  /** A group key cell, boxed: the key of the group map. A string key is
+    * the row's own [[UTF8String]], fresh per line (see [[GlReader]]). */
   private def value(row: InternalRow, i: Int): Any =
     if (row.isNullAt(i)) null
     else types(i) match {
@@ -2520,15 +2441,13 @@ private[sources] class GlAggReader(file: String, tableSchema: StructType,
       case other => throw new IllegalStateException(other.toString)
     }
 
-  // The fold runs once per row, so it allocates nothing per row: counts
-  // and min/max live in primitive slots per (group, function), and a
-  // single group column keys the map on the raw cell. Min/max order is
-  // Spark's: natural for the long-backed types, Double.compare (NaN
-  // greatest) for doubles; [[GlScanBuilder.pushAggregation]] admits no
-  // other min/max type. A single string group column probes a small
-  // insertion-ordered array (a memcmp per entry) and moves to the map
-  // past LINEAR_MAX groups. Output is in first-observation order
-  // either way.
+  // The fold runs once per row, so it allocates nothing per row beyond
+  // the group key: counts and min/max live in primitive slots per
+  // (group, function), and a single group column keys the map on the
+  // raw cell. Min/max order is Spark's: natural for the long-backed
+  // types, Double.compare (NaN greatest) for doubles;
+  // [[GlScanBuilder.pushAggregation]] admits no other min/max type.
+  // Output is in first-observation order.
   private lazy val groups: Iterator[InternalRow] = {
     final class GState(val cnt: Array[Long], val dbl: Array[Double],
       val lng: Array[Long], val seen: Array[Boolean])
@@ -2558,49 +2477,15 @@ private[sources] class GlAggReader(file: String, tableSchema: StructType,
       })
     }.toArray
     val single = groupIdx.length == 1
-    val singleStr = single && types(groupIdx(0)) == StringType
     val m = scala.collection.mutable.LinkedHashMap[Any, GState]()
     def fresh() = new GState(new Array[Long](nf), new Array[Double](nf),
       new Array[Long](nf), new Array[Boolean](nf))
-    // linear store for the single-string-group shape
-    val LINEAR_MAX = 64
-    var linKeys: Array[UTF8String] = null
-    var linStates: Array[GState] = null
-    var linN = 0
-    var useLin = singleStr
-    if (useLin) {
-      linKeys = new Array[UTF8String](LINEAR_MAX)
-      linStates = new Array[GState](LINEAR_MAX)
-    }
-    def linLookup(k: UTF8String): GState = {
-      var i = 0
-      while (i < linN) {
-        val ki = linKeys(i)
-        if (if (k == null) ki == null else k.equals(ki)) return linStates(i)
-        i += 1
-      }
-      if (linN == LINEAR_MAX) {
-        // migrate, preserving first-observation order, then fall back
-        var j = 0
-        while (j < linN) { m.update(linKeys(j), linStates(j)); j += 1 }
-        useLin = false
-        return m.getOrElseUpdate(k, fresh())
-      }
-      val st = fresh()
-      linKeys(linN) = k; linStates(linN) = st; linN += 1
-      st
-    }
     while (inner.next()) {
       val row = inner.get()
-      val st =
-        if (useLin) linLookup(
-          if (row.isNullAt(groupIdx(0))) null else row.getUTF8String(groupIdx(0)))
-        else {
-          val key: Any =
-            if (single) value(row, groupIdx(0))
-            else groupIdx.map(value(row, _)).toSeq
-          m.getOrElseUpdate(key, fresh())
-        }
+      val key: Any =
+        if (single) value(row, groupIdx(0))
+        else groupIdx.map(value(row, _)).toSeq
+      val st = m.getOrElseUpdate(key, fresh())
       var j = 0
       while (j < nf) {
         ops(j) match {
@@ -2641,11 +2526,9 @@ private[sources] class GlAggReader(file: String, tableSchema: StructType,
       }
     }
     inner.close()
-    if (linN == 0 && m.isEmpty && spec.groupCols.isEmpty)
-      m.update(Seq.empty, fresh())
-    def emit(k: Any, st: GState): InternalRow = {
-      val ks: Seq[Any] =
-        if (single) Seq(k) else k.asInstanceOf[Seq[Any]]
+    if (m.isEmpty && spec.groupCols.isEmpty) m.update(Seq.empty, fresh())
+    m.iterator.map { case (k, st) =>
+      val ks: Seq[Any] = if (single) Seq(k) else k.asInstanceOf[Seq[Any]]
       val vs: Seq[Any] = (0 until nf).map { j =>
         ops(j) match {
           case 0 | 1 => java.lang.Long.valueOf(st.cnt(j))
@@ -2657,14 +2540,6 @@ private[sources] class GlAggReader(file: String, tableSchema: StructType,
       }
       new GenericInternalRow((ks ++ vs).toArray[Any])
     }
-    // useLin still true: every state lives in the lin arrays (m can
-    // only hold the global-agg empty-file row, a shape that never
-    // enters the lin path). useLin false: everything is in m,
-    // migrated lin entries in their first-observation order.
-    if (useLin)
-      (0 until linN).iterator.map(i => emit(linKeys(i), linStates(i))) ++
-        m.iterator.map((emit _).tupled)
-    else m.iterator.map((emit _).tupled)
   }
 
   private var current: InternalRow = _
@@ -3243,9 +3118,9 @@ private[sources] class GlWriter(dir: String, schema: StructType,
   * `#len` cross-check regain the exact-count fast path). Keeping both
   * producers on one implementation means the formats cannot drift.
   *
-  *  - (nulls, min, max) for stats-eligible columns only — the same
-  *    type set whose pushed-filter comparisons the reader evaluates,
-  *    so a recorded min/max is always safe to prune with.
+  *  - (nulls, min, max) for stats-eligible columns only — the type
+  *    set [[GlFilters.mayMatch]] compares in Spark's order, so a
+  *    recorded min/max is always safe to prune with.
   *  - String columns get a per-file Bloom filter instead of min/max
   *    (ordering is the UTF-16/UTF8 hazard; membership has no order):
   *    k probes per non-null value, one hex cell. Fixed 1 KiB per
@@ -3264,10 +3139,11 @@ private[sources] class GlStatsAcc(schema: StructType) {
   private val blooms: Array[Array[Long]] =
     bloomCols.map(_ => new Array[Long](GlBloom.NumLongs))
 
-  /** Same orderings GlFilters.cmp / GlAggReader use: ints/longs
-    * natural, doubles via Double.compare (NaN greatest — matches
-    * Spark; a NaN-polluted max only widens the kept range because
-    * NaN literals are never pushed), booleans false < true. */
+  /** Spark's orders for the stats-eligible types, the ones
+    * GlAggReader's min/max fold uses: ints/longs natural, doubles via
+    * Double.compare (NaN greatest; a NaN-polluted max only widens the
+    * range GlFilters.mayMatch keeps, because NaN literals are never
+    * pushed), booleans false < true. */
   private def less(a: Any, b: Any): Boolean = (a, b) match {
     case (x: java.lang.Integer, y: java.lang.Integer) => x < y
     case (x: java.lang.Long, y: java.lang.Long) => x < y

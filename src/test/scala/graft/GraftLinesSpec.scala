@@ -1575,4 +1575,31 @@ class GraftLinesSpec extends AnyFunSuite {
     assert(df.filter($"k" >= 4L).as[Long].collect().sorted.toSeq
       == Seq(4L, 5L), "no stale stats line may prune the new file")
   }
+
+  test("the next good commit sweeps a failed _graft_stats publish's tmp") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.glmeta.impl",
+      classOf[graft.sources.MetaFaultFileSystem].getName)
+    val p = s"glmeta:$dir/stats_publish_debris"
+    val hp = new org.apache.hadoop.fs.Path(p)
+    val fs = hp.getFileSystem(hconf)
+    fs.delete(hp, true)
+    def statsFiles() = fs.listStatus(hp).map(_.getPath.getName)
+      .filter(_.startsWith(GraftLines.StatsName)).sorted.toSeq
+    (1L to 3L).toDF("k").coalesce(1)
+      .write.format("graftlines").mode("append").save(p)
+    val fault = graft.sources.MetaFaultFileSystem.failRenamesOnto
+    fault.set(Set(GraftLines.StatsName))
+    try (4L to 5L).toDF("k").coalesce(1)
+      .write.format("graftlines").mode("append").save(p)
+    finally fault.set(Set.empty)
+    // the failed publish deleted the old copy and kept its staged tmp
+    assert(statsFiles().exists(_.endsWith(".tmp")), statsFiles())
+    (6L to 7L).toDF("k").coalesce(1)
+      .write.format("graftlines").mode("append").save(p)
+    assert(statsFiles() == Seq(GraftLines.StatsName),
+      s"one _graft_stats and no tmp after a good commit: ${statsFiles()}")
+    assert(spark.read.format("graftlines").load(p).filter($"k" >= 4L)
+      .as[Long].collect().sorted.toSeq == Seq(4L, 5L, 6L, 7L))
+  }
 }

@@ -25,8 +25,10 @@ class GlAggPushdownSpec extends AnyFunSuite {
     val fs = new Path(gl).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(gl), true); fs.delete(new Path(pq), true)
     // one column per typed min/max slot of the fold: int, double (with
-    // NaN, the greatest double), date and timestamp, each with NULLs
-    val rows = (0 until 90).map { i =>
+    // NaN, the greatest double), date and timestamp, each with NULLs;
+    // `w` is a string group column with 100 distinct values: the fold's
+    // group store sees fewer than 64 keys in some files, more in others
+    val rows = (0 until 600).map { i =>
       val v: java.lang.Long = if (i % 7 == 0) null else Long.box(i % 13)
       val s: String = if (i % 5 == 0) null else "abcxy"(i % 5).toString
       val in: java.lang.Integer =
@@ -42,18 +44,25 @@ class GlAggPushdownSpec extends AnyFunSuite {
       val ts =
         if (i % 10 == 0) null
         else new java.sql.Timestamp(1600000000000L + i * 7919 % 1000 * 3600000L)
-      (v, s, in, d, dt, ts)
+      val w: String = if (i % 17 == 0) null else f"w${i * 7 % 100}%02d"
+      (v, s, in, d, dt, ts, w)
     }
-    val df = rows.toDF("v", "s", "i", "d", "dt", "ts")
+    val df = rows.toDF("v", "s", "i", "d", "dt", "ts", "w")
     df.write.format("graftlines")
       .option("clusterBy", "v").option("clusterPartitions", "6")
       .mode("append").save(gl)
     df.coalesce(1).write.parquet(pq)
+    val wPerFile = spark.read.format("graftlines").load(gl)
+      .groupBy(org.apache.spark.sql.functions.col("_file"))
+      .agg(org.apache.spark.sql.functions.countDistinct("w"))
+      .collect().map(_.getLong(1)).sorted.toSeq
+    assert(wPerFile.head < 64 && wPerFile.last > 64,
+      s"distinct w per file: $wPerFile")
     spark.read.format("graftlines").load(gl).createOrReplaceTempView("agp_gl")
     spark.read.parquet(pq).createOrReplaceTempView("agp_pq")
   }
 
-  private val groups = Seq("", "s", "v", "s, v")
+  private val groups = Seq("", "s", "v", "s, v", "w")
   private val aggs = Seq(
     "count(*) AS n",
     "count(v) AS cv, count(s) AS cs",

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{GraftTmp, TestSpark}
 
 /** Pushed-filter three-valued-logic differential: an ACCEPTED pushdown
-  * removes Spark's own copy of the predicate, so GlFilters.eval must
-  * reproduce SQL NULL semantics exactly. The killer shape is a Not
+  * removes Spark's own copy of the predicate, so the reader's Catalyst
+  * predicate over its parsed row must reproduce SQL NULL semantics
+  * exactly, with codegen on and off. The killer shape is a Not
   * under an Or: `NOT(v = 5) OR s IS NULL` on a row (v = NULL, s = 'x')
   * is NULL in SQL (dropped), but a two-valued evaluator computes
   * !(false) = true (kept) — and constraint propagation cannot rescue
@@ -60,15 +61,25 @@ class GlFilterSemanticsSpec extends AnyFunSuite {
     "s LIKE 'a%'", "NOT (s LIKE 'a%')", "NOT (s LIKE 'a%') OR v IS NULL",
     "s LIKE ''", "s LIKE 'ab%'")
 
-  test("pushed predicates match Spark SQL three-valued semantics exactly") {
+  private def predicatesMatchParquet(mode: String): Unit = {
     val gl = spark.read.format("graftlines").load(glPath)
     val pq = spark.read.parquet(pqPath)
     predicates.foreach { p =>
       val got = gl.filter(p).collect().map(_.toString).sorted.toSeq
       val exp = pq.filter(p).collect().map(_.toString).sorted.toSeq
       assert(got == exp,
-        s"predicate `$p` diverged: graftlines=$got parquet=$exp")
+        s"predicate `$p` diverged ($mode): graftlines=$got parquet=$exp")
     }
+  }
+
+  test("pushed predicates match Spark SQL three-valued semantics exactly") {
+    predicatesMatchParquet("codegen")
+  }
+
+  test("the same predicates match with codegen off (interpreted predicate)") {
+    val key = "spark.sql.codegen.factoryMode"
+    spark.conf.set(key, "NO_CODEGEN")
+    try predicatesMatchParquet("NO_CODEGEN") finally spark.conf.unset(key)
   }
 
   test("generative differential: 80 random predicate trees match parquet") {
